@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Dataset
 
 /** One config point for every eager lineage-truncation checkpoint in the
@@ -21,7 +22,8 @@ import org.apache.spark.sql.Dataset
   *    reliable `checkpoint(eager = true)` into that directory — the
   *    100 TB posture, where a recomputable (or at least restartable)
   *    intermediate beats a job-fatal block loss. The checkpoint dir is
-  *    installed on the SparkContext on first use.
+  *    installed on the SparkContext on first use, and re-installed
+  *    whenever the configured dir changes.
   *
   * CkptSpec proves the two paths produce identical output on the
   * operators whose rounds depend on the checkpoint.
@@ -38,7 +40,12 @@ object Ckpt {
     if (dir.isEmpty) ds.localCheckpoint(eager = true)
     else {
       val sc = spark.sparkContext
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+      // setCheckpointDir installs a fresh `<dir>/<uuid>` child (fully
+      // qualified), so the installed dir's parent is what `dir` must match
+      val want = new Path(dir)
+      val qualified = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+      if (!sc.getCheckpointDir.exists(new Path(_).getParent == qualified))
+        sc.setCheckpointDir(dir)
       ds.checkpoint(eager = true)
     }
   }

@@ -24,9 +24,10 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   */
 object Tables {
 
-  /** Per-path inferred-schema cache (round-19 verdict task #3). The
-    * FixedCostProbe measured a bare `spark.read.parquet(path)` at ~98 ms
-    * per call at sf0.1 — almost entirely parquet footer reads for schema
+  /** Per-path inferred-schema cache (round-19 verdict task #3). A bare
+    * `spark.read.parquet(path)` measured ~98 ms per call at sf0.1
+    * (OPTIMIZATION_r19.md, "Sub-second fleet fixed cost") — almost
+    * entirely parquet footer reads for schema
     * inference — and the bench re-builds every query's frame per sample,
     * so each of the ~1,100 executions of a sweep paid it per table. The
     * schema of an immutable input never changes within a process, so it

@@ -93,7 +93,7 @@ object SchemaResolve {
   def autodetectUrlColumn(df: DataFrame): Option[String] = {
     val cols = df.columns.toSeq.filter(c => slug(c).nonEmpty && !c.trim.startsWith("#"))
     if (cols.isEmpty) return None
-    val sample = df.select(cols.map(col): _*).limit(50).collect()
+    val sample = df.select(cols.map(c => col(s"`$c`")): _*).limit(50).collect()
     def hits(c: String): Int = {
       val i = cols.indexOf(c)
       sample.count(r => !r.isNullAt(i) && valueLooksUrlLike(r.getString(i)))

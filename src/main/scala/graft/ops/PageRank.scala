@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative PageRank in exact integer mass arithmetic (damping 17/20 —
@@ -34,99 +34,78 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
+  /** How a source's mass splits across its out-edges — the only thing the
+    * unweighted and weighted forms differ in.
+    *
+    * @param edgeCols  edge columns the loop keeps
+    * @param total     per-source aggregate over its out-edges
+    * @param totalName name of that aggregate (pre-joined onto every edge,
+    *                  and returned per vertex)
+    * @param share     per-edge contribution over (mass, edge cols, total)
+    */
+  final case class Split(edgeCols: Seq[String], total: Column, totalName: String,
+      share: String)
+
+  /** Uniform split: `mass div outdeg` over (src, dst) edges. */
+  val Unweighted: Split = Split(Seq("src", "dst"), count(lit(1)), "outdeg",
+    "mass div outdeg")
+
+  /** Split proportional to integer edge weights: `(mass·w) div wtot` over
+    * (src, dst, w) edges. The product stays in 64 bits while
+    * mass · max-weight < 2⁶³ (at the 10¹² init-mass scale that allows
+    * million-fold edge weights).
+    */
+  val Weighted: Split = Split(Seq("src", "dst", "w"), sum(col("w")), "wtot",
+    "(mass * w) div wtot")
+
   /** One synchronous PageRank iteration, LAZY (no checkpoint) — exposed so
     * PlanShapeSpec can pin the physical shape: no BroadcastExchange on any
     * |V|-row input, shuffled-hash (not sort-merge) joins, and a partial
     * aggregate on `dst`.
     *
-    * @param edges (src, dst, outdeg) — outdeg pre-joined so the hot loop
-    *              touches exactly one big input
+    * @param edges (src, dst, …, total) — the split's total pre-joined so
+    *              the hot loop touches exactly one big input
     * @param nodes (id) — every vertex, including danglers
     * @param mass  (id, mass) — current integer mass per vertex
     */
   def step(edges: DataFrame, nodes: DataFrame, mass: DataFrame,
-      teleportMass: Long): DataFrame = {
+      teleportMass: Long, split: Split = Unweighted): DataFrame = {
     val contrib = edges.join(mass.hint("shuffle_hash"), col("src") === col("id"))
-      .select(col("dst"), expr("mass div outdeg").as("c"))
+      .select(col("dst"), expr(split.share).as("c"))
       .groupBy(col("dst")).agg(sum(col("c")).as("inmass"))
     nodes.join(contrib.hint("shuffle_hash"), col("id") === col("dst"), "left")
       .select(col("id"),
         (lit(teleportMass) +
           expr("(17 * coalesce(inmass, 0L)) div 20")).as("mass"))
-  }
-
-  /** One synchronous WEIGHTED PageRank iteration: mass splits across out-
-    * edges proportionally to integer edge weights — `(mass·w) div wtot`
-    * instead of `mass div outdeg`. Identical co-partitioned shape as
-    * [[step]]; the weight product stays in 64 bits while
-    * mass · max-weight < 2⁶³ (at the 10¹² init-mass scale that allows
-    * million-fold edge weights).
-    *
-    * @param edges (src, dst, w, wtot) — per-edge weight and the source's
-    *              total out-weight, pre-joined like [[step]]'s outdeg
-    */
-  def stepWeighted(edges: DataFrame, nodes: DataFrame, mass: DataFrame,
-      teleportMass: Long): DataFrame = {
-    val contrib = edges.join(mass.hint("shuffle_hash"), col("src") === col("id"))
-      .select(col("dst"), expr("(mass * w) div wtot").as("c"))
-      .groupBy(col("dst")).agg(sum(col("c")).as("inmass"))
-    nodes.join(contrib.hint("shuffle_hash"), col("id") === col("dst"), "left")
-      .select(col("id"),
-        (lit(teleportMass) +
-          expr("(17 * coalesce(inmass, 0L)) div 20")).as("mass"))
-  }
-
-  /** Weighted full run over (src, dst, w) edges — same loop discipline as
-    * [[run]] (edges materialized once src-partitioned, eager per-round
-    * checkpoints, no |V| broadcasts).
-    *
-    * @return (id, wtot, mass) — vertices with no out-edges keep wtot 0
-    */
-  def runWeighted(weighted: DataFrame, nodes: DataFrame, iters: Int,
-      initMass: Long, teleportMass: Long): DataFrame = {
-    require(iters >= 1)
-    val pairs = weighted.select(col("src"), col("dst"), col("w")).persist()
-    val wt = pairs.groupBy(col("src")).agg(sum(col("w")).as("wtot"))
-      .transform(graft.core.Ckpt.eager)
-    val edges = pairs.join(wt, Seq("src"))
-      .repartition(col("src")).transform(graft.core.Ckpt.eager)
-    pairs.unpersist()
-    val nodeSet = nodes.select(col("id")).repartition(col("id"))
-      .transform(graft.core.Ckpt.eager)
-    var mass = nodeSet.select(col("id"), lit(initMass).as("mass"))
-    for (_ <- 1 to iters)
-      mass = stepWeighted(edges, nodeSet, mass, teleportMass).transform(graft.core.Ckpt.eager)
-    mass.join(wt.hint("shuffle_hash"), col("id") === col("src"), "left")
-      .select(col("id"), coalesce(col("wtot"), lit(0L)).as("wtot"),
-        col("mass"))
   }
 
   /** Full run: `iters` synchronous iterations from a uniform `initMass`.
     *
-    * @param rawEdges (src, dst) distinct directed edges
+    * @param rawEdges distinct directed edges with the split's `edgeCols`
     * @param nodes    (id) the full vertex set
-    * @return (id, outdeg, mass) — dangling/isolated vertices keep
-    *         teleport-only mass and outdeg 0
+    * @return (id, total, mass) — the total column named by the split
+    *         (`outdeg` or `wtot`); dangling/isolated vertices keep
+    *         teleport-only mass and total 0
     */
   def run(rawEdges: DataFrame, nodes: DataFrame, iters: Int,
-      initMass: Long, teleportMass: Long): DataFrame = {
+      initMass: Long, teleportMass: Long, split: Split = Unweighted): DataFrame = {
     require(iters >= 1)
     // materialize the two loop-invariant inputs once, partitioned on their
-    // join keys; persist the raw edge list only while deg + edges build
-    // from it (two consumers), then release it
-    val pairs = rawEdges.select(col("src"), col("dst")).persist()
-    val deg = pairs.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    // join keys; persist the raw edge list only while the totals + edges
+    // build from it (two consumers), then release it
+    val pairs = rawEdges.select(split.edgeCols.map(col): _*).persist()
+    val totals = pairs.groupBy(col("src")).agg(split.total.as(split.totalName))
       .transform(graft.core.Ckpt.eager)
-    val edges = pairs.join(deg, Seq("src"))
+    val edges = pairs.join(totals, Seq("src"))
       .repartition(col("src")).transform(graft.core.Ckpt.eager)
     pairs.unpersist()
     val nodeSet = nodes.select(col("id")).repartition(col("id"))
       .transform(graft.core.Ckpt.eager)
     var mass = nodeSet.select(col("id"), lit(initMass).as("mass"))
     for (_ <- 1 to iters)
-      mass = step(edges, nodeSet, mass, teleportMass).transform(graft.core.Ckpt.eager)
-    mass.join(deg.hint("shuffle_hash"), col("id") === col("src"), "left")
-      .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"),
+      mass = step(edges, nodeSet, mass, teleportMass, split).transform(graft.core.Ckpt.eager)
+    mass.join(totals.hint("shuffle_hash"), col("id") === col("src"), "left")
+      .select(col("id"), coalesce(col(split.totalName), lit(0L)).as(split.totalName),
         col("mass"))
   }
 }

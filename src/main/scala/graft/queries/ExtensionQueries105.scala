@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.ops.CoPurchase
 
 /** Round-13 batch 18 (closer): association rules and factorial
   * effects.
@@ -32,27 +33,13 @@ object ExtensionQueries105 extends QueryGroup {
     * basket total broadcast; top-200 via TakeOrderedAndProject.
     */
   def q405_association_rules(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
+    val lp = CoPurchase.baskets(Tables.lineitem(s, dir))
     val nBaskets = lp.select(col("l_orderkey")).distinct()
       .agg(count(lit(1)).as("n_baskets"))
     val itemN = lp.groupBy(col("l_partkey")).agg(count(lit(1)).as("n_item"))
-    // round-18: canonical (a < b) half + flip — co-occurrence counts
-    // are symmetric (and the support filter commutes with the flip), so
-    // the directed rule frame is identical while the wedge stream and
-    // pair aggregate halve. Eager checkpoint before the flip:
-    // ReuseExchange cannot dedupe the flipped branch (the projection
-    // swap folds into the aggregate), so the un-pinned form ran the
-    // wedge join twice.
-    val halfP = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("ante"), col("b.l_partkey").as("cons"))
-      .agg(count(lit(1)).as("co"))
-      .filter(col("co") >= 3)
-      .transform(graft.core.Ckpt.eager)
-    val pairs = halfP.union(halfP.select(col("cons").as("ante"),
-      col("ante").as("cons"), col("co")))
+    // the support filter commutes with the flip, so it runs on the half
+    val pairs = CoPurchase.symmetric(CoPurchase.pairs(lp, minCo = 3)
+      .select(col("part_a").as("ante"), col("part_b").as("cons"), col("n_co").as("co")))
     val scored = pairs
       .join(broadcast(itemN.select(col("l_partkey").as("ante"), col("n_item").as("n_a"))), "ante")
       .join(broadcast(itemN.select(col("l_partkey").as("cons"), col("n_item").as("n_b"))), "cons")

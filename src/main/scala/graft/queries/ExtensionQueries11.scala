@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.{SetSimJoin, SortedNeighborhood}
-import graft.ops.LinkPredict
+import graft.ops.{CoPurchase, LinkPredict}
 
 /** Round-7 second batch: the remaining classical candidate-generation
   * schemes around the exact set join — absolute-overlap/containment
@@ -209,14 +209,7 @@ object ExtensionQueries11 extends QueryGroup {
     * the operator contract, applied identically in the oracle.
     */
   def q118_link_predict(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val edges = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("part_a"), col("b.l_partkey").as("part_b"))
-      .agg(count(lit(1)).as("n_co"))
-      .filter(col("n_co") >= 2)
+    val edges = CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 2)
       .select(col("part_a"), col("part_b"))
     LinkPredict.commonNeighbors(edges, "part_a", "part_b", MaxCenterDeg, MinCommon)
       .orderBy(col("id_a"), col("id_b"))
@@ -262,18 +255,6 @@ object ExtensionQueries11 extends QueryGroup {
       |  GROUP BY 1, 2 HAVING count(*) >= 2
       |)""".stripMargin
 
-  private def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("part_a"), col("b.l_partkey").as("part_b"))
-      .agg(count(lit(1)).as("n_co"))
-      .filter(col("n_co") >= 2)
-      .select(col("part_a"), col("part_b"))
-  }
-
   /** q120: synchronous label-propagation communities
     * ([[graft.ops.LabelProp]]) over the q106/q107/q118 co-purchase
     * graph — 10 deterministic self-voting rounds, min-label tiebreak,
@@ -281,9 +262,12 @@ object ExtensionQueries11 extends QueryGroup {
     * 10 rounds as MATERIALIZED CTEs, the q107 pattern, and pins
     * `converged` TRUE by comparing rounds 9 and 10).
     */
-  def q120_label_prop(s: SparkSession, dir: String): DataFrame =
-    graft.ops.LabelProp.propagate(copurchaseEdges(s, dir), "part_a", "part_b", LpaRounds)
+  def q120_label_prop(s: SparkSession, dir: String): DataFrame = {
+    val edges = CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 2)
+      .select(col("part_a"), col("part_b"))
+    graft.ops.LabelProp.propagate(edges, "part_a", "part_b", LpaRounds)
       .orderBy(col("node"))
+  }
 
   val q120Sql: String = {
     val rounds = (1 to LpaRounds).map { r =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.ops.PrefixScan
+import graft.ops.{CoPurchase, PrefixScan}
 
 /** Round-14 batch 8: prefix-duplicate mining, graph core wealth, and
   * the third ECDF distance.
@@ -82,14 +82,8 @@ object ExtensionQueries113 extends QueryGroup {
     * the edge/node frames with broadcast degrees.
     */
   def q427_rich_club(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val edges = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-      .agg(count(lit(1)).as("co")).filter(col("co") >= 2)
-      .select(col("u"), col("v"))
+    val edges = CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 2)
+      .select(col("part_a").as("u"), col("part_b").as("v"))
     val deg = edges.select(col("u").as("node")).unionAll(
         edges.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))

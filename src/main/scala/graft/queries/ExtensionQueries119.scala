@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.ops.CoPurchase
 
 /** Round-15 batch 2: serial dependence and graph mixing structure.
   *
@@ -34,19 +35,6 @@ import graft.core.Tables
 object ExtensionQueries119 extends QueryGroup {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** q427's co-purchase edge rule, shared by q441/q442: parts joined
-    * by ≥2 co-occurrences in orders, undirected (u < v). */
-  private def coEdges(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-      .agg(count(lit(1)).as("co")).filter(col("co") >= 2)
-      .select(col("u"), col("v"))
-  }
 
   private val coEdgesSql: String =
     """lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -117,7 +105,8 @@ object ExtensionQueries119 extends QueryGroup {
     * the degree moments off the degree frame.
     */
   def q441_degree_assortativity(s: SparkSession, dir: String): DataFrame = {
-    val e = coEdges(s, dir)
+    val e = CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 2)
+      .select(col("part_a").as("u"), col("part_b").as("v"))
     val deg = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val withDeg = e
@@ -165,7 +154,8 @@ object ExtensionQueries119 extends QueryGroup {
     * a stated convention); transitivity_ppm = 3·tri·10⁶ div wedges.
     */
   def q442_clustering_coefficient(s: SparkSession, dir: String): DataFrame = {
-    val e = coEdges(s, dir)
+    val e = CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 2)
+      .select(col("part_a").as("u"), col("part_b").as("v"))
     val tri = e.as("e1").join(e.as("e2"), col("e1.v") === col("e2.u"))
       .join(e.as("e3"),
         col("e3.u") === col("e1.u") && col("e3.v") === col("e2.v"), "left_semi")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.{Similarity, Winnowing}
+import graft.ops.CoPurchase
 
 /** Round-7 fourth batch: position-aware fingerprinting and hybrid
   * retrieval — the two curation primitives that sit directly on top of
@@ -187,13 +188,8 @@ object ExtensionQueries12 extends QueryGroup {
     * q107/q120 certify theirs.
     */
   def q128_cc_stars(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val edges = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-      .distinct()
+    val edges = CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 1)
+      .select(col("part_a").as("src"), col("part_b").as("dst"))
     val nodes = Tables.part(s, dir).select(col("p_partkey").as("id"))
     graft.ops.StarContract.run(edges, nodes, CcRounds)
       .select(col("id").as("part_key"), col("comp"), col("converged"))

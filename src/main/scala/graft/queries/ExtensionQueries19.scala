@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{CacheScope, Tables}
-import graft.ops.{Bfs, DenseIds}
+import graft.ops.{Bfs, CoPurchase, DenseIds}
 
 /** Round-9 batch 7: traversal, policy scanning, trends, layout, feature
   * selection, and time travel.
@@ -42,23 +42,9 @@ object ExtensionQueries19 extends QueryGroup {
     * spelling which is inherently single-node.
     */
   def q150_bfs_hops(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    // round-18: canonical (a < b) half + flip after the distinct — the
-    // wedge stream and distinct input halve and the edge SET is
-    // identical (q316's twin keeps the same rewrite so the pair stays
-    // row-for-row comparable). Eager checkpoint before the flip:
-    // ReuseExchange cannot dedupe the flipped branch (the projection
-    // swap folds into the aggregate), so the un-pinned form ran the
-    // wedge join twice.
-    val half = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-      .distinct()
-      .transform(graft.core.Ckpt.eager)
-    val edges = half
-      .union(half.select(col("dst").as("src"), col("src").as("dst")))
+    val edges = CoPurchase.symmetric(
+      CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 1)
+        .select(col("part_a").as("src"), col("part_b").as("dst")))
     val parts = Tables.part(s, dir).select(col("p_partkey").as("id"))
     val seeds = parts.filter(col("id") < 3)
     val visited = Bfs.hops(edges, seeds, maxHops = 4)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.ops.{DenseIds, PageRank, PrefixScan}
+import graft.ops.{CoPurchase, DenseIds, PageRank, PrefixScan}
 
 /** Round-9 batch 10: concentration metrics, event-time observability,
   * weighted graph centrality.
@@ -157,30 +157,17 @@ object ExtensionQueries22 extends QueryGroup {
     * arithmetic (damping 17/20, `(mass·w) div wtot`), 4 synchronous
     * iterations, fully unrolled in the oracle.
     *
-    * Scale shape: [[graft.ops.PageRank.runWeighted]] — the weighted edge
+    * Scale shape: [[graft.ops.PageRank.run]] with the `Weighted` split — the edge
     * list materializes once src-partitioned, each round exchanges only
     * the dst-keyed partial aggregate, eager checkpoint per round, no
     * |V|-row broadcast anywhere.
     */
   def q164_weighted_pagerank(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    // round-18: canonical (a < b) half + flip — co-occurrence counts are
-    // symmetric by construction, so the directed (src, dst, w) frame is
-    // identical while the wedge stream and the pair aggregate halve.
-    // Eager checkpoint before the flip: the projection swap folds into
-    // the aggregate, so ReuseExchange cannot dedupe the branches and the
-    // un-pinned form ran the wedge join twice (measured, q74's twin).
-    val halfW = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
-      .transform(graft.core.Ckpt.eager)
-    val weighted = halfW.union(
-      halfW.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+    val weighted = CoPurchase.symmetric(
+      CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 1)
+        .select(col("part_a").as("src"), col("part_b").as("dst"), col("n_co").as("w")))
     val nodes = Tables.part(s, dir).select(col("p_partkey").as("id"))
-    PageRank.runWeighted(weighted, nodes, WprIters, WprInitMass, WprTeleportMass)
+    PageRank.run(weighted, nodes, WprIters, WprInitMass, WprTeleportMass, PageRank.Weighted)
       .select(col("id").as("part_key"), col("wtot"), col("mass").as("wpr_mass"))
       .orderBy(col("part_key"))
   }

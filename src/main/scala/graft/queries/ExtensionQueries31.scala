@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.ops.PrefixScan
+import graft.ops.{CoPurchase, PrefixScan}
 
 /** Round-9 batch 19: sequential analysis, co-occurrence recommendation,
   * and session mining — exact-integer, DuckDB-oracle-gated.
@@ -104,23 +104,10 @@ object ExtensionQueries31 extends QueryGroup {
     * TakeOrderedAndProject. First 100 rows by (part, rank).
     */
   def q188_also_bought(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    // round-18: canonical (a < b) half + flip — co-occurrence counts
-    // are symmetric, so the directed cofrequency frame is identical
-    // while the wedge stream and pair aggregate halve. Eager checkpoint
-    // before the flip: ReuseExchange cannot dedupe the flipped branch
-    // (the projection swap folds into the aggregate), so the un-pinned
-    // form ran the wedge join twice.
-    val halfCo = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("part"),
-        col("b.l_partkey").as("also"))
-      .agg(count(lit(1)).as("n_orders_together"))
-      .transform(graft.core.Ckpt.eager)
-    val cofreq = halfCo.union(halfCo.select(col("also").as("part"),
-      col("part").as("also"), col("n_orders_together")))
+    val cofreq = CoPurchase.symmetric(
+      CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 1)
+        .select(col("part_a").as("part"), col("part_b").as("also"),
+          col("n_co").as("n_orders_together")))
     val w = Window.partitionBy(col("part"))
       .orderBy(col("n_orders_together").desc, col("also"))
     cofreq.withColumn("rank", row_number().over(w).cast("long"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{CacheScope, Tables}
 import graft.functions.BloomMightContain
+import graft.ops.CoPurchase
 
 /** Round-4 widening batch: graph ranking, record linkage, warehouse
   * versioning, time-series repair, sketch-accelerated joins, robust
@@ -44,22 +45,9 @@ object ExtensionQueries5 extends QueryGroup {
     * LEFT JOIN + COALESCE.
     */
   def q74_pagerank(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    // round-18: canonical (a < b) half + flip after the distinct — the
-    // wedge stream and distinct input halve and the directed edge SET is
-    // identical. The half is eagerly checkpointed before the flip:
-    // ReuseExchange does NOT cover the flipped branch (the projection
-    // swap folds into the aggregate, so the two subtrees canonicalize
-    // differently — measured as the wedge join running twice), and the
-    // checkpoint pins one materialization both branches scan.
-    val half = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-      .distinct()
-      .transform(graft.core.Ckpt.eager)
-    val pairs = half.union(half.select(col("dst").as("src"), col("src").as("dst")))
+    val pairs = CoPurchase.symmetric(
+      CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 1)
+        .select(col("part_a").as("src"), col("part_b").as("dst")))
     val nodes = Tables.part(s, dir).select(col("p_partkey").as("id"))
     graft.ops.PageRank.run(pairs, nodes, PrIters, PrInitMass, PrTeleportMass)
       .select(col("id").as("part_key"), col("outdeg"), col("mass").as("pr_mass"))
@@ -413,14 +401,8 @@ object ExtensionQueries5 extends QueryGroup {
     * broadcasts; nothing unbounded reaches the driver.
     */
   def q80_copurchase(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val pairs = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("part_a"), col("b.l_partkey").as("part_b"))
-      .agg(count(lit(1)).as("n_co"))
-      .filter(col("n_co") >= 2)
+    val lp = CoPurchase.baskets(Tables.lineitem(s, dir))
+    val pairs = CoPurchase.pairs(lp, minCo = 2)
     val freq = lp.groupBy(col("l_partkey")).agg(count(lit(1)).as("n_orders_part"))
     val totals = lp.agg(countDistinct(col("l_orderkey")).as("n_orders"))
     pairs

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.ops.CoPurchase
 
 /** Round-9 batch 49: graph mixing, friction economics, and forecast
   * honesty — exact-integer, DuckDB-oracle-gated.
@@ -35,20 +36,9 @@ object ExtensionQueries61 extends QueryGroup {
     * construction — spec-pinned.
     */
   def q276_degree_assortativity(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    // round-18: canonical (a < b) half + flip — wedge stream and
-    // distinct input halve, edge SET identical. Eager checkpoint before
-    // the flip: ReuseExchange cannot dedupe the flipped branch (the
-    // projection swap folds into the aggregate), so the un-pinned form
-    // ran the wedge join twice.
-    val half = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-      .distinct()
-      .transform(graft.core.Ckpt.eager)
-    val edges = half.union(half.select(col("dst").as("src"), col("src").as("dst")))
+    val edges = CoPurchase.symmetric(
+      CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 1)
+        .select(col("part_a").as("src"), col("part_b").as("dst")))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
     val paired = edges
       .join(deg.select(col("src"), col("d").as("dx")), "src")

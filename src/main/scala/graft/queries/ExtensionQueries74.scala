@@ -148,23 +148,10 @@ object ExtensionQueries74 extends QueryGroup {
     */
   def q316_recursive_bfs(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val lp = graft.core.Tables.lineitem(s, dir)
-      .select("l_orderkey", "l_partkey").distinct()
-    // round-18: build the canonical (a < b) half first and symmetrize
-    // after the distinct — the wedge stream and the distinct's input
-    // halve; the edge SET is identical to the previous a ≠ b spelling.
-    // The half is eagerly checkpointed before the flip (ReuseExchange
-    // cannot dedupe the flipped branch — the projection swap folds into
-    // the aggregate, measured as the wedge join running twice), and the
-    // union is then pinned as before for the recursion levels.
-    val half = lp.as("a")
-      .join(lp.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-        col("a.l_partkey") < col("b.l_partkey"))
-      .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-      .distinct()
-      .transform(graft.core.Ckpt.eager)
-    val edges = half
-      .union(half.select(col("dst").as("src"), col("src").as("dst")))
+    import graft.ops.CoPurchase
+    val edges = CoPurchase.symmetric(
+      CoPurchase.pairs(CoPurchase.baskets(graft.core.Tables.lineitem(s, dir)), minCo = 1)
+        .select(col("part_a").as("src"), col("part_b").as("dst")))
       .transform(graft.core.Ckpt.eager) // pin the loop-invariant edge list; levels replay this, not the join
     edges.createOrReplaceTempView("q316_edges")
     s.sql(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.SpanDedup
-import graft.ops.{CountMin, Triangles}
+import graft.ops.{CoPurchase, CountMin, Triangles}
 
 /** Round-6 second batch: span-level dedup, the count-min member of the
   * sketch tier, corpus-frequency surprisal scoring, and triangle
@@ -179,14 +179,7 @@ object ExtensionQueries8 extends QueryGroup {
     * local-density signal.
     */
   def q106_triangles(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val edges = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("part_a"), col("b.l_partkey").as("part_b"))
-      .agg(count(lit(1)).as("n_co"))
-      .filter(col("n_co") >= 2)
+    val edges = CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 2)
       .select(col("part_a"), col("part_b"))
     Triangles.counts(edges, "part_a", "part_b").orderBy(col("node"))
   }

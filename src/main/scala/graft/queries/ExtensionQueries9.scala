@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.SetSimJoin
-import graft.ops.KCore
+import graft.ops.{CoPurchase, KCore}
 
 /** Round-6 third batch: k-core decomposition (graph family) and the
   * prefix-filtered exact similarity join (dedup/similarity family).
@@ -34,14 +34,7 @@ object ExtensionQueries9 extends QueryGroup {
     * flag TRUE).
     */
   def q107_kcore(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val edges = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("part_a"), col("b.l_partkey").as("part_b"))
-      .agg(count(lit(1)).as("n_co"))
-      .filter(col("n_co") >= 2)
+    val edges = CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 2)
       .select(col("part_a"), col("part_b"))
     KCore.decompose(edges, "part_a", "part_b", CoreK, CoreRounds)
       .orderBy(col("node"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.ops.CoPurchase
 
 /** Round-13 batch 3: graph/partition quality, multiset similarity, and
   * keyed stream attribution.
@@ -38,14 +39,7 @@ object ExtensionQueries90 extends QueryGroup {
     * the 1-row m total broadcasts into the 25-row brand frame.
     */
   def q361_modularity(s: SparkSession, dir: String): DataFrame = {
-    val lp = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val edges = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("part_a"), col("b.l_partkey").as("part_b"))
-      .agg(count(lit(1)).as("n_co"))
-      .filter(col("n_co") >= 2)
+    val edges = CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(s, dir)), minCo = 2)
       .select(col("part_a"), col("part_b"))
     val brand = broadcast(Tables.part(s, dir)
       .select(col("p_partkey"), col("p_brand")))

@@ -1,7 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.core.Ckpt
@@ -28,17 +31,25 @@ class CkptSpec extends SparkSpecBase {
 
   private def nodes = (1L to 12L).union(Seq(20L, 21L, 30L)).toDF("id")
 
+  /** Runs `body` with a fresh reliable checkpoint dir and asserts the
+    * checkpoints really landed there — not in a dir an earlier test
+    * installed on the shared context. */
   private def withReliableDir[A](body: => A): A = {
-    val dir = Files.createTempDirectory("graft_ckpt_spec").toString
-    spark.conf.set(Ckpt.DirKey, dir)
-    try body
-    finally {
+    val dir = Files.createTempDirectory("graft_ckpt_spec")
+    spark.conf.set(Ckpt.DirKey, dir.toString)
+    try {
+      val out = body
+      val installed = spark.sparkContext.getCheckpointDir.map(new Path(_))
+      assert(installed.exists(_.getParent.toUri.getPath == dir.toString),
+        s"checkpoints went to $installed, not under $dir")
+      val written = Files.list(Paths.get(installed.get.toUri.getPath))
+      try assert(written.iterator().asScala.exists(_.getFileName.toString.startsWith("rdd-")),
+        s"nothing checkpointed under $installed")
+      finally written.close()
+      out
+    } finally {
       spark.conf.unset(Ckpt.DirKey)
-      val sc = spark.sparkContext
-      // leave the context clean for other suites (setCheckpointDir is
-      // sticky; a later local-only test must not silently write here)
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(java.nio.file.Paths.get(dir))
+      val walk = Files.walk(dir)
       val paths = try walk.iterator().asScala.toSeq.reverse finally walk.close()
       paths.foreach(p => Files.deleteIfExists(p))
     }

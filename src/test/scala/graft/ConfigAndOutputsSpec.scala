@@ -141,15 +141,23 @@ class ConfigAndOutputsSpec extends SparkSpecBase {
 
   test("sourceResolutions reports mapping + autodetect + row counts per source") {
     def fx(name: String): String = getClass.getResource(s"/fixtures/$name").getPath
-    val cfg = graft.Pipeline.PipelineConfig(
-      frogPath = fx("frog.csv"), gscPath = fx("gsc.csv"), ga4Path = fx("ga4.csv"))
-    val rs = graft.Pipeline.sourceResolutions(spark, cfg, countRows = true)
-    assert(rs.map(_.source) == Seq("frog", "gsc", "ga4"))
-    rs.foreach { r =>
-      assert(r.mapping.get("url").flatten.isDefined, s"${r.source} lost its url mapping")
-      assert(r.rows > 0, s"${r.source} row count")
+    // gsc_dotted.csv is gsc.csv with an "Avg. Position" header: the dot must
+    // not parse as a struct access while the "Top pages" url is sniffed
+    Seq("gsc.csv", "gsc_dotted.csv").foreach { gsc =>
+      val cfg = graft.Pipeline.PipelineConfig(
+        frogPath = fx("frog.csv"), gscPath = fx(gsc), ga4Path = fx("ga4.csv"))
+      val rs = graft.Pipeline.sourceResolutions(spark, cfg, countRows = true)
+      assert(rs.map(_.source) == Seq("frog", "gsc", "ga4"))
+      rs.foreach { r =>
+        assert(r.mapping.get("url").flatten.isDefined, s"${r.source} lost its url mapping")
+        assert(r.rows > 0, s"${r.source} row count")
+      }
+      assert(rs(1).mapping.get("position").flatten.isDefined, s"$gsc lost its position mapping")
+      val positions = graft.Pipeline.loadGsc(spark, cfg).select("position")
+        .collect().map(_.getDouble(0)).sorted
+      assert(positions.sameElements(Seq(1.5, 2.0, 3.0, 4.0, 6.0)), s"$gsc positions")
+      val lazyRs = graft.Pipeline.sourceResolutions(spark, cfg)
+      assert(lazyRs.forall(_.rows == -1L), "rows counted without being asked")
     }
-    val lazyRs = graft.Pipeline.sourceResolutions(spark, cfg)
-    assert(lazyRs.forall(_.rows == -1L), "rows counted without being asked")
   }
 }

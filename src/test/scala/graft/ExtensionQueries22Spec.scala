@@ -87,7 +87,7 @@ class ExtensionQueries22Spec extends SparkSpecBase {
     val edges = Seq((1L, 3L, 9L), (1L, 2L, 1L), (2L, 3L, 1L)).toDF("src", "dst", "w")
     val nodes = Seq(1L, 2L, 3L).toDF("id")
     val (init, tele, iters) = (1000000L, 150000L, 3)
-    val got = PageRank.runWeighted(edges, nodes, iters, init, tele)
+    val got = PageRank.run(edges, nodes, iters, init, tele, PageRank.Weighted)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     // hand-run the exact same integer recurrence
     val adj = Map(1L -> Seq((3L, 9L, 10L), (2L, 1L, 10L)), 2L -> Seq((3L, 1L, 1L)))
