@@ -35,7 +35,8 @@ import org.apache.spark.sql.functions._
 object PageRank {
 
   /** How a source's mass splits across its out-edges — the only thing the
-    * unweighted and weighted forms differ in.
+    * unweighted and weighted forms differ in. Closed: `Unweighted` and
+    * `Weighted` are the only values.
     *
     * @param edgeCols  edge columns the loop keeps
     * @param total     per-source aggregate over its out-edges
@@ -43,11 +44,11 @@ object PageRank {
     *                  and returned per vertex)
     * @param share     per-edge contribution over (mass, edge cols, total)
     */
-  final case class Split(edgeCols: Seq[String], total: Column, totalName: String,
-      share: String)
+  final class Split private[PageRank] (val edgeCols: Seq[String], val total: Column,
+      val totalName: String, val share: String)
 
   /** Uniform split: `mass div outdeg` over (src, dst) edges. */
-  val Unweighted: Split = Split(Seq("src", "dst"), count(lit(1)), "outdeg",
+  val Unweighted: Split = new Split(Seq("src", "dst"), count(lit(1)), "outdeg",
     "mass div outdeg")
 
   /** Split proportional to integer edge weights: `(mass·w) div wtot` over
@@ -55,7 +56,7 @@ object PageRank {
     * mass · max-weight < 2⁶³ (at the 10¹² init-mass scale that allows
     * million-fold edge weights).
     */
-  val Weighted: Split = Split(Seq("src", "dst", "w"), sum(col("w")), "wtot",
+  val Weighted: Split = new Split(Seq("src", "dst", "w"), sum(col("w")), "wtot",
     "(mass * w) div wtot")
 
   /** One synchronous PageRank iteration, LAZY (no checkpoint) — exposed so

@@ -11,8 +11,6 @@ import org.json4s._
   * sidecar the DuckDB oracle run was adjudicated against. A refactor of
   * the shared edge builder or the PageRank loop that changes one output
   * row fails here, not only in a manual Verify run.
-  *
-  * Data dir: `$SPARK_GRAFT_SF_DIR`, default `~/testdata/sf0.01`.
   */
 class CoPurchaseDigestSpec extends SparkSpecBase {
 
@@ -24,8 +22,7 @@ class CoPurchaseDigestSpec extends SparkSpecBase {
     "q405_association_rules", "q427_rich_club", "q441_degree_assortativity",
     "q442_clustering_coefficient")
 
-  private val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-    s"${sys.props("user.home")}/testdata/sf0.01")
+  private val sf = "/root/testdata/sf0.01"
 
   private lazy val pinned: Map[String, (String, Long)] = {
     val text = new String(Files.readAllBytes(Paths.get("tools/digests_sf0.01.json")),
@@ -41,8 +38,7 @@ class CoPurchaseDigestSpec extends SparkSpecBase {
 
   queries.foreach { q =>
     test(s"$q matches its pinned sf0.01 digest") {
-      assume(Files.isDirectory(Paths.get(dir)), s"no sf0.01 data at $dir")
-      val got = Verify.digest(SparkEntry.queries(q)(spark, dir))
+      val got = Verify.digest(SparkEntry.queries(q)(spark, sf))
       assert(got == pinned(q), s"$q digest/rows drifted from tools/digests_sf0.01.json")
     }
   }
