@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -212,57 +213,16 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val wallT0 = System.nanoTime() // whole-sweep wall clock (verdict task #2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     // Phase wall accounting (round-19 verdict task #1): the instrument lost
     // the r18 32-core artifact to a wall timeout, so every phase now stamps
     // its cumulative wall to stderr — the budget breakdown is measured, not
     // inferred, and the next regression in bench wall is attributable.
     def wallMark(label: String): Unit =
       System.err.println(f"[bench-wall] $label t=${(System.nanoTime() - wallT0) / 1e9}%.1f s")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    /** Release everything a prior run may have left resident: the SQL cache
-      * AND every persisted RDD block. The latter is the round-5 fix — each
-      * `localCheckpoint` in an iterative operator eagerly materializes a
-      * MEMORY_AND_DISK RDD that `clearCache()` never touches; safe to drop
-      * here because every measured run re-executes its plan from scratch.
-      */
-    def release(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
-
-    /** (min, median, max) of `iters` timed runs, state released before each. */
-    def statsOfN(iters: Int)(f: => Unit): (Double, Double, Double) = {
-      val ts = (1 to iters).map { _ =>
-        release()
-        timed(f)
-      }
-      val s = ts.sorted
-      (s.head, s(iters / 2), s.last)
-    }
-
-    def statsOf(f: => Unit): (Double, Double, Double) = statsOfN(Iters)(f)
-
-    def medianOf(f: => Unit): Double = statsOf(f)._2
-
-    def statsFrom(xs: Seq[Double]): (Double, Double, Double) = {
-      val s = xs.sorted
-      (s.head, s(s.size / 2), s.last)
-    }
+    val spark = GraftSession.local(cpus)
+    import GraftSession.stats
+    def timedReleased(f: => Unit): Double = GraftSession.timedReleased(spark)(f)
 
     /** Raw released+timed samples of one query; empty on any failure.
       * `gc` gates the per-query System.gc() (round-19 verdict task #1:
@@ -282,22 +242,15 @@ object Bench {
         // ~280 other queries have evicted this query's footer/JIT state, and
         // that one cold run otherwise lands in the max and reads as spread
         if (warmup) {
-          release()
-          val wT = timed(once())
-          val ss = (1 to iters).map { _ => release(); timed(once()) }
+          val wT = timedReleased(once())
+          val ss = (1 to iters).map(_ => timedReleased(once()))
           // warm-vs-cold evidence for the stratification design (round-19):
           // how much the discarded warmup actually buys, per query
           if (iters == 1)
             System.err.println(f"[bench-wq] $name cold=$wT%.3f warm=${ss.head}%.3f")
           ss
-        } else (1 to iters).map { _ => release(); timed(once()) }
+        } else (1 to iters).map(_ => timedReleased(once()))
       } catch { case _: Throwable => Seq.empty }
-
-    def runToNoop(name: String, iters: Int = Iters,
-        warmup: Boolean = false): (Double, Double, Double) = {
-      val ss = runSamples(name, iters, warmup)
-      if (ss.isEmpty) (-1.0, -1.0, -1.0) else statsFrom(ss)
-    }
 
     // Warmup: exercise codegen, shuffle machinery, and every table's footer.
     try {
@@ -336,7 +289,7 @@ object Bench {
         // predate the gate and are treated as incomparable (the one in the
         // tree at the time of this change is a known local[8] run)
         val sameCpus = parsed \ "cpus" match {
-          case JString(s) => s == cpus
+          case JString(s) => s == cpus.toString
           case _ => false
         }
         val allMedians = parsed \ "queries" match {
@@ -363,12 +316,6 @@ object Bench {
         (medians, allMedians.keySet, canary)
       } else (Map.empty, Set.empty, -1.0)
     } catch { case _: Throwable => (Map.empty, Set.empty, -1.0) }
-
-    /** One released+timed execution — the per-phase building block the
-      * pipeline rounds use (round-11 verdict task #2: attribution must be
-      * PER-SAMPLE, so the stats aggregation moves out of the timing path).
-      */
-    def timedReleased(f: => Unit): Double = { release(); timed(f) }
 
     // Run-lifetime canary stage (round-16 verdict task #3): the staged
     // constant files live for the WHOLE run so canary samples can be
@@ -445,8 +392,7 @@ object Bench {
     // Fresh-session position for the end-to-end pipeline (round-5 driver
     // artifact measured it LAST at 105.8 s vs 9.8 s in r4 — session decay,
     // not a plan change; the code path was refactor-only that round).
-    val pipeSamples: Seq[PipeSample] = try pipelineBench(spark, timedReleased,
-        stage = canaryStage)
+    val pipeSamples: Seq[PipeSample] = try pipelineBench(spark, stage = canaryStage)
       catch { case e: Throwable =>
         // never abort the query sweep for a pipeline failure, but never
         // swallow it silently either: the r16a artifact lost its whole
@@ -455,7 +401,7 @@ object Bench {
         System.err.println(s"[bench] pipelineBench FAILED: $e")
         Seq.empty
       }
-    release()
+    GraftSession.release(spark)
     wallMark("pipeline")
     // Stratified measurement (round-16 verdict task #6): ~500 queries ×
     // n=3 was 38 min of bench wall and rising linearly with the registry —
@@ -498,7 +444,7 @@ object Bench {
         val gc = prevMedians.get(name).forall(_ >= 0.5)
         val ss = runSamples(name, iters = 1, warmup = true, gc = gc)
         markSeries(name)
-        name -> (if (ss.isEmpty) (-1.0, -1.0, -1.0) else statsFrom(ss))
+        name -> (if (ss.isEmpty) (-1.0, -1.0, -1.0) else stats(ss))
     }
     sampleCanaries("fp:end")
     wallMark("first_pass")
@@ -539,7 +485,7 @@ object Bench {
           val pool = fresh :+ v._2
           pooled(k) = pool
           fullMeasured += k
-          k -> statsFrom(pool)
+          k -> stats(pool)
         }
       } else k -> v
     }
@@ -558,7 +504,7 @@ object Bench {
         if (fresh.isEmpty) k -> v
         else {
           fullMeasured += k
-          k -> statsFrom(fresh ++ prior)
+          k -> stats(fresh ++ prior)
         }
       } else k -> v
     }
@@ -618,7 +564,7 @@ object Bench {
       else k -> v
     }
     val resMap = results.toMap
-    val skew = try skewBench(spark, sfDir, medianOf)
+    val skew = try skewBench(spark, sfDir)
       catch { case _: Throwable => (-1.0, -1.0, -1.0) }
     wallMark("skew")
     def fmt(t: (Double, Double, Double)) = s"[${t._1},${t._2},${t._3}]"
@@ -696,9 +642,6 @@ object Bench {
     //                burst confined to the full window. Not a plan
     //                regression: the identical plan ran at phase-sum speed
     //                in the rounds labeled "ok" (same JVM, same bytes).
-    def stats(xs: Seq[Double]): (Double, Double, Double) = {
-      val s = xs.sorted; (s.head, s(s.size / 2), s.last)
-    }
     def pstats(f: PipeSample => Double): (Double, Double, Double) =
       if (pipeSamples.isEmpty) (-1.0, -1.0, -1.0) else stats(pipeSamples.map(f))
     val pFull = pstats(_.full)
@@ -869,7 +812,7 @@ object Bench {
     * shares with the sample that flagged the mover.
     */
   def confirmMoversFreshJvm(names: Seq[String], sfDir: String,
-      cpus: String): Map[String, (Double, Double, Double)] = {
+      cpus: Int): Map[String, (Double, Double, Double)] = {
     if (names.isEmpty) return Map.empty
     var errFile: java.nio.file.Path = null
     // round-17 ADVICE: both child streams used to be discarded, so a
@@ -899,7 +842,7 @@ object Bench {
         Seq("-cp", cp, "graft.MoverConfirm", outFile.toString) ++ names
       val pb = new ProcessBuilder(cmd.asJava)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+      pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
       // discard stdout (results travel through the temp file); stderr →
       // temp log, surfaced only when the confirmation fails
       pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
@@ -1009,13 +952,8 @@ object Bench {
         // pmod before sum: raw xxhash64 values span the full 64-bit
         // range, and 8M of them overflow a long under ANSI
         .agg(sum(pmod(col("h2"), lit(1000000007L))).as("s"), sum(col("x")).as("sx")))
-    def cleanup(): Unit = try {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir)
-      val walk = java.nio.file.Files.walk(root)
-      val paths = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      paths.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => }
+    def cleanup(): Unit =
+      try FileUtils.deleteDirectory(new java.io.File(dir)) catch { case _: Throwable => }
   }
 
   /** Total JVM GC time (ms) across all collectors — deltas around a timed
@@ -1037,11 +975,12 @@ object Bench {
     * generated once per bench run into a temp dir, deterministically.
     * All phases (incl. the canary's constant file) are staged untimed
     * first, then full / csvScan / mergeFromParquet / canary measure
-    * back-to-back under the caller's uniform discipline.
+    * back-to-back, each from a released session
+    * ([[GraftSession.timedReleased]]).
     */
-  def pipelineBench(spark: SparkSession, timedReleased: (=> Unit) => Double,
-      n: Long = 1000000L, stage: Option[CanaryStage] = None): Seq[PipeSample] = {
-    import spark.implicits._
+  def pipelineBench(spark: SparkSession, n: Long = 1000000L,
+      stage: Option[CanaryStage] = None): Seq[PipeSample] = {
+    def timedReleased(f: => Unit): Double = GraftSession.timedReleased(spark)(f)
     val dir = java.nio.file.Files.createTempDirectory("graft_pipe_bench").toString
     // canary data: the caller's run-lifetime stage when provided (Bench
     // shares one stage between the pipeline phases and the sweep-long
@@ -1141,11 +1080,7 @@ object Bench {
         PipeSample(csv, merge, full, canary, gcSec, cachedBytes, heapMb, ioc)
       }
     } finally { // ~3×1M-row temp CSVs + parquet stages; don't leak them past the measurement
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir)
-      val walk = java.nio.file.Files.walk(root)
-      val paths = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      paths.foreach(p => java.nio.file.Files.deleteIfExists(p))
+      FileUtils.deleteDirectory(new java.io.File(dir))
       if (stage.isEmpty) canaries.cleanup() // self-staged ⇒ self-cleaned
     }
   }
@@ -1165,8 +1100,9 @@ object Bench {
     *     "skew is real but under the knobs" case, which is exactly the
     *     regime where the explicit salt (~3×) is the right tool.
     */
-  def skewBench(spark: SparkSession, sfDir: String,
-      medianOf: (=> Unit) => Double): (Double, Double, Double) = {
+  def skewBench(spark: SparkSession, sfDir: String): (Double, Double, Double) = {
+    def medianOf(f: => Unit): Double =
+      GraftSession.stats((1 to Iters).map(_ => GraftSession.timedReleased(spark)(f)))._2
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     // ~97.5% of big-side rows land on key 0; the dimension carries 16 rows
     // per key, so the join multiplies the hot reducer's output ~16×, and the
@@ -1214,47 +1150,6 @@ object Bench {
   }
 }
 
-/** A/B harness for the round-14 verdict's pipeline-variance question:
-  * run ONLY the pipeline bench in a maximally fresh JVM (no warmup
-  * query, no prior bench state, sbt fork = new process) and print the
-  * instrumented samples. If the "isolated" full-window bursts reproduce
-  * here, the cause is the pipeline loop itself (GC pressure from the
-  * adjacent phases — read gc_sec), not residue from the query sweep.
-  * `sbt "runMain graft.PipeForkBench"` — compare its full_over_sum
-  * distribution against the in-session pipeline_samples of a full Bench.
-  */
-object PipeForkBench {
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def timedReleased(f: => Unit): Double = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      timed(f)
-    }
-    val samples = Bench.pipelineBench(spark, timedReleased _)
-    samples.zipWithIndex.foreach { case (s, i) =>
-      val ratio = if (s.csv + s.merge > 0) s.full / (s.csv + s.merge) else -1.0
-      println(f"""{"i":$i,"csv":${s.csv}%.3f,"merge":${s.merge}%.3f,""" +
-        f""""full":${s.full}%.3f,"canary":${s.canary}%.3f,""" +
-        f""""io_canary":${s.ioc}%.3f,""" +
-        f""""full_over_sum":$ratio%.2f,"gc_sec":${s.gcSec}%.3f,""" +
-        f""""cached_bytes":${s.cachedBytes},"heap_mb":${s.heapMb}}""")
-    }
-    spark.stop()
-  }
-}
-
 /** Child process of [[Bench.confirmMoversFreshJvm]] (round-16 verdict
   * task #1): `MoverConfirm <outFile> <queryName>...` measures each named
   * query in THIS fresh JVM — one discarded cold warmup (codegen/footers/
@@ -1269,28 +1164,13 @@ object MoverConfirm {
     val outFile = args.head
     val names = args.tail.toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def release(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
+    val spark = GraftSession.local()
     val results = names.map { n =>
       val stats = try {
         def once(): Unit = SparkEntry.queries(n)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        release(); once() // discarded cold warmup
-        val ts = (1 to 3).map { _ =>
-          release()
-          val t0 = System.nanoTime(); once(); (System.nanoTime() - t0) / 1e9
-        }.sorted
-        (ts(0), ts(1), ts(2))
+        GraftSession.release(spark); once() // discarded cold warmup
+        GraftSession.stats((1 to 3).map(_ => GraftSession.timedReleased(spark)(once())))
       } catch { case _: Throwable => (-1.0, -1.0, -1.0) }
       n -> stats
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan for selected queries so
   * scan pruning (ReadSchema/PushedFilters), join strategies (broadcast vs
   * sort-merge), and WholeStageCodegen spans can be inspected. Usage:
@@ -9,14 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q01_pricing_summary", "q06_spine_join3", "q07_rank_topk",
         "q26_jaccard_pairs", "q30_cosine_topk", "q48_decontaminate",

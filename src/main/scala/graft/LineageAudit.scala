@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Column-lineage CLI (`runMain graft.LineageAudit <query ...>
   * [--dir=sfDir] [--control]`): prints, per query, each output column
   * and the (table, column) leaves it derives from — the plan-derived
@@ -17,14 +15,7 @@ object LineageAudit {
     require(qs.nonEmpty, "usage: LineageAudit <query ...> [--dir=sfDir]")
     val dir = args.find(_.startsWith("--dir="))
       .map(_.stripPrefix("--dir=")).getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val control = args.contains("--control")
     for (q <- qs) {
       println(s"== $q")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.Pipeline.PipelineConfig
 import graft.ops.Scoring.{Bucket, ScoringConfig}
 import graft.sinks.Outputs
@@ -29,11 +28,10 @@ object PipelineDemo {
       "usage: PipelineDemo <frog.csv> <gsc.csv> <ga4.csv> <outDir> [siteBase]\n" +
       "   or: PipelineDemo <etl_config.yaml> <outDir>")
     val outDir = if (yamlMode) args(1) else args(3)
-    val spark = SparkSession.builder()
+    // the master URL is a deployment address, so it stays settable; the
+    // shuffle width stays that of the local[4] default
+    val spark = GraftSession.builder(4)
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val yamlText = if (yamlMode)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI runner for [[graft.plans.PlanGate]]: audits every registered query
   * (or the names given as args) at sf0.001 and prints violations plus the
   * object-node inventory. The CI form of the same sweep is
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanGateAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted

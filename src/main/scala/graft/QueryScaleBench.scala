@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-query scale proof (round-4 verdict ask #8): fit t ~ n^k for named
@@ -118,22 +119,20 @@ object QueryScaleBench {
       else args.filterNot(_.startsWith("--")).toSeq
     require(names.nonEmpty,
       "usage: QueryScaleBench [--sf1] [--all | --top=N] [--out=p] <queryName>...")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    val staged =
+      if (sf1) Some(java.nio.file.Files.createTempDirectory("graft_sf1x").toFile)
+      else None
+    try measure(spark, names, out, staged.map(_.toString))
+    finally staged.foreach(FileUtils.deleteDirectory)
+    spark.stop()
+  }
 
-    def medianOf(f: => Unit): Double = {
-      val ts = (1 to 3).map { _ =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      ts.sorted.apply(1)
-    }
+  /** Times `names` on both rungs; `sf1Dir` receives the 10× rung. */
+  private def measure(spark: SparkSession, names: Seq[String], out: Option[String],
+      sf1Dir: Option[String]): Unit = {
+    def medianOf(f: => Unit): Double =
+      GraftSession.stats((1 to 3).map(_ => GraftSession.timedReleased(spark)(f)))._2
     def timeAt(name: String, dir: String): Double = {
       System.gc()
       medianOf {
@@ -142,15 +141,15 @@ object QueryScaleBench {
       }
     }
 
-    val (loDir, hiDir, step) =
-      if (sf1) {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_sf1x").toString
+    val (loDir, hiDir, step) = sf1Dir match {
+      case Some(tmp) =>
         println(s"replicating relational tables 10x into $tmp ...")
         replicateRelational(spark, "/root/testdata/sf0.1", tmp)
         println(s"generating 10x content tables into $tmp ...")
         CorpusGen.writeContent(spark, tmp)
         ("/root/testdata/sf0.1", tmp, "sf0.1->sf1x")
-      } else ("/root/testdata/sf0.01", "/root/testdata/sf0.1", "sf0.01->sf0.1")
+      case None => ("/root/testdata/sf0.01", "/root/testdata/sf0.1", "sf0.01->sf0.1")
+    }
 
     // warmup both dirs through the first query
     try timeAt(names.head, loDir) catch { case _: Throwable => }
@@ -183,13 +182,5 @@ object QueryScaleBench {
         println(s"$n FAILED: ${e.toString.takeWhile(_ != '\n')}")
       }
     }
-    if (sf1) {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(hiDir)
-      val walk = java.nio.file.Files.walk(root)
-      val paths = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      paths.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-    spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale proof-point (round-3 verdict ask #9): the reference's own
   * three-source merge workload measured at 1M AND 10M rows/source, with
   * the fitted scaling exponent printed — near-1.0 means the plan's cost
@@ -20,22 +18,11 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toLong).toSeq
       else Seq(1000000L, 10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timedReleased(f: => Unit): Double = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
+    val spark = GraftSession.local()
     val times = sizes.map { n =>
       System.gc()
-      val samples = Bench.pipelineBench(spark, timedReleased, n)
-      val t = samples.map(_.full).sorted.apply(samples.size / 2)
+      val samples = Bench.pipelineBench(spark, n)
+      val t = GraftSession.stats(samples.map(_.full))._2
       println(f"pipeline rows=$n%d median=$t%.2f sec")
       n -> t
     }

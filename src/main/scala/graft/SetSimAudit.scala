@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Candidate-growth audit for the PPJoin family (round-11 verdict task
   * #4): `runMain graft.SetSimAudit [sfDir ...]` counts every
   * candidate-generation stage of q109's prefix-Jaccard join at each dir
@@ -14,14 +12,7 @@ object SetSimAudit {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val keys = Seq("sets", "elements", "prefix_rows", "match_pairs", "candidates")
     val rows = dirs.map { dir =>
       val counts = graft.ext.SetSimJoin.candidateAudit(

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -97,16 +98,13 @@ object ShuffleAudit {
     val dirs = args.find(_.startsWith("--dirs="))
       .map(_.stripPrefix("--dirs=").split(',').toSeq)
       .getOrElse(Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val effDirs = if (!sf1x) dirs else {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_audit_sf1x").toString
+    val spark = GraftSession.local()
+    val staged =
+      if (sf1x) Some(java.nio.file.Files.createTempDirectory("graft_audit_sf1x").toFile)
+      else None
+    // writes the 10× rung into `dir`; returns the (sf0.1, 10×) dir pair
+    def stage(dir: java.io.File): Seq[String] = {
+      val tmp = dir.toString
       println(s"generating 10x content tables into $tmp ...")
       CorpusGen.writeContent(spark, tmp)
       if (sf1xFull) {
@@ -119,20 +117,22 @@ object ShuffleAudit {
       }
       Seq("/root/testdata/sf0.1", tmp)
     }
+    try audit(spark, qs, staged.fold(dirs)(stage), noBroadcast)
+    finally staged.foreach(FileUtils.deleteDirectory)
+    spark.stop()
+  }
+
+  private def audit(spark: SparkSession, qs: Seq[String], effDirs: Seq[String],
+      noBroadcast: Boolean): Unit = {
     if (noBroadcast) {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     }
     val acc = new MetricsAcc
     spark.sparkContext.addSparkListener(acc)
-    def release(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     def mb(x: Long): String = f"${x / 1048576.0}%.1f"
     val rows = for (q <- qs) yield q -> (for (d <- effDirs) yield {
-      release(); acc.reset()
+      GraftSession.release(spark); acc.reset()
       SparkEntry.queries(q)(spark, d)
         .write.format("noop").mode("overwrite").save()
       org.apache.spark.graft.ListenerBridge
@@ -162,6 +162,5 @@ object ShuffleAudit {
         case _ =>
       }
     }
-    spark.stop()
   }
 }

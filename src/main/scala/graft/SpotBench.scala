@@ -1,74 +1,47 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc per-query benchmark: `runMain graft.SpotBench q13_... q14_...`
-  * times each named query (3 runs, median, noop sink, cache cleared) at
+  * times each named query (3 runs, median, noop sink, released session) at
   * SPARK_GRAFT_SF_DIR — the iterate-fast complement to the full Bench.
+  * `skew` runs [[Bench.skewBench]] alone; `pipeline` runs
+  * [[Bench.pipelineBench]] alone, in this fresh JVM (`run / fork := true`),
+  * and prints every instrumented sample as one JSON line.
   */
 object SpotBench {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SpotBench <queryName>...")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // A/B knob for the round-18 join-strategy experiment: let AQE
-      // rewrite sort-merge to shuffled-hash when every post-shuffle
-      // partition of the build side is under the threshold ("0" = off,
-      // Spark's default). Scale-adaptive by construction: the decision
-      // reads the ACTUAL runtime partition sizes, so a 100 TB build side
-      // never converts while a few-MB one skips both sorts.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Same release discipline as Bench: localCheckpoint blocks from
-    // iterative queries (q74/q42) must not survive into the next sample.
-    def release(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
-    def statsOf(f: => Unit): (Double, Double, Double) = {
-      val ts = (1 to 3).map { _ => release()
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9 }
-      val s = ts.sorted
-      (s.head, s(1), s.last)
-    }
-    def medianOf(f: => Unit): Double = statsOf(f)._2
+    val spark = GraftSession.local()
     if (args.head == "skew") {
-      val (u, s, a) = Bench.skewBench(spark, sfDir, medianOf)
+      val (u, s, a) = Bench.skewBench(spark, sfDir)
       println(f"skew unsalted=$u%.2f salted=$s%.2f aqe=$a%.2f ratio=${u / s}%.2f")
       spark.stop(); return
     }
     if (args.head == "pipeline") {
-      def timedReleased(f: => Unit): Double = {
-        release(); val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      val samples = Bench.pipelineBench(spark, timedReleased)
+      // one JSON line per measured round, then the medians
+      val samples = Bench.pipelineBench(spark)
       samples.zipWithIndex.foreach { case (s, i) =>
-        println(f"round ${i + 1}: csv=${s.csv}%.2f merge=${s.merge}%.2f " +
-          f"full=${s.full}%.2f canary=${s.canary}%.2f full/sum=${s.full / (s.csv + s.merge)}%.2f")
+        val ratio = if (s.csv + s.merge > 0) s.full / (s.csv + s.merge) else -1.0
+        println(f"""{"i":$i,"csv":${s.csv}%.3f,"merge":${s.merge}%.3f,""" +
+          f""""full":${s.full}%.3f,"canary":${s.canary}%.3f,""" +
+          f""""io_canary":${s.ioc}%.3f,""" +
+          f""""full_over_sum":$ratio%.2f,"gc_sec":${s.gcSec}%.3f,""" +
+          f""""cached_bytes":${s.cachedBytes},"heap_mb":${s.heapMb}}""")
       }
-      def med(f: Bench.PipeSample => Double) = samples.map(f).sorted.apply(samples.size / 2)
+      def med(f: Bench.PipeSample => Double) = GraftSession.stats(samples.map(f))._2
       println(f"pipeline_1m=${med(_.full)}%.2f sec  csv_scan=${med(_.csv)}%.2f  " +
         f"merge_from_parquet=${med(_.merge)}%.2f  canary=${med(_.canary)}%.2f")
       spark.stop(); return
     }
     SparkEntry.queries(args.head)(spark, sfDir)
       .write.format("noop").mode("overwrite").save() // warmup
-    release()
     for (n <- args) {
       val ts = (1 to 3).map { _ =>
-        release()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        GraftSession.timedReleased(spark) {
+          SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        }
       }
-      println(f"$n%-30s median=${ts.sorted.apply(1)}%.2f  runs=${ts.map(t => f"$t%.2f").mkString(",")}")
+      println(f"$n%-30s median=${GraftSession.stats(ts)._2}%.2f  runs=${ts.map(t => f"$t%.2f").mkString(",")}")
     }
     spark.stop()
   }

@@ -94,18 +94,7 @@ object Verify {
     // optional 3rd arg: comma-separated query names (local iteration only;
     // the driver always runs the full set)
     val only = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts parquet encodings vary by generator (NANOS vs MICROS);
-      // nanosAsLong keeps NANOS readable as LONG, and Tables.toLongNanos
-      // folds every encoding to canonical long nanos at the scan.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     val digests = scala.collection.mutable.LinkedHashMap[String, (String, Long)]()
     SparkEntry.queries

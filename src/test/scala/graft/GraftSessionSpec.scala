@@ -1,0 +1,44 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+/** The shared local session: one set of settings, one stats formula, and
+  * one place that builds a session or releases persisted RDDs. Never calls
+  * `GraftSession.release` — suites share one session and run concurrently,
+  * so a release here would unpersist other suites' live checkpoints.
+  */
+class GraftSessionSpec extends SparkSpecBase {
+
+  test("stats: (min, median, max); an even-length sample reports the upper middle") {
+    assert(GraftSession.stats(Seq(3.0, 1.0, 2.0)) == ((1.0, 2.0, 3.0)))
+    assert(GraftSession.stats(Seq(5.0, 9.0, 1.0, 7.0, 3.0)) == ((1.0, 5.0, 9.0)))
+    assert(GraftSession.stats(Seq(4.0, 1.0, 3.0, 2.0)) == ((1.0, 3.0, 4.0)))
+    assert(GraftSession.stats(Seq(2.0, 1.0)) == ((1.0, 2.0, 2.0)))
+    assert(GraftSession.stats(Seq(0.5)) == ((0.5, 0.5, 0.5)))
+  }
+
+  test("builder carries the shared settings into the suite session") {
+    val conf = spark.conf
+    assert(spark.sparkContext.master == "local[4]")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.ui.enabled") == "false")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
+  test("main code builds sessions and releases persisted RDDs only in GraftSession") {
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val sources: Seq[Path] =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      finally walk.close()
+    assert(sources.size > 100, "src/main/scala not found from the working directory")
+    for (pattern <- Seq("SparkSession.builder", "getPersistentRDDs.values.foreach")) {
+      val offenders = sources.filter(p =>
+        p.getFileName.toString != "GraftSession.scala" &&
+          Files.readString(p).contains(pattern))
+      assert(offenders.isEmpty, s"$pattern outside GraftSession: ${offenders.mkString(", ")}")
+    }
+  }
+}
