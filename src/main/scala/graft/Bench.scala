@@ -1,484 +1,134 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession.{stats, timedReleased}
+import graft.bench.{History, Movers}
+
 /** Driver-run benchmark: times every SparkEntry query at the configured sf
-  * dir and prints ONE JSON line. Methodology:
+  * dir and prints three JSON lines (compact, full, ultra); bench_out.json
+  * keeps the full one. Methodology:
   *  - a warmup action first (JVM/codegen/parquet-footer caches are not part
   *    of query cost);
-  *  - each query materializes fully through the `noop` sink (a bare count()
-  *    can shortcut to metadata for scan-only plans);
-  *  - STRATIFIED sampling (round-16): one n=1 pass over the full
-  *    registry, then n=[[Iters]] re-measures for the 50 slowest and for
-  *    queries new this round, and n=[[TopIters]]+warmup for single-sample
-  *    movers and the top-10 — every number that can flag a regression is
-  *    an n≥3 median, while the stable sub-second tail (whose ±2× swing
-  *    sits below the mover threshold's noise floor) costs one sample.
-  *    `total` is the sum of reported medians; the artifact also carries
-  *    per-query [min, median, max] under "spread" so host noise separates
-  *    from plan regressions without forensics;
-  *  - cache cleared AND all persisted RDD blocks released before every run:
-  *    `localCheckpoint` blocks (the PageRank / connected-components
-  *    fixpoints) are persisted RDDs the SQL cache doesn't track, and left
-  *    to the GC-driven ContextCleaner they accumulate across a ~100-query
-  *    session — the round-5 driver artifact measured q74 at 19.3 s in
-  *    session position vs 5.8 s clean for exactly this reason;
-  *  - the end-to-end pipeline measurement runs FIRST (before the query
-  *    loop), so the artifact's pipeline_1m number reflects a fresh session,
-  *    not 97 queries' worth of temp-shuffle and block-manager residue;
-  *  - deterministic (sorted) execution order;
-  *  - a skew-join harness (see [[skewBench]]) measures the explicit salting
-  *    operator against the same join unsalted, reported under "skew";
-  *  - the 10 slowest queries (by the first pass's median) are RE-MEASURED
-  *    at n=[[TopIters]] and their [min, median, max] replaced (round-9
-  *    verdict task #6: the graph/overlap tail dominates the artifact's
-  *    spread; 5 samples there make round-over-round regressions
-  *    attributable without paying 5× across all ~284 queries). A failed
-  *    re-measure (negative sentinel) falls back to the first-pass stats
-  *    instead of erasing a valid measurement (round-10 advice);
-  *  - DELTA-TRIGGERED re-measure (round-10 verdict task #2): queries whose
-  *    first-pass median moved >1.5× in either direction vs the previous
-  *    round's `bench_out.json` (and whose larger side is ≥0.5 s — below
-  *    that, ±2× swing is the known noise floor, not a signal) get the same
-  *    n=[[TopIters]]+discarded-warmup treatment even when they sit below
-  *    the top-10 cutoff, and are listed under "movers" with their previous
-  *    medians — so an apparent regression always carries spread evidence
-  *    in the artifact that flagged it;
-  *  - queries that replay a session memo after the first consumer computes
-  *    (the q42 cluster family) are listed under "memoized" (round-10
-  *    verdict task #4): their per-query numbers time a ≤90-row
-  *    LocalRelation replay, not the clustering.
+  *  - each query materializes fully through the `noop` sink
+  *    ([[GraftSession.runQuery]]), and every sample starts from a released
+  *    session ([[GraftSession.timedReleased]]): `localCheckpoint` blocks the
+  *    SQL cache does not track otherwise pile up across the sweep;
+  *  - the end-to-end pipeline runs FIRST, so pipeline_1m reflects a fresh
+  *    session, not a hundred queries' worth of shuffle and block residue;
+  *  - stratified sampling in sorted order: one warm sample per query, then
+  *    n=[[Iters]] pools for the 50 slowest, newcomers and mover candidates,
+  *    and n=[[TopIters]] pools for the 10 slowest. Every number that can
+  *    flag a regression is an n≥3 median; the stable sub-second tail, whose
+  *    ±2× swing sits below the mover floor, costs one sample. `total` is
+  *    the sum of reported medians, and "spread" carries [min, median, max];
+  *  - movers against the previous artifact and a sample of the
+  *    sub-threshold band re-run in one forked fresh JVM ([[MoverConfirm]]);
+  *    the policy is [[graft.bench.Movers]];
+  *  - constant-code canaries, sampled before, through and after the sweep,
+  *    measure the host; the ledger they are read against and the previous
+  *    artifact are read through [[graft.bench.History]];
+  *  - a skew-join harness ([[skewBench]]) reports under "skew";
+  *  - queries that replay a session memo are listed under "memoized": their
+  *    numbers time a ≤90-row LocalRelation replay, not the clustering.
   */
 object Bench {
 
+  private type Stats = (Double, Double, Double)
+
   val Iters = 3
   val TopIters = 5
-  /** Pipeline phases sample count — same n + discarded-warmup pattern as
-    * the top-10 queries (round-10 verdict task #1). 5→3 in round 19
-    * (verdict task #1: the instrument outgrew the driver budget; 3 samples
-    * still give a median with spread, and the pipeline number has been
-    * stable since r14). */
+  /** Pipeline rounds measured after one discarded warmup round. */
   val PipeIters = 3
 
-  /** Rolling canary ledger (round-16 verdict tasks #1/#4): one committed
-    * JSON file of per-run canary medians — cpu = the constant-CSV parse
-    * canary, io = the constant parquet scan + full-width-shuffle canary.
-    * Factors compare against the MIN of the last [[HistoryWindow]]
-    * same-sf entries, so one contended committed run can never invert
-    * the discount logic the way a single-previous-artifact comparison
-    * did in r15. Seeded from the committed bench_out.json history
-    * (tools/seed_canary_history.py). */
-  val HistoryPath = "canary_history.json"
-  val HistoryKeep = 40
-  val HistoryWindow = 10
-
-  /** All ledger entries as (sf, cpu, io); absent/invalid fields read -1.
-    * A ledger that exists but fails to parse logs to stderr (round-16
-    * ADVICE: silent treat-as-empty resets the rolling window with no
-    * signal) and reads as empty.
-    */
-  def readHistoryAll(path: String = HistoryPath): Seq[(String, Double, Double)] = try {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) Seq.empty
-    else {
-      import org.json4s._
-      val parsed = jackson.JsonMethods.parse(new String(
-        java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8))
-      parsed \ "entries" match {
-        case JArray(xs) => xs.flatMap { e =>
-          def num(f: String): Double = e \ f match {
-            case JDouble(v) => v
-            case JInt(v) => v.toDouble
-            case _ => -1.0
-          }
-          e \ "sf" match {
-            case JString(s) => Some((s, num("cpu"), num("io")))
-            case _ => None
-          }
-        }
-        case _ => Seq.empty
-      }
-    }
-  } catch { case e: Throwable =>
-    System.err.println(s"[bench] WARNING: canary ledger $path unreadable ($e) — rolling window resets")
-    Seq.empty
-  }
-
-  /** Same-sf (cpu, io) medians, oldest first. */
-  def readHistory(sf: String, path: String = HistoryPath): Seq[(Double, Double)] =
-    readHistoryAll(path).collect { case (s, c, i) if s == sf => (c, i) }
-
-  /** Per-sf all-time canary floor (round-17 verdict task #3): the
-    * stickiest (cpu, io) minima ever appended, kept beside the rolling
-    * window so a long degraded streak cannot quietly reset the bar —
-    * after 10 contended runs the window's 2nd-lowest floor inherits the
-    * degradation, the all-time floor does not. Ledgers written before
-    * round 18 carry no `alltime` object; the floor then seeds from the
-    * surviving entries on the next append. */
-  def readAlltime(path: String = HistoryPath): Map[String, (Double, Double)] = try {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) Map.empty
-    else {
-      import org.json4s._
-      val parsed = jackson.JsonMethods.parse(new String(
-        java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8))
-      parsed \ "alltime" match {
-        case JObject(fields) => fields.flatMap { case (sf, o) =>
-          def num(f: String): Double = o \ f match {
-            case JDouble(v) => v
-            case JInt(v) => v.toDouble
-            case _ => -1.0
-          }
-          Some(sf -> ((num("cpu"), num("io"))))
-        }.toMap
-        case _ => Map.empty
-      }
-    }
-  } catch { case _: Throwable => Map.empty }
-
-  def appendHistory(sf: String, cpu: Double, io: Double,
-      path: String = HistoryPath): Unit = {
-    var tmp: java.nio.file.Path = null
-    try {
-      val all = (readHistoryAll(path) :+ ((sf, cpu, io))).takeRight(HistoryKeep)
-      // sticky floor: fold the previous alltime with every surviving
-      // entry, per sf — min over positives, -1 when none
-      val prevAll = readAlltime(path)
-      def mn(vals: Seq[Double]): Double = {
-        val p = vals.filter(_ > 0); if (p.isEmpty) -1.0 else p.min
-      }
-      val alltime = (all.map(_._1) ++ prevAll.keys).distinct.sorted.map { s =>
-        val ofSf = all.filter(_._1 == s)
-        s -> ((mn(ofSf.map(_._2) ++ prevAll.get(s).map(_._1).toSeq),
-               mn(ofSf.map(_._3) ++ prevAll.get(s).map(_._2).toSeq)))
-      }
-      val entriesBody = all.map { case (s, c, i) =>
-        f"""{"sf":"$s","cpu":$c%.4f,"io":$i%.4f}"""
-      }.mkString("[", ",", "]")
-      val alltimeBody = alltime.map { case (s, (c, i)) =>
-        f""""$s":{"cpu":$c%.4f,"io":$i%.4f}"""
-      }.mkString("{", ",", "}")
-      val body = s"""{"entries":$entriesBody,"alltime":$alltimeBody}\n"""
-      // temp-file + ATOMIC_MOVE (round-16 ADVICE): an in-place overwrite
-      // crashed mid-write corrupts the committed ledger, and readHistoryAll
-      // would then silently reset the rolling window
-      val target = java.nio.file.Paths.get(path)
-      val dir = Option(target.toAbsolutePath.getParent)
-        .getOrElse(java.nio.file.Paths.get("."))
-      tmp = java.nio.file.Files.createTempFile(dir, ".canary_history", ".tmp")
-      java.nio.file.Files.write(tmp,
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      try java.nio.file.Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-        // non-atomic fallback beats losing the append on exotic filesystems
-        java.nio.file.Files.move(tmp, target,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    } catch { case _: Throwable => }
-    // round-17 ADVICE: a throw between createTempFile and the move used
-    // to leak a .canary_history*.tmp in the repo root on every run
-    finally if (tmp != null)
-      try java.nio.file.Files.deleteIfExists(tmp) catch { case _: Throwable => }
-  }
-
-  /** Robust floor of the ledger window (round-16 ADVICE): the bare MIN
-    * let one spuriously fast entry (a partially cached canary run)
-    * inflate every factor ≥ 1.3 for the next [[HistoryWindow]] runs,
-    * flipping movers_discounted and masking real movers. With ≥ 4
-    * entries the floor is the SECOND-lowest — one outlier can never set
-    * the bar, while two independent clean runs still can; smaller
-    * windows keep the min (not enough mass to call anything an outlier).
-    */
-  def robustFloor(past: Seq[Double]): Double = {
-    val w = past.filter(_ > 0).takeRight(HistoryWindow).sorted
-    if (w.isEmpty) -1.0
-    else if (w.size >= 4) w(1)
-    else w.head
-  }
-
-  /** cur vs the [[robustFloor]] of the last [[HistoryWindow]] positive
-    * entries — the rolling host factor both canaries report; -1 when
-    * either side is unavailable. */
-  def rollFactor(cur: Double, past: Seq[Double]): Double = {
-    val f = robustFloor(past)
-    if (cur > 0 && f > 0) cur / f else -1.0
-  }
+  /** Pre-flight host gate: a run whose canaries read above the threshold
+    * against the ledger floors backs off and retries (sleeps sum to 60 s at
+    * most); still above it, the artifact ships stamped degraded_host. */
+  val PreflightMax = 3
+  val PreflightThreshold = 1.5
+  val PreflightBackoffMs = 20000L
 
   def main(args: Array[String]): Unit = {
-    val wallT0 = System.nanoTime() // whole-sweep wall clock (verdict task #2)
+    val wallT0 = System.nanoTime()
+    def wallSec: Double = (System.nanoTime() - wallT0) / 1e9
+    // every phase stamps its cumulative wall, so bench-wall regressions are attributable
+    def wallMark(label: String): Unit = System.err.println(f"[bench-wall] $label t=$wallSec%.1f s")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
-    // Phase wall accounting (round-19 verdict task #1): the instrument lost
-    // the r18 32-core artifact to a wall timeout, so every phase now stamps
-    // its cumulative wall to stderr — the budget breakdown is measured, not
-    // inferred, and the next regression in bench wall is attributable.
-    def wallMark(label: String): Unit =
-      System.err.println(f"[bench-wall] $label t=${(System.nanoTime() - wallT0) / 1e9}%.1f s")
+    // SPARK_GRAFT_BENCH_ONLY=q1,q2,... sweeps only those queries and writes
+    // neither bench_out.json nor the ledger: a partial map would make the
+    // next full run's missing queries newcomers
+    val onlySubset: Option[Set[String]] =
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').map(_.trim).toSet)
     val spark = GraftSession.local(cpus)
-    import GraftSession.stats
-    def timedReleased(f: => Unit): Double = GraftSession.timedReleased(spark)(f)
-
-    /** Raw released+timed samples of one query; empty on any failure.
-      * `gc` gates the per-query System.gc() (round-19 verdict task #1:
-      * full-GC hygiene across 501 queries was ~0.3 s × fleet of pure
-      * wall; for the stable sub-half-second tail the pause exceeds any
-      * garbage-induced noise it prevents, so the first pass skips it
-      * when the comparable previous median sits under the mover
-      * threshold's 0.5 s floor — re-measure tiers always collect). */
-    def runSamples(name: String, iters: Int, warmup: Boolean = false,
-        gc: Boolean = true): Seq[Double] =
-      try {
-        if (gc) System.gc() // don't charge query N with query N-1's garbage
-        def once(): Unit =
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        // re-measure tiers: a DISCARDED warmup first — by re-measure time
-        // ~280 other queries have evicted this query's footer/JIT state, and
-        // that one cold run otherwise lands in the max and reads as spread
-        if (warmup) {
-          val wT = timedReleased(once())
-          val ss = (1 to iters).map(_ => timedReleased(once()))
-          // warm-vs-cold evidence for the stratification design (round-19):
-          // how much the discarded warmup actually buys, per query
-          if (iters == 1)
-            System.err.println(f"[bench-wq] $name cold=$wT%.3f warm=${ss.head}%.3f")
-          ss
-        } else (1 to iters).map(_ => timedReleased(once()))
-      } catch { case _: Throwable => Seq.empty }
 
     // Warmup: exercise codegen, shuffle machinery, and every table's footer.
     try {
-      SparkEntry.queries.headOption.foreach { case (n, _) =>
-        SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-      }
+      SparkEntry.queries.headOption.foreach { case (n, _) => GraftSession.runQuery(spark, n, sfDir) }
       spark.catalog.clearCache()
     } catch { case _: Throwable => }
     wallMark("warmup")
 
-    // Previous round's full artifact, read BEFORE this run overwrites it —
-    // the reference point for delta-triggered re-measure, plus the prior
-    // canary median (the session-level contention yardstick; sf-invariant
-    // by construction, so it reads regardless of the sf gate below).
-    // Round-19 (verdict task #1): medians are delta-COMPARABLE only when
-    // the prior artifact ran the same sf AND the same core count — the
-    // committed r18 artifact is the driver's local[8] run, and reading its
-    // medians from a local[32] sweep flags half the fleet as movers, which
-    // costs n=3 re-measures plus a ~20-query fresh-JVM fork of pure wall.
-    // The NAME set stays readable regardless (a query present in any prior
-    // artifact is not "new this round"), so an incomparable artifact can
-    // never push all 501 queries into the n=3 newcomer tier either.
-    val (prevMedians, prevNames, prevCanary): (Map[String, Double], Set[String], Double) = try {
-      val p = java.nio.file.Paths.get("bench_out.json")
-      if (java.nio.file.Files.exists(p)) {
-        import org.json4s._
-        val parsed = jackson.JsonMethods.parse(new String(
-          java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8))
-        val sameSf = parsed \ "sf" match {
-          case JString(s) => s == sfDir
-          case _ => false
-        }
-        // artifacts written before round 19 carry no "cpus" field; they
-        // predate the gate and are treated as incomparable (the one in the
-        // tree at the time of this change is a known local[8] run)
-        val sameCpus = parsed \ "cpus" match {
-          case JString(s) => s == cpus.toString
-          case _ => false
-        }
-        val allMedians = parsed \ "queries" match {
-          case JObject(fields) => fields.collect {
-            case (k, JDouble(v)) => k -> v
-            case (k, JInt(v)) => k -> v.toDouble
-          }.toMap
-          case _ => Map.empty[String, Double]
-        }
-        val medians = if (sameSf && sameCpus) allMedians
-        else {
-          if (allMedians.nonEmpty)
-            System.err.println(s"[bench] prev artifact incomparable (sameSf=$sameSf sameCpus=$sameCpus) — name set kept, medians ignored")
-          Map.empty[String, Double]
-        }
-        val canary = parsed \ "pipeline_phases" \ "canary" match {
-          case JArray(xs) if xs.size == 3 => xs(1) match {
-            case JDouble(v) => v
-            case JInt(v) => v.toDouble
-            case _ => -1.0
-          }
-          case _ => -1.0
-        }
-        (medians, allMedians.keySet, canary)
-      } else (Map.empty, Set.empty, -1.0)
-    } catch { case _: Throwable => (Map.empty, Set.empty, -1.0) }
+    // Both read once, before this run overwrites either.
+    val prev = History.readPrev(sfDir, cpus)
+    val ledger = History.read()
+    val hist = ledger.of(sfDir)
 
-    // Run-lifetime canary stage (round-16 verdict task #3): the staged
-    // constant files live for the WHOLE run so canary samples can be
-    // interleaved through the sweep — r16 proved a single pipeline-phase
-    // time-point cannot vouch for the other ~50 minutes (q109 ran 1.4×
-    // slower fresh-JVM with the CPU canary reading best-ever).
-    val canaryStage: Option[CanaryStage] =
-      try Some(new CanaryStage(spark, 1000000L))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] canary staging FAILED: $e"); None }
-    // (label, cpu_sec, io_sec) samples in sweep order — emitted verbatim
-    // as `canary_series`; movers are read against the sample nearest
-    // their own accepted measurement instead of a run-level factor
-    val series = scala.collection.mutable.ArrayBuffer[(String, Double, Double)]()
-    def sampleCanaries(label: String): Unit = canaryStage.foreach { st =>
-      try series += ((label, timedReleased(st.runCpu()), timedReleased(st.runIo())))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] canary sample $label FAILED: $e") }
-    }
-    // Pre-flight host gate (round-17 verdict task #3): both r17 full
-    // runs were taken on a 2.6–3.4× contended host and the round's story
-    // survived only because the improvement was big enough to show
-    // through. Measure the host BEFORE committing ~50 minutes of sweep
-    // to it: best-of-2 per canary (the floor is what a clean host can
-    // do; the min strips one-off scheduler blips), factors against BOTH
-    // the rolling robust floor and the sticky all-time ledger floor (the
-    // conservative max of the two — a long degraded streak inflates the
-    // window floor but never the all-time one). Factor > threshold ⇒
-    // back off and retry, up to PreflightMax attempts; still degraded ⇒
-    // the artifact ships stamped degraded_host:true so round-over-round
-    // tooling weights it instead of trusting it.
-    val histPre = readHistory(sfDir)
-    val alltimePre = readAlltime().get(sfDir)
-    def preflightFactor(cur: Double, hist: Seq[Double],
-        alltime: Option[Double]): Double = {
-      val wf = rollFactor(cur, hist)
-      val af = alltime.filter(_ > 0) match {
-        case Some(f) if cur > 0 => cur / f
-        case _ => -1.0
-      }
-      math.max(wf, af)
-    }
-    var preAttempts = 0
-    var (preCpu, preIo, preF) = (-1.0, -1.0, -1.0)
-    var preOk = false
-    while (!preOk && preAttempts < PreflightMax) {
-      preAttempts += 1
-      canaryStage.foreach { st =>
-        preCpu = (1 to 2).map(_ => timedReleased(st.runCpu())).min
-        preIo = (1 to 2).map(_ => timedReleased(st.runIo())).min
-      }
-      preF = math.max(
-        preflightFactor(preCpu, histPre.map(_._1), alltimePre.map(_._1)),
-        preflightFactor(preIo, histPre.map(_._2), alltimePre.map(_._2)))
-      if (preF > PreflightThreshold) {
-        System.err.println(f"[bench] preflight $preAttempts/$PreflightMax: host " +
-          f"factor $preF%.2f > $PreflightThreshold (cpu $preCpu%.2fs io $preIo%.2fs) — backing off")
-        if (preAttempts < PreflightMax) Thread.sleep(PreflightBackoffMs * preAttempts)
-      } else preOk = true
-    }
+    val sweep = new Sweep(spark, sfDir)
+    val pre = sweep.preflight(hist, ledger.alltime.get(sfDir))
     // a factor of -1 (empty ledger) can never stamp the run degraded
-    val degradedHost = preF > PreflightThreshold
+    val degradedHost = pre.factor > PreflightThreshold
     if (degradedHost)
-      System.err.println(f"[bench] preflight EXHAUSTED at factor $preF%.2f — artifact stamped degraded_host")
+      System.err.println(f"[bench] preflight EXHAUSTED at factor ${pre.factor}%.2f — artifact stamped degraded_host")
     wallMark("preflight")
 
-    // index of the latest series sample taken BEFORE each query's
-    // accepted measurement (re-measures overwrite: the accepted stats
-    // are the later ones)
-    val seriesIdxAt = scala.collection.mutable.Map[String, Int]()
-    def markSeries(name: String): Unit =
-      if (series.nonEmpty) seriesIdxAt(name) = series.size - 1
-
-    // Fresh-session position for the end-to-end pipeline (round-5 driver
-    // artifact measured it LAST at 105.8 s vs 9.8 s in r4 — session decay,
-    // not a plan change; the code path was refactor-only that round).
-    val pipeSamples: Seq[PipeSample] = try pipelineBench(spark, stage = canaryStage)
+    val pipeSamples: Seq[PipeSample] = try pipelineBench(spark, stage = sweep.stage)
       catch { case e: Throwable =>
-        // never abort the query sweep for a pipeline failure, but never
-        // swallow it silently either: the r16a artifact lost its whole
-        // canary section (io-canary long overflow) and the run could not
-        // attribute a 1.2× fleet drift because this catch said nothing
+        // never abort the sweep for it, and never swallow it silently
         System.err.println(s"[bench] pipelineBench FAILED: $e")
         Seq.empty
       }
     GraftSession.release(spark)
     wallMark("pipeline")
-    // Stratified measurement (round-16 verdict task #6): ~500 queries ×
-    // n=3 was 38 min of bench wall and rising linearly with the registry —
-    // that cost is why contended mid-round artifacts ended up committed.
-    // One WARM single sample per query (2 runs, first discarded: the
-    // first execution after release() pays codegen/footer/JIT cost that
-    // the old n=3 median never reported — median of [cold, warm, warm]
-    // is warm — so a bare n=1 cold sample read 1.5–2× high fleet-wide
-    // and flagged 420/493 queries as movers on the first stratified
-    // run), then full spreads only where the detection power is needed:
-    //  - the 50 slowest by the warm sample (the tail carries the total)
-    //    at n=Iters;
-    //  - queries with no previous-round median (new this round — no
-    //    reference point, so buy the full spread) at n=Iters;
-    //  - warm-sample movers (>1.5× either way vs the previous artifact,
-    //    larger side ≥0.5 s) at n=Iters — the artifact's "movers" map
-    //    lists only queries still >1.5× AFTER that re-measure, so a
-    //    reported mover always carries n=Iters spread evidence;
-    //  - the 10 slowest re-measure at n=TopIters+warmup as before.
-    // Every number that can flag a regression is an n≥3 median; only the
-    // stable tail (whose sub-half-second ±2× swing was always below the
-    // mover threshold's floor) reports its warm single sample.
-    // SMOKE MODE (round-17): SPARK_GRAFT_BENCH_ONLY=q1,q2,... restricts
-    // the sweep to the named queries for iterating on the bench machinery
-    // itself. Side-effect-free: a subset run never overwrites
-    // bench_out.json (a partial map would turn the next full run's
-    // missing queries into "newcomers" and n=3 the whole fleet) and never
-    // appends to the canary ledger. The driver sets no env, so round
-    // artifacts always come from full sweeps.
-    val onlySubset: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').map(_.trim).toSet)
-    val sweepNames = SparkEntry.queries.keys.toSeq.sorted
+
+    // First pass: one WARM sample per query (a cold first run after
+    // release pays codegen/footer/JIT cost and read 1.5–2× high fleet-wide).
+    val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(k => onlySubset.forall(_.contains(k)))
-    sampleCanaries("fp:0")
-    val firstPass = sweepNames.zipWithIndex.map {
-      case (name, i) =>
-        if (i > 0 && i % 50 == 0) sampleCanaries(s"fp:$i")
-        // gc gating (see runSamples): only when the comparable previous
-        // median clears the 0.5 s mover floor, or no comparison exists
-        val gc = prevMedians.get(name).forall(_ >= 0.5)
-        val ss = runSamples(name, iters = 1, warmup = true, gc = gc)
-        markSeries(name)
-        name -> (if (ss.isEmpty) (-1.0, -1.0, -1.0) else stats(ss))
+    sweep.sampleCanaries("fp:0")
+    val firstPass = names.zipWithIndex.map { case (name, i) =>
+      if (i > 0 && i % 50 == 0) sweep.sampleCanaries(s"fp:$i")
+      val gc = prev.medians.get(name).forall(_ >= Movers.FloorSec)
+      val ss = sweep.samples(name, iters = 1, warmup = true, gc = gc)
+      name -> (if (ss.isEmpty) (-1.0, -1.0, -1.0) else stats(ss))
     }
-    sampleCanaries("fp:end")
+    sweep.sampleCanaries("fp:end")
     wallMark("first_pass")
-    val top50 = firstPass.filter(_._2._2 >= 0).sortBy(-_._2._2)
-      .take(50).map(_._1).toSet
+
+    // Re-measure to an n=Iters pool: the 50 slowest carry the total,
+    // newcomers have no reference point, and a mover must carry n≥3 spread.
+    val top50 = slowest(firstPass, 50).map(_._1).toSet
     val newcomers = firstPass.collect {
-      case (k, v) if v._2 >= 0 && !prevNames.contains(k) => k }.toSet
-    def isMove(cur: Double, prev: Double): Boolean =
-      prev > 0 && math.max(prev, cur) >= 0.5 &&
-        (cur / prev > 1.5 || prev / cur > 1.5)
+      case (k, v) if v._2 >= 0 && !prev.names.contains(k) => k }.toSet
     val moverCandidates = firstPass.collect { case (k, v)
-        if v._2 >= 0 && prevMedians.get(k).exists(isMove(v._2, _)) => k }.toSet
-    // queries whose REPORTED stats came from a successful n≥3 re-measure
-    // (round-16 ADVICE: counting every query merely SELECTED for
-    // re-measure overstated coverage when a re-measure crashed and fell
-    // back to its n=1 first-pass sample)
-    val fullMeasured = scala.collection.mutable.Set[String]()
-    // raw samples pooled per query across tiers (round-19 verdict task
-    // #1): the first-pass warm sample IS a released warm sample of the
-    // same query in the same session, so the n=Iters tier takes Iters−1
-    // fresh runs and pools it, and the n=TopIters tier takes 2 fresh
-    // runs (plus its own discarded warmup) on top of the n=3 tier's
-    // pool — medians are still over n≥3 / n≥5 warm samples, and ~50+10
-    // executions of the slowest queries leave the sweep. Spread now
-    // spans tier boundaries, which is strictly more session-phase
-    // evidence, not less.
-    val pooled = scala.collection.mutable.Map[String, Seq[Double]]()
+        if v._2 >= 0 && prev.medians.get(k).exists(Movers.isMove(v._2, _)) => k }.toSet
+    // the first-pass warm sample joins the pool, and the pool joins the top-10 pool
+    val pooled = mutable.Map[String, Seq[Double]]()
+    // only queries whose reported stats came from a successful n≥3 re-measure
+    val fullMeasured = mutable.Set[String]()
     var reCount = 0
     val results1 = firstPass.map { case (k, v) =>
       if (moverCandidates(k) || top50(k) || newcomers(k)) {
-        if (reCount > 0 && reCount % 25 == 0) sampleCanaries(s"re:$reCount")
+        if (reCount > 0 && reCount % 25 == 0) sweep.sampleCanaries(s"re:$reCount")
         reCount += 1
-        val fresh = runSamples(k, Iters - 1)
-        markSeries(k)
+        val fresh = sweep.samples(k, Iters - 1)
         // a crashed re-measure must not erase a valid first-pass result
         if (fresh.isEmpty) k -> v
         else {
@@ -489,18 +139,14 @@ object Bench {
         }
       } else k -> v
     }
-    sampleCanaries("re:end")
+    sweep.sampleCanaries("re:end")
     wallMark("re_measure")
-    // tail stabilization: the 10 slowest re-measure to an n=TopIters
-    // pool; the pooled stats supersede the first pass in every artifact
-    // field
-    val topNames = results1.filter(_._2._2 >= 0).sortBy(-_._2._2)
-      .take(10).map(_._1).toSet
+
+    val topNames = slowest(results1, 10).map(_._1).toSet
     val results2 = results1.map { case (k, v) =>
       if (topNames(k)) {
         val prior = pooled.getOrElse(k, Seq.empty)
-        val fresh = runSamples(k, TopIters - prior.size, warmup = true)
-        markSeries(k)
+        val fresh = sweep.samples(k, TopIters - prior.size, warmup = true)
         if (fresh.isEmpty) k -> v
         else {
           fullMeasured += k
@@ -508,208 +154,85 @@ object Bench {
         }
       } else k -> v
     }
-    sampleCanaries("top:end")
+    sweep.sampleCanaries("top:end")
     wallMark("top10")
-    val resMap2 = results2.toMap
-    // mover survivors: still >1.5× after the in-run n≥3 re-measure
-    val moverNames = moverCandidates.filter { k =>
-      prevMedians.get(k).exists(isMove(resMap2(k)._2, _))
-    }
-    // Fresh-JVM confirmation (round-16 verdict task #1): in-run
-    // re-measures share the aged JVM and the contention window, so they
-    // cannot clear themselves — r16's movers map carried a proven
-    // phantom (q140: 3.78 s tight n=3 in-run; 1.06 s fresh JVM,
-    // identical to r15) that both canaries and the n=3 re-measure waved
-    // through. Every surviving mover re-runs in ONE forked fresh JVM
-    // (slowest-first, capped); a mover whose fresh-JVM median is no
-    // longer a move vs the previous round is reclassified `phantom` and
-    // its REPORTED stats are replaced by the fresh-JVM stats so the
-    // totals aren't polluted either. Both numbers land in the artifact.
-    val confirmList = moverNames.toSeq.sortBy(k => -resMap2(k)._2)
-      .take(MaxMoverConfirm)
-    // Sub-threshold band sample (round-17 verdict task #4): queries
-    // drifting 1.25–1.5× either way (larger side ≥ 0.5 s) sit below the
-    // mover cutoff, so none of them ever earned fresh-JVM evidence —
-    // r17's ~40-query 1.3–1.48× band was attributed to host contention
-    // by inference alone. Sample BandSampleN of them (deterministic
-    // seed from the previous artifact's medians: stable within a round,
-    // different across rounds) into the same fork; their reported stats
-    // are replaced by the fresh-JVM numbers whenever the fork succeeds,
-    // so the common-surface total reads clean-host evidence either way.
-    def bandRatio(cur: Double, prev: Double): Double =
-      if (prev > 0 && cur > 0) math.max(cur / prev, prev / cur) else -1.0
-    val bandCandidates = results2.collect { case (k, v)
-        if v._2 >= 0 && !moverNames(k) && prevMedians.get(k).exists { p =>
-          val r = bandRatio(v._2, p)
-          r >= 1.25 && r < 1.5 && math.max(p, v._2) >= 0.5
-        } => k }
-    val bandSeed = prevMedians.toSeq.sortBy(_._1).hashCode
-    val bandSample = new scala.util.Random(bandSeed)
-      .shuffle(bandCandidates.sorted).take(BandSampleN)
-    val bandSet = bandSample.toSet
-    val freshJvm: Map[String, (Double, Double, Double)] =
-      confirmMoversFreshJvm(confirmList ++ bandSample, sfDir, cpus)
+
+    // In-run re-measures share the aged JVM and the contention window, so
+    // they cannot clear themselves: surviving movers (slowest first,
+    // capped) and a band sample re-run in one fresh JVM.
+    val inRun = results2.toMap
+    val moverNames = moverCandidates.filter(k => Movers.isMove(inRun(k)._2, prev.medians(k)))
+    val confirmList = moverNames.toSeq.sortBy(k => -inRun(k)._2).take(Movers.MaxMoverConfirm)
+    val bandSample = Movers.bandSample(results2.map { case (k, v) => k -> v._2 },
+      prev.medians, moverNames)
+    val freshJvm = MoverConfirm.fork(confirmList ++ bandSample, sfDir, cpus)
     wallMark("fresh_jvm_fork")
-    val moverStatus: Map[String, String] = moverNames.iterator.map { k =>
-      freshJvm.get(k).filter(_._2 >= 0) match {
-        case Some(f) =>
-          k -> (if (prevMedians.get(k).exists(isMove(f._2, _))) "confirmed"
-                else "phantom")
-        case None => k -> "unconfirmed"
-      }
-    }.toMap
+    def freshMedian(k: String): Double = freshJvm.get(k).fold(-1.0)(_._2)
+    val moverStatus = moverNames.iterator
+      .map(k => k -> Movers.moverStatus(prev.medians(k), freshMedian(k))).toMap
+    // phantoms and band members report their fresh-JVM numbers, so the
+    // total reads clean-host evidence
     val results = results2.map { case (k, v) =>
-      if (moverStatus.get(k).contains("phantom")) k -> freshJvm(k)
-      else if (bandSet(k) && freshJvm.get(k).exists(_._2 >= 0)) k -> freshJvm(k)
+      if (moverStatus.get(k).contains("phantom") || (bandSample.contains(k) && freshMedian(k) >= 0))
+        k -> freshJvm(k)
       else k -> v
     }
-    val resMap = results.toMap
     val skew = try skewBench(spark, sfDir)
       catch { case _: Throwable => (-1.0, -1.0, -1.0) }
     wallMark("skew")
-    def fmt(t: (Double, Double, Double)) = s"[${t._1},${t._2},${t._3}]"
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v._2 }
-      .mkString("{", ",", "}")
-    val spreadAll = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2._2).filter(_ >= 0).sum
-    // Two artifact tiers. The full per-query map is ~5 KB — twice it has
-    // overflowed the harness's bounded stdout capture and left the round
-    // artifact unparseable. So: a COMPACT line (same schema, `queries`
-    // limited to the slowest 10) is printed both before AND after the full
-    // line — whichever end of the stream the capture window anchors to, a
-    // complete parseable line lands inside it. bench_out.json keeps the
-    // full map regardless.
-    val slowest = results.filter(_._2._2 >= 0).sortBy(-_._2._2).take(10)
-    val slow10 = slowest.map { case (k, v) => "\"" + k + "\":" + v._2 }
-      .mkString("{", ",", "}")
-    val slow10Spread = slowest.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    // Rich mover entries (round-16 verdict tasks #1/#3): prev = previous
-    // round's median, in_run = this sweep's n≥3 re-measure, fresh_jvm =
-    // the forked confirmation median (-1 if unconfirmed), status ∈
-    // {confirmed, phantom, unconfirmed}, canary_cpu/io = the rolling
-    // factors of the series sample nearest the mover's own measurement.
-    val histForSeries = readHistory(sfDir)
-    def seriesFactors(k: String): (Double, Double) = {
-      val si = seriesIdxAt.getOrElse(k, -1)
-      if (si >= 0 && si < series.size)
-        (rollFactor(series(si)._2, histForSeries.map(_._1)),
-          rollFactor(series(si)._3, histForSeries.map(_._2)))
-      else (-1.0, -1.0)
+
+    def pstats(f: PipeSample => Double): Stats =
+      if (pipeSamples.isEmpty) (-1.0, -1.0, -1.0) else stats(pipeSamples.map(f))
+    val pFull = pstats(_.full)
+    val canaryMed = pstats(_.canary)._2
+    val iocMed = pstats(_.ioc)._2
+    // vs the previous artifact alone; cpu/io factors read the ledger's floor
+    val hostFactor =
+      if (canaryMed > 0 && prev.canary > 0) canaryMed / prev.canary else -1.0
+    val (cpuFactor, ioFactor) = History.factors(canaryMed, iocMed, hist)
+    val moversDiscounted = Movers.discounted(cpuFactor, ioFactor, hostFactor)
+    // a failed pipeline bench must not append -1 entries that use up the keep-window
+    val after = ledger.appended(sfDir, canaryMed, iocMed)
+    val appended = onlySubset.isEmpty && (canaryMed > 0 || iocMed > 0) && History.write(after)
+    val alltimeFloor = (if (appended) after else ledger).alltime.get(sfDir)
+
+    def fmt(t: Stats) = s"[${t._1},${t._2},${t._3}]"
+    def r3(d: Double): String = f"$d%.3f"
+    def obj(rs: Seq[(String, Stats)])(f: Stats => String): String =
+      rs.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+    // prev = previous median, in_run = this sweep's n≥3 re-measure,
+    // fresh_jvm = the fork's median (-1 if none), canary_cpu/io = rolling
+    // factors of the series sample nearest the query's own measurement
+    def entry(k: String, status: String): String = {
+      val (cf, iof) = History.seriesFactors(sweep.series.toSeq, sweep.seriesIdxAt.getOrElse(k, -1), hist)
+      f""""$k":{"prev":${prev.medians(k)}%.3f,"in_run":${inRun(k)._2}%.3f,"fresh_jvm":${freshMedian(k)}%.3f,""" +
+        f""""status":"$status","canary_cpu":$cf%.3f,"canary_io":$iof%.3f}"""
     }
-    val moversJson = moverNames.toSeq.sorted.map { k =>
-      val prev = prevMedians(k)
-      val inRun = resMap2(k)._2
-      val fj = freshJvm.get(k).map(_._2).getOrElse(-1.0)
-      val status = moverStatus(k)
-      val (cf, iof) = seriesFactors(k)
-      f""""$k":{"prev":$prev%.3f,"in_run":$inRun%.3f,"fresh_jvm":$fj%.3f,""" +
-        f""""status":"$status","canary_cpu":$cf%.3f,"canary_io":$iof%.3f}"""
-    }.mkString("{", ",", "}")
-    // band entries carry the same four fields; status reads "confirmed"
-    // when the fresh JVM still shows ≥ 1.25× drift vs the previous
-    // round, "host" when the drift evaporates in a clean process
-    val bandJson = bandSample.sorted.map { k =>
-      val prev = prevMedians(k)
-      val inRun = resMap2(k)._2
-      val fj = freshJvm.get(k).map(_._2).getOrElse(-1.0)
-      val status =
-        if (fj < 0) "unconfirmed"
-        else if (bandRatio(fj, prev) >= 1.25) "confirmed"
-        else "host"
-      val (cf, iof) = seriesFactors(k)
-      f""""$k":{"prev":$prev%.3f,"in_run":$inRun%.3f,"fresh_jvm":$fj%.3f,""" +
-        f""""status":"$status","canary_cpu":$cf%.3f,"canary_io":$iof%.3f}"""
-    }.mkString("{", ",", "}")
-    val seriesJson = series.map { case (l, c, i) =>
+    val moversJson = moverNames.toSeq.sorted.map(k => entry(k, moverStatus(k))).mkString("{", ",", "}")
+    val bandJson = bandSample.sorted
+      .map(k => entry(k, Movers.bandStatus(prev.medians(k), freshMedian(k)))).mkString("{", ",", "}")
+    val seriesJson = sweep.series.map { case (l, c, i) =>
       f"""{"at":"$l","cpu":$c%.3f,"io":$i%.3f}"""
     }.mkString("[", ",", "]")
     val memoJson = (graft.queries.ExtensionQueries2.memoizedQueries ++
         graft.queries.ExtensionQueries9.ppjoinMemoizedQueries ++
         graft.queries.ExtensionQueries134.memoizedQueries)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Per-sample pipeline attribution (round-11 verdict task #2): each
-    // round measured csv → merge → full → canary ADJACENTLY, so every full
-    // sample decides its own residual instead of leaving a median-vs-sum
-    // gap for the judge to adjudicate from minima:
-    //  - "ok":       full_i ≤ 1.35 × (csv_i + merge_i) — the contract holds
-    //                in this sample;
-    //  - "host":     full_i overshoots AND this round's adjacent probes
-    //                co-inflate (canary_i or phase-sum_i ≥ 1.5 × the run's
-    //                best round) — host contention measured at the instant;
-    //  - "isolated": full_i overshoots with NORMAL adjacent probes — a
-    //                burst confined to the full window. Not a plan
-    //                regression: the identical plan ran at phase-sum speed
-    //                in the rounds labeled "ok" (same JVM, same bytes).
-    def pstats(f: PipeSample => Double): (Double, Double, Double) =
-      if (pipeSamples.isEmpty) (-1.0, -1.0, -1.0) else stats(pipeSamples.map(f))
-    val pFull = pstats(_.full)
-    val baseSum = if (pipeSamples.isEmpty) -1.0
-      else pipeSamples.map(s => s.csv + s.merge).min
-    val baseCanary = if (pipeSamples.isEmpty) -1.0 else pipeSamples.map(_.canary).min
-    val samplesJson = pipeSamples.map { s =>
-      val sum = s.csv + s.merge
-      val ratio = if (sum > 0) s.full / sum else -1.0
-      val verdict =
-        if (ratio >= 0 && ratio <= 1.35) "ok"
-        else if (s.canary >= 1.5 * baseCanary || sum >= 1.5 * baseSum) "host"
-        else "isolated"
-      f"""{"csv":${s.csv}%.3f,"merge":${s.merge}%.3f,"full":${s.full}%.3f,""" +
-        f""""canary":${s.canary}%.3f,"io_canary":${s.ioc}%.3f,""" +
-        f""""full_over_sum":$ratio%.2f,""" +
-        f""""gc_sec":${s.gcSec}%.3f,"cached_bytes":${s.cachedBytes},""" +
-        f""""heap_mb":${s.heapMb},"verdict":"$verdict"}"""
-    }.mkString("[", ",", "]")
-    // Session-level contention verdict (round-13 verdict task #5): the
-    // canary is a constant file scanned by constant code, so its median
-    // moving round-over-round measures the HOST, not any plan. The r13
-    // bench ran on a contended host and only the per-sample pipeline
-    // attribution caught it — the 406 per-query medians carried no flag,
-    // so mover analysis needed judge inference (q112's 2.5× "regression"
-    // was the contention). host_factor = this canary median / previous;
-    // movers_discounted flips when the canary itself moved ≥1.3× either
-    // way — read the movers map through that flag.
-    val canaryMed = pstats(_.canary)._2
-    val iocMed = pstats(_.ioc)._2
-    val hostFactor =
-      if (canaryMed > 0 && prevCanary > 0) canaryMed / prevCanary else -1.0
-    // Rolling reference (round-16 verdict task #4): host_factor compares
-    // against the single previous committed artifact, so one contended
-    // mid-round commit inverts the discount logic (r15: the final run's
-    // canary read 0.394 "much faster" vs a contended intermediate while
-    // actually running on a slower host than r14's artifact). The rolling
-    // ledger keeps the last HistoryKeep per-run canary medians; each
-    // factor compares against the MIN of the last HistoryWindow entries
-    // at the same sf — "vs the best host observed lately" — so a factor
-    // ≥ 1.3 always means "this run's host was slow", never "the previous
-    // run happened to be". cpu_factor reads the parse-bound CSV canary,
-    // io_factor the scan+shuffle parquet canary (task #1): a clean-cpu /
-    // dirty-io run is now visible in the artifact instead of inferred.
-    val history = readHistory(sfDir)
-    val cpuFactor = rollFactor(canaryMed, history.map(_._1))
-    val ioFactor = rollFactor(iocMed, history.map(_._2))
-    // a failed pipeline bench must not append junk (-1) entries that
-    // consume the ledger's keep-window
-    if (onlySubset.isEmpty && (canaryMed > 0 || iocMed > 0))
-      appendHistory(sfDir, canaryMed, iocMed)
-    val moversDiscounted =
-      (cpuFactor > 0 && cpuFactor >= 1.3) || (ioFactor > 0 && ioFactor >= 1.3) ||
-        (cpuFactor < 0 && ioFactor < 0 && hostFactor > 0 &&
-          (hostFactor >= 1.3 || hostFactor <= 1.0 / 1.3))
-    // staged-memo accounting (round-17 verdict task #2): the generator
-    // cost the memo amortizes, as a reported figure — sum-of-medians vs
-    // wall_sec now reconciles without forensics
+    val samplesJson = pipeSamples.zip(Movers.pipeVerdicts(pipeSamples))
+      .map { case (s, v) => s"""{${s.fields},"verdict":"$v"}""" }.mkString("[", ",", "]")
+    // the generator cost the staged memos amortize, so sum-of-medians vs
+    // wall_sec reconciles
     val stagingJson = graft.core.StagedMemo.stagingSeconds.toSeq.sortBy(_._1)
       .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    val alltimeFloor = readAlltime().get(sfDir)
+    val total = results.map(_._2._2).filter(_ >= 0).sum
+    val slow10 = slowest(results, 10)
     val suffix =
       s""""skew":{"unsalted":${skew._1},"salted":${skew._2},"aqe":${skew._3}},""" +
-      f""""host_factor":$hostFactor%.3f,"prev_canary_median":$prevCanary%.3f,""" +
+      f""""host_factor":$hostFactor%.3f,"prev_canary_median":${prev.canary}%.3f,""" +
       f""""cpu_factor":$cpuFactor%.3f,"io_factor":$ioFactor%.3f,""" +
-      s""""canary_history_n":${history.size},""" +
-      f""""preflight":{"cpu":$preCpu%.3f,"io":$preIo%.3f,"factor":$preF%.3f,""" +
-      s""""attempts":$preAttempts},"degraded_host":$degradedHost,""" +
+      s""""canary_history_n":${hist.size},""" +
+      f""""preflight":{"cpu":${pre.cpu}%.3f,"io":${pre.io}%.3f,"factor":${pre.factor}%.3f,""" +
+      s""""attempts":${pre.attempts}},"degraded_host":$degradedHost,""" +
       f""""alltime_floor":{"cpu":${alltimeFloor.map(_._1).getOrElse(-1.0)}%.3f,""" +
       f""""io":${alltimeFloor.map(_._2).getOrElse(-1.0)}%.3f},""" +
       s""""movers_discounted":$moversDiscounted,""" +
@@ -722,35 +245,24 @@ object Bench {
       s""""canary":${fmt(pstats(_.canary))},""" +
       s""""io_canary":${fmt(pstats(_.ioc))},""" +
       s""""full":${fmt(pFull)}},"pipeline_samples":$samplesJson,""" +
-      f""""wall_sec":${(System.nanoTime() - wallT0) / 1e9}%.1f,""" +
+      f""""wall_sec":$wallSec%.1f,""" +
       s""""cpus":"$cpus","sf":"$sfDir"}"""
-    // n semantics post-stratification: "n" is the full-measure tier
-    // (top-50 + newcomers), "n_tail" the single-sample tier, "n_top10"
-    // the top-10/mover tier; "n_full_measured" counts ONLY queries whose
-    // reported stats actually came from a successful n≥3 re-measure
-    // (round-16 ADVICE — crashed re-measures that fell back to the n=1
-    // first-pass sample no longer inflate the count).
-    val nFullMeasured = fullMeasured.size
+    // "n" is the full-measure tier, "n_tail" the single-sample tier,
+    // "n_top10" the top-10 tier
     val tiers = s""""n":$Iters,"n_tail":1,"n_top10":$TopIters,""" +
-      s""""n_full_measured":$nFullMeasured,"movers_checked":${moverCandidates.size},""" +
+      s""""n_full_measured":${fullMeasured.size},"movers_checked":${moverCandidates.size},""" +
       s""""movers_confirm_n":${confirmList.count(freshJvm.contains)},""" +
       s""""band_sample_n":${bandSample.size},"""
+    // The full line is ~5 KB and overflows a bounded stdout capture, so a
+    // compact line (`queries` limited to the slowest 10) prints before it.
     val compact = s"""{"metric":"total","value":$total,"unit":"sec",""" + tiers +
-      s""""queries_total":${results.size},"queries":$slow10,"spread":$slow10Spread,""" + suffix
+      s""""queries_total":${results.size},"queries":${obj(slow10)(_._2.toString)},""" +
+      s""""spread":${obj(slow10)(fmt)},""" + suffix
     val json = s"""{"metric":"total","value":$total,"unit":"sec",""" + tiers +
-      s""""queries":$qs,"spread":$spreadAll,""" + suffix
-    // LAST line must be a COMPLETE JSON object inside the driver's bounded
-    // stdout tail capture. Measured r13/r14: the capture keeps the final
-    // 2000 chars and sbt appends a ~70-char "[success]" line, so anything
-    // longer than ~1900 chars loses its HEAD and the round's artifact
-    // records "parsed": null. The r14 compact line (top-10 + spreads +
-    // movers + 5 pipeline samples) was itself >1900 chars — hence this
-    // ULTRA line: totals, host_factor, movers_discounted, top-10 medians,
-    // pipeline_1m, skew, nothing variable-length beyond that (~700 chars).
-    // The full per-query artifact lives in bench_out.json (committed).
-    def r3(d: Double): String = f"$d%.3f"
-    val ultraQs = slowest.map { case (k, v) => "\"" + k + "\":" + r3(v._2) }
-      .mkString("{", ",", "}")
+      s""""queries":${obj(results)(_._2.toString)},"spread":${obj(results)(fmt)},""" + suffix
+    // The LAST line must fit the driver's tail capture: it keeps the final
+    // 2000 chars, and sbt appends a ~70-char "[success]" line. So the ultra
+    // line holds only fixed-size fields (~700 chars).
     val ultra = s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
       s""""n":$Iters,"n_tail":1,"n_top10":$TopIters,"queries_total":${results.size},""" +
       s""""host_factor":${r3(hostFactor)},"cpu_factor":${r3(cpuFactor)},""" +
@@ -758,174 +270,130 @@ object Bench {
       s""""movers_n":${moverNames.size},""" +
       s""""movers_phantom_n":${moverStatus.values.count(_ == "phantom")},""" +
       s""""degraded_host":$degradedHost,""" +
-      f""""wall_sec":${(System.nanoTime() - wallT0) / 1e9}%.0f,""" +
+      f""""wall_sec":$wallSec%.0f,""" +
       s""""pipeline_1m_sec":${r3(pFull._2)},""" +
       s""""skew":{"unsalted":${r3(skew._1)},"salted":${r3(skew._2)},"aqe":${r3(skew._3)}},""" +
-      s""""queries":$ultraQs,"sf":"$sfDir"}"""
+      s""""queries":${obj(slow10)(v => r3(v._2))},"sf":"$sfDir"}"""
     println(compact)
     println(json)
     println(ultra)
     if (onlySubset.isEmpty)
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    if (ultra.length > 1800) // keep the tail-capture contract loudly checkable
+      Files.write(Paths.get(History.ArtifactPath), json.getBytes(UTF_8))
+    if (ultra.length > 1800)
       System.err.println(s"[bench] WARNING: ultra line ${ultra.length} chars — may exceed driver tail capture")
-    canaryStage.foreach(_.cleanup())
+    sweep.stage.foreach(_.cleanup())
     spark.stop()
   }
 
-  /** Fresh-JVM confirmation cap: the forked pass costs roughly
-    * JVM+session startup (~20 s) plus warmup+n=3 per mover; 20 slowest
-    * movers ≈ 15 min worst case — bounded, and phantom pollution
-    * concentrates in the slow entries anyway. */
-  val MaxMoverConfirm = 20
+  /** The `n` slowest successful results, slowest first. */
+  private def slowest(rs: Seq[(String, Stats)], n: Int): Seq[(String, Stats)] =
+    rs.filter(_._2._2 >= 0).sortBy(-_._2._2).take(n)
 
-  /** Sub-threshold band sample size (round-17 verdict task #4): the
-    * 1.25–1.5× drift band is exactly where host noise and real creep
-    * are indistinguishable, and it was the last part of the total
-    * resting on inference — ~8 members ride the same fresh-JVM fork as
-    * the movers each run. */
-  val BandSampleN = 8
+  private final case class Preflight(cpu: Double, io: Double, factor: Double, attempts: Int)
 
-  /** Pre-flight host gate (round-17 verdict task #3). Backoff 30 s → 20 s
-    * in round 19 (verdict task #1: cap total preflight sleep+probe at
-    * ~90 s — sleeps now sum to 60 s worst case, probes ~6 s/attempt). */
-  val PreflightMax = 3
-  val PreflightThreshold = 1.5
-  val PreflightBackoffMs = 20000L
+  /** One run's session and canary stage, with the canary series sampled
+    * through the sweep and each query's place in it. */
+  private final class Sweep(spark: SparkSession, sfDir: String) {
+    // Staged for the whole run so samples can interleave with the sweep:
+    // one time-point cannot vouch for ~50 minutes of host state.
+    val stage: Option[CanaryStage] =
+      try Some(new CanaryStage(spark, 1000000L))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] canary staging FAILED: $e"); None }
+    /** (label, cpu_sec, io_sec) in sweep order, emitted as `canary_series`. */
+    val series = mutable.ArrayBuffer[(String, Double, Double)]()
+    /** Index of the last series sample before each query's accepted
+      * measurement (re-measures overwrite it). */
+    val seriesIdxAt = mutable.Map[String, Int]()
 
-  /** Hard wall cap on the fresh-JVM confirmation fork (round-19 verdict
-    * task #1): the per-query budget formula alone reaches 42 min at the
-    * 20-mover + 8-band worst case, which is most of the driver's whole
-    * bench budget. 15 min bounds the damage; a fork that cannot finish
-    * inside it leaves its movers "unconfirmed", which the artifact
-    * already represents honestly. */
-  val FreshJvmWallCapSec = 900L
+    def sampleCanaries(label: String): Unit = stage.foreach { st =>
+      try series += ((label, timedReleased(spark)(st.runCpu()), timedReleased(spark)(st.runIo())))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] canary sample $label FAILED: $e") }
+    }
 
-  /** Re-measure `names` in ONE forked fresh JVM (same classpath, same
-    * JVM flags, same sf/cpus env) via [[MoverConfirm]]; returns each
-    * query's (min, median, max) from that process, empty on any failure
-    * (spawn, timeout, unparseable output) — confirmation is evidence,
-    * never a reason to abort the sweep. A fresh process escapes both the
-    * aged JVM (JIT/heap/codegen-cache state after ~500 queries) and the
-    * in-run contention window that r16 proved the in-run n=3 re-measure
-    * shares with the sample that flagged the mover.
-    */
-  def confirmMoversFreshJvm(names: Seq[String], sfDir: String,
-      cpus: Int): Map[String, (Double, Double, Double)] = {
-    if (names.isEmpty) return Map.empty
-    var errFile: java.nio.file.Path = null
-    // round-17 ADVICE: both child streams used to be discarded, so a
-    // crashed fork left "unconfirmed" movers with zero diagnostics —
-    // stderr now lands in a temp log whose tail is printed on ANY
-    // failure path (timeout, unparseable output, spawn error)
-    def errTail(): String =
-      if (errFile == null) "<no stderr captured>"
-      else try {
-        val s = new String(java.nio.file.Files.readAllBytes(errFile),
-          java.nio.charset.StandardCharsets.UTF_8)
-        s.substring(math.max(0, s.length - 2000))
-      } catch { case _: Throwable => "<stderr unreadable>" }
-    try {
-      import scala.jdk.CollectionConverters._
-      val outFile = java.nio.file.Files.createTempFile("graft_mover_confirm", ".json")
-      errFile = java.nio.file.Files.createTempFile("graft_mover_confirm", ".err")
-      val javaBin = java.nio.file.Paths
-        .get(System.getProperty("java.home"), "bin", "java").toString
-      // inherit this process's JVM args verbatim: the --add-opens list
-      // Spark 4 needs on JDK 17 arrives as separate list elements, so
-      // filtering by prefix would break flag/value pairing
-      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toSeq
-      val cp = System.getProperty("java.class.path")
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", cp, "graft.MoverConfirm", outFile.toString) ++ names
-      val pb = new ProcessBuilder(cmd.asJava)
-      pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
-      // discard stdout (results travel through the temp file); stderr →
-      // temp log, surfaced only when the confirmation fails
-      pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
-      pb.redirectError(errFile.toFile)
-      val proc = pb.start()
-      val done = proc.waitFor(math.min(120L + 90L * names.size, FreshJvmWallCapSec),
-        java.util.concurrent.TimeUnit.SECONDS)
-      if (!done) {
-        proc.destroyForcibly()
-        System.err.println("[bench] mover confirmation TIMED OUT — movers stay unconfirmed; child stderr tail:\n" + errTail())
-        return Map.empty
+    /** Best-of-2 per canary (what a clean host can do; the min strips
+      * one-off scheduler blips) against the ledger's floors, retried with
+      * backoff while above [[PreflightThreshold]]. */
+    def preflight(hist: Seq[(Double, Double)], alltime: Option[(Double, Double)]): Preflight = {
+      var p = Preflight(-1.0, -1.0, -1.0, 0)
+      var ok = false
+      while (!ok && p.attempts < PreflightMax) {
+        val (cpu, io) = stage.fold((p.cpu, p.io)) { st =>
+          (GraftSession.timedSamples(spark, 2)(st.runCpu()).min,
+            GraftSession.timedSamples(spark, 2)(st.runIo()).min)
+        }
+        p = Preflight(cpu, io, math.max(
+          History.preflightFactor(cpu, hist.map(_._1), alltime.map(_._1)),
+          History.preflightFactor(io, hist.map(_._2), alltime.map(_._2))), p.attempts + 1)
+        if (p.factor > PreflightThreshold) {
+          System.err.println(f"[bench] preflight ${p.attempts}/$PreflightMax: host " +
+            f"factor ${p.factor}%.2f > $PreflightThreshold (cpu $cpu%.2fs io $io%.2fs) — backing off")
+          if (p.attempts < PreflightMax) Thread.sleep(PreflightBackoffMs * p.attempts)
+        } else ok = true
       }
-      if (proc.exitValue() != 0)
-        System.err.println(s"[bench] mover confirmation child exited ${proc.exitValue()}; stderr tail:\n" + errTail())
-      import org.json4s._
-      val parsed = jackson.JsonMethods.parse(new String(
-        java.nio.file.Files.readAllBytes(outFile),
-        java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.deleteIfExists(outFile)
-      parsed match {
-        case JObject(fields) => fields.collect {
-          case (k, JArray(xs)) if xs.size == 3 =>
-            def num(j: JValue): Double = j match {
-              case JDouble(v) => v
-              case JInt(v) => v.toDouble
-              case _ => -1.0
-            }
-            k -> ((num(xs(0)), num(xs(1)), num(xs(2))))
-        }.toMap
-        case _ =>
-          System.err.println("[bench] mover confirmation output unparseable; child stderr tail:\n" + errTail())
-          Map.empty
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] mover confirmation FAILED: $e; child stderr tail:\n" + errTail())
-      Map.empty
-    } finally if (errFile != null)
-      try java.nio.file.Files.deleteIfExists(errFile) catch { case _: Throwable => }
+      p
+    }
+
+    /** `iters` released, timed runs of one query, marked against the series;
+      * empty on any failure. `warmup` discards one run first: by re-measure
+      * time other queries have evicted this one's footer and JIT state, and
+      * that cold run would land in the max. `gc` gates the per-query full
+      * GC, whose pause exceeds the noise it prevents on the sub-floor tail.
+      */
+    def samples(name: String, iters: Int, warmup: Boolean = false,
+        gc: Boolean = true): Seq[Double] = {
+      def once(): Unit = GraftSession.runQuery(spark, name, sfDir)
+      val ss = try {
+        if (gc) System.gc() // don't charge query N with query N-1's garbage
+        val cold = if (warmup) timedReleased(spark)(once()) else -1.0
+        val warm = GraftSession.timedSamples(spark, iters)(once())
+        // how much the discarded warmup buys, per query
+        if (warmup && iters == 1)
+          System.err.println(f"[bench-wq] $name cold=$cold%.3f warm=${warm.head}%.3f")
+        warm
+      } catch { case _: Throwable => Seq.empty }
+      if (series.nonEmpty) seriesIdxAt(name) = series.size - 1
+      ss
+    }
   }
 
-  /** One pipeline measurement ROUND: the four phases timed back-to-back
-    * within seconds of each other (round-11 verdict task #2 — per-sample
-    * attribution; the r10/r11 design measured each phase's 5 samples as a
-    * block, so a slow `full` median could only be adjudicated against
-    * phase medians taken up to a minute away):
-    *  - `csv`: raw robust-CSV scan→noop of the three 1M-row inputs —
-    *    pure ingest I/O + parse, no merge logic;
-    *  - `merge`: the SAME merge plan consuming parquet-staged copies of
-    *    the raw frames — plan cost with CSV I/O removed;
-    *  - `full`: CSV ingest → merge end-to-end (reported as
-    *    "pipeline_1m_sec", unchanged definition);
-    *  - `canary`: a plain schema-declared CSV scan of a pre-staged
-    *    CONSTANT file (2M rows, fixed bytes, no pipeline code) — a
-    *    fixed-cost I/O yardstick, invariant across rounds by construction.
-    * Within a round, `full ≈ csv + merge` is a checkable contract with
-    * the evidence AT the same instant: a sample that breaks it while its
-    * own round's probes co-inflate is host contention; one that breaks it
-    * with normal adjacent probes is a burst confined to the full window —
-    * never a plan regression, because the identical plan holds the
-    * contract in the other rounds of the same JVM.
+  /** One pipeline measurement round, its phases timed back-to-back:
+    *  - `csv`: raw robust-CSV scan of the three 1M-row inputs — ingest I/O
+    *    and parse, no merge logic;
+    *  - `merge`: the SAME merge plan over parquet-staged copies — plan cost
+    *    with CSV I/O removed;
+    *  - `full`: CSV ingest → merge end-to-end (reported as pipeline_1m_sec);
+    *  - `canary` / `ioc`: the [[CanaryStage]] probes.
+    * Within a round `full ≈ csv + merge` is a checkable contract with the
+    * evidence taken at the same instant; [[Movers.pipeVerdicts]] attributes
+    * each sample that breaks it.
     */
   final case class PipeSample(csv: Double, merge: Double, full: Double, canary: Double,
       gcSec: Double = -1.0, cachedBytes: Long = -1L, heapMb: Long = -1L,
-      ioc: Double = -1.0)
+      ioc: Double = -1.0) {
+    def phaseSum: Double = csv + merge
+    def fullOverSum: Double = if (phaseSum > 0) full / phaseSum else -1.0
+    /** The sample's JSON fields, without braces. */
+    def fields: String =
+      f""""csv":$csv%.3f,"merge":$merge%.3f,"full":$full%.3f,""" +
+        f""""canary":$canary%.3f,"io_canary":$ioc%.3f,""" +
+        f""""full_over_sum":$fullOverSum%.2f,""" +
+        f""""gc_sec":$gcSec%.3f,"cached_bytes":$cachedBytes,"heap_mb":$heapMb"""
+  }
 
-  /** The two constant-code host probes, staged ONCE for a whole bench
-    * run (round-16 verdict task #3): r16's single pipeline-phase canary
-    * time-point could not vouch for the other ~50 minutes of the sweep —
-    * the judge measured q109 running 1.4× slower with the CPU canary
-    * reading best-ever, because the contended dimension varied OVER the
-    * run. Keeping the staged files alive for the run lets Bench
-    * interleave canary samples through the sweep (the `canary_series`
-    * artifact field) so each mover is read against the host state
-    * nearest its own measurement, not a run-level scalar.
-    *
+  /** The two constant-code host probes, staged once for a whole bench run
+    * so Bench can interleave samples through the sweep (`canary_series`)
+    * and read each mover against the host state nearest its own
+    * measurement:
     *  - cpu: schema-declared scan of a constant ~60 MB CSV — parse-bound;
     *  - io: constant ~190 MB incompressible parquet (xxhash64 columns
     *    defeat every encoding) through one fixed full-width shuffle —
-    *    disk/shuffle-bound.
+    *    disk/shuffle-bound, the dimension the CSV canary is blind to.
     */
   final class CanaryStage(spark: SparkSession, n: Long) {
     val dir: String =
-      java.nio.file.Files.createTempDirectory("graft_canary_stage").toString
+      Files.createTempDirectory("graft_canary_stage").toString
     locally {
       spark.range(2 * n).select(
           concat(lit("row"), col("id"), lit("-"),
@@ -940,13 +408,11 @@ object Bench {
           (pmod(xxhash64(col("id"), lit(2L)), lit(1000000L)) / lit(10000.0)).as("x"))
         .repartition(8).write.mode("overwrite").parquet(s"$dir/iocanary")
     }
-    private def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     def runCpu(): Unit =
-      noop(spark.read.schema("ca STRING, cb BIGINT, cc DOUBLE")
+      GraftSession.noop(spark.read.schema("ca STRING, cb BIGINT, cc DOUBLE")
         .option("header", "true").csv(s"$dir/canary"))
     def runIo(): Unit =
-      noop(spark.read.parquet(s"$dir/iocanary")
+      GraftSession.noop(spark.read.parquet(s"$dir/iocanary")
         .repartition(32, col("h1"))
         .groupBy(pmod(col("h1"), lit(9973)).as("g"))
         // pmod before sum: raw xxhash64 values span the full 64-bit
@@ -956,10 +422,8 @@ object Bench {
       try FileUtils.deleteDirectory(new java.io.File(dir)) catch { case _: Throwable => }
   }
 
-  /** Total JVM GC time (ms) across all collectors — deltas around a timed
-    * window attribute in-process interference (round-14 verdict task #5:
-    * 3/5 pipeline samples ran "isolated" on a clean host, so the burst is
-    * inside the JVM; this instrument decides whether it's GC). */
+  /** Total JVM GC time (ms) across all collectors: its delta around a
+    * timed window tells a GC burst from scheduler-side interference. */
   def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -972,16 +436,12 @@ object Bench {
     * synthesized 1M-row Frog/GSC/GA4 CSVs — the reference runs this exact
     * pipeline on ~20-row demo files; this measures the engine running it
     * at ~50,000× that size (reported as "pipeline_1m_sec"). CSVs are
-    * generated once per bench run into a temp dir, deterministically.
-    * All phases (incl. the canary's constant file) are staged untimed
-    * first, then full / csvScan / mergeFromParquet / canary measure
-    * back-to-back, each from a released session
-    * ([[GraftSession.timedReleased]]).
+    * generated once per bench run into a temp dir, deterministically, and
+    * every input is staged untimed before the first measured round.
     */
   def pipelineBench(spark: SparkSession, n: Long = 1000000L,
       stage: Option[CanaryStage] = None): Seq[PipeSample] = {
-    def timedReleased(f: => Unit): Double = GraftSession.timedReleased(spark)(f)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pipe_bench").toString
+    val dir = Files.createTempDirectory("graft_pipe_bench").toString
     // canary data: the caller's run-lifetime stage when provided (Bench
     // shares one stage between the pipeline phases and the sweep-long
     // canary_series); self-staged + self-cleaned otherwise
@@ -1015,8 +475,7 @@ object Bench {
     val cfg = Pipeline.PipelineConfig(
       frogPath = s"$dir/frog", gscPath = s"$dir/gsc", ga4Path = s"$dir/ga4",
       siteBase = "https://www.acme-store.com")
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
+    import GraftSession.noop
     try {
       // stage the parquet copies for the plan-only phase UNTIMED, before
       // any measurement, so every timed phase runs back-to-back
@@ -1043,40 +502,31 @@ object Bench {
           Pipeline.loadGa4From(spark.read.parquet(s"${cfg.ga4Path}_pq"), cfg)))
         finally spark.conf.set("spark.sql.files.maxPartitionBytes", savedSplit)
       }
-      // CPU canary: schema-declared scan of the pre-staged constant
-      // file — no inference pass, no pipeline code; disk+parse cost
-      // (parse-dominated, so in practice a CPU yardstick)
-      def runCanary(): Unit = canaries.runCpu()
-      // I/O canary (round-16 verdict task #1): constant parquet scan +
-      // one constant full-width shuffle — the bytes-through-disk
-      // dimension the CSV canary is provably blind to (the r15 common
-      // surface drifted 1.14× while the CSV canary read FASTER)
-      def runIoCanary(): Unit = canaries.runIo()
       // one DISCARDED warmup round (codegen/footers/JIT), then PipeIters
-      // measured rounds — each round times the phases back-to-back so
-      // every full sample carries its own adjacent attribution evidence
+      // measured rounds, each timing the phases back-to-back so every full
+      // sample carries its own adjacent attribution evidence
       System.gc()
-      timedReleased(runCsv()); timedReleased(runMerge())
-      timedReleased(runFull()); timedReleased(runCanary()); timedReleased(runIoCanary())
-      (1 to Bench.PipeIters).map { _ =>
+      timedReleased(spark)(runCsv()); timedReleased(spark)(runMerge())
+      timedReleased(spark)(runFull())
+      timedReleased(spark)(canaries.runCpu()); timedReleased(spark)(canaries.runIo())
+      (1 to PipeIters).map { _ =>
         System.gc()
-        val csv = timedReleased(runCsv())
-        val merge = timedReleased(runMerge())
-        // instrument the FULL window (round-14 verdict task #5): GC time
-        // spent inside it, plus what the adjacent phases left resident at
-        // its start — storage bytes (RDD blocks the release is about to
-        // drop) and heap in use. A burst sample whose gc_sec ≈ its
-        // overshoot is GC pressure; one with neither is scheduler-side.
+        val csv = timedReleased(spark)(runCsv())
+        val merge = timedReleased(spark)(runMerge())
+        // GC time inside the full window, plus what the adjacent phases
+        // left resident at its start (storage bytes the release is about to
+        // drop, heap in use): a burst whose gc_sec ≈ its overshoot is GC
+        // pressure; one with neither is scheduler-side
         val cachedBytes = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
         val heapMb = {
           val rt = Runtime.getRuntime
           (rt.totalMemory - rt.freeMemory) / (1024 * 1024)
         }
         val gc0 = gcMillis()
-        val full = timedReleased(runFull())
+        val full = timedReleased(spark)(runFull())
         val gcSec = (gcMillis() - gc0) / 1000.0
-        val canary = timedReleased(runCanary())
-        val ioc = timedReleased(runIoCanary())
+        val canary = timedReleased(spark)(canaries.runCpu())
+        val ioc = timedReleased(spark)(canaries.runIo())
         PipeSample(csv, merge, full, canary, gcSec, cachedBytes, heapMb, ioc)
       }
     } finally { // ~3×1M-row temp CSVs + parquet stages; don't leak them past the measurement
@@ -1101,8 +551,6 @@ object Bench {
     *     regime where the explicit salt (~3×) is the right tool.
     */
   def skewBench(spark: SparkSession, sfDir: String): (Double, Double, Double) = {
-    def medianOf(f: => Unit): Double =
-      GraftSession.stats((1 to Iters).map(_ => GraftSession.timedReleased(spark)(f)))._2
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     // ~97.5% of big-side rows land on key 0; the dimension carries 16 rows
     // per key, so the join multiplies the hot reducer's output ~16×, and the
@@ -1126,59 +574,20 @@ object Bench {
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       System.gc()
-      val unsalted = medianOf {
-        agg(big.join(small, Seq("k")))
-          .write.format("noop").mode("overwrite").save()
-      }
+      val unsalted = GraftSession.timedMedian(spark, Iters)(
+        GraftSession.noop(agg(big.join(small, Seq("k")))))
       System.gc()
-      val salted = medianOf {
-        agg(graft.ops.SkewJoin.saltedJoin(big, small, "k",
-          saltFrom = col("l_partkey") * 17 + col("rep"), n = 32))
-          .write.format("noop").mode("overwrite").save()
-      }
+      val salted = GraftSession.timedMedian(spark, Iters)(GraftSession.noop(agg(
+        graft.ops.SkewJoin.saltedJoin(big, small, "k",
+          saltFrom = col("l_partkey") * 17 + col("rep"), n = 32))))
       conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
       System.gc()
-      val aqe = medianOf {
-        agg(big.join(small, Seq("k")))
-          .write.format("noop").mode("overwrite").save()
-      }
+      val aqe = GraftSession.timedMedian(spark, Iters)(
+        GraftSession.noop(agg(big.join(small, Seq("k")))))
       (unsalted, salted, aqe)
     } finally {
       conf.set("spark.sql.adaptive.skewJoin.enabled", savedSkew)
       conf.set("spark.sql.autoBroadcastJoinThreshold", savedBc)
     }
-  }
-}
-
-/** Child process of [[Bench.confirmMoversFreshJvm]] (round-16 verdict
-  * task #1): `MoverConfirm <outFile> <queryName>...` measures each named
-  * query in THIS fresh JVM — one discarded cold warmup (codegen/footers/
-  * JIT), then n=3 released samples — and writes one JSON object
-  * {"name":[min,median,max],...} to outFile. A query that crashes
-  * records [-1,-1,-1] (the parent treats it as unconfirmed) without
-  * aborting the rest.
-  */
-object MoverConfirm {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: MoverConfirm <outFile> <queryName>...")
-    val outFile = args.head
-    val names = args.tail.toSeq
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local()
-    val results = names.map { n =>
-      val stats = try {
-        def once(): Unit = SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        GraftSession.release(spark); once() // discarded cold warmup
-        GraftSession.stats((1 to 3).map(_ => GraftSession.timedReleased(spark)(once())))
-      } catch { case _: Throwable => (-1.0, -1.0, -1.0) }
-      n -> stats
-    }
-    val body = results.map { case (k, (a, b, c)) =>
-      f""""$k":[$a%.4f,$b%.4f,$c%.4f]"""
-    }.mkString("{", ",", "}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The local session every `main` runs in, and the release-and-time
   * discipline every benchmark applies to its samples.
@@ -50,6 +50,22 @@ object GraftSession {
     f
     (System.nanoTime() - t0) / 1e9
   }
+
+  /** `n` runs of `f`, each timed from a released session. */
+  def timedSamples(spark: SparkSession, n: Int)(f: => Unit): Seq[Double] =
+    (1 to n).map(_ => timedReleased(spark)(f))
+
+  /** Median seconds of `n` released runs of `f`. */
+  def timedMedian(spark: SparkSession, n: Int)(f: => Unit): Double =
+    stats(timedSamples(spark, n)(f))._2
+
+  /** Materializes `df` fully: a bare count() can shortcut to metadata for
+    * scan-only plans, the `noop` sink cannot. */
+  def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** One run of the registered query `name` over `dir` into the noop sink. */
+  def runQuery(spark: SparkSession, name: String, dir: String): Unit =
+    noop(SparkEntry.queries(name)(spark, dir))
 
   /** (min, median, max); an even-length sample reports its upper middle. */
   def stats(xs: Seq[Double]): (Double, Double, Double) = {

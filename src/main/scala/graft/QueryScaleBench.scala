@@ -4,6 +4,8 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.bench.History
+
 /** Per-query scale proof (round-4 verdict ask #8): fit t ~ n^k for named
   * queries across a 10× data step and print the exponent. Two rungs:
   *
@@ -92,19 +94,9 @@ object QueryScaleBench {
     * hand-maintaining a name list.
     */
   private def topByCost(n: Int): Seq[String] = {
-    val p = java.nio.file.Paths.get("bench_out.json")
-    require(java.nio.file.Files.exists(p),
-      "--top=N needs bench_out.json (run graft.Bench first)")
-    import org.json4s._
-    val medians = jackson.JsonMethods.parse(new String(
-      java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8)) \ "queries" match {
-      case JObject(fields) => fields.collect {
-        case (k, JDouble(v)) => k -> v
-        case (k, JInt(v)) => k -> v.toDouble
-      }
-      case _ => Nil
-    }
+    val medians = History.artifactMedians()
+    require(medians.nonEmpty,
+      s"--top=N needs a readable ${History.ArtifactPath} (run graft.Bench first)")
     medians.filter { case (k, v) => v >= 0 && SparkEntry.queries.contains(k) }
       .sortBy(-_._2).take(n).map(_._1)
   }
@@ -131,14 +123,9 @@ object QueryScaleBench {
   /** Times `names` on both rungs; `sf1Dir` receives the 10× rung. */
   private def measure(spark: SparkSession, names: Seq[String], out: Option[String],
       sf1Dir: Option[String]): Unit = {
-    def medianOf(f: => Unit): Double =
-      GraftSession.stats((1 to 3).map(_ => GraftSession.timedReleased(spark)(f)))._2
     def timeAt(name: String, dir: String): Double = {
       System.gc()
-      medianOf {
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-      }
+      GraftSession.timedMedian(spark, 3)(GraftSession.runQuery(spark, name, dir))
     }
 
     val (loDir, hiDir, step) = sf1Dir match {
@@ -156,9 +143,7 @@ object QueryScaleBench {
     // measured fixed session floor: the cost of a data-free measured run
     val floor = {
       System.gc()
-      medianOf {
-        spark.range(1).write.format("noop").mode("overwrite").save()
-      }
+      GraftSession.timedMedian(spark, 3)(GraftSession.noop(spark.range(1).toDF()))
     }
     println(f"session floor (1-row noop run): $floor%.3f s")
     for (n <- names) {

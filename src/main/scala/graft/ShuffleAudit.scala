@@ -133,8 +133,7 @@ object ShuffleAudit {
     def mb(x: Long): String = f"${x / 1048576.0}%.1f"
     val rows = for (q <- qs) yield q -> (for (d <- effDirs) yield {
       GraftSession.release(spark); acc.reset()
-      SparkEntry.queries(q)(spark, d)
-        .write.format("noop").mode("overwrite").save()
+      GraftSession.runQuery(spark, q, d)
       org.apache.spark.graft.ListenerBridge
         .waitUntilListenerBusEmpty(spark.sparkContext)
       val r = Map(

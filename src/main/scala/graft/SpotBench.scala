@@ -20,27 +20,15 @@ object SpotBench {
     if (args.head == "pipeline") {
       // one JSON line per measured round, then the medians
       val samples = Bench.pipelineBench(spark)
-      samples.zipWithIndex.foreach { case (s, i) =>
-        val ratio = if (s.csv + s.merge > 0) s.full / (s.csv + s.merge) else -1.0
-        println(f"""{"i":$i,"csv":${s.csv}%.3f,"merge":${s.merge}%.3f,""" +
-          f""""full":${s.full}%.3f,"canary":${s.canary}%.3f,""" +
-          f""""io_canary":${s.ioc}%.3f,""" +
-          f""""full_over_sum":$ratio%.2f,"gc_sec":${s.gcSec}%.3f,""" +
-          f""""cached_bytes":${s.cachedBytes},"heap_mb":${s.heapMb}}""")
-      }
+      samples.zipWithIndex.foreach { case (s, i) => println(s"""{"i":$i,${s.fields}}""") }
       def med(f: Bench.PipeSample => Double) = GraftSession.stats(samples.map(f))._2
       println(f"pipeline_1m=${med(_.full)}%.2f sec  csv_scan=${med(_.csv)}%.2f  " +
         f"merge_from_parquet=${med(_.merge)}%.2f  canary=${med(_.canary)}%.2f")
       spark.stop(); return
     }
-    SparkEntry.queries(args.head)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save() // warmup
+    GraftSession.runQuery(spark, args.head, sfDir) // warmup
     for (n <- args) {
-      val ts = (1 to 3).map { _ =>
-        GraftSession.timedReleased(spark) {
-          SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        }
-      }
+      val ts = GraftSession.timedSamples(spark, 3)(GraftSession.runQuery(spark, n, sfDir))
       println(f"$n%-30s median=${GraftSession.stats(ts)._2}%.2f  runs=${ts.map(t => f"$t%.2f").mkString(",")}")
     }
     spark.stop()

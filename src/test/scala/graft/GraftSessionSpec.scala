@@ -28,17 +28,28 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
   }
 
-  test("main code builds sessions and releases persisted RDDs only in GraftSession") {
+  private lazy val sources: Seq[Path] = {
     val walk = Files.walk(Paths.get("src/main/scala"))
-    val sources: Seq[Path] =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      finally walk.close()
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    finally walk.close()
+  }
+
+  test("main code builds sessions and releases persisted RDDs only in GraftSession") {
     assert(sources.size > 100, "src/main/scala not found from the working directory")
     for (pattern <- Seq("SparkSession.builder", "getPersistentRDDs.values.foreach")) {
       val offenders = sources.filter(p =>
         p.getFileName.toString != "GraftSession.scala" &&
           Files.readString(p).contains(pattern))
       assert(offenders.isEmpty, s"$pattern outside GraftSession: ${offenders.mkString(", ")}")
+    }
+  }
+
+  test("bench artifacts are named and decoded only in graft.bench") {
+    val benchPkg = Paths.get("src/main/scala/graft/bench")
+    assert(Files.isDirectory(benchPkg))
+    for (pattern <- Seq("\"canary_history.json\"", "\"bench_out.json\"", "JDouble(")) {
+      val offenders = sources.filter(p => !p.startsWith(benchPkg) && Files.readString(p).contains(pattern))
+      assert(offenders.isEmpty, s"$pattern outside graft/bench: ${offenders.mkString(", ")}")
     }
   }
 }
