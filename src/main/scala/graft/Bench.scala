@@ -86,7 +86,7 @@ object Bench {
     // a factor of -1 (empty ledger) can never stamp the run degraded
     val degradedHost = pre.factor > PreflightThreshold
     if (degradedHost)
-      System.err.println(f"[bench] preflight EXHAUSTED at factor ${pre.factor}%.2f — artifact stamped degraded_host")
+      System.err.println(f"[bench] preflight EXHAUSTED at factor ${pre.factor}%.2f - artifact stamped degraded_host")
     wallMark("preflight")
 
     val pipeSamples: Seq[PipeSample] = try pipelineBench(spark, stage = sweep.stage)
@@ -280,7 +280,7 @@ object Bench {
     if (onlySubset.isEmpty)
       Files.write(Paths.get(History.ArtifactPath), json.getBytes(UTF_8))
     if (ultra.length > 1800)
-      System.err.println(s"[bench] WARNING: ultra line ${ultra.length} chars — may exceed driver tail capture")
+      System.err.println(s"[bench] WARNING: ultra line ${ultra.length} chars - may exceed the 2000-char stdout tail capture")
     sweep.stage.foreach(_.cleanup())
     spark.stop()
   }
@@ -328,7 +328,7 @@ object Bench {
           History.preflightFactor(io, hist.map(_._2), alltime.map(_._2))), p.attempts + 1)
         if (p.factor > PreflightThreshold) {
           System.err.println(f"[bench] preflight ${p.attempts}/$PreflightMax: host " +
-            f"factor ${p.factor}%.2f > $PreflightThreshold (cpu $cpu%.2fs io $io%.2fs) — backing off")
+            f"factor ${p.factor}%.2f > $PreflightThreshold (cpu $cpu%.2fs io $io%.2fs) - backing off")
           if (p.attempts < PreflightMax) Thread.sleep(PreflightBackoffMs * p.attempts)
         } else ok = true
       }

@@ -81,7 +81,7 @@ object MoverConfirm {
         java.util.concurrent.TimeUnit.SECONDS)
       if (!done) {
         proc.destroyForcibly()
-        System.err.println("[bench] mover confirmation TIMED OUT — movers stay unconfirmed; child stderr tail:\n" + errTail())
+        System.err.println("[bench] mover confirmation TIMED OUT - movers stay unconfirmed; child stderr tail:\n" + errTail())
         return Map.empty
       }
       if (proc.exitValue() != 0)

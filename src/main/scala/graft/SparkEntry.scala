@@ -13,11 +13,12 @@ object SparkEntry {
     RelationalQueries.q01_pricing_summary(spark, "/root/testdata/sf0.001")
 
   /** THE single registration point for query groups, in registration
-    * order. `queries`, `oracleSql`, AND ContractSpec's invariants all
-    * iterate this list, so a group registered here is automatically under
-    * the name-collision / oracle-subset gates — the round-11 defect (a
-    * group added to the production map but not the hand-maintained test
-    * registry) cannot recur. ContractSpec additionally scans the classpath
+    * order. `queries`, `oracleSql`, `oracleSqlFor` AND ContractSpec's
+    * invariants are all derived from this list and the groups' entries,
+    * so a group registered here is automatically under the name-collision
+    * / oracle-subset gates — the round-11 defect (a group added to the
+    * production map but not the hand-maintained test registry) cannot
+    * recur. ContractSpec additionally scans the classpath
     * for `graft.queries` modules extending [[QueryGroup]] and asserts each
     * appears here, so an entirely-forgotten group is also impossible.
     */
@@ -168,26 +169,29 @@ object SparkEntry {
     "extension136" -> ExtensionQueries136,
     "extension137" -> ExtensionQueries137)
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    groups.iterator.map(_._2.queries).reduce(_ ++ _)
+  /** Every registered query, in registration order. */
+  private val entries: Seq[Query] = groups.flatMap(_._2.entries)
+
+  /** One entry per implemented operator from SURVEY.md §2. Built once; a
+    * name registered by two groups throws here instead of one silently
+    * shadowing the other.
+    */
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Query.plans(entries)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys → driver records a weaker
-    * rows-only check (reserved for non-SQL-expressible ops).
+    * the same parquet tables. Model-backed mirrors appear only while
+    * exactly one dir is trained for them (see [[Oracle.Model]]); a `def`,
+    * because those models are trained at run time.
     */
-  def oracleSql: Map[String, String] =
-    groups.iterator.map(_._2.oracle).reduce(_ ++ _)
+  def oracleSql: Map[String, String] = mirrors(_.sql)
 
-  /** [[oracleSql]] with generated mirrors resolved for a specific sf dir
-    * (q38/q70 centroid literals are per-trained-dir; see
-    * ExtensionQueries2.oracleFor). Verify uses this so a multi-dir JVM
-    * never emits another dir's model.
+  /** [[oracleSql]] resolved for a specific sf dir: a model-backed mirror
+    * carries the literals of the model trained on `dir`, or is absent
+    * while none is. Verify uses this so a multi-dir JVM never emits
+    * another dir's model.
     */
-  def oracleSqlFor(dir: String): Map[String, String] =
-    (oracleSql - "q38_ann_ivf" - "q70_semdedup" - "q93_ann_ivfpq" - "q100_pca_project" -
-      "q112_bpe_tokens" - "q54_token_packing" - "q113_ann_filtered") ++
-      ExtensionQueries2.oracleFor(dir) ++ ExtensionQueries6.oracleFor(dir) ++
-      ExtensionQueries7.oracleFor(dir) ++ ExtensionQueries10.oracleFor(dir) ++ ExtensionQueries64.oracleFor(dir) ++ ExtensionQueries65.oracleFor(dir) ++
-      ExtensionQueries132.oracleFor(dir) ++ ExtensionQueries133.oracleFor(dir)
+  def oracleSqlFor(dir: String): Map[String, String] = mirrors(_.sqlFor(dir))
+
+  private def mirrors(sql: Oracle => Option[String]): Map[String, String] =
+    entries.iterator.flatMap(q => sql(q.oracle).map(q.name -> _)).toMap
 }

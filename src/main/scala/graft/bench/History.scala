@@ -174,8 +174,10 @@ object History {
     * incomparable): medians from another core count flag half the fleet as
     * movers. `names` is every query it measured, comparable or not, so an
     * incomparable artifact cannot make the whole registry "new". `canary`
-    * is its CPU canary median, sf-invariant by construction, so read
-    * regardless.
+    * is its CPU canary median (-1 when absent): sf-invariant by
+    * construction, so kept across sf, but not core-count-invariant, so
+    * kept only from the same cpus — a local[8] canary read by a local[4]
+    * run reads as a 2-3x slower host.
     */
   final case class Prev(medians: Map[String, Double], names: Set[String], canary: Double)
 
@@ -189,8 +191,8 @@ object History {
       val sameCpus = is("cpus", cpus.toString)
       val all = medians(j).toMap
       if (all.nonEmpty && !(sameSf && sameCpus))
-        System.err.println(s"[bench] prev artifact incomparable (sameSf=$sameSf sameCpus=$sameCpus) — name set kept, medians ignored")
-      val canary = triple(j \ "pipeline_phases" \ "canary").fold(-1.0)(_._2)
+        System.err.println(s"[bench] prev artifact incomparable (sameSf=$sameSf sameCpus=$sameCpus) - name set kept, medians ignored")
+      val canary = if (sameCpus) triple(j \ "pipeline_phases" \ "canary").fold(-1.0)(_._2) else -1.0
       Prev(if (sameSf && sameCpus) all else Map.empty, all.keySet, canary)
     }
 
@@ -231,7 +233,7 @@ object History {
     if (!Files.exists(p)) None
     else try Some(jackson.JsonMethods.parse(new String(Files.readAllBytes(p), UTF_8)))
     catch { case NonFatal(e) =>
-      System.err.println(s"[bench] WARNING: $path unreadable (${e.toString.takeWhile(_ != '\n')}) — read as empty")
+      System.err.println(s"[bench] WARNING: $path unreadable (${e.toString.takeWhile(_ != '\n')}) - read as empty")
       None
     }
   }

@@ -15,8 +15,6 @@ import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
   */
 object ExtensionQueries extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** DuckDB polyhash mirror over an arbitrary string SQL expression. */
   private[queries] def phSql(e: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
@@ -438,31 +436,17 @@ object ExtensionQueries extends QueryGroup {
        |  h AS checksum
        |FROM t ORDER BY media_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q22_text_stats" -> (q22_text_stats _),
-    "q23_lang_id" -> (q23_lang_id _),
-    "q24_fingerprint" -> (q24_fingerprint _),
-    "q25_dedup_exact" -> (q25_dedup_exact _),
-    "q26_jaccard_pairs" -> (q26_jaccard_pairs _),
-    "q27_minhash" -> (q27_minhash _),
-    "q28_simhash" -> (q28_simhash _),
-    "q29_minhash_lsh_pairs" -> (q29_minhash_lsh_pairs _),
-    "q30_cosine_topk" -> (q30_cosine_topk _),
-    "q31_ann_lsh" -> (q31_ann_lsh _),
-    "q32_media_features" -> (q32_media_features _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q22_text_stats" -> q22Sql,
-    "q23_lang_id" -> q23Sql,
-    "q24_fingerprint" -> q24Sql,
-    "q25_dedup_exact" -> q25Sql,
-    "q26_jaccard_pairs" -> q26Sql,
-    "q27_minhash" -> q27Sql,
-    "q28_simhash" -> q28Sql,
-    "q29_minhash_lsh_pairs" -> q29Sql,
-    "q30_cosine_topk" -> q30Sql,
-    "q31_ann_lsh" -> q31Sql,
-    "q32_media_features" -> q32Sql
+  val entries: Seq[Query] = Seq(
+    Query("q22_text_stats", q22_text_stats _, q22Sql),
+    Query("q23_lang_id", q23_lang_id _, q23Sql),
+    Query("q24_fingerprint", q24_fingerprint _, q24Sql),
+    Query("q25_dedup_exact", q25_dedup_exact _, q25Sql),
+    Query("q26_jaccard_pairs", q26_jaccard_pairs _, q26Sql),
+    Query("q27_minhash", q27_minhash _, q27Sql),
+    Query("q28_simhash", q28_simhash _, q28Sql),
+    Query("q29_minhash_lsh_pairs", q29_minhash_lsh_pairs _, q29Sql),
+    Query("q30_cosine_topk", q30_cosine_topk _, q30Sql),
+    Query("q31_ann_lsh", q31_ann_lsh _, q31Sql),
+    Query("q32_media_features", q32_media_features _, q32Sql)
   )
 }

@@ -14,8 +14,6 @@ import graft.ext.{Bpe, IvfIndex, Similarity, TextAnalysis}
   */
 object ExtensionQueries10 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val bpeCache =
     new java.util.concurrent.ConcurrentHashMap[String, Bpe.Model]()
 
@@ -225,39 +223,15 @@ object ExtensionQueries10 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q112_bpe_tokens" -> (q112_bpe_tokens _),
-    "q113_ann_filtered" -> (q113_ann_filtered _),
-    "q114_filtered_recall" -> (q114_filtered_recall _)
+  /** A mirror generated from the dir's trained merge table (q112, q54). */
+  private[queries] def bpeOracle(sqlFor: Bpe.Model => String): Oracle =
+    Oracle.Model(() => Oracle.dirsOf(bpeCache), d => trainedBpe(d).map(sqlFor))
+
+  val entries: Seq[Query] = Seq(
+    Query("q112_bpe_tokens", q112_bpe_tokens _, bpeOracle(q112SqlFor)),
+    // q113's mirror replays q38's centroids (the shared index)
+    Query("q113_ann_filtered", q113_ann_filtered _,
+      ExtensionQueries2.ivfOracle(m => ExtensionQueries2.q38SqlFor(m, annPredSql))),
+    Query("q114_filtered_recall", q114_filtered_recall _, q114Sql)
   )
-
-  private val baseOracle: Map[String, String] = Map(
-    "q114_filtered_recall" -> q114Sql
-  )
-
-  private def bpeMirrors(m: Bpe.Model): Map[String, String] =
-    Map("q112_bpe_tokens" -> q112SqlFor(m), "q54_token_packing" -> q54SqlFor(m))
-
-  /** Mirrors resolved for a specific trained dir (the q38 pattern):
-    * q112/q54 from the dir's BPE merge table, q113 from the dir's IVF
-    * centroids (shared with q38 — [[ExtensionQueries2.trainedIvf]]).
-    */
-  def oracleFor(dir: String): Map[String, String] =
-    baseOracle ++
-      Option(bpeCache.get(dir)).toList.flatMap(bpeMirrors) ++
-      ExtensionQueries2.trainedIvf(dir).map(m =>
-        "q113_ann_filtered" -> ExtensionQueries2.q38SqlFor(m, annPredSql))
-
-  /** Dir-less view: emits each generated mirror only when its cache holds
-    * exactly ONE trained dir — unambiguous; otherwise omitted.
-    */
-  def oracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val bpe = bpeCache.asScala.toList match {
-      case (_, m) :: Nil => bpeMirrors(m)
-      case _ => Map.empty[String, String]
-    }
-    baseOracle ++ bpe ++ ExtensionQueries2.soleTrainedIvf.map(m =>
-      "q113_ann_filtered" -> ExtensionQueries2.q38SqlFor(m, annPredSql))
-  }
 }

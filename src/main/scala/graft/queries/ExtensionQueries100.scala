@@ -28,8 +28,6 @@ import graft.ops.{PrefixScan, Ranks}
   */
 object ExtensionQueries100 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q391
 
   /** q391: runs above/below the daily-revenue median (ties with the
@@ -200,15 +198,9 @@ object ExtensionQueries100 extends QueryGroup {
       |    AS burstiness_milli
       |FROM m ORDER BY user_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q391_runs_test" -> (q391_runs_test _),
-    "q392_leadtime_percentile_disc" -> (q392_leadtime_percentile_disc _),
-    "q393_burstiness" -> (q393_burstiness _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q391_runs_test" -> q391Sql,
-    "q392_leadtime_percentile_disc" -> q392Sql,
-    "q393_burstiness" -> q393Sql
+  val entries: Seq[Query] = Seq(
+    Query("q391_runs_test", q391_runs_test _, q391Sql),
+    Query("q392_leadtime_percentile_disc", q392_leadtime_percentile_disc _, q392Sql),
+    Query("q393_burstiness", q393_burstiness _, q393Sql)
   )
 }

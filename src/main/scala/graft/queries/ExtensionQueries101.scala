@@ -29,8 +29,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries101 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q394
 
   /** q394: per channel — the Shapley ppm credit for the purchase rate.
@@ -223,15 +221,9 @@ object ExtensionQueries101 extends QueryGroup {
       |    AS contrib_post_micro
       |FROM seg, tot ORDER BY c_mktsegment""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q394_shapley_attribution" -> (q394_shapley_attribution _),
-    "q395_wilcoxon_signed_rank" -> (q395_wilcoxon_signed_rank _),
-    "q396_post_stratified" -> (q396_post_stratified _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q394_shapley_attribution" -> q394Sql,
-    "q395_wilcoxon_signed_rank" -> q395Sql,
-    "q396_post_stratified" -> q396Sql
+  val entries: Seq[Query] = Seq(
+    Query("q394_shapley_attribution", q394_shapley_attribution _, q394Sql),
+    Query("q395_wilcoxon_signed_rank", q395_wilcoxon_signed_rank _, q395Sql),
+    Query("q396_post_stratified", q396_post_stratified _, q396Sql)
   )
 }

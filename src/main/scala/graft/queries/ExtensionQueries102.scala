@@ -30,8 +30,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries102 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q397
 
   /** q397: greedy knapsack under a 20,000-token budget at sf-relative
@@ -209,15 +207,9 @@ object ExtensionQueries102 extends QueryGroup {
       |    AS BIGINT) AS ess_ppm
       |FROM f""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q397_token_budget_knapsack" -> (q397_token_budget_knapsack _),
-    "q398_brand_switching" -> (q398_brand_switching _),
-    "q399_effective_sample_size" -> (q399_effective_sample_size _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q397_token_budget_knapsack" -> q397Sql,
-    "q398_brand_switching" -> q398Sql,
-    "q399_effective_sample_size" -> q399Sql
+  val entries: Seq[Query] = Seq(
+    Query("q397_token_budget_knapsack", q397_token_budget_knapsack _, q397Sql),
+    Query("q398_brand_switching", q398_brand_switching _, q398Sql),
+    Query("q399_effective_sample_size", q399_effective_sample_size _, q399Sql)
   )
 }

@@ -25,8 +25,6 @@ import graft.core.Tables
   */
 object ExtensionQueries103 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q400
 
   /** q400: (table, n_rows, pk_dups, null_cells) for every testdata
@@ -151,13 +149,8 @@ object ExtensionQueries103 extends QueryGroup {
       |    AS phi_micro
       |FROM m""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q400_table_scorecard" -> (q400_table_scorecard _),
-    "q401_ar1_coefficient" -> (q401_ar1_coefficient _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q400_table_scorecard" -> q400Sql,
-    "q401_ar1_coefficient" -> q401Sql
+  val entries: Seq[Query] = Seq(
+    Query("q400_table_scorecard", q400_table_scorecard _, q400Sql),
+    Query("q401_ar1_coefficient", q401_ar1_coefficient _, q401Sql)
   )
 }

@@ -28,8 +28,6 @@ import graft.ops.Ranks
   */
 object ExtensionQueries104 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q402
 
   /** q402: rungs evaluate config c (user_id % 16) on events of the
@@ -279,15 +277,9 @@ object ExtensionQueries104 extends QueryGroup {
        |FROM staged st JOIN toks t ON t.doc_id = st.base_id
        |GROUP BY t.source ORDER BY t.source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q402_successive_halving" -> (q402_successive_halving _),
-    "q403_diff_in_diff" -> (q403_diff_in_diff _),
-    "q404_dedup_savings" -> (q404_dedup_savings _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q402_successive_halving" -> q402Sql,
-    "q403_diff_in_diff" -> q403Sql,
-    "q404_dedup_savings" -> q404Sql
+  val entries: Seq[Query] = Seq(
+    Query("q402_successive_halving", q402_successive_halving _, q402Sql),
+    Query("q403_diff_in_diff", q403_diff_in_diff _, q403Sql),
+    Query("q404_dedup_savings", q404_dedup_savings _, q404Sql)
   )
 }

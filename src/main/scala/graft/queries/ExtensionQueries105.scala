@@ -23,8 +23,6 @@ import graft.ops.CoPurchase
   */
 object ExtensionQueries105 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q405
 
   /** q405: directed rules a→b among order-basket part pairs (co ≥ 3):
@@ -132,13 +130,8 @@ object ExtensionQueries105 extends QueryGroup {
       |  (m11 - m10) - (m01 - m00) AS interaction_milli
       |FROM cells""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q405_association_rules" -> (q405_association_rules _),
-    "q406_factorial_effects" -> (q406_factorial_effects _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q405_association_rules" -> q405Sql,
-    "q406_factorial_effects" -> q406Sql
+  val entries: Seq[Query] = Seq(
+    Query("q405_association_rules", q405_association_rules _, q405Sql),
+    Query("q406_factorial_effects", q406_factorial_effects _, q406Sql)
   )
 }

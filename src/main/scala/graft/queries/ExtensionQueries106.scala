@@ -35,8 +35,6 @@ import graft.ext.Dedup
   */
 object ExtensionQueries106 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Bands × width geometry: 8 signature components, 4 bands of 2.
     * Width 2 keeps per-band collisions rare (two agreeing minima);
     * OR-ing 4 bands keeps recall at 1.0 for the near-identical
@@ -202,13 +200,8 @@ object ExtensionQueries106 extends QueryGroup {
        |    AS precision_ppm
        |FROM agg""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q358b_banded_edit_dedup" -> (q358b_banded_edit_dedup _),
-    "q358c_banded_recall_cert" -> (q358c_banded_recall_cert _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q358b_banded_edit_dedup" -> q358bSql,
-    "q358c_banded_recall_cert" -> q358cSql
+  val entries: Seq[Query] = Seq(
+    Query("q358b_banded_edit_dedup", q358b_banded_edit_dedup _, q358bSql),
+    Query("q358c_banded_recall_cert", q358c_banded_recall_cert _, q358cSql)
   )
 }

@@ -30,8 +30,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries107 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Per-customer spend in whole dollars (q387's magnitude convention)
     * with the customer's market segment.
     */
@@ -268,15 +266,9 @@ object ExtensionQueries107 extends QueryGroup {
       |  ON c2.day > t.trough_day AND c2.c >= t.peak
       |GROUP BY t.trough_day, t.dd, t.n""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q407_kruskal_wallis" -> (q407_kruskal_wallis _),
-    "q408_sign_test" -> (q408_sign_test _),
-    "q409_drawdown" -> (q409_drawdown _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q407_kruskal_wallis" -> q407Sql,
-    "q408_sign_test" -> q408Sql,
-    "q409_drawdown" -> q409Sql
+  val entries: Seq[Query] = Seq(
+    Query("q407_kruskal_wallis", q407_kruskal_wallis _, q407Sql),
+    Query("q408_sign_test", q408_sign_test _, q408Sql),
+    Query("q409_drawdown", q409_drawdown _, q409Sql)
   )
 }

@@ -27,8 +27,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries108 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q410
 
   /** q410: record-high revenue days. Scale shape: daily rollup, one
@@ -197,15 +195,9 @@ object ExtensionQueries108 extends QueryGroup {
       |    - num.ssb_n2)) AS BIGINT) AS f_milli
       |FROM tot, num""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q410_record_days" -> (q410_record_days _),
-    "q411_percent_rank_ppm" -> (q411_percent_rank_ppm _),
-    "q412_brown_forsythe" -> (q412_brown_forsythe _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q410_record_days" -> q410Sql,
-    "q411_percent_rank_ppm" -> q411Sql,
-    "q412_brown_forsythe" -> q412Sql
+  val entries: Seq[Query] = Seq(
+    Query("q410_record_days", q410_record_days _, q410Sql),
+    Query("q411_percent_rank_ppm", q411_percent_rank_ppm _, q411Sql),
+    Query("q412_brown_forsythe", q412_brown_forsythe _, q412Sql)
   )
 }

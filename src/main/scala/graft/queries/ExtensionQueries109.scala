@@ -28,8 +28,6 @@ import graft.ext.Dedup
   */
 object ExtensionQueries109 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q413
 
   /** q413: per-source repetition report. dup_ppm(doc) =
@@ -205,15 +203,9 @@ object ExtensionQueries109 extends QueryGroup {
       |FROM sp JOIN f USING (seg)
       |GROUP BY sp.seg ORDER BY sp.seg""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q413_repetition_ngrams" -> (q413_repetition_ngrams _),
-    "q414_cochran_q" -> (q414_cochran_q _),
-    "q415_tukey_fences" -> (q415_tukey_fences _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q413_repetition_ngrams" -> q413Sql,
-    "q414_cochran_q" -> q414Sql,
-    "q415_tukey_fences" -> q415Sql
+  val entries: Seq[Query] = Seq(
+    Query("q413_repetition_ngrams", q413_repetition_ngrams _, q413Sql),
+    Query("q414_cochran_q", q414_cochran_q _, q414Sql),
+    Query("q415_tukey_fences", q415_tukey_fences _, q415Sql)
   )
 }

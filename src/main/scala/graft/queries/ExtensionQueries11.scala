@@ -20,8 +20,6 @@ import graft.ops.{CoPurchase, LinkPredict}
   */
 object ExtensionQueries11 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** 3-word shingles of the documents table — q109's element sets
     * (duplicated here deliberately: each query file stays
     * self-contained the way the oracle SQL is).
@@ -453,25 +451,14 @@ object ExtensionQueries11 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q116_overlap_join" -> (q116_overlap_join _),
-    "q117_snm_dedup" -> (q117_snm_dedup _),
-    "q118_link_predict" -> (q118_link_predict _),
-    "q120_label_prop" -> (q120_label_prop _),
-    "q121_funnel" -> (q121_funnel _),
-    "q122_transitions" -> (q122_transitions _),
-    "q124_bm25_topk" -> (q124_bm25_topk _),
-    "q125_overlap_contain" -> (q125_overlap_contain _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q116_overlap_join" -> q116Sql,
-    "q117_snm_dedup" -> q117Sql,
-    "q118_link_predict" -> q118Sql,
-    "q120_label_prop" -> q120Sql,
-    "q121_funnel" -> q121Sql,
-    "q122_transitions" -> q122Sql,
-    "q124_bm25_topk" -> q124Sql,
-    "q125_overlap_contain" -> q125Sql
+  val entries: Seq[Query] = Seq(
+    Query("q116_overlap_join", q116_overlap_join _, q116Sql),
+    Query("q117_snm_dedup", q117_snm_dedup _, q117Sql),
+    Query("q118_link_predict", q118_link_predict _, q118Sql),
+    Query("q120_label_prop", q120_label_prop _, q120Sql),
+    Query("q121_funnel", q121_funnel _, q121Sql),
+    Query("q122_transitions", q122_transitions _, q122Sql),
+    Query("q124_bm25_topk", q124_bm25_topk _, q124Sql),
+    Query("q125_overlap_contain", q125_overlap_contain _, q125Sql)
   )
 }

@@ -28,8 +28,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries110 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q416
 
   /** q416: per-segment winsorized mean of customer spend at
@@ -203,15 +201,9 @@ object ExtensionQueries110 extends QueryGroup {
       |    // ((count(*) * count(*)) // 2) AS footrule_ppm
       |FROM r""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q416_winsorized_mean" -> (q416_winsorized_mean _),
-    "q417_page_trend" -> (q417_page_trend _),
-    "q418_spearman_footrule" -> (q418_spearman_footrule _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q416_winsorized_mean" -> q416Sql,
-    "q417_page_trend" -> q417Sql,
-    "q418_spearman_footrule" -> q418Sql
+  val entries: Seq[Query] = Seq(
+    Query("q416_winsorized_mean", q416_winsorized_mean _, q416Sql),
+    Query("q417_page_trend", q417_page_trend _, q417Sql),
+    Query("q418_spearman_footrule", q418_spearman_footrule _, q418Sql)
   )
 }

@@ -33,8 +33,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries111 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q419
 
   /** q419: per-image patch-grid budget. Native (width, height) come
@@ -263,17 +261,10 @@ object ExtensionQueries111 extends QueryGroup {
       |    // (t.m * (a.n_all - t.m)) AS cliffs_delta_ppm
       |FROM t, a""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q419_patch_grid" -> (q419_patch_grid _),
-    "q420_gini_mean_difference" -> (q420_gini_mean_difference _),
-    "q421_robust_shape" -> (q421_robust_shape _),
-    "q422_cliffs_delta" -> (q422_cliffs_delta _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q419_patch_grid" -> q419Sql,
-    "q420_gini_mean_difference" -> q420Sql,
-    "q421_robust_shape" -> q421Sql,
-    "q422_cliffs_delta" -> q422Sql
+  val entries: Seq[Query] = Seq(
+    Query("q419_patch_grid", q419_patch_grid _, q419Sql),
+    Query("q420_gini_mean_difference", q420_gini_mean_difference _, q420Sql),
+    Query("q421_robust_shape", q421_robust_shape _, q421Sql),
+    Query("q422_cliffs_delta", q422_cliffs_delta _, q422Sql)
   )
 }

@@ -29,8 +29,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries112 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q423
 
   /** q423: JT over activity buckets (orders per customer: ≤4, 5–8,
@@ -240,15 +238,9 @@ object ExtensionQueries112 extends QueryGroup {
       |FROM coh WHERE cohort <> 'middle'
       |GROUP BY cohort ORDER BY cohort""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q423_jonckheere" -> (q423_jonckheere _),
-    "q424_shard_plan" -> (q424_shard_plan _),
-    "q425_regression_to_mean" -> (q425_regression_to_mean _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q423_jonckheere" -> q423Sql,
-    "q424_shard_plan" -> q424Sql,
-    "q425_regression_to_mean" -> q425Sql
+  val entries: Seq[Query] = Seq(
+    Query("q423_jonckheere", q423_jonckheere _, q423Sql),
+    Query("q424_shard_plan", q424_shard_plan _, q424Sql),
+    Query("q425_regression_to_mean", q425_regression_to_mean _, q425Sql)
   )
 }

@@ -29,8 +29,6 @@ import graft.ops.{CoPurchase, PrefixScan}
   */
 object ExtensionQueries113 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q426
 
   /** q426: (prefix_doc, super_doc) pairs where prefix_doc's full text
@@ -204,15 +202,9 @@ object ExtensionQueries113 extends QueryGroup {
       |  CAST(sum(seg) * 1000 // (CAST(na AS HUGEINT) * nb) AS BIGINT) AS w1_milli
       |FROM segs GROUP BY na, nb""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q426_prefix_dedup" -> (q426_prefix_dedup _),
-    "q427_rich_club" -> (q427_rich_club _),
-    "q428_wasserstein" -> (q428_wasserstein _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q426_prefix_dedup" -> q426Sql,
-    "q427_rich_club" -> q427Sql,
-    "q428_wasserstein" -> q428Sql
+  val entries: Seq[Query] = Seq(
+    Query("q426_prefix_dedup", q426_prefix_dedup _, q426Sql),
+    Query("q427_rich_club", q427_rich_club _, q427Sql),
+    Query("q428_wasserstein", q428_wasserstein _, q428Sql)
   )
 }

@@ -27,8 +27,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries114 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q429
 
   /** q429: ℓ₁ (milli-dollars), ℓ₂ (milli), τ₃ and τ₄ (ppm) of
@@ -153,13 +151,8 @@ object ExtensionQueries114 extends QueryGroup {
        |    ELSE n_closed * 1000000 // n_wedges END AS closure_ppm
        |FROM agg""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q429_l_moments" -> (q429_l_moments _),
-    "q430_dedup_transitivity" -> (q430_dedup_transitivity _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q429_l_moments" -> q429Sql,
-    "q430_dedup_transitivity" -> q430Sql
+  val entries: Seq[Query] = Seq(
+    Query("q429_l_moments", q429_l_moments _, q429Sql),
+    Query("q430_dedup_transitivity", q430_dedup_transitivity _, q430Sql)
   )
 }

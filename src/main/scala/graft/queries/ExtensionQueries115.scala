@@ -23,8 +23,6 @@ import graft.ops.Ranks
   */
 object ExtensionQueries115 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** α = 5% in ppm. */
   private val AlphaPpm = 50000L
 
@@ -127,11 +125,7 @@ object ExtensionQueries115 extends QueryGroup {
        |FROM ranked r CROSS JOIN kstar k
        |ORDER BY r.config""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q431_benjamini_hochberg" -> (q431_benjamini_hochberg _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q431_benjamini_hochberg" -> q431Sql
+  val entries: Seq[Query] = Seq(
+    Query("q431_benjamini_hochberg", q431_benjamini_hochberg _, q431Sql)
   )
 }

@@ -28,8 +28,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries116 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q432
 
   /** q432: all source pairs with delta_milli = Σ|z_a − z_b| div K over
@@ -232,15 +230,9 @@ object ExtensionQueries116 extends QueryGroup {
       |FROM rj, bk
       |GROUP BY bk.b, bk.k""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q432_burrows_delta" -> (q432_burrows_delta _),
-    "q433_two_sample_runs" -> (q433_two_sample_runs _),
-    "q434_kendall_w" -> (q434_kendall_w _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q432_burrows_delta" -> q432Sql,
-    "q433_two_sample_runs" -> q433Sql,
-    "q434_kendall_w" -> q434Sql
+  val entries: Seq[Query] = Seq(
+    Query("q432_burrows_delta", q432_burrows_delta _, q432Sql),
+    Query("q433_two_sample_runs", q433_two_sample_runs _, q433Sql),
+    Query("q434_kendall_w", q434_kendall_w _, q434Sql)
   )
 }

@@ -25,8 +25,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries117 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q435
 
   /** q435: best-split report — threshold (left = spend ≤ t), sizes,
@@ -112,11 +110,7 @@ object ExtensionQueries117 extends QueryGroup {
       |    // (CAST(n AS HUGEINT) * n) - split_gini_ppm AS BIGINT) AS reduction_ppm
       |FROM scored ORDER BY split_gini_ppm, v LIMIT 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q435_decision_stump" -> (q435_decision_stump _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q435_decision_stump" -> q435Sql
+  val entries: Seq[Query] = Seq(
+    Query("q435_decision_stump", q435_decision_stump _, q435Sql)
   )
 }

@@ -41,8 +41,6 @@ import graft.core.Tables
   */
 object ExtensionQueries118 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q436
 
   /** q436: χ² (milli) and Cramér's V² (ppm) for segment × priority at
@@ -321,17 +319,10 @@ object ExtensionQueries118 extends QueryGroup {
       |    AS BIGINT), 1000000) AS p_ppm
       |FROM binoms GROUP BY n, s""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q436_chi_square_independence" -> (q436_chi_square_independence _),
-    "q437_mood_median_test" -> (q437_mood_median_test _),
-    "q438_ordinal_association" -> (q438_ordinal_association _),
-    "q439_cox_stuart_trend" -> (q439_cox_stuart_trend _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q436_chi_square_independence" -> q436Sql,
-    "q437_mood_median_test" -> q437Sql,
-    "q438_ordinal_association" -> q438Sql,
-    "q439_cox_stuart_trend" -> q439Sql
+  val entries: Seq[Query] = Seq(
+    Query("q436_chi_square_independence", q436_chi_square_independence _, q436Sql),
+    Query("q437_mood_median_test", q437_mood_median_test _, q437Sql),
+    Query("q438_ordinal_association", q438_ordinal_association _, q438Sql),
+    Query("q439_cox_stuart_trend", q439_cox_stuart_trend _, q439Sql)
   )
 }

@@ -34,8 +34,6 @@ import graft.ops.CoPurchase
   */
 object ExtensionQueries119 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val coEdgesSql: String =
     """lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
       |e AS (
@@ -209,15 +207,9 @@ object ExtensionQueries119 extends QueryGroup {
        |    AS transitivity_ppm
        |FROM local""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q440_lag1_autocorrelation" -> (q440_lag1_autocorrelation _),
-    "q441_degree_assortativity" -> (q441_degree_assortativity _),
-    "q442_clustering_coefficient" -> (q442_clustering_coefficient _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q440_lag1_autocorrelation" -> q440Sql,
-    "q441_degree_assortativity" -> q441Sql,
-    "q442_clustering_coefficient" -> q442Sql
+  val entries: Seq[Query] = Seq(
+    Query("q440_lag1_autocorrelation", q440_lag1_autocorrelation _, q440Sql),
+    Query("q441_degree_assortativity", q441_degree_assortativity _, q441Sql),
+    Query("q442_clustering_coefficient", q442_clustering_coefficient _, q442Sql)
   )
 }

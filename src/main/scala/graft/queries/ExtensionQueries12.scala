@@ -19,8 +19,6 @@ import graft.ops.CoPurchase
   */
 object ExtensionQueries12 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q126
 
   private val WinK = 8 // k-gram length (characters)
@@ -260,15 +258,9 @@ object ExtensionQueries12 extends QueryGroup {
        |ORDER BY part_key""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q126_winnow_fingerprints" -> (q126_winnow_fingerprints _),
-    "q127_rrf_fusion" -> (q127_rrf_fusion _),
-    "q128_cc_stars" -> (q128_cc_stars _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q126_winnow_fingerprints" -> q126Sql,
-    "q127_rrf_fusion" -> q127Sql,
-    "q128_cc_stars" -> q128Sql
+  val entries: Seq[Query] = Seq(
+    Query("q126_winnow_fingerprints", q126_winnow_fingerprints _, q126Sql),
+    Query("q127_rrf_fusion", q127_rrf_fusion _, q127Sql),
+    Query("q128_cc_stars", q128_cc_stars _, q128Sql)
   )
 }

@@ -35,8 +35,6 @@ import graft.core.Tables
   */
 object ExtensionQueries120 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q443
 
   /** q443: per-lang duplicate 8-gram exposure. Instances = all 8-token
@@ -169,15 +167,9 @@ object ExtensionQueries120 extends QueryGroup {
       |GROUP BY g.source, g.n_s, nt.n
       |ORDER BY g.source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q443_dup_ngram_rate" -> (q443_dup_ngram_rate _),
-    "q444_lexical_richness" -> (q444_lexical_richness _),
-    "q445_length_profile_drift" -> (q445_length_profile_drift _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q443_dup_ngram_rate" -> q443Sql,
-    "q444_lexical_richness" -> q444Sql,
-    "q445_length_profile_drift" -> q445Sql
+  val entries: Seq[Query] = Seq(
+    Query("q443_dup_ngram_rate", q443_dup_ngram_rate _, q443Sql),
+    Query("q444_lexical_richness", q444_lexical_richness _, q444Sql),
+    Query("q445_length_profile_drift", q445_length_profile_drift _, q445Sql)
   )
 }

@@ -30,8 +30,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries121 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** the 10-word English function-word list the score counts — a crude
     * lang-ID on purpose: calibration is interesting when the classifier
     * is imperfect */
@@ -158,13 +156,8 @@ object ExtensionQueries121 extends QueryGroup {
       |GROUP BY a.decile, nt.n, nt.tot_pos
       |ORDER BY a.decile""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q446_calibration_ece" -> (q446_calibration_ece _),
-    "q447_cumulative_gains" -> (q447_cumulative_gains _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q446_calibration_ece" -> q446Sql,
-    "q447_cumulative_gains" -> q447Sql
+  val entries: Seq[Query] = Seq(
+    Query("q446_calibration_ece", q446_calibration_ece _, q446Sql),
+    Query("q447_cumulative_gains", q447_cumulative_gains _, q447Sql)
   )
 }

@@ -41,8 +41,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries122 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val FuncWords = Seq("the", "of", "and", "to", "in", "a", "is", "that", "it", "for")
 
   // -------------------------------------------------------------- q448
@@ -282,17 +280,10 @@ object ExtensionQueries122 extends QueryGroup {
       |   WHERE i >= (nn.n_x * nn.n_y + 1) // 2) AS hl_shift_cents
       |FROM nn""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q448_youden_threshold" -> (q448_youden_threshold _),
-    "q449_capture_recapture" -> (q449_capture_recapture _),
-    "q450_gini_feature_ranking" -> (q450_gini_feature_ranking _),
-    "q451_hodges_lehmann" -> (q451_hodges_lehmann _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q448_youden_threshold" -> q448Sql,
-    "q449_capture_recapture" -> q449Sql,
-    "q450_gini_feature_ranking" -> q450Sql,
-    "q451_hodges_lehmann" -> q451Sql
+  val entries: Seq[Query] = Seq(
+    Query("q448_youden_threshold", q448_youden_threshold _, q448Sql),
+    Query("q449_capture_recapture", q449_capture_recapture _, q449Sql),
+    Query("q450_gini_feature_ranking", q450_gini_feature_ranking _, q450Sql),
+    Query("q451_hodges_lehmann", q451_hodges_lehmann _, q451Sql)
   )
 }

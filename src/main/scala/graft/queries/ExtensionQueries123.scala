@@ -33,8 +33,6 @@ import graft.core.Tables
   */
 object ExtensionQueries123 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** daily event counts keyed by epoch day (ts is canonical long nanos) */
   private def daily(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
@@ -246,17 +244,10 @@ object ExtensionQueries123 extends QueryGroup {
        |FROM summed""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q452_records_test" -> (q452_records_test _),
-    "q453_turning_points" -> (q453_turning_points _),
-    "q454_acf_table" -> (q454_acf_table _),
-    "q455_fisher_exact" -> (q455_fisher_exact _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q452_records_test" -> q452Sql,
-    "q453_turning_points" -> q453Sql,
-    "q454_acf_table" -> q454Sql,
-    "q455_fisher_exact" -> q455Sql
+  val entries: Seq[Query] = Seq(
+    Query("q452_records_test", q452_records_test _, q452Sql),
+    Query("q453_turning_points", q453_turning_points _, q453Sql),
+    Query("q454_acf_table", q454_acf_table _, q454Sql),
+    Query("q455_fisher_exact", q455_fisher_exact _, q455Sql)
   )
 }

@@ -42,8 +42,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries124 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q456
 
   /** q456: deciles by doc_id rank among shingle-bearing docs (≥3
@@ -270,17 +268,10 @@ object ExtensionQueries124 extends QueryGroup {
        |FROM cells c JOIN spread s ON c.sh = s.sh
        |GROUP BY c.source ORDER BY c.source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q456_novelty_decay" -> (q456_novelty_decay _),
-    "q457_dedup_threshold_sweep" -> (q457_dedup_threshold_sweep _),
-    "q458_dispersion_index" -> (q458_dispersion_index _),
-    "q459_source_oov_rate" -> (q459_source_oov_rate _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q456_novelty_decay" -> q456Sql,
-    "q457_dedup_threshold_sweep" -> q457Sql,
-    "q458_dispersion_index" -> q458Sql,
-    "q459_source_oov_rate" -> q459Sql
+  val entries: Seq[Query] = Seq(
+    Query("q456_novelty_decay", q456_novelty_decay _, q456Sql),
+    Query("q457_dedup_threshold_sweep", q457_dedup_threshold_sweep _, q457Sql),
+    Query("q458_dispersion_index", q458_dispersion_index _, q458Sql),
+    Query("q459_source_oov_rate", q459_source_oov_rate _, q459Sql)
   )
 }

@@ -34,8 +34,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries125 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private def daily(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
       .groupBy(expr("ts div 1000 div 86400000000").as("day"))
@@ -237,17 +235,10 @@ object ExtensionQueries125 extends QueryGroup {
        |  abs(resid.resid) * 1000 > mad.mad * 4448 AS is_anomaly
        |FROM resid, mad ORDER BY resid.day""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q460_pettitt_changepoint" -> (q460_pettitt_changepoint _),
-    "q461_average_precision" -> (q461_average_precision _),
-    "q462_quantile_shift" -> (q462_quantile_shift _),
-    "q463_weekday_anomalies" -> (q463_weekday_anomalies _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q460_pettitt_changepoint" -> q460Sql,
-    "q461_average_precision" -> q461Sql,
-    "q462_quantile_shift" -> q462Sql,
-    "q463_weekday_anomalies" -> q463Sql
+  val entries: Seq[Query] = Seq(
+    Query("q460_pettitt_changepoint", q460_pettitt_changepoint _, q460Sql),
+    Query("q461_average_precision", q461_average_precision _, q461Sql),
+    Query("q462_quantile_shift", q462_quantile_shift _, q462Sql),
+    Query("q463_weekday_anomalies", q463_weekday_anomalies _, q463Sql)
   )
 }

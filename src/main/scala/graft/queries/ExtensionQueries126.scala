@@ -39,8 +39,6 @@ import graft.ext.Dedup
   */
 object ExtensionQueries126 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q464
 
   /** Calibration threshold for the exact-side pair generator (ppm). */
@@ -337,17 +335,10 @@ object ExtensionQueries126 extends QueryGroup {
        |FROM agg ORDER BY lang""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q464_minhash_calibration" -> (q464_minhash_calibration _),
-    "q465_max_to_sum" -> (q465_max_to_sum _),
-    "q466_ansari_bradley" -> (q466_ansari_bradley _),
-    "q467_chao1_richness" -> (q467_chao1_richness _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q464_minhash_calibration" -> q464Sql,
-    "q465_max_to_sum" -> q465Sql,
-    "q466_ansari_bradley" -> q466Sql,
-    "q467_chao1_richness" -> q467Sql
+  val entries: Seq[Query] = Seq(
+    Query("q464_minhash_calibration", q464_minhash_calibration _, q464Sql),
+    Query("q465_max_to_sum", q465_max_to_sum _, q465Sql),
+    Query("q466_ansari_bradley", q466_ansari_bradley _, q466Sql),
+    Query("q467_chao1_richness", q467_chao1_richness _, q467Sql)
   )
 }

@@ -40,8 +40,6 @@ import graft.core.Tables
   */
 object ExtensionQueries127 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q468
 
   /** q468: strata = event_type; exposure = weekend ((day+4)%7 ∈ {0,6});
@@ -256,17 +254,10 @@ object ExtensionQueries127 extends QueryGroup {
       |    AS BIGINT) AS kappa_w_milli
       |FROM wo, we, nn""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q468_mantel_haenszel" -> (q468_mantel_haenszel _),
-    "q469_session_gap_sweep" -> (q469_session_gap_sweep _),
-    "q470_inbatch_collisions" -> (q470_inbatch_collisions _),
-    "q471_weighted_kappa" -> (q471_weighted_kappa _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q468_mantel_haenszel" -> q468Sql,
-    "q469_session_gap_sweep" -> q469Sql,
-    "q470_inbatch_collisions" -> q470Sql,
-    "q471_weighted_kappa" -> q471Sql
+  val entries: Seq[Query] = Seq(
+    Query("q468_mantel_haenszel", q468_mantel_haenszel _, q468Sql),
+    Query("q469_session_gap_sweep", q469_session_gap_sweep _, q469Sql),
+    Query("q470_inbatch_collisions", q470_inbatch_collisions _, q470Sql),
+    Query("q471_weighted_kappa", q471_weighted_kappa _, q471Sql)
   )
 }

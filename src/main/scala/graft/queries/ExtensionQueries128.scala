@@ -35,8 +35,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries128 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val FuncWords = Seq("the", "of", "and", "to", "in", "a", "is", "that", "it", "for")
 
   // -------------------------------------------------------------- q472
@@ -270,17 +268,10 @@ object ExtensionQueries128 extends QueryGroup {
       |FROM stats WHERE n_r > 0
       |ORDER BY g_stat DESC, k LIMIT 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q472_gk_lambda" -> (q472_gk_lambda _),
-    "q473_matthews_mcc" -> (q473_matthews_mcc _),
-    "q474_cochran_armitage" -> (q474_cochran_armitage _),
-    "q475_step_changepoint" -> (q475_step_changepoint _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q472_gk_lambda" -> q472Sql,
-    "q473_matthews_mcc" -> q473Sql,
-    "q474_cochran_armitage" -> q474Sql,
-    "q475_step_changepoint" -> q475Sql
+  val entries: Seq[Query] = Seq(
+    Query("q472_gk_lambda", q472_gk_lambda _, q472Sql),
+    Query("q473_matthews_mcc", q473_matthews_mcc _, q473Sql),
+    Query("q474_cochran_armitage", q474_cochran_armitage _, q474Sql),
+    Query("q475_step_changepoint", q475_step_changepoint _, q475Sql)
   )
 }

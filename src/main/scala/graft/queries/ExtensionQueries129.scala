@@ -36,8 +36,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries129 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val FuncWords = Seq("the", "of", "and", "to", "in", "a", "is", "that", "it", "for")
 
   // -------------------------------------------------------------- q476
@@ -286,17 +284,10 @@ object ExtensionQueries129 extends QueryGroup {
       |    AS srm_flag
       |FROM agg""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q476_brier_decomposition" -> (q476_brier_decomposition _),
-    "q477_spearman_rho" -> (q477_spearman_rho _),
-    "q478_dup_locality" -> (q478_dup_locality _),
-    "q479_srm_check" -> (q479_srm_check _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q476_brier_decomposition" -> q476Sql,
-    "q477_spearman_rho" -> q477Sql,
-    "q478_dup_locality" -> q478Sql,
-    "q479_srm_check" -> q479Sql
+  val entries: Seq[Query] = Seq(
+    Query("q476_brier_decomposition", q476_brier_decomposition _, q476Sql),
+    Query("q477_spearman_rho", q477_spearman_rho _, q477Sql),
+    Query("q478_dup_locality", q478_dup_locality _, q478Sql),
+    Query("q479_srm_check", q479_srm_check _, q479Sql)
   )
 }

@@ -26,8 +26,6 @@ import graft.core.Tables
   */
 object ExtensionQueries13 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q129
 
   /** q129: (ISO weekday, hour-of-day) activity heatmap over the events
@@ -272,17 +270,10 @@ object ExtensionQueries13 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q129_calendar_heatmap" -> (q129_calendar_heatmap _),
-    "q130_hash_classifier" -> (q130_hash_classifier _),
-    "q131_token_drift" -> (q131_token_drift _),
-    "q132_scalar_quantize" -> (q132_scalar_quantize _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q129_calendar_heatmap" -> q129Sql,
-    "q130_hash_classifier" -> q130Sql,
-    "q131_token_drift" -> q131Sql,
-    "q132_scalar_quantize" -> q132Sql
+  val entries: Seq[Query] = Seq(
+    Query("q129_calendar_heatmap", q129_calendar_heatmap _, q129Sql),
+    Query("q130_hash_classifier", q130_hash_classifier _, q130Sql),
+    Query("q131_token_drift", q131_token_drift _, q131Sql),
+    Query("q132_scalar_quantize", q132_scalar_quantize _, q132Sql)
   )
 }

@@ -36,8 +36,6 @@ import graft.core.Tables
   */
 object ExtensionQueries130 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private def daily(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
       .groupBy(expr("ts div 1000 div 86400000000").as("day"))
@@ -280,17 +278,10 @@ object ExtensionQueries130 extends QueryGroup {
       |  min(CASE WHEN s <= 500000 THEN t END) AS median_t
       |FROM widths""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q480_median_exact_ci" -> (q480_median_exact_ci _),
-    "q481_wilks_tolerance" -> (q481_wilks_tolerance _),
-    "q482_kaplan_meier" -> (q482_kaplan_meier _),
-    "q483_rmst" -> (q483_rmst _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q480_median_exact_ci" -> q480Sql,
-    "q481_wilks_tolerance" -> q481Sql,
-    "q482_kaplan_meier" -> q482Sql,
-    "q483_rmst" -> q483Sql
+  val entries: Seq[Query] = Seq(
+    Query("q480_median_exact_ci", q480_median_exact_ci _, q480Sql),
+    Query("q481_wilks_tolerance", q481_wilks_tolerance _, q481Sql),
+    Query("q482_kaplan_meier", q482_kaplan_meier _, q482Sql),
+    Query("q483_rmst", q483_rmst _, q483Sql)
   )
 }

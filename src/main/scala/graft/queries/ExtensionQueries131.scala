@@ -32,8 +32,6 @@ import graft.core.Tables
   */
 object ExtensionQueries131 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private def daily(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
       .groupBy(expr("ts div 1000 div 86400000000").as("day"))
@@ -236,17 +234,10 @@ object ExtensionQueries131 extends QueryGroup {
        |    AS BIGINT) * 1000000 // count(*) AS p_two_ppm
        |FROM sums, obs GROUP BY obs.d_obs""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q484_durbin_watson" -> (q484_durbin_watson _),
-    "q485_seasonal_mann_kendall" -> (q485_seasonal_mann_kendall _),
-    "q486_bowker_symmetry" -> (q486_bowker_symmetry _),
-    "q487_permutation_test" -> (q487_permutation_test _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q484_durbin_watson" -> q484Sql,
-    "q485_seasonal_mann_kendall" -> q485Sql,
-    "q486_bowker_symmetry" -> q486Sql,
-    "q487_permutation_test" -> q487Sql
+  val entries: Seq[Query] = Seq(
+    Query("q484_durbin_watson", q484_durbin_watson _, q484Sql),
+    Query("q485_seasonal_mann_kendall", q485_seasonal_mann_kendall _, q485Sql),
+    Query("q486_bowker_symmetry", q486_bowker_symmetry _, q486Sql),
+    Query("q487_permutation_test", q487_permutation_test _, q487Sql)
   )
 }

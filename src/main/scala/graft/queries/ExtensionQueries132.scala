@@ -37,8 +37,6 @@ import graft.ext.{Bpe, IvfIndex, ModelStore, Multimodal, Similarity}
   */
 object ExtensionQueries132 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q488
 
   /** Pigeonhole recall bound for 4 bands of 16 bits: two 64-bit hashes
@@ -329,38 +327,22 @@ object ExtensionQueries132 extends QueryGroup {
 
   // --------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q488_ahash_band_dedup" -> (q488_ahash_band_dedup _),
-    "q489_ahash_band_audit" -> (q489_ahash_band_audit _),
-    "q490_bpe_generation_drift" -> (q490_bpe_generation_drift _),
-    "q491_ivf_rebuild_churn" -> (q491_ivf_rebuild_churn _)
+  /** Mirrors embedding BOTH generations' TRAINED literals (never the
+    * loaded copies the engine ran), for the dirs with a generation-1 model.
+    */
+  private def driftOracle(mirror: String => Option[String]): Oracle =
+    Oracle.Model(() => Oracle.dirsOf(trainedG1Bpe) ++ Oracle.dirsOf(trainedG1Ivf), mirror)
+
+  val entries: Seq[Query] = Seq(
+    Query("q488_ahash_band_dedup", q488_ahash_band_dedup _, q488Sql),
+    Query("q489_ahash_band_audit", q489_ahash_band_audit _, q489Sql),
+    Query("q490_bpe_generation_drift", q490_bpe_generation_drift _, driftOracle(d => for {
+      g1 <- Option(trainedG1Bpe.get(d))
+      g2 <- ExtensionQueries10.trainedBpe(d)
+    } yield q490SqlFor(g1, g2))),
+    Query("q491_ivf_rebuild_churn", q491_ivf_rebuild_churn _, driftOracle(d => for {
+      g1 <- Option(trainedG1Ivf.get(d))
+      g2 <- ExtensionQueries2.trainedIvf(d)
+    } yield q491SqlFor(g1, g2)))
   )
-
-  /** Mirrors for a specific trained dir (q285-family pattern: generated
-    * AFTER the queries have trained; embeds TRAINED literals, never the
-    * loaded copies the engine ran). */
-  def oracleFor(dir: String): Map[String, String] =
-    Map("q488_ahash_band_dedup" -> q488Sql,
-        "q489_ahash_band_audit" -> q489Sql) ++
-    (for {
-      g1 <- Option(trainedG1Bpe.get(dir))
-      g2 <- ExtensionQueries10.trainedBpe(dir)
-    } yield "q490_bpe_generation_drift" -> q490SqlFor(g1, g2)).toList.toMap ++
-    (for {
-      g1 <- Option(trainedG1Ivf.get(dir))
-      g2 <- ExtensionQueries2.trainedIvf(dir)
-    } yield "q491_ivf_rebuild_churn" -> q491SqlFor(g1, g2)).toList.toMap
-
-  /** Single-dir emission (the q285-family contract): model-backed
-    * mirrors only when this JVM trained exactly one dir. */
-  def oracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    val dirs = (trainedG1Bpe.keys.asScala.toSet ++
-      trainedG1Ivf.keys.asScala.toSet).toList
-    Map("q488_ahash_band_dedup" -> q488Sql,
-        "q489_ahash_band_audit" -> q489Sql) ++ (dirs match {
-      case d :: Nil => oracleFor(d) - "q488_ahash_band_dedup" - "q489_ahash_band_audit"
-      case _ => Map.empty[String, String]
-    })
-  }
 }

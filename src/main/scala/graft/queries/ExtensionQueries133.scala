@@ -30,8 +30,6 @@ import graft.ext.{ModelStore, Multimodal, PqIndex}
   */
 object ExtensionQueries133 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // -------------------------------------------------------------- q492
 
   private val trainedG1Pq =
@@ -171,24 +169,13 @@ object ExtensionQueries133 extends QueryGroup {
 
   // --------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q492_pq_rebuild_quality" -> (q492_pq_rebuild_quality _),
-    "q493_media_token_budget" -> (q493_media_token_budget _)
+  val entries: Seq[Query] = Seq(
+    Query("q492_pq_rebuild_quality", q492_pq_rebuild_quality _, Oracle.Model(
+      () => Oracle.dirsOf(trainedG1Pq),
+      d => for {
+        g1 <- Option(trainedG1Pq.get(d))
+        g2 <- ExtensionQueries6.trainedPq(d)
+      } yield q492SqlFor(g1, g2))),
+    Query("q493_media_token_budget", q493_media_token_budget _, q493Sql)
   )
-
-  def oracleFor(dir: String): Map[String, String] =
-    Map("q493_media_token_budget" -> q493Sql) ++
-    (for {
-      g1 <- Option(trainedG1Pq.get(dir))
-      g2 <- ExtensionQueries6.trainedPq(dir)
-    } yield "q492_pq_rebuild_quality" -> q492SqlFor(g1, g2)).toList.toMap
-
-  def oracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    Map("q493_media_token_budget" -> q493Sql) ++
-      (trainedG1Pq.keys.asScala.toList match {
-        case d :: Nil => oracleFor(d) - "q493_media_token_budget"
-        case _ => Map.empty[String, String]
-      })
-  }
 }

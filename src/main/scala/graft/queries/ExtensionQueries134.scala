@@ -31,8 +31,6 @@ import graft.core.Tables
   */
 object ExtensionQueries134 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Round budget for the pair-graph contraction: dup clusters are
     * near-cliques (mutual near-dups), diameter ≲ 2 — 3 rounds carries
     * the log-headroom; the certificate column still rides the output,
@@ -156,13 +154,8 @@ object ExtensionQueries134 extends QueryGroup {
 
   // --------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q494_ahash_dup_clusters" -> (q494_ahash_dup_clusters _),
-    "q495_ahash_dedup_savings" -> (q495_ahash_dedup_savings _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q494_ahash_dup_clusters" -> q494Sql,
-    "q495_ahash_dedup_savings" -> q495Sql
+  val entries: Seq[Query] = Seq(
+    Query("q494_ahash_dup_clusters", q494_ahash_dup_clusters _, q494Sql),
+    Query("q495_ahash_dedup_savings", q495_ahash_dedup_savings _, q495Sql)
   )
 }

@@ -45,8 +45,6 @@ import graft.ext.{Contamination, TextAnalysis}
   */
 object ExtensionQueries135 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** q58's overflow-free deterministic hash bucket (doc_id folded below
     * 2²⁰ first so no product exceeds 2⁵²). */
   private def hashBucket(id: org.apache.spark.sql.Column) =
@@ -208,11 +206,7 @@ object ExtensionQueries135 extends QueryGroup {
 
   // --------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q496_text_pipeline_cert" -> (q496_text_pipeline_cert _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q496_text_pipeline_cert" -> q496Sql
+  val entries: Seq[Query] = Seq(
+    Query("q496_text_pipeline_cert", q496_text_pipeline_cert _, q496Sql)
   )
 }

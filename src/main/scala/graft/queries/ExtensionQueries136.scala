@@ -36,8 +36,6 @@ import graft.ext.SetSimJoin
   */
 object ExtensionQueries136 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** q116's floor — the hybrid answers the SAME query. */
   private val MinOverlap = 20
 
@@ -164,13 +162,8 @@ object ExtensionQueries136 extends QueryGroup {
 
   // --------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q497_overlap_hybrid" -> (q497_overlap_hybrid _),
-    "q498_overlap_hybrid_cert" -> (q498_overlap_hybrid_cert _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q497_overlap_hybrid" -> q497Sql,
-    "q498_overlap_hybrid_cert" -> q498Sql
+  val entries: Seq[Query] = Seq(
+    Query("q497_overlap_hybrid", q497_overlap_hybrid _, q497Sql),
+    Query("q498_overlap_hybrid_cert", q498_overlap_hybrid_cert _, q498Sql)
   )
 }

@@ -33,8 +33,6 @@ import graft.streaming.CurationChain
   */
 object ExtensionQueries137 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val Bands = 16
   private val MinEstJ = 0.4
   private val NSig = 64
@@ -167,11 +165,7 @@ object ExtensionQueries137 extends QueryGroup {
 
   // --------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q499_curation_admission" -> (q499_curation_admission _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q499_curation_admission" -> q499Sql
+  val entries: Seq[Query] = Seq(
+    Query("q499_curation_admission", q499_curation_admission _, q499Sql)
   )
 }

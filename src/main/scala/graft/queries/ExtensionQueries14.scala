@@ -22,8 +22,6 @@ import graft.core.Tables
   */
 object ExtensionQueries14 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q133
 
   /** q133: weekly cohort retention. A user's cohort is the Monday-aligned
@@ -292,17 +290,10 @@ object ExtensionQueries14 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q133_cohort_retention" -> (q133_cohort_retention _),
-    "q134_rolling_active" -> (q134_rolling_active _),
-    "q135_table_profile" -> (q135_table_profile _),
-    "q136_user_profile" -> (q136_user_profile _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q133_cohort_retention" -> q133Sql,
-    "q134_rolling_active" -> q134Sql,
-    "q135_table_profile" -> q135Sql,
-    "q136_user_profile" -> q136Sql
+  val entries: Seq[Query] = Seq(
+    Query("q133_cohort_retention", q133_cohort_retention _, q133Sql),
+    Query("q134_rolling_active", q134_rolling_active _, q134Sql),
+    Query("q135_table_profile", q135_table_profile _, q135Sql),
+    Query("q136_user_profile", q136_user_profile _, q136Sql)
   )
 }

@@ -21,8 +21,6 @@ import graft.core.Tables
   */
 object ExtensionQueries15 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q137
 
   /** Buckets per side. Both sides MUST agree for exchange-free planning;
@@ -242,17 +240,10 @@ object ExtensionQueries15 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q137_bucketed_join" -> (q137_bucketed_join _),
-    "q138_stratified_split" -> (q138_stratified_split _),
-    "q139_event_trigrams" -> (q139_event_trigrams _),
-    "q140_seasonal_anomaly" -> (q140_seasonal_anomaly _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q137_bucketed_join" -> q137Sql,
-    "q138_stratified_split" -> q138Sql,
-    "q139_event_trigrams" -> q139Sql,
-    "q140_seasonal_anomaly" -> q140Sql
+  val entries: Seq[Query] = Seq(
+    Query("q137_bucketed_join", q137_bucketed_join _, q137Sql),
+    Query("q138_stratified_split", q138_stratified_split _, q138Sql),
+    Query("q139_event_trigrams", q139_event_trigrams _, q139Sql),
+    Query("q140_seasonal_anomaly", q140_seasonal_anomaly _, q140Sql)
   )
 }

@@ -17,8 +17,6 @@ import graft.ext.Multimodal
   */
 object ExtensionQueries16 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q141
 
   /** q141: near-duplicate media detection by perceptual hash — the image
@@ -231,15 +229,9 @@ object ExtensionQueries16 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q141_phash_neardup" -> (q141_phash_neardup _),
-    "q142_canonical_docs" -> (q142_canonical_docs _),
-    "q144_cdc_upsert" -> (q144_cdc_upsert _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q141_phash_neardup" -> q141Sql,
-    "q142_canonical_docs" -> q142Sql,
-    "q144_cdc_upsert" -> q144Sql
+  val entries: Seq[Query] = Seq(
+    Query("q141_phash_neardup", q141_phash_neardup _, q141Sql),
+    Query("q142_canonical_docs", q142_canonical_docs _, q142Sql),
+    Query("q144_cdc_upsert", q144_cdc_upsert _, q144Sql)
   )
 }

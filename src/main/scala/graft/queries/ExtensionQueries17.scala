@@ -20,8 +20,6 @@ import graft.core.Tables
   */
 object ExtensionQueries17 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q145
 
   /** Decay horizon in days: weight = 2^(HorizonDays − age). Ages beyond
@@ -193,15 +191,9 @@ object ExtensionQueries17 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q145_decayed_value" -> (q145_decayed_value _),
-    "q146_source_diversity" -> (q146_source_diversity _),
-    "q147_hard_negatives" -> (q147_hard_negatives _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q145_decayed_value" -> q145Sql,
-    "q146_source_diversity" -> q146Sql,
-    "q147_hard_negatives" -> q147Sql
+  val entries: Seq[Query] = Seq(
+    Query("q145_decayed_value", q145_decayed_value _, q145Sql),
+    Query("q146_source_diversity", q146_source_diversity _, q146Sql),
+    Query("q147_hard_negatives", q147_hard_negatives _, q147Sql)
   )
 }

@@ -14,8 +14,6 @@ import graft.core.Tables
   */
 object ExtensionQueries18 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q148
 
   /** q148: positional phrase search. Bag-of-words retrieval (q124 BM25)
@@ -154,13 +152,8 @@ object ExtensionQueries18 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q148_phrase_search" -> (q148_phrase_search _),
-    "q149_conversion_timing" -> (q149_conversion_timing _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q148_phrase_search" -> q148Sql,
-    "q149_conversion_timing" -> q149Sql
+  val entries: Seq[Query] = Seq(
+    Query("q148_phrase_search", q148_phrase_search _, q148Sql),
+    Query("q149_conversion_timing", q149_conversion_timing _, q149Sql)
   )
 }

@@ -24,8 +24,6 @@ import graft.ops.{Bfs, CoPurchase, DenseIds}
   */
 object ExtensionQueries19 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q150
 
   /** q150: landmark BFS over the co-purchase part graph (q74's edge
@@ -415,21 +413,12 @@ object ExtensionQueries19 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q150_bfs_hops" -> (q150_bfs_hops _),
-    "q151_blocklist" -> (q151_blocklist _),
-    "q152_trend_slope" -> (q152_trend_slope _),
-    "q153_zorder_skip" -> (q153_zorder_skip _),
-    "q154_keyword_lift" -> (q154_keyword_lift _),
-    "q155_time_travel" -> (q155_time_travel _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q150_bfs_hops" -> q150Sql,
-    "q151_blocklist" -> q151Sql,
-    "q152_trend_slope" -> q152Sql,
-    "q153_zorder_skip" -> q153Sql,
-    "q154_keyword_lift" -> q154Sql,
-    "q155_time_travel" -> q155Sql
+  val entries: Seq[Query] = Seq(
+    Query("q150_bfs_hops", q150_bfs_hops _, q150Sql),
+    Query("q151_blocklist", q151_blocklist _, q151Sql),
+    Query("q152_trend_slope", q152_trend_slope _, q152Sql),
+    Query("q153_zorder_skip", q153_zorder_skip _, q153Sql),
+    Query("q154_keyword_lift", q154_keyword_lift _, q154Sql),
+    Query("q155_time_travel", q155_time_travel _, q155Sql)
   )
 }

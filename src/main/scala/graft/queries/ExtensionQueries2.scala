@@ -10,8 +10,6 @@ import graft.ext.{IvfIndex, Similarity}
   */
 object ExtensionQueries2 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** q37: embedding-cosine near-dup dedup. Jittered copies of 50 vectors
     * (deterministic integer-derived perturbation) are unioned in; the
     * brute-force pair scan must recover exactly the (original, copy) pairs
@@ -428,57 +426,27 @@ object ExtensionQueries2 extends QueryGroup {
     s"""$q42ClusterCtes
        |SELECT id, rep FROM lbl ORDER BY id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q37_embed_dedup" -> (q37_embed_dedup _),
-    "q38_ann_ivf" -> (q38_ann_ivf _),
-    "q42_dedup_clusters" ->
-      ((s: SparkSession, d: String) => q42ClustersStaged(s, d).orderBy(col("id"))),
-    "q47_ann_recall" -> (q47_ann_recall _),
-    "q70_semdedup" -> (q70_semdedup _)
-  )
-
-  private val baseOracle: Map[String, String] = Map(
-    "q37_embed_dedup" -> q37Sql,
-    "q42_dedup_clusters" -> q42Sql,
-    "q47_ann_recall" -> q47Sql
-  )
-
-  /** The generated mirrors (q38, q70) keyed BY DIR: centroid literals must
-    * come from the model trained on exactly the dir being verified — a JVM
-    * that trains two scale dirs must not leak one dir's centroids into the
-    * other's oracle. No model trained for `dir` yet → the keys are omitted
-    * and the driver falls back to its rows-only check.
-    */
-  def oracleFor(dir: String): Map[String, String] =
-    baseOracle ++ Option(modelCache.get(dir)).toList.flatMap(m => Seq(
-      "q38_ann_ivf" -> q38SqlFor(m), "q70_semdedup" -> q70SqlFor(m)))
-
-  /** Dir-less view (driver contract): emits the generated mirrors only
-    * when the JVM has trained exactly ONE dir — unambiguous; with zero or
-    * several trained dirs the keys are omitted rather than guessing.
-    */
-  /** The dir's trained IVF model, if any — for round-7's filtered-ANN
-    * tier ([[ExtensionQueries10]]), which shares this index (one index
-    * serves every predicate; filtering is probe-time).
+  /** The dir's trained IVF model, if any — shared with round-7's
+    * filtered-ANN tier ([[ExtensionQueries10]]; one index serves every
+    * predicate, filtering is probe-time) and q491's rebuild-churn mirror.
     */
   private[queries] def trainedIvf(dir: String): Option[IvfIndex.Model] =
     Option(modelCache.get(dir))
 
-  /** Sole trained model across dirs (dir-less oracle view), if unambiguous. */
-  private[queries] def soleTrainedIvf: Option[IvfIndex.Model] = {
-    import scala.jdk.CollectionConverters._
-    modelCache.asScala.toMap.values.toList match {
-      case m :: Nil => Some(m)
-      case _ => None
-    }
-  }
+  /** A mirror generated from the dir's trained centroids (q38, q70, q113):
+    * the literals must come from the model trained on exactly the dir being
+    * verified — a JVM that trains two scale dirs must not leak one dir's
+    * centroids into the other's oracle.
+    */
+  private[queries] def ivfOracle(sqlFor: IvfIndex.Model => String): Oracle =
+    Oracle.Model(() => Oracle.dirsOf(modelCache), d => trainedIvf(d).map(sqlFor))
 
-  def oracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    modelCache.asScala.toMap.values.toList match {
-      case m :: Nil => baseOracle ++
-        Seq("q38_ann_ivf" -> q38SqlFor(m), "q70_semdedup" -> q70SqlFor(m))
-      case _ => baseOracle
-    }
-  }
+  val entries: Seq[Query] = Seq(
+    Query("q37_embed_dedup", q37_embed_dedup _, q37Sql),
+    Query("q38_ann_ivf", q38_ann_ivf _, ivfOracle(m => q38SqlFor(m))),
+    Query("q42_dedup_clusters",
+      (s: SparkSession, d: String) => q42ClustersStaged(s, d).orderBy(col("id")), q42Sql),
+    Query("q47_ann_recall", q47_ann_recall _, q47Sql),
+    Query("q70_semdedup", q70_semdedup _, ivfOracle(q70SqlFor))
+  )
 }

@@ -19,8 +19,6 @@ import graft.ext.{Dedup, TextAnalysis}
   */
 object ExtensionQueries20 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q156
 
   /** q156: longest streaks of consecutive same-type events per user —
@@ -237,15 +235,9 @@ object ExtensionQueries20 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q156_event_streaks" -> (q156_event_streaks _),
-    "q157_lsh_quality" -> (q157_lsh_quality _),
-    "q158_rolling_zscore" -> (q158_rolling_zscore _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q156_event_streaks" -> q156Sql,
-    "q157_lsh_quality" -> q157Sql,
-    "q158_rolling_zscore" -> q158Sql
+  val entries: Seq[Query] = Seq(
+    Query("q156_event_streaks", q156_event_streaks _, q156Sql),
+    Query("q157_lsh_quality", q157_lsh_quality _, q157Sql),
+    Query("q158_rolling_zscore", q158_rolling_zscore _, q158Sql)
   )
 }

@@ -18,8 +18,6 @@ import graft.ext.{Dedup, Similarity, TextAnalysis}
   */
 object ExtensionQueries21 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q159
 
   /** q159: 5-NN majority-vote classification accuracy per class. Probes
@@ -278,15 +276,9 @@ object ExtensionQueries21 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q159_knn_accuracy" -> (q159_knn_accuracy _),
-    "q160_interarrival" -> (q160_interarrival _),
-    "q161_lsh_sweep" -> (q161_lsh_sweep _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q159_knn_accuracy" -> q159Sql,
-    "q160_interarrival" -> q160Sql,
-    "q161_lsh_sweep" -> q161Sql
+  val entries: Seq[Query] = Seq(
+    Query("q159_knn_accuracy", q159_knn_accuracy _, q159Sql),
+    Query("q160_interarrival", q160_interarrival _, q160Sql),
+    Query("q161_lsh_sweep", q161_lsh_sweep _, q161Sql)
   )
 }

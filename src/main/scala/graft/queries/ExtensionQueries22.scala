@@ -18,8 +18,6 @@ import graft.ops.{CoPurchase, DenseIds, PageRank, PrefixScan}
   */
 object ExtensionQueries22 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q162
 
   /** q162: revenue concentration. Per-user purchase totals (whole
@@ -206,15 +204,9 @@ object ExtensionQueries22 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q162_spend_gini" -> (q162_spend_gini _),
-    "q163_lateness_audit" -> (q163_lateness_audit _),
-    "q164_weighted_pagerank" -> (q164_weighted_pagerank _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q162_spend_gini" -> q162Sql,
-    "q163_lateness_audit" -> q163Sql,
-    "q164_weighted_pagerank" -> q164Sql
+  val entries: Seq[Query] = Seq(
+    Query("q162_spend_gini", q162_spend_gini _, q162Sql),
+    Query("q163_lateness_audit", q163_lateness_audit _, q163Sql),
+    Query("q164_weighted_pagerank", q164_weighted_pagerank _, q164Sql)
   )
 }

@@ -16,8 +16,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries23 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q165
 
   /** q165: per-label embedding centroid drift between the two vec_id
@@ -203,15 +201,9 @@ object ExtensionQueries23 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q165_embedding_drift" -> (q165_embedding_drift _),
-    "q166_cluster_histogram" -> (q166_cluster_histogram _),
-    "q167_ks_drift" -> (q167_ks_drift _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q165_embedding_drift" -> q165Sql,
-    "q166_cluster_histogram" -> q166Sql,
-    "q167_ks_drift" -> q167Sql
+  val entries: Seq[Query] = Seq(
+    Query("q165_embedding_drift", q165_embedding_drift _, q165Sql),
+    Query("q166_cluster_histogram", q166_cluster_histogram _, q166Sql),
+    Query("q167_ks_drift", q167_ks_drift _, q167Sql)
   )
 }

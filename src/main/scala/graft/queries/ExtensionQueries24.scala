@@ -16,8 +16,6 @@ import graft.ops.CoPurchase
   */
 object ExtensionQueries24 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q168
 
   /** q168: k-anonymity audit (k = 5) over the customer quasi-identifier
@@ -172,15 +170,9 @@ object ExtensionQueries24 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q168_k_anonymity" -> (q168_k_anonymity _),
-    "q169_equiwidth_hist" -> (q169_equiwidth_hist _),
-    "q170_degree_histogram" -> (q170_degree_histogram _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q168_k_anonymity" -> q168Sql,
-    "q169_equiwidth_hist" -> q169Sql,
-    "q170_degree_histogram" -> q170Sql
+  val entries: Seq[Query] = Seq(
+    Query("q168_k_anonymity", q168_k_anonymity _, q168Sql),
+    Query("q169_equiwidth_hist", q169_equiwidth_hist _, q169Sql),
+    Query("q170_degree_histogram", q170_degree_histogram _, q170Sql)
   )
 }

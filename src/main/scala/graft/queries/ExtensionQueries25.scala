@@ -15,8 +15,6 @@ import graft.core.Tables
   */
 object ExtensionQueries25 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q171
 
   /** q171: first signup → first purchase within 7 days, per user — the
@@ -128,13 +126,8 @@ object ExtensionQueries25 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q171_conversion_window" -> (q171_conversion_window _),
-    "q172_fk_audit" -> (q172_fk_audit _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q171_conversion_window" -> q171Sql,
-    "q172_fk_audit" -> q172Sql
+  val entries: Seq[Query] = Seq(
+    Query("q171_conversion_window", q171_conversion_window _, q171Sql),
+    Query("q172_fk_audit", q172_fk_audit _, q172Sql)
   )
 }

@@ -16,8 +16,6 @@ import graft.ops.DenseIds
   */
 object ExtensionQueries26 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q173
 
   /** q173: position-based (U-shaped 40/20/40) multi-touch attribution.
@@ -184,15 +182,9 @@ object ExtensionQueries26 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q173_multitouch" -> (q173_multitouch _),
-    "q174_bitmap_distinct" -> (q174_bitmap_distinct _),
-    "q175_decile_lift" -> (q175_decile_lift _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q173_multitouch" -> q173Sql,
-    "q174_bitmap_distinct" -> q174Sql,
-    "q175_decile_lift" -> q175Sql
+  val entries: Seq[Query] = Seq(
+    Query("q173_multitouch", q173_multitouch _, q173Sql),
+    Query("q174_bitmap_distinct", q174_bitmap_distinct _, q174Sql),
+    Query("q175_decile_lift", q175_decile_lift _, q175Sql)
   )
 }

@@ -17,8 +17,6 @@ import graft.plans.AsofJoinPhysical
   */
 object ExtensionQueries27 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q176
 
   /** q176: each purchase picks up the same user's LATEST prior-or-equal
@@ -126,13 +124,8 @@ object ExtensionQueries27 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q176_asof_physical" -> (q176_asof_physical _),
-    "q177_lorenz_curve" -> (q177_lorenz_curve _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q176_asof_physical" -> q176Sql,
-    "q177_lorenz_curve" -> q177Sql
+  val entries: Seq[Query] = Seq(
+    Query("q176_asof_physical", q176_asof_physical _, q176Sql),
+    Query("q177_lorenz_curve", q177_lorenz_curve _, q177Sql)
   )
 }

@@ -18,8 +18,6 @@ import graft.ops.{DenseIds, PrefixScan}
   */
 object ExtensionQueries28 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q178
 
   /** q178: exact ROC AUC of `n_chars` as a predictor of `lang = 'en'`,
@@ -204,15 +202,9 @@ object ExtensionQueries28 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q178_auc_mannwhitney" -> (q178_auc_mannwhitney _),
-    "q179_rfm_segments" -> (q179_rfm_segments _),
-    "q180_eventually_follows" -> (q180_eventually_follows _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q178_auc_mannwhitney" -> q178Sql,
-    "q179_rfm_segments" -> q179Sql,
-    "q180_eventually_follows" -> q180Sql
+  val entries: Seq[Query] = Seq(
+    Query("q178_auc_mannwhitney", q178_auc_mannwhitney _, q178Sql),
+    Query("q179_rfm_segments", q179_rfm_segments _, q179Sql),
+    Query("q180_eventually_follows", q180_eventually_follows _, q180Sql)
   )
 }

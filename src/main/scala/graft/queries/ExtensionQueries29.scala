@@ -20,8 +20,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries29 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q181
 
   /** q181: exact chi-square independence test on the 2×2 table
@@ -249,15 +247,9 @@ object ExtensionQueries29 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q181_ab_chisquare" -> (q181_ab_chisquare _),
-    "q182_dayn_retention" -> (q182_dayn_retention _),
-    "q183_qq_drift" -> (q183_qq_drift _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q181_ab_chisquare" -> q181Sql,
-    "q182_dayn_retention" -> q182Sql,
-    "q183_qq_drift" -> q183Sql
+  val entries: Seq[Query] = Seq(
+    Query("q181_ab_chisquare", q181_ab_chisquare _, q181Sql),
+    Query("q182_dayn_retention", q182_dayn_retention _, q182Sql),
+    Query("q183_qq_drift", q183_qq_drift _, q183Sql)
   )
 }

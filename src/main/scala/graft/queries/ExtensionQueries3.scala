@@ -11,8 +11,6 @@ import graft.ext.{Contamination, TextAnalysis}
   */
 object ExtensionQueries3 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** DuckDB polyhash mirror over an arbitrary string SQL expression. */
   private[queries] def phSql(e: String): String =
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
@@ -262,21 +260,13 @@ object ExtensionQueries3 extends QueryGroup {
        |FROM g ORDER BY lang""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q55_dataset_card" -> (q55_dataset_card _),
-    "q48_decontaminate" -> (q48_decontaminate _),
-    "q49_repetition_quality" -> (q49_repetition_quality _),
-    "q50_vocab" -> (q50_vocab _),
-    "q53_split_shards" -> (q53_split_shards _),
-    "q54_token_packing" -> (q54_token_packing _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q55_dataset_card" -> q55Sql,
-    "q48_decontaminate" -> q48Sql,
-    "q49_repetition_quality" -> q49Sql,
-    "q50_vocab" -> q50Sql,
-    "q53_split_shards" -> q53Sql
-    // q54's mirror is generated per trained dir: ExtensionQueries10.q54SqlFor
+  val entries: Seq[Query] = Seq(
+    Query("q55_dataset_card", q55_dataset_card _, q55Sql),
+    Query("q48_decontaminate", q48_decontaminate _, q48Sql),
+    Query("q49_repetition_quality", q49_repetition_quality _, q49Sql),
+    Query("q50_vocab", q50_vocab _, q50Sql),
+    Query("q53_split_shards", q53_split_shards _, q53Sql),
+    Query("q54_token_packing", q54_token_packing _,
+      ExtensionQueries10.bpeOracle(ExtensionQueries10.q54SqlFor))
   )
 }

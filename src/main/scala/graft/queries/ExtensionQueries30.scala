@@ -18,8 +18,6 @@ import graft.ops.{DenseIds, PrefixScan}
   */
 object ExtensionQueries30 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q184
 
   /** q184: vocabulary coverage curve — for top-N most-frequent tokens
@@ -219,15 +217,9 @@ object ExtensionQueries30 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q184_vocab_coverage" -> (q184_vocab_coverage _),
-    "q185_negative_sampling" -> (q185_negative_sampling _),
-    "q186_session_paths" -> (q186_session_paths _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q184_vocab_coverage" -> q184Sql,
-    "q185_negative_sampling" -> q185Sql,
-    "q186_session_paths" -> q186Sql
+  val entries: Seq[Query] = Seq(
+    Query("q184_vocab_coverage", q184_vocab_coverage _, q184Sql),
+    Query("q185_negative_sampling", q185_negative_sampling _, q185Sql),
+    Query("q186_session_paths", q186_session_paths _, q186Sql)
   )
 }

@@ -20,8 +20,6 @@ import graft.ops.{CoPurchase, PrefixScan}
   */
 object ExtensionQueries31 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q187
 
   /** q187: CUSUM change-point detection over daily order volume. The
@@ -205,15 +203,9 @@ object ExtensionQueries31 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q187_cusum_changepoint" -> (q187_cusum_changepoint _),
-    "q188_also_bought" -> (q188_also_bought _),
-    "q189_session_covisitation" -> (q189_session_covisitation _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q187_cusum_changepoint" -> q187Sql,
-    "q188_also_bought" -> q188Sql,
-    "q189_session_covisitation" -> q189Sql
+  val entries: Seq[Query] = Seq(
+    Query("q187_cusum_changepoint", q187_cusum_changepoint _, q187Sql),
+    Query("q188_also_bought", q188_also_bought _, q188Sql),
+    Query("q189_session_covisitation", q189_session_covisitation _, q189Sql)
   )
 }

@@ -18,8 +18,6 @@ import graft.core.Tables
   */
 object ExtensionQueries32 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q190
 
   /** q190: incremental maintenance of a JOIN view under BOTH-side
@@ -195,15 +193,9 @@ object ExtensionQueries32 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q190_ivm_join" -> (q190_ivm_join _),
-    "q191_bitmap_rollup" -> (q191_bitmap_rollup _),
-    "q192_dwell_time" -> (q192_dwell_time _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q190_ivm_join" -> q190Sql,
-    "q191_bitmap_rollup" -> q191Sql,
-    "q192_dwell_time" -> q192Sql
+  val entries: Seq[Query] = Seq(
+    Query("q190_ivm_join", q190_ivm_join _, q190Sql),
+    Query("q191_bitmap_rollup", q191_bitmap_rollup _, q191Sql),
+    Query("q192_dwell_time", q192_dwell_time _, q192Sql)
   )
 }

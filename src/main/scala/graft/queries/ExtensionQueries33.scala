@@ -18,8 +18,6 @@ import graft.core.Tables
   */
 object ExtensionQueries33 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q193
 
   /** q193: compaction bin planner — within each source, documents are
@@ -189,15 +187,9 @@ object ExtensionQueries33 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q193_compaction_plan" -> (q193_compaction_plan _),
-    "q194_boxplot_segments" -> (q194_boxplot_segments _),
-    "q195_lexical_diversity" -> (q195_lexical_diversity _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q193_compaction_plan" -> q193Sql,
-    "q194_boxplot_segments" -> q194Sql,
-    "q195_lexical_diversity" -> q195Sql
+  val entries: Seq[Query] = Seq(
+    Query("q193_compaction_plan", q193_compaction_plan _, q193Sql),
+    Query("q194_boxplot_segments", q194_boxplot_segments _, q194Sql),
+    Query("q195_lexical_diversity", q195_lexical_diversity _, q195Sql)
   )
 }

@@ -18,8 +18,6 @@ import graft.ops.DenseIds
   */
 object ExtensionQueries34 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q196
 
   /** q196: cohort LTV curve — users cohorted by first-signup epoch week;
@@ -204,15 +202,9 @@ object ExtensionQueries34 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q196_cohort_ltv" -> (q196_cohort_ltv _),
-    "q197_collocations" -> (q197_collocations _),
-    "q198_spearman" -> (q198_spearman _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q196_cohort_ltv" -> q196Sql,
-    "q197_collocations" -> q197Sql,
-    "q198_spearman" -> q198Sql
+  val entries: Seq[Query] = Seq(
+    Query("q196_cohort_ltv", q196_cohort_ltv _, q196Sql),
+    Query("q197_collocations", q197_collocations _, q197Sql),
+    Query("q198_spearman", q198_spearman _, q198Sql)
   )
 }

@@ -18,8 +18,6 @@ import graft.core.Tables
   */
 object ExtensionQueries35 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q199
 
   /** q199: near-dup edit profile — for every non-canonical member of a
@@ -131,13 +129,8 @@ object ExtensionQueries35 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q199_neardup_diff" -> (q199_neardup_diff _),
-    "q200_yoy_growth" -> (q200_yoy_growth _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q199_neardup_diff" -> q199Sql,
-    "q200_yoy_growth" -> q200Sql
+  val entries: Seq[Query] = Seq(
+    Query("q199_neardup_diff", q199_neardup_diff _, q199Sql),
+    Query("q200_yoy_growth", q200_yoy_growth _, q200Sql)
   )
 }

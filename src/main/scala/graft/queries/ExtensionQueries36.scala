@@ -18,8 +18,6 @@ import graft.core.Tables
   */
 object ExtensionQueries36 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q201
 
   /** q201: Markov next-event predictor accuracy — train q122's adjacent
@@ -227,15 +225,9 @@ object ExtensionQueries36 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q201_markov_accuracy" -> (q201_markov_accuracy _),
-    "q202_selectivity_eval" -> (q202_selectivity_eval _),
-    "q203_join_skew_report" -> (q203_join_skew_report _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q201_markov_accuracy" -> q201Sql,
-    "q202_selectivity_eval" -> q202Sql,
-    "q203_join_skew_report" -> q203Sql
+  val entries: Seq[Query] = Seq(
+    Query("q201_markov_accuracy", q201_markov_accuracy _, q201Sql),
+    Query("q202_selectivity_eval", q202_selectivity_eval _, q202Sql),
+    Query("q203_join_skew_report", q203_join_skew_report _, q203Sql)
   )
 }

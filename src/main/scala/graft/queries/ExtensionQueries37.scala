@@ -16,8 +16,6 @@ import graft.core.Tables
   */
 object ExtensionQueries37 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q204
 
   /** q204: audience set algebra between event types — for each ordered
@@ -205,15 +203,9 @@ object ExtensionQueries37 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q204_bitmap_audiences" -> (q204_bitmap_audiences _),
-    "q205_topn_others" -> (q205_topn_others _),
-    "q206_hierarchy_share" -> (q206_hierarchy_share _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q204_bitmap_audiences" -> q204Sql,
-    "q205_topn_others" -> q205Sql,
-    "q206_hierarchy_share" -> q206Sql
+  val entries: Seq[Query] = Seq(
+    Query("q204_bitmap_audiences", q204_bitmap_audiences _, q204Sql),
+    Query("q205_topn_others", q205_topn_others _, q205Sql),
+    Query("q206_hierarchy_share", q206_hierarchy_share _, q206Sql)
   )
 }

@@ -17,8 +17,6 @@ import graft.core.Tables
   */
 object ExtensionQueries38 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q207
 
   /** q207: weekly growth accounting (the Social Capital framework) —
@@ -211,15 +209,9 @@ object ExtensionQueries38 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q207_growth_accounting" -> (q207_growth_accounting _),
-    "q208_dedup_waterfall" -> (q208_dedup_waterfall _),
-    "q209_weekday_index" -> (q209_weekday_index _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q207_growth_accounting" -> q207Sql,
-    "q208_dedup_waterfall" -> q208Sql,
-    "q209_weekday_index" -> q209Sql
+  val entries: Seq[Query] = Seq(
+    Query("q207_growth_accounting", q207_growth_accounting _, q207Sql),
+    Query("q208_dedup_waterfall", q208_dedup_waterfall _, q208Sql),
+    Query("q209_weekday_index", q209_weekday_index _, q209Sql)
   )
 }

@@ -18,8 +18,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries39 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q210
 
   /** q210: peak concurrent sessions per hour — q21's 30-minute sessions
@@ -211,15 +209,9 @@ object ExtensionQueries39 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q210_peak_concurrency" -> (q210_peak_concurrency _),
-    "q211_session_sensitivity" -> (q211_session_sensitivity _),
-    "q212_fd_discovery" -> (q212_fd_discovery _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q210_peak_concurrency" -> q210Sql,
-    "q211_session_sensitivity" -> q211Sql,
-    "q212_fd_discovery" -> q212Sql
+  val entries: Seq[Query] = Seq(
+    Query("q210_peak_concurrency", q210_peak_concurrency _, q210Sql),
+    Query("q211_session_sensitivity", q211_session_sensitivity _, q211Sql),
+    Query("q212_fd_discovery", q212_fd_discovery _, q212Sql)
   )
 }

@@ -10,8 +10,6 @@ import graft.core.Tables
   */
 object ExtensionQueries4 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   private val PhoneRe = "\\+1-555-[0-9]{4}"
 
@@ -444,31 +442,17 @@ object ExtensionQueries4 extends QueryGroup {
       |  CAST(len(string_split(chunk, ' ')) AS BIGINT) AS n_tokens, chunk
       |FROM p ORDER BY doc_id, chunk_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q71_boilerplate" -> (q71_boilerplate _),
-    "q72_incremental_dedup" -> (q72_incremental_dedup _),
-    "q73_chunk_overlap" -> (q73_chunk_overlap _),
-    "q57_pii_scrub" -> (q57_pii_scrub _),
-    "q58_mixture_sample" -> (q58_mixture_sample _),
-    "q59_tfidf_topk" -> (q59_tfidf_topk _),
-    "q63_funnel" -> (q63_funnel _),
-    "q64_group_topk_sample" -> (q64_group_topk_sample _),
-    "q67_frame_sample" -> (q67_frame_sample _),
-    "q68_unicode_nfc" -> (q68_unicode_nfc _),
-    "q69_content_ids" -> (q69_content_ids _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q71_boilerplate" -> q71Sql,
-    "q72_incremental_dedup" -> q72Sql,
-    "q73_chunk_overlap" -> q73Sql,
-    "q57_pii_scrub" -> q57Sql,
-    "q58_mixture_sample" -> q58Sql,
-    "q59_tfidf_topk" -> q59Sql,
-    "q63_funnel" -> q63Sql,
-    "q64_group_topk_sample" -> q64Sql,
-    "q67_frame_sample" -> q67Sql,
-    "q68_unicode_nfc" -> q68Sql,
-    "q69_content_ids" -> q69Sql
+  val entries: Seq[Query] = Seq(
+    Query("q71_boilerplate", q71_boilerplate _, q71Sql),
+    Query("q72_incremental_dedup", q72_incremental_dedup _, q72Sql),
+    Query("q73_chunk_overlap", q73_chunk_overlap _, q73Sql),
+    Query("q57_pii_scrub", q57_pii_scrub _, q57Sql),
+    Query("q58_mixture_sample", q58_mixture_sample _, q58Sql),
+    Query("q59_tfidf_topk", q59_tfidf_topk _, q59Sql),
+    Query("q63_funnel", q63_funnel _, q63Sql),
+    Query("q64_group_topk_sample", q64_group_topk_sample _, q64Sql),
+    Query("q67_frame_sample", q67_frame_sample _, q67Sql),
+    Query("q68_unicode_nfc", q68_unicode_nfc _, q68Sql),
+    Query("q69_content_ids", q69_content_ids _, q69Sql)
   )
 }

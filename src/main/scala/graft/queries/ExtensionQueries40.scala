@@ -15,8 +15,6 @@ import graft.ops.{DenseIds, PrefixScan}
   */
 object ExtensionQueries40 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q213
 
   /** q213: time-weighted average value (TWAP) per event type — each
@@ -194,15 +192,9 @@ object ExtensionQueries40 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q213_twap" -> (q213_twap _),
-    "q214_abc_classification" -> (q214_abc_classification _),
-    "q215_fulfillment_latency" -> (q215_fulfillment_latency _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q213_twap" -> q213Sql,
-    "q214_abc_classification" -> q214Sql,
-    "q215_fulfillment_latency" -> q215Sql
+  val entries: Seq[Query] = Seq(
+    Query("q213_twap", q213_twap _, q213Sql),
+    Query("q214_abc_classification", q214_abc_classification _, q214Sql),
+    Query("q215_fulfillment_latency", q215_fulfillment_latency _, q215Sql)
   )
 }

@@ -17,8 +17,6 @@ import graft.core.Tables
   */
 object ExtensionQueries41 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q216
 
   /** q216: backfill completeness monitor — against the GLOBAL calendar
@@ -241,15 +239,9 @@ object ExtensionQueries41 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q216_backfill_monitor" -> (q216_backfill_monitor _),
-    "q217_page_conversion_lift" -> (q217_page_conversion_lift _),
-    "q218_abuse_heuristics" -> (q218_abuse_heuristics _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q216_backfill_monitor" -> q216Sql,
-    "q217_page_conversion_lift" -> q217Sql,
-    "q218_abuse_heuristics" -> q218Sql
+  val entries: Seq[Query] = Seq(
+    Query("q216_backfill_monitor", q216_backfill_monitor _, q216Sql),
+    Query("q217_page_conversion_lift", q217_page_conversion_lift _, q217Sql),
+    Query("q218_abuse_heuristics", q218_abuse_heuristics _, q218Sql)
   )
 }

@@ -14,8 +14,6 @@ import graft.core.Tables
   */
 object ExtensionQueries42 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q219
 
   /** q219: trending pages — pages whose LAST-hour view rate runs above
@@ -184,15 +182,9 @@ object ExtensionQueries42 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q219_trending_pages" -> (q219_trending_pages _),
-    "q220_net_revenue_retention" -> (q220_net_revenue_retention _),
-    "q221_duplicate_payments" -> (q221_duplicate_payments _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q219_trending_pages" -> q219Sql,
-    "q220_net_revenue_retention" -> q220Sql,
-    "q221_duplicate_payments" -> q221Sql
+  val entries: Seq[Query] = Seq(
+    Query("q219_trending_pages", q219_trending_pages _, q219Sql),
+    Query("q220_net_revenue_retention", q220_net_revenue_retention _, q220Sql),
+    Query("q221_duplicate_payments", q221_duplicate_payments _, q221Sql)
   )
 }

@@ -15,8 +15,6 @@ import graft.core.Tables
   */
 object ExtensionQueries43 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** floor(x·2²⁰) — exact in IEEE arithmetic (q165's quantization). */
   private val Q20 = 1048576L
 
@@ -194,15 +192,9 @@ object ExtensionQueries43 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q222_embedding_norm_audit" -> (q222_embedding_norm_audit _),
-    "q223_dead_dimensions" -> (q223_dead_dimensions _),
-    "q224_truncation_loss" -> (q224_truncation_loss _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q222_embedding_norm_audit" -> q222Sql,
-    "q223_dead_dimensions" -> q223Sql,
-    "q224_truncation_loss" -> q224Sql
+  val entries: Seq[Query] = Seq(
+    Query("q222_embedding_norm_audit", q222_embedding_norm_audit _, q222Sql),
+    Query("q223_dead_dimensions", q223_dead_dimensions _, q223Sql),
+    Query("q224_truncation_loss", q224_truncation_loss _, q224Sql)
   )
 }

@@ -17,8 +17,6 @@ import graft.core.Tables
   */
 object ExtensionQueries44 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q225
 
   /** q225: group-k-fold leakage audit — assigns 5 CV folds two ways
@@ -213,15 +211,9 @@ object ExtensionQueries44 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q225_groupkfold_leakage" -> (q225_groupkfold_leakage _),
-    "q226_target_encoding" -> (q226_target_encoding _),
-    "q227_mutual_knn" -> (q227_mutual_knn _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q225_groupkfold_leakage" -> q225Sql,
-    "q226_target_encoding" -> q226Sql,
-    "q227_mutual_knn" -> q227Sql
+  val entries: Seq[Query] = Seq(
+    Query("q225_groupkfold_leakage", q225_groupkfold_leakage _, q225Sql),
+    Query("q226_target_encoding", q226_target_encoding _, q226Sql),
+    Query("q227_mutual_knn", q227_mutual_knn _, q227Sql)
   )
 }

@@ -16,8 +16,6 @@ import graft.ext.Similarity
   */
 object ExtensionQueries45 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val Q20 = 1048576L
 
   // --------------------------------------------------------------- q228
@@ -215,15 +213,9 @@ object ExtensionQueries45 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q228_label_separation" -> (q228_label_separation _),
-    "q229_knn_confusion" -> (q229_knn_confusion _),
-    "q230_cohens_kappa" -> (q230_cohens_kappa _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q228_label_separation" -> q228Sql,
-    "q229_knn_confusion" -> q229Sql,
-    "q230_cohens_kappa" -> q230Sql
+  val entries: Seq[Query] = Seq(
+    Query("q228_label_separation", q228_label_separation _, q228Sql),
+    Query("q229_knn_confusion", q229_knn_confusion _, q229Sql),
+    Query("q230_cohens_kappa", q230_cohens_kappa _, q230Sql)
   )
 }

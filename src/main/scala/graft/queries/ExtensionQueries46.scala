@@ -16,8 +16,6 @@ import graft.core.Tables
   */
 object ExtensionQueries46 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q231
 
   /** q231: sample representativeness certificate — the deterministic
@@ -239,15 +237,9 @@ object ExtensionQueries46 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q231_sample_representativeness" -> (q231_sample_representativeness _),
-    "q232_lang_source_chisq" -> (q232_lang_source_chisq _),
-    "q233_codec_advisor" -> (q233_codec_advisor _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q231_sample_representativeness" -> q231Sql,
-    "q232_lang_source_chisq" -> q232Sql,
-    "q233_codec_advisor" -> q233Sql
+  val entries: Seq[Query] = Seq(
+    Query("q231_sample_representativeness", q231_sample_representativeness _, q231Sql),
+    Query("q232_lang_source_chisq", q232_lang_source_chisq _, q232Sql),
+    Query("q233_codec_advisor", q233_codec_advisor _, q233Sql)
   )
 }

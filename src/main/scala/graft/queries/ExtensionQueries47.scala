@@ -18,8 +18,6 @@ import graft.ops.DenseIds
   */
 object ExtensionQueries47 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q234
 
   /** q234: near-dup cluster capping ("soft dedup") — keep at most K = 2
@@ -172,15 +170,9 @@ object ExtensionQueries47 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q234_cluster_capping" -> (q234_cluster_capping _),
-    "q235_rank_dependence_grid" -> (q235_rank_dependence_grid _),
-    "q236_dispersion_index" -> (q236_dispersion_index _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q234_cluster_capping" -> q234Sql,
-    "q235_rank_dependence_grid" -> q235Sql,
-    "q236_dispersion_index" -> q236Sql
+  val entries: Seq[Query] = Seq(
+    Query("q234_cluster_capping", q234_cluster_capping _, q234Sql),
+    Query("q235_rank_dependence_grid", q235_rank_dependence_grid _, q235Sql),
+    Query("q236_dispersion_index", q236_dispersion_index _, q236Sql)
   )
 }

@@ -13,8 +13,6 @@ import graft.core.Tables
   */
 object ExtensionQueries48 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q237
 
   /** q237: day-over-day active-user stability — for each consecutive
@@ -214,15 +212,9 @@ object ExtensionQueries48 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q237_dau_stability" -> (q237_dau_stability _),
-    "q238_load_factor" -> (q238_load_factor _),
-    "q239_type_association" -> (q239_type_association _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q237_dau_stability" -> q237Sql,
-    "q238_load_factor" -> q238Sql,
-    "q239_type_association" -> q239Sql
+  val entries: Seq[Query] = Seq(
+    Query("q237_dau_stability", q237_dau_stability _, q237Sql),
+    Query("q238_load_factor", q238_load_factor _, q238Sql),
+    Query("q239_type_association", q239_type_association _, q239Sql)
   )
 }

@@ -18,8 +18,6 @@ import graft.core.Tables
   */
 object ExtensionQueries49 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q240
 
   /** q240: A/B retention readout — q182's Day-N retention split by the
@@ -245,15 +243,9 @@ object ExtensionQueries49 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q240_ab_retention" -> (q240_ab_retention _),
-    "q241_length_tvd" -> (q241_length_tvd _),
-    "q242_error_recovery" -> (q242_error_recovery _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q240_ab_retention" -> q240Sql,
-    "q241_length_tvd" -> q241Sql,
-    "q242_error_recovery" -> q242Sql
+  val entries: Seq[Query] = Seq(
+    Query("q240_ab_retention", q240_ab_retention _, q240Sql),
+    Query("q241_length_tvd", q241_length_tvd _, q241Sql),
+    Query("q242_error_recovery", q242_error_recovery _, q242Sql)
   )
 }

@@ -17,8 +17,6 @@ import graft.ops.CoPurchase
   */
 object ExtensionQueries5 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- q74
 
   private val PrIters = 5
@@ -438,23 +436,13 @@ object ExtensionQueries5 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q74_pagerank" -> (q74_pagerank _),
-    "q75_fuzzy_join" -> (q75_fuzzy_join _),
-    "q76_scd2" -> (q76_scd2 _),
-    "q77_gapfill" -> (q77_gapfill _),
-    "q78_bloom_semijoin" -> (q78_bloom_semijoin _),
-    "q79_winsorize" -> (q79_winsorize _),
-    "q80_copurchase" -> (q80_copurchase _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q74_pagerank" -> q74Sql,
-    "q75_fuzzy_join" -> q75Sql,
-    "q76_scd2" -> q76Sql,
-    "q77_gapfill" -> q77Sql,
-    "q78_bloom_semijoin" -> q78Sql,
-    "q79_winsorize" -> q79Sql,
-    "q80_copurchase" -> q80Sql
+  val entries: Seq[Query] = Seq(
+    Query("q74_pagerank", q74_pagerank _, q74Sql),
+    Query("q75_fuzzy_join", q75_fuzzy_join _, q75Sql),
+    Query("q76_scd2", q76_scd2 _, q76Sql),
+    Query("q77_gapfill", q77_gapfill _, q77Sql),
+    Query("q78_bloom_semijoin", q78_bloom_semijoin _, q78Sql),
+    Query("q79_winsorize", q79_winsorize _, q79Sql),
+    Query("q80_copurchase", q80_copurchase _, q80Sql)
   )
 }

@@ -14,8 +14,6 @@ import graft.core.Tables
   */
 object ExtensionQueries50 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q243
 
   /** q243: segment assortment overlap — for each market-segment pair,
@@ -187,15 +185,9 @@ object ExtensionQueries50 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q243_segment_assortment" -> (q243_segment_assortment _),
-    "q244_heaps_curve" -> (q244_heaps_curve _),
-    "q245_round_number_bias" -> (q245_round_number_bias _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q243_segment_assortment" -> q243Sql,
-    "q244_heaps_curve" -> q244Sql,
-    "q245_round_number_bias" -> q245Sql
+  val entries: Seq[Query] = Seq(
+    Query("q243_segment_assortment", q243_segment_assortment _, q243Sql),
+    Query("q244_heaps_curve", q244_heaps_curve _, q244Sql),
+    Query("q245_round_number_bias", q245_round_number_bias _, q245Sql)
   )
 }

@@ -16,8 +16,6 @@ import graft.core.Tables
   */
 object ExtensionQueries51 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q246
 
   /** q246: supplier-diversity risk tiers — parts bucketed by how many
@@ -207,15 +205,9 @@ object ExtensionQueries51 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q246_single_source_risk" -> (q246_single_source_risk _),
-    "q247_price_dispersion" -> (q247_price_dispersion _),
-    "q248_cluster_drift" -> (q248_cluster_drift _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q246_single_source_risk" -> q246Sql,
-    "q247_price_dispersion" -> q247Sql,
-    "q248_cluster_drift" -> q248Sql
+  val entries: Seq[Query] = Seq(
+    Query("q246_single_source_risk", q246_single_source_risk _, q246Sql),
+    Query("q247_price_dispersion", q247_price_dispersion _, q247Sql),
+    Query("q248_cluster_drift", q248_cluster_drift _, q248Sql)
   )
 }

@@ -16,8 +16,6 @@ import graft.core.Tables
   */
 object ExtensionQueries52 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q249
 
   /** q249: right-to-be-forgotten purge audit — with the tombstone set
@@ -199,15 +197,9 @@ object ExtensionQueries52 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q249_purge_audit" -> (q249_purge_audit _),
-    "q250_path_exemplars" -> (q250_path_exemplars _),
-    "q251_encoding_health" -> (q251_encoding_health _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q249_purge_audit" -> q249Sql,
-    "q250_path_exemplars" -> q250Sql,
-    "q251_encoding_health" -> q251Sql
+  val entries: Seq[Query] = Seq(
+    Query("q249_purge_audit", q249_purge_audit _, q249Sql),
+    Query("q250_path_exemplars", q250_path_exemplars _, q250Sql),
+    Query("q251_encoding_health", q251_encoding_health _, q251Sql)
   )
 }

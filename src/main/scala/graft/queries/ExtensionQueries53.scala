@@ -16,8 +16,6 @@ import graft.ops.{DenseIds, PrefixScan}
   */
 object ExtensionQueries53 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q252
 
   /** q252: quantity-weighted median unit price — the smallest unit
@@ -202,15 +200,9 @@ object ExtensionQueries53 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q252_weighted_median" -> (q252_weighted_median _),
-    "q253_gains_curve" -> (q253_gains_curve _),
-    "q254_prefix_completions" -> (q254_prefix_completions _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q252_weighted_median" -> q252Sql,
-    "q253_gains_curve" -> q253Sql,
-    "q254_prefix_completions" -> q254Sql
+  val entries: Seq[Query] = Seq(
+    Query("q252_weighted_median", q252_weighted_median _, q252Sql),
+    Query("q253_gains_curve", q253_gains_curve _, q253Sql),
+    Query("q254_prefix_completions", q254_prefix_completions _, q254Sql)
   )
 }

@@ -14,8 +14,6 @@ import graft.core.Tables
   */
 object ExtensionQueries54 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q255
 
   /** q255: temporal sanity audit — the cross-table constraint "a line
@@ -190,15 +188,9 @@ object ExtensionQueries54 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q255_temporal_sanity" -> (q255_temporal_sanity _),
-    "q256_return_rates" -> (q256_return_rates _),
-    "q257_ndv_interaction" -> (q257_ndv_interaction _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q255_temporal_sanity" -> q255Sql,
-    "q256_return_rates" -> q256Sql,
-    "q257_ndv_interaction" -> q257Sql
+  val entries: Seq[Query] = Seq(
+    Query("q255_temporal_sanity", q255_temporal_sanity _, q255Sql),
+    Query("q256_return_rates", q256_return_rates _, q256Sql),
+    Query("q257_ndv_interaction", q257_ndv_interaction _, q257Sql)
   )
 }

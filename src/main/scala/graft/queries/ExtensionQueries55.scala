@@ -15,8 +15,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries55 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q258
 
   /** q258: discount-band effectiveness — lines bucketed by discount
@@ -181,15 +179,9 @@ object ExtensionQueries55 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q258_discount_bands" -> (q258_discount_bands _),
-    "q259_credit_screen" -> (q259_credit_screen _),
-    "q260_position_effects" -> (q260_position_effects _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q258_discount_bands" -> q258Sql,
-    "q259_credit_screen" -> q259Sql,
-    "q260_position_effects" -> q260Sql
+  val entries: Seq[Query] = Seq(
+    Query("q258_discount_bands", q258_discount_bands _, q258Sql),
+    Query("q259_credit_screen", q259_credit_screen _, q259Sql),
+    Query("q260_position_effects", q260_position_effects _, q260Sql)
   )
 }

@@ -18,8 +18,6 @@ import graft.ops.DenseIds
   */
 object ExtensionQueries56 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q261
 
   /** q261: duplicate-action rate — per user, the share of events whose
@@ -207,15 +205,9 @@ object ExtensionQueries56 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q261_duplicate_actions" -> (q261_duplicate_actions _),
-    "q262_template_prefixes" -> (q262_template_prefixes _),
-    "q263_rank_movers" -> (q263_rank_movers _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q261_duplicate_actions" -> q261Sql,
-    "q262_template_prefixes" -> q262Sql,
-    "q263_rank_movers" -> q263Sql
+  val entries: Seq[Query] = Seq(
+    Query("q261_duplicate_actions", q261_duplicate_actions _, q261Sql),
+    Query("q262_template_prefixes", q262_template_prefixes _, q262Sql),
+    Query("q263_rank_movers", q263_rank_movers _, q263Sql)
   )
 }

@@ -14,8 +14,6 @@ import graft.core.Tables
   */
 object ExtensionQueries57 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q264
 
   /** q264: ledger reconciliation — per order, the header total
@@ -192,15 +190,9 @@ object ExtensionQueries57 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q264_ledger_reconciliation" -> (q264_ledger_reconciliation _),
-    "q265_first_session_effect" -> (q265_first_session_effect _),
-    "q266_new_vocabulary" -> (q266_new_vocabulary _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q264_ledger_reconciliation" -> q264Sql,
-    "q265_first_session_effect" -> q265Sql,
-    "q266_new_vocabulary" -> q266Sql
+  val entries: Seq[Query] = Seq(
+    Query("q264_ledger_reconciliation", q264_ledger_reconciliation _, q264Sql),
+    Query("q265_first_session_effect", q265_first_session_effect _, q265Sql),
+    Query("q266_new_vocabulary", q266_new_vocabulary _, q266Sql)
   )
 }

@@ -14,8 +14,6 @@ import graft.ops.{DenseIds, PrefixScan}
   */
 object ExtensionQueries58 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q267
 
   /** q267: Simpson's-paradox check — for the two largest market
@@ -274,15 +272,9 @@ object ExtensionQueries58 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q267_simpsons_check" -> (q267_simpsons_check _),
-    "q268_activity_halflife" -> (q268_activity_halflife _),
-    "q269_abc_xyz_matrix" -> (q269_abc_xyz_matrix _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q267_simpsons_check" -> q267Sql,
-    "q268_activity_halflife" -> q268Sql,
-    "q269_abc_xyz_matrix" -> q269Sql
+  val entries: Seq[Query] = Seq(
+    Query("q267_simpsons_check", q267_simpsons_check _, q267Sql),
+    Query("q268_activity_halflife", q268_activity_halflife _, q268Sql),
+    Query("q269_abc_xyz_matrix", q269_abc_xyz_matrix _, q269Sql)
   )
 }

@@ -15,8 +15,6 @@ import graft.core.Tables
   */
 object ExtensionQueries59 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q270
 
   /** q270: surrogate-key collision audit — customer names hashed into a
@@ -177,15 +175,9 @@ object ExtensionQueries59 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q270_hashkey_collisions" -> (q270_hashkey_collisions _),
-    "q271_cross_source_dups" -> (q271_cross_source_dups _),
-    "q272_trimmed_mean" -> (q272_trimmed_mean _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q270_hashkey_collisions" -> q270Sql,
-    "q271_cross_source_dups" -> q271Sql,
-    "q272_trimmed_mean" -> q272Sql
+  val entries: Seq[Query] = Seq(
+    Query("q270_hashkey_collisions", q270_hashkey_collisions _, q270Sql),
+    Query("q271_cross_source_dups", q271_cross_source_dups _, q271Sql),
+    Query("q272_trimmed_mean", q272_trimmed_mean _, q272Sql)
   )
 }

@@ -8,8 +8,6 @@ import graft.ops.RangeJoin
 /** Round-5 widening batch. */
 object ExtensionQueries6 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- q86
 
   private val NsPerMin = 60L * 1000000000L
@@ -561,46 +559,18 @@ object ExtensionQueries6 extends QueryGroup {
        |SELECT count(*) AS n_exact, true AS pq_recall_ok FROM topk""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q96_regex_tokens" -> (q96_regex_tokens _),
-    "q97_pq_recall" -> (q97_pq_recall _),
-    "q86_range_join" -> (q86_range_join _),
-    "q87_weighted_sample" -> (q87_weighted_sample _),
-    "q88_table_checksum" -> (q88_table_checksum _),
-    "q89_quality_constraints" -> (q89_quality_constraints _),
-    "q90_mad_outliers" -> (q90_mad_outliers _),
-    "q91_dense_ids" -> (q91_dense_ids _),
-    "q92_incremental_rollup" -> (q92_incremental_rollup _),
-    "q93_ann_ivfpq" -> (q93_ann_ivfpq _)
+  val entries: Seq[Query] = Seq(
+    Query("q96_regex_tokens", q96_regex_tokens _, q96Sql),
+    Query("q97_pq_recall", q97_pq_recall _, q97Sql),
+    Query("q86_range_join", q86_range_join _, q86Sql),
+    Query("q87_weighted_sample", q87_weighted_sample _, q87Sql),
+    Query("q88_table_checksum", q88_table_checksum _, q88Sql),
+    Query("q89_quality_constraints", q89_quality_constraints _, q89Sql),
+    Query("q90_mad_outliers", q90_mad_outliers _, q90Sql),
+    Query("q91_dense_ids", q91_dense_ids _, q91Sql),
+    Query("q92_incremental_rollup", q92_incremental_rollup _, q92Sql),
+    Query("q93_ann_ivfpq", q93_ann_ivfpq _, Oracle.Model(
+      () => Oracle.dirsOf(ivfCache) ++ Oracle.dirsOf(pqCache),
+      d => for (ivf <- trainedIvf(d); pq <- trainedPq(d)) yield q93SqlFor(ivf, pq)))
   )
-
-  private val baseOracle: Map[String, String] = Map(
-    "q96_regex_tokens" -> q96Sql,
-    "q97_pq_recall" -> q97Sql,
-    "q86_range_join" -> q86Sql,
-    "q87_weighted_sample" -> q87Sql,
-    "q88_table_checksum" -> q88Sql,
-    "q89_quality_constraints" -> q89Sql,
-    "q90_mad_outliers" -> q90Sql,
-    "q91_dense_ids" -> q91Sql,
-    "q92_incremental_rollup" -> q92Sql
-  )
-
-  /** Mirrors resolved for a specific trained dir (the q38 pattern). */
-  def oracleFor(dir: String): Map[String, String] =
-    baseOracle ++ (for {
-      ivf <- Option(ivfCache.get(dir)); pq <- Option(pqCache.get(dir))
-    } yield "q93_ann_ivfpq" -> q93SqlFor(ivf, pq)).toList
-
-  /** Dir-less view: emits the generated mirror only when the JVM has
-    * trained exactly ONE dir — unambiguous; otherwise omitted.
-    */
-  def oracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    (ivfCache.asScala.toMap.toList, pqCache.asScala.toMap.toList) match {
-      case ((d, ivf) :: Nil, (d2, pq) :: Nil) if d == d2 =>
-        baseOracle + ("q93_ann_ivfpq" -> q93SqlFor(ivf, pq))
-      case _ => baseOracle
-    }
-  }
 }

@@ -14,8 +14,6 @@ import graft.core.Tables
   */
 object ExtensionQueries60 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q273
 
   /** q273: matched-part price index — for parts ordered by BOTH of the
@@ -225,15 +223,9 @@ object ExtensionQueries60 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q273_price_index" -> (q273_price_index _),
-    "q274_order_dependence" -> (q274_order_dependence _),
-    "q275_session_type_lift" -> (q275_session_type_lift _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q273_price_index" -> q273Sql,
-    "q274_order_dependence" -> q274Sql,
-    "q275_session_type_lift" -> q275Sql
+  val entries: Seq[Query] = Seq(
+    Query("q273_price_index", q273_price_index _, q273Sql),
+    Query("q274_order_dependence", q274_order_dependence _, q274Sql),
+    Query("q275_session_type_lift", q275_session_type_lift _, q275Sql)
   )
 }

@@ -16,8 +16,6 @@ import graft.ops.CoPurchase
   */
 object ExtensionQueries61 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q276
 
   /** q276: degree-assortativity numerator — over the co-purchase
@@ -194,15 +192,9 @@ object ExtensionQueries61 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q276_degree_assortativity" -> (q276_degree_assortativity _),
-    "q277_friction_impact" -> (q277_friction_impact _),
-    "q278_naive_forecast_backtest" -> (q278_naive_forecast_backtest _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q276_degree_assortativity" -> q276Sql,
-    "q277_friction_impact" -> q277Sql,
-    "q278_naive_forecast_backtest" -> q278Sql
+  val entries: Seq[Query] = Seq(
+    Query("q276_degree_assortativity", q276_degree_assortativity _, q276Sql),
+    Query("q277_friction_impact", q277_friction_impact _, q277Sql),
+    Query("q278_naive_forecast_backtest", q278_naive_forecast_backtest _, q278Sql)
   )
 }

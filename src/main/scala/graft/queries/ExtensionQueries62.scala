@@ -16,8 +16,6 @@ import graft.core.Tables
   */
 object ExtensionQueries62 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q279
 
   /** q279: basket exploration rate — an order is EXPLORATORY when it
@@ -192,15 +190,9 @@ object ExtensionQueries62 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q279_exploration_rate" -> (q279_exploration_rate _),
-    "q280_discount_return_interaction" -> (q280_discount_return_interaction _),
-    "q281_volume_persistence" -> (q281_volume_persistence _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q279_exploration_rate" -> q279Sql,
-    "q280_discount_return_interaction" -> q280Sql,
-    "q281_volume_persistence" -> q281Sql
+  val entries: Seq[Query] = Seq(
+    Query("q279_exploration_rate", q279_exploration_rate _, q279Sql),
+    Query("q280_discount_return_interaction", q280_discount_return_interaction _, q280Sql),
+    Query("q281_volume_persistence", q281_volume_persistence _, q281Sql)
   )
 }

@@ -27,8 +27,6 @@ import graft.core.Tables
   */
 object ExtensionQueries63 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private def withEventTs(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
       .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
@@ -159,15 +157,9 @@ object ExtensionQueries63 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q282_tumbling_native_ts" -> (q282_tumbling_native_ts _),
-    "q283_session_native_ts" -> (q283_session_native_ts _),
-    "q284_sliding_native_ts" -> (q284_sliding_native_ts _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q282_tumbling_native_ts" -> q282Sql,
-    "q283_session_native_ts" -> q283Sql,
-    "q284_sliding_native_ts" -> q284Sql
+  val entries: Seq[Query] = Seq(
+    Query("q282_tumbling_native_ts", q282_tumbling_native_ts _, q282Sql),
+    Query("q283_session_native_ts", q283_session_native_ts _, q283Sql),
+    Query("q284_sliding_native_ts", q284_sliding_native_ts _, q284Sql)
   )
 }

@@ -25,8 +25,6 @@ import graft.ext.{Bpe, ModelStore, PqIndex, TextAnalysis}
   */
 object ExtensionQueries64 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Loaded-model memo per dir — the round trip happens once per (JVM,
     * dir); every consumer call replays the plan from the loaded literals.
     */
@@ -85,40 +83,21 @@ object ExtensionQueries64 extends QueryGroup {
     ExtensionQueries7.q100From(s, dir, pca)
   }
 
-  val queries: Map[String, Q] = Map(
-    "q285_ivfpq_persisted" -> (q285_ivfpq_persisted _),
-    "q286_bpe_persisted" -> (q286_bpe_persisted _),
-    "q287_pca_persisted" -> (q287_pca_persisted _)
+  /** A persisted==trained mirror: the TRAINED caches' literals (never the
+    * loaded models — the whole point of the gate), for the dirs this JVM
+    * has round-tripped (q285-q287, q290).
+    */
+  private[queries] def persistedOracle(mirror: String => Option[String]): Oracle =
+    Oracle.Model(() => Oracle.dirsOf(loadedCache), mirror)
+
+  val entries: Seq[Query] = Seq(
+    Query("q285_ivfpq_persisted", q285_ivfpq_persisted _, persistedOracle(d => for {
+      ivf <- ExtensionQueries6.trainedIvf(d)
+      pq <- ExtensionQueries6.trainedPq(d)
+    } yield ExtensionQueries6.q93SqlFor(ivf, pq))),
+    Query("q286_bpe_persisted", q286_bpe_persisted _, persistedOracle(d =>
+      ExtensionQueries10.trainedBpe(d).map(ExtensionQueries10.q112SqlFor))),
+    Query("q287_pca_persisted", q287_pca_persisted _, persistedOracle(d =>
+      ExtensionQueries7.trainedPca(d).map(ExtensionQueries7.q100SqlFor)))
   )
-
-  /** Mirrors resolved for a specific trained dir: the TRAINED caches'
-    * literals (never the loaded models) — the whole point of the gate.
-    */
-  def oracleFor(dir: String): Map[String, String] =
-    (for {
-      ivf <- ExtensionQueries6.trainedIvf(dir)
-      pq <- ExtensionQueries6.trainedPq(dir)
-    } yield "q285_ivfpq_persisted" -> ExtensionQueries6.q93SqlFor(ivf, pq)).toList.toMap ++
-    ExtensionQueries10.trainedBpe(dir)
-      .map(m => "q286_bpe_persisted" -> ExtensionQueries10.q112SqlFor(m)).toList.toMap ++
-    ExtensionQueries7.trainedPca(dir)
-      .map(m => "q287_pca_persisted" -> ExtensionQueries7.q100SqlFor(m)).toList.toMap
-
-  /** Dir-less view (the q93 single-dir pattern): emits the generated
-    * mirrors only when this JVM has round-tripped exactly ONE dir —
-    * unambiguous; otherwise omitted. Verify resolves per-dir through
-    * [[graft.SparkEntry.oracleSqlFor]].
-    */
-  /** Dirs this JVM has round-tripped (also drives the q290 mirror's
-    * single-dir emission in [[ExtensionQueries65.oracle]]).
-    */
-  private[queries] def roundTrippedDirs: List[String] = {
-    import scala.jdk.CollectionConverters._
-    loadedCache.asScala.keys.toList
-  }
-
-  def oracle: Map[String, String] = roundTrippedDirs match {
-    case d :: Nil => oracleFor(d)
-    case _ => Map.empty
-  }
 }

@@ -20,8 +20,6 @@ import graft.ext.TextAnalysis
   */
 object ExtensionQueries65 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q288
 
   /** q288: Fellegi–Sunter agreement-pattern table (Fellegi & Sunter,
@@ -239,26 +237,11 @@ object ExtensionQueries65 extends QueryGroup {
        |FROM g CROSS JOIN t ORDER BY list""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q288_linkage_patterns" -> (q288_linkage_patterns _),
-    "q289_zipf_decades" -> (q289_zipf_decades _),
-    "q290_ivf_utilization" -> (q290_ivf_utilization _)
+  val entries: Seq[Query] = Seq(
+    Query("q288_linkage_patterns", q288_linkage_patterns _, q288Sql),
+    Query("q289_zipf_decades", q289_zipf_decades _, q289Sql),
+    // the q285 single-dir pattern: emitted for the round-tripped dirs
+    Query("q290_ivf_utilization", q290_ivf_utilization _, ExtensionQueries64.persistedOracle(d =>
+      ExtensionQueries6.trainedIvf(d).map(q290SqlFor)))
   )
-
-  /** q290's generated mirror for a specific trained dir (the q285
-    * single-dir pattern — see [[ExtensionQueries64.oracleFor]]).
-    */
-  def oracleFor(dir: String): Map[String, String] =
-    ExtensionQueries6.trainedIvf(dir)
-      .map(m => "q290_ivf_utilization" -> q290SqlFor(m)).toList.toMap
-
-  def oracle: Map[String, String] = {
-    Map(
-      "q288_linkage_patterns" -> q288Sql,
-      "q289_zipf_decades" -> q289Sql
-    ) ++ (ExtensionQueries64.roundTrippedDirs match {
-      case d :: Nil => oracleFor(d)
-      case _ => Map.empty
-    })
-  }
 }

@@ -26,8 +26,6 @@ import graft.core.Tables
   */
 object ExtensionQueries66 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q291
 
   /** q291: nested VARIANT path extraction. Each event folds into a
@@ -127,15 +125,9 @@ object ExtensionQueries66 extends QueryGroup {
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q291_variant_extract" -> (q291_variant_extract _),
-    "q292_collated_group" -> (q292_collated_group _),
-    "q293_pipe_sql" -> (q293_pipe_sql _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q291_variant_extract" -> q291Sql,
-    "q292_collated_group" -> q292Sql,
-    "q293_pipe_sql" -> q293Sql
+  val entries: Seq[Query] = Seq(
+    Query("q291_variant_extract", q291_variant_extract _, q291Sql),
+    Query("q292_collated_group", q292_collated_group _, q292Sql),
+    Query("q293_pipe_sql", q293_pipe_sql _, q293Sql)
   )
 }

@@ -26,8 +26,6 @@ import graft.sinks.XlsxWrite
   */
 object ExtensionQueries67 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** sf dir → directory of per-lang xlsx exports (one workbook per
     * language, rows ordered by doc_id; cells all-string). Memoized per
     * JVM: the export is the fixture, not the operator under test.
@@ -121,15 +119,9 @@ object ExtensionQueries67 extends QueryGroup {
     """SELECT lang, count(*) AS n_rows, count(*) AS n_match
       |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q294_excel_rollup" -> (q294_excel_rollup _),
-    "q295_excel_pruned" -> (q295_excel_pruned _),
-    "q296_excel_integrity" -> (q296_excel_integrity _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q294_excel_rollup" -> q294Sql,
-    "q295_excel_pruned" -> q295Sql,
-    "q296_excel_integrity" -> q296Sql
+  val entries: Seq[Query] = Seq(
+    Query("q294_excel_rollup", q294_excel_rollup _, q294Sql),
+    Query("q295_excel_pruned", q295_excel_pruned _, q295Sql),
+    Query("q296_excel_integrity", q296_excel_integrity _, q296Sql)
   )
 }

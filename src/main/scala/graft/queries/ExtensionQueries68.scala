@@ -20,8 +20,6 @@ import graft.core.Tables
   */
 object ExtensionQueries68 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q297
 
   /** q297: typed from_json round trip. Each event folds to a nested
@@ -135,15 +133,9 @@ object ExtensionQueries68 extends QueryGroup {
       |    ',' ORDER BY km) AS deltas
       |FROM c GROUP BY t ORDER BY t""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q297_from_json" -> (q297_from_json _),
-    "q298_map_filter" -> (q298_map_filter _),
-    "q299_map_zip_with" -> (q299_map_zip_with _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q297_from_json" -> q297Sql,
-    "q298_map_filter" -> q298Sql,
-    "q299_map_zip_with" -> q299Sql
+  val entries: Seq[Query] = Seq(
+    Query("q297_from_json", q297_from_json _, q297Sql),
+    Query("q298_map_filter", q298_map_filter _, q298Sql),
+    Query("q299_map_zip_with", q299_map_zip_with _, q299Sql)
   )
 }

@@ -27,8 +27,6 @@ import graft.core.Tables
   */
 object ExtensionQueries69 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q300
 
   /** q300: per-type exact distinct users via two-level bitmap
@@ -114,15 +112,9 @@ object ExtensionQueries69 extends QueryGroup {
       |  CAST(sum(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS k_sum
       |FROM events GROUP BY 1 ORDER BY t""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q300_bitmap_distinct" -> (q300_bitmap_distinct _),
-    "q301_from_xml" -> (q301_from_xml _),
-    "q302_str_to_map" -> (q302_str_to_map _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q300_bitmap_distinct" -> q300Sql,
-    "q301_from_xml" -> q301Sql,
-    "q302_str_to_map" -> q302Sql
+  val entries: Seq[Query] = Seq(
+    Query("q300_bitmap_distinct", q300_bitmap_distinct _, q300Sql),
+    Query("q301_from_xml", q301_from_xml _, q301Sql),
+    Query("q302_str_to_map", q302_str_to_map _, q302Sql)
   )
 }

@@ -11,8 +11,6 @@ import graft.ext.{Dedup, PcaProject, Similarity, TextAnalysis}
   */
 object ExtensionQueries7 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- q99
 
   /** q99: incremental MinHash near-dup admission
@@ -339,32 +337,11 @@ object ExtensionQueries7 extends QueryGroup {
        |FROM a JOIN b ON a_s <= b_e AND b_s <= a_e
        |ORDER BY a_id, b_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q99_incremental_minhash" -> (q99_incremental_minhash _),
-    "q100_pca_project" -> (q100_pca_project _),
-    "q101_pca_ann_recall" -> (q101_pca_ann_recall _),
-    "q102_interval_overlap" -> (q102_interval_overlap _)
+  val entries: Seq[Query] = Seq(
+    Query("q99_incremental_minhash", q99_incremental_minhash _, q99Sql),
+    Query("q100_pca_project", q100_pca_project _,
+      Oracle.Model(() => Oracle.dirsOf(pcaCache), d => trainedPca(d).map(q100SqlFor))),
+    Query("q101_pca_ann_recall", q101_pca_ann_recall _, q101Sql),
+    Query("q102_interval_overlap", q102_interval_overlap _, q102Sql)
   )
-
-  private val baseOracle: Map[String, String] = Map(
-    "q99_incremental_minhash" -> q99Sql,
-    "q101_pca_ann_recall" -> q101Sql,
-    "q102_interval_overlap" -> q102Sql
-  )
-
-  /** Mirror resolved for a specific trained dir (the q38 pattern). */
-  def oracleFor(dir: String): Map[String, String] =
-    baseOracle ++ Option(pcaCache.get(dir)).toList
-      .map(m => "q100_pca_project" -> q100SqlFor(m))
-
-  /** Dir-less view: the generated mirror only when exactly ONE dir has
-    * trained — unambiguous; otherwise omitted.
-    */
-  def oracle: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    pcaCache.asScala.toMap.values.toList match {
-      case m :: Nil => baseOracle + ("q100_pca_project" -> q100SqlFor(m))
-      case _ => baseOracle
-    }
-  }
 }

@@ -20,8 +20,6 @@ import graft.sources.excel.ExcelTable
   */
 object ExtensionQueries70 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** sf dir → (append-written dir, overwrite-written dir), memoized per
     * JVM. The append dir receives documents range-partitioned 4 ways;
     * the overwrite dir FIRST receives the full table, then an
@@ -94,13 +92,8 @@ object ExtensionQueries70 extends QueryGroup {
       |FROM documents WHERE lang = 'en'
       |GROUP BY lang ORDER BY lang""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q303_excel_write_roundtrip" -> (q303_excel_write_roundtrip _),
-    "q304_excel_overwrite" -> (q304_excel_overwrite _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q303_excel_write_roundtrip" -> q303Sql,
-    "q304_excel_overwrite" -> q304Sql
+  val entries: Seq[Query] = Seq(
+    Query("q303_excel_write_roundtrip", q303_excel_write_roundtrip _, q303Sql),
+    Query("q304_excel_overwrite", q304_excel_overwrite _, q304Sql)
   )
 }

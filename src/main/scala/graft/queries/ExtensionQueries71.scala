@@ -23,8 +23,6 @@ import graft.core.Tables
   */
 object ExtensionQueries71 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Two-round MINSTD hash of a non-negative id column. ONE round is
     * not enough: for id < ~44 000 the product 48271·(id+1) never wraps
     * mod 2³¹−1, so ordering by it is ordering by id and its low bits
@@ -128,15 +126,9 @@ object ExtensionQueries71 extends QueryGroup {
        |GROUP BY a.split ORDER BY a.split""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q305_stratified_sample" -> (q305_stratified_sample _),
-    "q306_train_test_split" -> (q306_train_test_split _),
-    "q307_group_split" -> (q307_group_split _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q305_stratified_sample" -> q305Sql,
-    "q306_train_test_split" -> q306Sql,
-    "q307_group_split" -> q307Sql
+  val entries: Seq[Query] = Seq(
+    Query("q305_stratified_sample", q305_stratified_sample _, q305Sql),
+    Query("q306_train_test_split", q306_train_test_split _, q306Sql),
+    Query("q307_group_split", q307_group_split _, q307Sql)
   )
 }

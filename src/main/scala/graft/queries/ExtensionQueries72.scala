@@ -15,8 +15,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries72 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Epoch-seeded MINSTD: epoch e swaps the SECOND-round multiplier
     * (48271 / 69621 / 16807 — the classic full-period choices), giving
     * a genuinely different permutation per epoch; an additive epoch
@@ -148,15 +146,9 @@ object ExtensionQueries72 extends QueryGroup {
       |  CAST(sum(doc_id) AS BIGINT) AS id_checksum
       |FROM c WHERE s_in <= 10000 GROUP BY lang ORDER BY lang""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q308_epoch_order" -> (q308_epoch_order _),
-    "q309_sequence_packing" -> (q309_sequence_packing _),
-    "q310_token_quota" -> (q310_token_quota _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q308_epoch_order" -> q308Sql,
-    "q309_sequence_packing" -> q309Sql,
-    "q310_token_quota" -> q310Sql
+  val entries: Seq[Query] = Seq(
+    Query("q308_epoch_order", q308_epoch_order _, q308Sql),
+    Query("q309_sequence_packing", q309_sequence_packing _, q309Sql),
+    Query("q310_token_quota", q310_token_quota _, q310Sql)
   )
 }

@@ -21,8 +21,6 @@ import graft.core.Tables
   */
 object ExtensionQueries73 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** The planted-PII corpus: deterministic contact lines appended by
     * doc_id residue — emails on ≡0 (mod 10), IPv4s on ≡0 (mod 17),
     * phones on ≡0 (mod 23).
@@ -143,15 +141,9 @@ object ExtensionQueries73 extends QueryGroup {
       |  CAST(sum(group_size) AS BIGINT) AS n_docs
       |FROM g GROUP BY 1 ORDER BY group_size""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q311_pii_detect" -> (q311_pii_detect _),
-    "q312_pii_redact" -> (q312_pii_redact _),
-    "q313_k_anonymity" -> (q313_k_anonymity _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q311_pii_detect" -> q311Sql,
-    "q312_pii_redact" -> q312Sql,
-    "q313_k_anonymity" -> q313Sql
+  val entries: Seq[Query] = Seq(
+    Query("q311_pii_detect", q311_pii_detect _, q311Sql),
+    Query("q312_pii_redact", q312_pii_redact _, q312Sql),
+    Query("q313_k_anonymity", q313_k_anonymity _, q313Sql)
   )
 }

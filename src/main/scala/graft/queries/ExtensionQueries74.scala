@@ -28,8 +28,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ExtensionQueries74 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q314
 
   /** q314: hierarchy rollup — parts form a quaternary containment tree
@@ -196,15 +194,9 @@ object ExtensionQueries74 extends QueryGroup {
       |WHERE NOT EXISTS (SELECT 1 FROM best b WHERE b.id = p.p_partkey)
       |ORDER BY dist""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q314_recursive_hierarchy" -> (q314_recursive_hierarchy _),
-    "q315_recursive_payoff" -> (q315_recursive_payoff _),
-    "q316_recursive_bfs" -> (q316_recursive_bfs _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q314_recursive_hierarchy" -> q314Sql,
-    "q315_recursive_payoff" -> q315Sql,
-    "q316_recursive_bfs" -> q316Sql
+  val entries: Seq[Query] = Seq(
+    Query("q314_recursive_hierarchy", q314_recursive_hierarchy _, q314Sql),
+    Query("q315_recursive_payoff", q315_recursive_payoff _, q315Sql),
+    Query("q316_recursive_bfs", q316_recursive_bfs _, q316Sql)
   )
 }

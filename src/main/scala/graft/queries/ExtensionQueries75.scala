@@ -46,8 +46,6 @@ import graft.core.Tables
   */
 object ExtensionQueries75 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q317
 
   /** q317: l-diversity histogram — QI = (lang, 100-char bucket), the
@@ -194,15 +192,9 @@ object ExtensionQueries75 extends QueryGroup {
       |    AS n_docs_at_risk
       |FROM g GROUP BY w ORDER BY w""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q317_l_diversity" -> (q317_l_diversity _),
-    "q318_t_closeness" -> (q318_t_closeness _),
-    "q319_generalization_ladder" -> (q319_generalization_ladder _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q317_l_diversity" -> q317Sql,
-    "q318_t_closeness" -> q318Sql,
-    "q319_generalization_ladder" -> q319Sql
+  val entries: Seq[Query] = Seq(
+    Query("q317_l_diversity", q317_l_diversity _, q317Sql),
+    Query("q318_t_closeness", q318_t_closeness _, q318Sql),
+    Query("q319_generalization_ladder", q319_generalization_ladder _, q319Sql)
   )
 }

@@ -42,8 +42,6 @@ import graft.ext.TextAnalysis
   */
 object ExtensionQueries76 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q320
 
   /** The three pseudo-raters: rater r's label for order i starts from
@@ -174,15 +172,9 @@ object ExtensionQueries76 extends QueryGroup {
       |FROM documents WHERE n_chars >= 200 AND n_chars < 700
       |GROUP BY lang ORDER BY lang""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q320_fleiss_kappa" -> (q320_fleiss_kappa _),
-    "q321_token_fertility" -> (q321_token_fertility _),
-    "q322_execute_immediate" -> (q322_execute_immediate _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q320_fleiss_kappa" -> q320Sql,
-    "q321_token_fertility" -> q321Sql,
-    "q322_execute_immediate" -> q322Sql
+  val entries: Seq[Query] = Seq(
+    Query("q320_fleiss_kappa", q320_fleiss_kappa _, q320Sql),
+    Query("q321_token_fertility", q321_token_fertility _, q321Sql),
+    Query("q322_execute_immediate", q322_execute_immediate _, q322Sql)
   )
 }

@@ -28,8 +28,6 @@ import graft.core.Tables
   */
 object ExtensionQueries77 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q323
 
   /** q323: distinct users per event type — the deterministic aggregate
@@ -115,15 +113,9 @@ object ExtensionQueries77 extends QueryGroup {
       |  CAST(sum(n_chars) AS BIGINT) AS chars_sum
       |FROM documents GROUP BY source ORDER BY grp""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q323_dedup_within_watermark" -> (q323_dedup_within_watermark _),
-    "q324_lateral_topk" -> (q324_lateral_topk _),
-    "q325_identifier_param" -> (q325_identifier_param _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q323_dedup_within_watermark" -> q323Sql,
-    "q324_lateral_topk" -> q324Sql,
-    "q325_identifier_param" -> q325Sql
+  val entries: Seq[Query] = Seq(
+    Query("q323_dedup_within_watermark", q323_dedup_within_watermark _, q323Sql),
+    Query("q324_lateral_topk", q324_lateral_topk _, q324Sql),
+    Query("q325_identifier_param", q325_identifier_param _, q325Sql)
   )
 }

@@ -29,8 +29,6 @@ import graft.core.Tables
   */
 object ExtensionQueries78 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q326
 
   /** q326: per-language T=2 mixture — natural share vs temperature
@@ -142,15 +140,9 @@ object ExtensionQueries78 extends QueryGroup {
       |  CAST(sum(coalesce(n_chars, 0)) AS BIGINT) AS chars_sum
       |FROM u GROUP BY 1 ORDER BY lang_or_missing""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q326_temperature_mixture" -> (q326_temperature_mixture _),
-    "q327_sql_scripting" -> (q327_sql_scripting _),
-    "q328_union_by_name" -> (q328_union_by_name _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q326_temperature_mixture" -> q326Sql,
-    "q327_sql_scripting" -> q327Sql,
-    "q328_union_by_name" -> q328Sql
+  val entries: Seq[Query] = Seq(
+    Query("q326_temperature_mixture", q326_temperature_mixture _, q326Sql),
+    Query("q327_sql_scripting", q327_sql_scripting _, q327Sql),
+    Query("q328_union_by_name", q328_union_by_name _, q328Sql)
   )
 }

@@ -38,8 +38,6 @@ import graft.ops.{DenseIds, PrefixScan}
   */
 object ExtensionQueries79 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q329
 
   /** q329: reliability table of the q130 hash classifier's margin
@@ -228,15 +226,9 @@ object ExtensionQueries79 extends QueryGroup {
       |GROUP BY dev.dim, dev.med_micro, mad.mad_micro
       |ORDER BY dev.dim""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q329_calibration_bins" -> (q329_calibration_bins _),
-    "q330_padding_waste" -> (q330_padding_waste _),
-    "q331_embedding_robust_scale" -> (q331_embedding_robust_scale _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q329_calibration_bins" -> q329Sql,
-    "q330_padding_waste" -> q330Sql,
-    "q331_embedding_robust_scale" -> q331Sql
+  val entries: Seq[Query] = Seq(
+    Query("q329_calibration_bins", q329_calibration_bins _, q329Sql),
+    Query("q330_padding_waste", q330_padding_waste _, q330Sql),
+    Query("q331_embedding_robust_scale", q331_embedding_robust_scale _, q331Sql)
   )
 }

@@ -12,8 +12,6 @@ import graft.ops.{CoPurchase, CountMin, Triangles}
   */
 object ExtensionQueries8 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q103
 
   /** Span length for q103: 8 tokens — long enough that natural 8-gram
@@ -224,17 +222,10 @@ object ExtensionQueries8 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q103_span_dedup" -> (q103_span_dedup _),
-    "q104_count_min" -> (q104_count_min _),
-    "q105_surprisal" -> (q105_surprisal _),
-    "q106_triangles" -> (q106_triangles _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q103_span_dedup" -> q103Sql,
-    "q104_count_min" -> q104Sql,
-    "q105_surprisal" -> q105Sql,
-    "q106_triangles" -> q106Sql
+  val entries: Seq[Query] = Seq(
+    Query("q103_span_dedup", q103_span_dedup _, q103Sql),
+    Query("q104_count_min", q104_count_min _, q104Sql),
+    Query("q105_surprisal", q105_surprisal _, q105Sql),
+    Query("q106_triangles", q106_triangles _, q106Sql)
   )
 }

@@ -31,8 +31,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries80 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q332
 
   /** q332: decile boundaries of order value — boundary k (k = 1..10) is
@@ -182,15 +180,9 @@ object ExtensionQueries80 extends QueryGroup {
       |  count(*) AS n_keys, CAST(sum(m) AS BIGINT) AS output_rows
       |FROM m GROUP BY 1 ORDER BY log2_bucket""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q332_equidepth_hist" -> (q332_equidepth_hist _),
-    "q333_latency_percentiles" -> (q333_latency_percentiles _),
-    "q334_join_multiplicity" -> (q334_join_multiplicity _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q332_equidepth_hist" -> q332Sql,
-    "q333_latency_percentiles" -> q333Sql,
-    "q334_join_multiplicity" -> q334Sql
+  val entries: Seq[Query] = Seq(
+    Query("q332_equidepth_hist", q332_equidepth_hist _, q332Sql),
+    Query("q333_latency_percentiles", q333_latency_percentiles _, q333Sql),
+    Query("q334_join_multiplicity", q334_join_multiplicity _, q334Sql)
   )
 }

@@ -29,8 +29,6 @@ import graft.core.Tables
   */
 object ExtensionQueries81 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q335
 
   /** q335: access-request export for subjects user_id < 20 — counts,
@@ -163,15 +161,9 @@ object ExtensionQueries81 extends QueryGroup {
        |  CAST(sum(size) * (1000000 // size) AS BIGINT) AS mass_ppm
        |FROM cl GROUP BY size ORDER BY size""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q335_subject_access_export" -> (q335_subject_access_export _),
-    "q336_schema_drift" -> (q336_schema_drift _),
-    "q337_dedup_loss_weights" -> (q337_dedup_loss_weights _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q335_subject_access_export" -> q335Sql,
-    "q336_schema_drift" -> q336Sql,
-    "q337_dedup_loss_weights" -> q337Sql
+  val entries: Seq[Query] = Seq(
+    Query("q335_subject_access_export", q335_subject_access_export _, q335Sql),
+    Query("q336_schema_drift", q336_schema_drift _, q336Sql),
+    Query("q337_dedup_loss_weights", q337_dedup_loss_weights _, q337Sql)
   )
 }

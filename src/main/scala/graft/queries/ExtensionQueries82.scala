@@ -29,8 +29,6 @@ import graft.ext.{Dedup, TextAnalysis}
   */
 object ExtensionQueries82 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q338
 
   /** q338: near-dup pair/doc counts per candidate threshold — pairs
@@ -181,15 +179,9 @@ object ExtensionQueries82 extends QueryGroup {
       |    // (rx_tokens // n_docs) AS BIGINT) AS doc_alloc
       |FROM base, t ORDER BY lang""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q338_dedup_threshold_sweep" -> (q338_dedup_threshold_sweep _),
-    "q339_release_manifest" -> (q339_release_manifest _),
-    "q340_token_budget_projection" -> (q340_token_budget_projection _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q338_dedup_threshold_sweep" -> q338Sql,
-    "q339_release_manifest" -> q339Sql,
-    "q340_token_budget_projection" -> q340Sql
+  val entries: Seq[Query] = Seq(
+    Query("q338_dedup_threshold_sweep", q338_dedup_threshold_sweep _, q338Sql),
+    Query("q339_release_manifest", q339_release_manifest _, q339Sql),
+    Query("q340_token_budget_projection", q340_token_budget_projection _, q340Sql)
   )
 }

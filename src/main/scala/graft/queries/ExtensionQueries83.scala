@@ -37,8 +37,6 @@ import graft.ops.AsofJoin
   */
 object ExtensionQueries83 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val DayUs = 86400000000L
 
   // --------------------------------------------------------------- q341
@@ -160,15 +158,9 @@ object ExtensionQueries83 extends QueryGroup {
       |    (acc, x) -> (acc + x) // 2) AS BIGINT) AS ewma
       |FROM d GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q341_sketch_merge_identity" -> (q341_sketch_merge_identity _),
-    "q342_asof_tolerance" -> (q342_asof_tolerance _),
-    "q343_integer_ewma" -> (q343_integer_ewma _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q341_sketch_merge_identity" -> q341Sql,
-    "q342_asof_tolerance" -> q342Sql,
-    "q343_integer_ewma" -> q343Sql
+  val entries: Seq[Query] = Seq(
+    Query("q341_sketch_merge_identity", q341_sketch_merge_identity _, q341Sql),
+    Query("q342_asof_tolerance", q342_asof_tolerance _, q342Sql),
+    Query("q343_integer_ewma", q343_integer_ewma _, q343Sql)
   )
 }

@@ -27,8 +27,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries84 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Two-round MINSTD (the q308 lesson: one round is order-preserving
     * on small ids and its low bits cycle).
     */
@@ -191,15 +189,9 @@ object ExtensionQueries84 extends QueryGroup {
       |    AS price_cents
       |FROM lineitem GROUP BY ALL ORDER BY ALL""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q344_jackknife_se" -> (q344_jackknife_se _),
-    "q345_median_of_medians_bias" -> (q345_median_of_medians_bias _),
-    "q346_group_by_all" -> (q346_group_by_all _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q344_jackknife_se" -> q344Sql,
-    "q345_median_of_medians_bias" -> q345Sql,
-    "q346_group_by_all" -> q346Sql
+  val entries: Seq[Query] = Seq(
+    Query("q344_jackknife_se", q344_jackknife_se _, q344Sql),
+    Query("q345_median_of_medians_bias", q345_median_of_medians_bias _, q345Sql),
+    Query("q346_group_by_all", q346_group_by_all _, q346Sql)
   )
 }

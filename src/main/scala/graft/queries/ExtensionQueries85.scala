@@ -28,8 +28,6 @@ import graft.core.Tables
   */
 object ExtensionQueries85 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q347
 
   /** q347: cos²·10⁶ between language trigram profiles, pairs a < b. */
@@ -157,15 +155,9 @@ object ExtensionQueries85 extends QueryGroup {
       |  CAST(max(div_centibits) AS BIGINT) AS max_cb
       |FROM d GROUP BY 1 ORDER BY band""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q347_lang_trigram_similarity" -> (q347_lang_trigram_similarity _),
-    "q348_recency_decay" -> (q348_recency_decay _),
-    "q349_behavior_diversity" -> (q349_behavior_diversity _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q347_lang_trigram_similarity" -> q347Sql,
-    "q348_recency_decay" -> q348Sql,
-    "q349_behavior_diversity" -> q349Sql
+  val entries: Seq[Query] = Seq(
+    Query("q347_lang_trigram_similarity", q347_lang_trigram_similarity _, q347Sql),
+    Query("q348_recency_decay", q348_recency_decay _, q348Sql),
+    Query("q349_behavior_diversity", q349_behavior_diversity _, q349Sql)
   )
 }

@@ -27,8 +27,6 @@ import graft.core.Tables
   */
 object ExtensionQueries86 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q350
 
   private val TargetBytes = 128L * 1024 * 1024
@@ -157,15 +155,9 @@ object ExtensionQueries86 extends QueryGroup {
       |    AS headroom_bits
       |FROM stacked GROUP BY col_name ORDER BY col_name""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q350_write_layout_plan" -> (q350_write_layout_plan _),
-    "q351_bivariate_outliers" -> (q351_bivariate_outliers _),
-    "q352_overflow_headroom" -> (q352_overflow_headroom _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q350_write_layout_plan" -> q350Sql,
-    "q351_bivariate_outliers" -> q351Sql,
-    "q352_overflow_headroom" -> q352Sql
+  val entries: Seq[Query] = Seq(
+    Query("q350_write_layout_plan", q350_write_layout_plan _, q350Sql),
+    Query("q351_bivariate_outliers", q351_bivariate_outliers _, q351Sql),
+    Query("q352_overflow_headroom", q352_overflow_headroom _, q352Sql)
   )
 }

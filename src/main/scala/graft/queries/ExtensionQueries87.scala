@@ -26,8 +26,6 @@ import graft.ops.DenseIds
   */
 object ExtensionQueries87 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q353
 
   /** q353: per q42 cluster touching the eval set (cluster-corpus ids
@@ -113,13 +111,8 @@ object ExtensionQueries87 extends QueryGroup {
       |    AS mean_disp_ppm_of_n
       |FROM d""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q353_cluster_decontam" -> (q353_cluster_decontam _),
-    "q354_shuffle_quality" -> (q354_shuffle_quality _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q353_cluster_decontam" -> q353Sql,
-    "q354_shuffle_quality" -> q354Sql
+  val entries: Seq[Query] = Seq(
+    Query("q353_cluster_decontam", q353_cluster_decontam _, q353Sql),
+    Query("q354_shuffle_quality", q354_shuffle_quality _, q354Sql)
   )
 }

@@ -34,8 +34,6 @@ import graft.ext.Similarity
   */
 object ExtensionQueries88 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** In-order double dot-product fold (the q30 oracle idiom). */
   private def fold(a: String, b: String): String =
     s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
@@ -264,15 +262,9 @@ object ExtensionQueries88 extends QueryGroup {
       |  CAST(sum(mis) AS BIGINT) AS n_misassigned
       |FROM sil GROUP BY label ORDER BY label""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q355_ndcg_mrr" -> (q355_ndcg_mrr _),
-    "q356_kendall_tau" -> (q356_kendall_tau _),
-    "q357_silhouette" -> (q357_silhouette _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q355_ndcg_mrr" -> q355Sql,
-    "q356_kendall_tau" -> q356Sql,
-    "q357_silhouette" -> q357Sql
+  val entries: Seq[Query] = Seq(
+    Query("q355_ndcg_mrr", q355_ndcg_mrr _, q355Sql),
+    Query("q356_kendall_tau", q356_kendall_tau _, q356Sql),
+    Query("q357_silhouette", q357_silhouette _, q357Sql)
   )
 }

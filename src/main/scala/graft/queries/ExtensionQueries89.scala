@@ -30,8 +30,6 @@ import graft.ops.Ranks
   */
 object ExtensionQueries89 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q358
 
   /** q358: near-duplicate pairs by prefix Levenshtein ≤ 20 within
@@ -186,15 +184,9 @@ object ExtensionQueries89 extends QueryGroup {
        |  max(CASE WHEN rk = 98 THEN mean_c END) AS boot_hi_cents
        |FROM ranked""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q358_edit_distance_dedup" -> (q358_edit_distance_dedup _),
-    "q359_forcast_readability" -> (q359_forcast_readability _),
-    "q360_bootstrap_ci" -> (q360_bootstrap_ci _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q358_edit_distance_dedup" -> q358Sql,
-    "q359_forcast_readability" -> q359Sql,
-    "q360_bootstrap_ci" -> q360Sql
+  val entries: Seq[Query] = Seq(
+    Query("q358_edit_distance_dedup", q358_edit_distance_dedup _, q358Sql),
+    Query("q359_forcast_readability", q359_forcast_readability _, q359Sql),
+    Query("q360_bootstrap_ci", q360_bootstrap_ci _, q360Sql)
   )
 }

@@ -11,8 +11,6 @@ import graft.ops.{CoPurchase, KCore}
   */
 object ExtensionQueries9 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q107
 
   private val CoreK = 3
@@ -295,15 +293,9 @@ object ExtensionQueries9 extends QueryGroup {
 
   // ---------------------------------------------------------- registry
 
-  val queries: Map[String, Q] = Map(
-    "q107_kcore" -> (q107_kcore _),
-    "q109_prefix_jaccard" -> (q109_prefix_jaccard _),
-    "q110_cdc_chunks" -> (q110_cdc_chunks _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q107_kcore" -> q107Sql,
-    "q109_prefix_jaccard" -> q109Sql,
-    "q110_cdc_chunks" -> q110Sql
+  val entries: Seq[Query] = Seq(
+    Query("q107_kcore", q107_kcore _, q107Sql),
+    Query("q109_prefix_jaccard", q109_prefix_jaccard _, q109Sql),
+    Query("q110_cdc_chunks", q110_cdc_chunks _, q110Sql)
   )
 }

@@ -27,8 +27,6 @@ import graft.ops.CoPurchase
   */
 object ExtensionQueries90 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q361
 
   /** q361: per brand — internal co-purchase edges L_c, degree sum d_c,
@@ -196,15 +194,9 @@ object ExtensionQueries90 extends QueryGroup {
       |  CAST(count(*) * sum(x * y) - sum(x) * sum(y) AS BIGINT) AS cov_num
       |FROM j GROUP BY lag ORDER BY lag""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q361_modularity" -> (q361_modularity _),
-    "q362_weighted_jaccard" -> (q362_weighted_jaccard _),
-    "q363_lag_correlation" -> (q363_lag_correlation _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q361_modularity" -> q361Sql,
-    "q362_weighted_jaccard" -> q362Sql,
-    "q363_lag_correlation" -> q363Sql
+  val entries: Seq[Query] = Seq(
+    Query("q361_modularity", q361_modularity _, q361Sql),
+    Query("q362_weighted_jaccard", q362_weighted_jaccard _, q362Sql),
+    Query("q363_lag_correlation", q363_lag_correlation _, q363Sql)
   )
 }

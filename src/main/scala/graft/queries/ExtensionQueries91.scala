@@ -27,8 +27,6 @@ import graft.core.Tables
   */
 object ExtensionQueries91 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q364
 
   /** round(1e6·log₁₀(1 + 1/d)) for d = 1..9; sums to exactly 1e6. */
@@ -131,15 +129,9 @@ object ExtensionQueries91 extends QueryGroup {
       |FROM orders WHERE o_orderstatus = 'F'
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q364_benford" -> (q364_benford _),
-    "q365_sql_unpivot" -> (q365_sql_unpivot _),
-    "q366_observed_metrics" -> (q366_observed_metrics _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q364_benford" -> q364Sql,
-    "q365_sql_unpivot" -> q365Sql,
-    "q366_observed_metrics" -> q366Sql
+  val entries: Seq[Query] = Seq(
+    Query("q364_benford", q364_benford _, q364Sql),
+    Query("q365_sql_unpivot", q365_sql_unpivot _, q365Sql),
+    Query("q366_observed_metrics", q366_observed_metrics _, q366Sql)
   )
 }

@@ -28,8 +28,6 @@ import graft.ops.Ranks
   */
 object ExtensionQueries92 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q367
 
   /** q320's pseudo-rater label (same md5 flip) for order `item`. */
@@ -208,15 +206,9 @@ object ExtensionQueries92 extends QueryGroup {
       |JOIN nation n ON n.n_nationkey = s.s_nationkey
       |GROUP BY n.n_name ORDER BY nation""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q367_krippendorff_alpha" -> (q367_krippendorff_alpha _),
-    "q368_sax" -> (q368_sax _),
-    "q369_hhi" -> (q369_hhi _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q367_krippendorff_alpha" -> q367Sql,
-    "q368_sax" -> q368Sql,
-    "q369_hhi" -> q369Sql
+  val entries: Seq[Query] = Seq(
+    Query("q367_krippendorff_alpha", q367_krippendorff_alpha _, q367Sql),
+    Query("q368_sax", q368_sax _, q368Sql),
+    Query("q369_hhi", q369_hhi _, q369Sql)
   )
 }

@@ -29,8 +29,6 @@ import graft.ops.Ranks
   */
 object ExtensionQueries93 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q370
 
   /** q370: per-returnflag aggregate transposed — metrics as rows,
@@ -178,15 +176,9 @@ object ExtensionQueries93 extends QueryGroup {
       |  CAST(sum(bits) * 100 // count(*) AS BIGINT) AS mean_centibits
       |FROM scored GROUP BY 1, 2 ORDER BY lang_model, lang_eval""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q370_transpose" -> (q370_transpose _),
-    "q371_hbos" -> (q371_hbos _),
-    "q372_crosslang_surprisal" -> (q372_crosslang_surprisal _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q370_transpose" -> q370Sql,
-    "q371_hbos" -> q371Sql,
-    "q372_crosslang_surprisal" -> q372Sql
+  val entries: Seq[Query] = Seq(
+    Query("q370_transpose", q370_transpose _, q370Sql),
+    Query("q371_hbos", q371_hbos _, q371Sql),
+    Query("q372_crosslang_surprisal", q372_crosslang_surprisal _, q372Sql)
   )
 }

@@ -28,8 +28,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries94 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q373
 
   /** q373: per source — distinct tokens present, tokens FIRST seen
@@ -175,15 +173,9 @@ object ExtensionQueries94 extends QueryGroup {
       |  center_ppm - half_ppm AS lo_ppm, center_ppm + half_ppm AS hi_ppm
       |FROM w ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q373_source_coverage" -> (q373_source_coverage _),
-    "q374_theil_sen" -> (q374_theil_sen _),
-    "q375_wilson_ci" -> (q375_wilson_ci _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q373_source_coverage" -> q373Sql,
-    "q374_theil_sen" -> q374Sql,
-    "q375_wilson_ci" -> q375Sql
+  val entries: Seq[Query] = Seq(
+    Query("q373_source_coverage", q373_source_coverage _, q373Sql),
+    Query("q374_theil_sen", q374_theil_sen _, q374Sql),
+    Query("q375_wilson_ci", q375_wilson_ci _, q375Sql)
   )
 }

@@ -27,8 +27,6 @@ import graft.ops.Ranks
   */
 object ExtensionQueries95 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q376
 
   /** q376: returnflag × linestatus counts through the SQL PIVOT
@@ -178,15 +176,9 @@ object ExtensionQueries95 extends QueryGroup {
       |    AS HUGEINT)) AS BIGINT) AS skew_milli
       |FROM p ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q376_sql_pivot" -> (q376_sql_pivot _),
-    "q377_calendar_gaps" -> (q377_calendar_gaps _),
-    "q378_moments" -> (q378_moments _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q376_sql_pivot" -> q376Sql,
-    "q377_calendar_gaps" -> q377Sql,
-    "q378_moments" -> q378Sql
+  val entries: Seq[Query] = Seq(
+    Query("q376_sql_pivot", q376_sql_pivot _, q376Sql),
+    Query("q377_calendar_gaps", q377_calendar_gaps _, q377Sql),
+    Query("q378_moments", q378_moments _, q378Sql)
   )
 }

@@ -28,8 +28,6 @@ import graft.ext.Similarity
   */
 object ExtensionQueries96 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q379
 
   /** q379: CUPED over per-customer spend — x = first-half-of-span
@@ -211,15 +209,9 @@ object ExtensionQueries96 extends QueryGroup {
       |  CAST(n_h * s_dollars * 10000 // tot.total_ns AS BIGINT) AS alloc_of_10k
       |FROM strata, tot ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q379_cuped" -> (q379_cuped _),
-    "q380_rbo" -> (q380_rbo _),
-    "q381_neyman_allocation" -> (q381_neyman_allocation _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q379_cuped" -> q379Sql,
-    "q380_rbo" -> q380Sql,
-    "q381_neyman_allocation" -> q381Sql
+  val entries: Seq[Query] = Seq(
+    Query("q379_cuped", q379_cuped _, q379Sql),
+    Query("q380_rbo", q380_rbo _, q380Sql),
+    Query("q381_neyman_allocation", q381_neyman_allocation _, q381Sql)
   )
 }

@@ -29,8 +29,6 @@ import graft.core.Tables
   */
 object ExtensionQueries97 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q382
 
   /** q382: TP/pred/true pair counts and precision/recall/F1 (ppm) of
@@ -169,15 +167,9 @@ object ExtensionQueries97 extends QueryGroup {
       |    THEN 1 ELSE 0 END AS BIGINT) AS feasible_two_arms
       |FROM p ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q382_dedup_pair_quality" -> (q382_dedup_pair_quality _),
-    "q383_mcnemar" -> (q383_mcnemar _),
-    "q384_power_analysis" -> (q384_power_analysis _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q382_dedup_pair_quality" -> q382Sql,
-    "q383_mcnemar" -> q383Sql,
-    "q384_power_analysis" -> q384Sql
+  val entries: Seq[Query] = Seq(
+    Query("q382_dedup_pair_quality", q382_dedup_pair_quality _, q382Sql),
+    Query("q383_mcnemar", q383_mcnemar _, q383Sql),
+    Query("q384_power_analysis", q384_power_analysis _, q384Sql)
   )
 }

@@ -28,8 +28,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries98 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q385
 
   /** q385: CvM-type distance between fulfilled and open order-total
@@ -195,15 +193,9 @@ object ExtensionQueries98 extends QueryGroup {
       |    AS BIGINT) AS eta2_ppm
       |FROM tot, numer""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q385_cvm_distance" -> (q385_cvm_distance _),
-    "q386_mann_kendall" -> (q386_mann_kendall _),
-    "q387_weekday_eta2" -> (q387_weekday_eta2 _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q385_cvm_distance" -> q385Sql,
-    "q386_mann_kendall" -> q386Sql,
-    "q387_weekday_eta2" -> q387Sql
+  val entries: Seq[Query] = Seq(
+    Query("q385_cvm_distance", q385_cvm_distance _, q385Sql),
+    Query("q386_mann_kendall", q386_mann_kendall _, q386Sql),
+    Query("q387_weekday_eta2", q387_weekday_eta2 _, q387Sql)
   )
 }

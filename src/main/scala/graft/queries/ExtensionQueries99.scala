@@ -25,8 +25,6 @@ import graft.core.Tables
   */
 object ExtensionQueries99 extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q388
 
   /** q388: per market segment — customer count and the ordered listagg
@@ -163,15 +161,9 @@ object ExtensionQueries99 extends QueryGroup {
       |FROM n WHERE nbr > 0 AND rev_c * 20 > nbr * 21
       |ORDER BY day""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q388_listagg" -> (q388_listagg _),
-    "q389_hazard_table" -> (q389_hazard_table _),
-    "q390_local_peaks" -> (q390_local_peaks _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q388_listagg" -> q388Sql,
-    "q389_hazard_table" -> q389Sql,
-    "q390_local_peaks" -> q390Sql
+  val entries: Seq[Query] = Seq(
+    Query("q388_listagg", q388_listagg _, q388Sql),
+    Query("q389_hazard_table", q389_hazard_table _, q389Sql),
+    Query("q390_local_peaks", q390_local_peaks _, q390Sql)
   )
 }

@@ -21,8 +21,6 @@ import graft.core.{FpSafe, PandasCompat, Tables}
 object RelationalQueries extends QueryGroup {
   import FpSafe._
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** q01: grouped aggregation suite — SURVEY §2 E1 (sums), F6 (ratio
     * derivations), plus filter pushdown. TPC-H Q1-shaped pricing summary.
     * Covers: sum of integral doubles, exact money sums, avg, count.
@@ -318,29 +316,16 @@ object RelationalQueries extends QueryGroup {
       |GROUP BY lang, source
       |ORDER BY lang, source""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q01_pricing_summary" -> (q01_pricing_summary _),
-    "q02_weighted_rollup" -> (q02_weighted_rollup _),
-    "q03_sum_all_numerics" -> (q03_sum_all_numerics _),
-    "q04_click_share" -> (q04_click_share _),
-    "q05_dedup_keep_first" -> (q05_dedup_keep_first _),
-    "q06_spine_join3" -> (q06_spine_join3 _),
-    "q07_rank_topk" -> (q07_rank_topk _),
-    "q08_group_median" -> (q08_group_median _),
-    "q09_group_mode" -> (q09_group_mode _),
-    "q10_filters" -> (q10_filters _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01Sql,
-    "q02_weighted_rollup" -> q02Sql,
-    "q03_sum_all_numerics" -> q03Sql,
-    "q04_click_share" -> q04Sql,
-    "q05_dedup_keep_first" -> q05Sql,
-    "q06_spine_join3" -> q06Sql,
-    "q07_rank_topk" -> q07Sql,
-    "q08_group_median" -> q08Sql,
-    "q09_group_mode" -> q09Sql,
-    "q10_filters" -> q10Sql
+  val entries: Seq[Query] = Seq(
+    Query("q01_pricing_summary", q01_pricing_summary _, q01Sql),
+    Query("q02_weighted_rollup", q02_weighted_rollup _, q02Sql),
+    Query("q03_sum_all_numerics", q03_sum_all_numerics _, q03Sql),
+    Query("q04_click_share", q04_click_share _, q04Sql),
+    Query("q05_dedup_keep_first", q05_dedup_keep_first _, q05Sql),
+    Query("q06_spine_join3", q06_spine_join3 _, q06Sql),
+    Query("q07_rank_topk", q07_rank_topk _, q07Sql),
+    Query("q08_group_median", q08_group_median _, q08Sql),
+    Query("q09_group_mode", q09_group_mode _, q09Sql),
+    Query("q10_filters", q10_filters _, q10Sql)
   )
 }

@@ -13,8 +13,6 @@ import graft.core.{FpSafe, Tables}
 object RelationalQueries2 extends QueryGroup {
   import FpSafe._
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** q15: union / intersect / except (SURVEY §2 D — set-like ops). */
   def q15_set_ops(s: SparkSession, dir: String): DataFrame = {
     val c = Tables.customer(s, dir).select(col("c_nationkey").cast("int").as("nationkey"))
@@ -206,23 +204,13 @@ object RelationalQueries2 extends QueryGroup {
       |FROM g GROUP BY user_id, session_id
       |ORDER BY user_id, session_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q15_set_ops" -> (q15_set_ops _),
-    "q16_window_analytics" -> (q16_window_analytics _),
-    "q17_date_trunc" -> (q17_date_trunc _),
-    "q18_json_extract" -> (q18_json_extract _),
-    "q19_join_variants" -> (q19_join_variants _),
-    "q20_rollup" -> (q20_rollup _),
-    "q21_sessionize" -> (q21_sessionize _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q15_set_ops" -> q15Sql,
-    "q16_window_analytics" -> q16Sql,
-    "q17_date_trunc" -> q17Sql,
-    "q18_json_extract" -> q18Sql,
-    "q19_join_variants" -> q19Sql,
-    "q20_rollup" -> q20Sql,
-    "q21_sessionize" -> q21Sql
+  val entries: Seq[Query] = Seq(
+    Query("q15_set_ops", q15_set_ops _, q15Sql),
+    Query("q16_window_analytics", q16_window_analytics _, q16Sql),
+    Query("q17_date_trunc", q17_date_trunc _, q17Sql),
+    Query("q18_json_extract", q18_json_extract _, q18Sql),
+    Query("q19_join_variants", q19_join_variants _, q19Sql),
+    Query("q20_rollup", q20_rollup _, q20Sql),
+    Query("q21_sessionize", q21_sessionize _, q21Sql)
   )
 }

@@ -11,8 +11,6 @@ import graft.ops.AsofJoin
 object RelationalQueries3 extends QueryGroup {
   import FpSafe._
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** q33: the pandas rounding suite (SURVEY §2 F12) with REAL half-even
     * ties: l_quantity/8 and /2 are exact binary fractions, so .5 boundary
     * cases occur and distinguish bround (HALF_EVEN, pandas-faithful) from
@@ -139,17 +137,10 @@ object RelationalQueries3 extends QueryGroup {
       |  count(*) AS n_rows
       |FROM lineitem GROUP BY 1 ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q33_bround_ties" -> (q33_bround_ties _),
-    "q34_asof_join" -> (q34_asof_join _),
-    "q35_pivot" -> (q35_pivot _),
-    "q36_distinct_counts" -> (q36_distinct_counts _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q33_bround_ties" -> q33Sql,
-    "q34_asof_join" -> q34Sql,
-    "q35_pivot" -> q35Sql,
-    "q36_distinct_counts" -> q36Sql
+  val entries: Seq[Query] = Seq(
+    Query("q33_bround_ties", q33_bround_ties _, q33Sql),
+    Query("q34_asof_join", q34_asof_join _, q34Sql),
+    Query("q35_pivot", q35_pivot _, q35Sql),
+    Query("q36_distinct_counts", q36_distinct_counts _, q36Sql)
   )
 }

@@ -11,8 +11,6 @@ import graft.core.{FpSafe, Tables}
 object RelationalQueries4 extends QueryGroup {
   import FpSafe._
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** q39: RANGE frames (value-based windows — q16 covered ROWS frames):
     * per customer, rolling 30-day order count and exact revenue over the
     * epoch-day axis. Range frames include ALL peers in the value interval
@@ -135,17 +133,10 @@ object RelationalQueries4 extends QueryGroup {
       |  ON p.user_id = er.user_id AND p.us <= er.err_us
       |ORDER BY p.event_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q39_range_frames" -> (q39_range_frames _),
-    "q40_rank_distributions" -> (q40_rank_distributions _),
-    "q41_string_funcs" -> (q41_string_funcs _),
-    "q43_asof_forward" -> (q43_asof_forward _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q39_range_frames" -> q39Sql,
-    "q40_rank_distributions" -> q40Sql,
-    "q41_string_funcs" -> q41Sql,
-    "q43_asof_forward" -> q43Sql
+  val entries: Seq[Query] = Seq(
+    Query("q39_range_frames", q39_range_frames _, q39Sql),
+    Query("q40_rank_distributions", q40_rank_distributions _, q40Sql),
+    Query("q41_string_funcs", q41_string_funcs _, q41Sql),
+    Query("q43_asof_forward", q43_asof_forward _, q43Sql)
   )
 }

@@ -8,8 +8,6 @@ import graft.core.{FpSafe, Tables}
 object RelationalQueries5 extends QueryGroup {
   import FpSafe._
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** q44: collection + conditional aggregates — sorted distinct collect
     * (collect_set is unordered; sorting pins it; array_join-serialized so
     * the result is a flat hashable column), count_if, bool and/or,
@@ -288,23 +286,13 @@ object RelationalQueries5 extends QueryGroup {
       |WHERE best_cheaper IS NULL OR size > best_cheaper
       |ORDER BY price_cents, size DESC, p_partkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q44_collection_aggs" -> (q44_collection_aggs _),
-    "q45_unpivot" -> (q45_unpivot _),
-    "q51_decimal_money" -> (q51_decimal_money _),
-    "q60_cube" -> (q60_cube _),
-    "q61_quantile_bins" -> (q61_quantile_bins _),
-    "q94_grouping_sets" -> (q94_grouping_sets _),
-    "q95_pareto_front" -> (q95_pareto_front _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q44_collection_aggs" -> q44Sql,
-    "q45_unpivot" -> q45Sql,
-    "q51_decimal_money" -> q51Sql,
-    "q60_cube" -> q60Sql,
-    "q61_quantile_bins" -> q61Sql,
-    "q94_grouping_sets" -> q94Sql,
-    "q95_pareto_front" -> q95Sql
+  val entries: Seq[Query] = Seq(
+    Query("q44_collection_aggs", q44_collection_aggs _, q44Sql),
+    Query("q45_unpivot", q45_unpivot _, q45Sql),
+    Query("q51_decimal_money", q51_decimal_money _, q51Sql),
+    Query("q60_cube", q60_cube _, q60Sql),
+    Query("q61_quantile_bins", q61_quantile_bins _, q61Sql),
+    Query("q94_grouping_sets", q94_grouping_sets _, q94Sql),
+    Query("q95_pareto_front", q95_pareto_front _, q95Sql)
   )
 }

@@ -15,8 +15,6 @@ import graft.ops.Scoring.{Bucket, ScoringConfig}
 object ScoringQueries extends QueryGroup {
   import FpSafe._
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Triage scoring config (units=percent and uplift exercise
     * `_normalize_expected_ctr_value`; values tuned so the synthetic ctr
     * distribution (~0.002) straddles the thresholds and the underperf filter
@@ -274,17 +272,10 @@ object ScoringQueries extends QueryGroup {
       |FROM src, deca, decb
       |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q11_anomaly_triage" -> (q11_anomaly_triage _),
-    "q12_url_normalize" -> (q12_url_normalize _),
-    "q13_normalize_ctr_percent" -> (q13_normalize_ctr_percent _),
-    "q14_normalize_ctr_heuristic" -> (q14_normalize_ctr_heuristic _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q11_anomaly_triage" -> q11Sql,
-    "q12_url_normalize" -> q12Sql,
-    "q13_normalize_ctr_percent" -> q13Sql,
-    "q14_normalize_ctr_heuristic" -> q14Sql
+  val entries: Seq[Query] = Seq(
+    Query("q11_anomaly_triage", q11_anomaly_triage _, q11Sql),
+    Query("q12_url_normalize", q12_url_normalize _, q12Sql),
+    Query("q13_normalize_ctr_percent", q13_normalize_ctr_percent _, q13Sql),
+    Query("q14_normalize_ctr_heuristic", q14_normalize_ctr_heuristic _, q14Sql)
   )
 }

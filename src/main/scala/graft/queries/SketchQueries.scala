@@ -26,8 +26,6 @@ import graft.ops.Sketches
   */
 object SketchQueries extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- q81
 
   /** HLL estimates per returnflag + a merged ALL row (DataSketches HLL,
@@ -440,21 +438,12 @@ object SketchQueries extends QueryGroup {
        |FROM est CROSS JOIN ex""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q81_hll_distinct" -> (q81_hll_distinct _),
-    "q82_quantile_sketch" -> (q82_quantile_sketch _),
-    "q83_heavy_hitters" -> (q83_heavy_hitters _),
-    "q84_bottomk_sample" -> (q84_bottomk_sample _),
-    "q85_set_overlap_sketch" -> (q85_set_overlap_sketch _),
-    "q111_join_size_sketch" -> (q111_join_size_sketch _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q81_hll_distinct" -> q81Sql,
-    "q82_quantile_sketch" -> q82Sql,
-    "q83_heavy_hitters" -> q83Sql,
-    "q84_bottomk_sample" -> q84Sql,
-    "q85_set_overlap_sketch" -> q85Sql,
-    "q111_join_size_sketch" -> q111Sql
+  val entries: Seq[Query] = Seq(
+    Query("q81_hll_distinct", q81_hll_distinct _, q81Sql),
+    Query("q82_quantile_sketch", q82_quantile_sketch _, q82Sql),
+    Query("q83_heavy_hitters", q83_heavy_hitters _, q83Sql),
+    Query("q84_bottomk_sample", q84_bottomk_sample _, q84Sql),
+    Query("q85_set_overlap_sketch", q85_set_overlap_sketch _, q85Sql),
+    Query("q111_join_size_sketch", q111_join_size_sketch _, q111Sql)
   )
 }

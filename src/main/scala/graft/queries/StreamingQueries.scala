@@ -12,8 +12,6 @@ import graft.core.Tables
   */
 object StreamingQueries extends QueryGroup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** q46: the spend-milestone stateful operator's batch formulation — one
     * row per 500.00-crossing of a user's cumulative spend (exact cents
     * running sums; order pinned by (µs, event_id)).
@@ -364,33 +362,18 @@ object StreamingQueries extends QueryGroup {
       |  count(*) AS n_dau
       |FROM ud GROUP BY day ORDER BY window_start""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q115_lsh_admission" -> (q115_lsh_admission _),
-    "q119_event_window_left" -> (q119_event_window_left _),
-    "q123_window_coverage" -> (q123_window_coverage _),
-    "q98_stream_interval_join" -> (q98_stream_interval_join _),
-    "q108_stream_count_min" -> (q108_stream_count_min _),
-    "q46_spend_milestones" -> (q46_spend_milestones _),
-    "q52_stream_enrich" -> (q52_stream_enrich _),
-    "q56_tumbling_watermark" -> (q56_tumbling_watermark _),
-    "q62_purchase_attribution" -> (q62_purchase_attribution _),
-    "q65_sliding" -> (q65_sliding _),
-    "q66_session_window" -> (q66_session_window _),
-    "q143_stream_dau" -> (q143_stream_dau _)
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q115_lsh_admission" -> q115Sql,
-    "q119_event_window_left" -> q119Sql,
-    "q123_window_coverage" -> q123Sql,
-    "q98_stream_interval_join" -> q98Sql,
-    "q108_stream_count_min" -> q108Sql,
-    "q46_spend_milestones" -> q46Sql,
-    "q52_stream_enrich" -> q52Sql,
-    "q56_tumbling_watermark" -> q56Sql,
-    "q62_purchase_attribution" -> q62Sql,
-    "q65_sliding" -> q65Sql,
-    "q66_session_window" -> q66Sql,
-    "q143_stream_dau" -> q143Sql
+  val entries: Seq[Query] = Seq(
+    Query("q115_lsh_admission", q115_lsh_admission _, q115Sql),
+    Query("q119_event_window_left", q119_event_window_left _, q119Sql),
+    Query("q123_window_coverage", q123_window_coverage _, q123Sql),
+    Query("q98_stream_interval_join", q98_stream_interval_join _, q98Sql),
+    Query("q108_stream_count_min", q108_stream_count_min _, q108Sql),
+    Query("q46_spend_milestones", q46_spend_milestones _, q46Sql),
+    Query("q52_stream_enrich", q52_stream_enrich _, q52Sql),
+    Query("q56_tumbling_watermark", q56_tumbling_watermark _, q56Sql),
+    Query("q62_purchase_attribution", q62_purchase_attribution _, q62Sql),
+    Query("q65_sliding", q65_sliding _, q65Sql),
+    Query("q66_session_window", q66_session_window _, q66Sql),
+    Query("q143_stream_dau", q143_stream_dau _, q143Sql)
   )
 }

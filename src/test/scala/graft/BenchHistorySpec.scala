@@ -165,10 +165,13 @@ class BenchHistorySpec extends AnyFunSuite {
     val same = artifact(s"""{$body,"cpus":"4","sf":"sfA"}""")
     assert(History.readPrev("sfA", 4, same) ==
       History.Prev(Map("q1" -> 1.5, "q2" -> 2.0, "q3" -> -1.0), names, 0.3))
+    // the canary is sf-invariant but not core-count-invariant: kept across
+    // sf, dropped across cpus (a local[8] canary makes local[4] look 2-3x slow)
     assert(History.readPrev("sfB", 4, same) == History.Prev(Map.empty, names, 0.3))
-    assert(History.readPrev("sfA", 8, same) == History.Prev(Map.empty, names, 0.3))
+    assert(History.readPrev("sfA", 8, same) == History.Prev(Map.empty, names, -1.0))
+    assert(History.readPrev("sfB", 8, same) == History.Prev(Map.empty, names, -1.0))
     val noCpus = artifact(s"""{$body,"sf":"sfA"}""")
-    assert(History.readPrev("sfA", 4, noCpus) == History.Prev(Map.empty, names, 0.3))
+    assert(History.readPrev("sfA", 4, noCpus) == History.Prev(Map.empty, names, -1.0))
     // file order, no gate
     assert(History.artifactMedians(noCpus) == Seq("q1" -> 1.5, "q2" -> 2.0, "q3" -> -1.0))
   }

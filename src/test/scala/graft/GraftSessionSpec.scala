@@ -52,4 +52,32 @@ class GraftSessionSpec extends SparkSpecBase {
       assert(offenders.isEmpty, s"$pattern outside graft/bench: ${offenders.mkString(", ")}")
     }
   }
+
+  test("each query is registered once: no oracle maps or Q aliases in graft/queries, no names in SparkEntry") {
+    val queriesPkg = Paths.get("src/main/scala/graft/queries")
+    assert(Files.isDirectory(queriesPkg))
+    // a second name-keyed map, a per-dir oracle function or a per-group
+    // plan alias is a registry kept beside the Query entries
+    val banned = Seq("""\bMap\[String, String\]""", """\boracleFor\b""", """\btype Q\b""").map(_.r)
+    val offenders = for {
+      p <- sources if p.startsWith(queriesPkg)
+      r <- banned if r.findFirstIn(Files.readString(p)).nonEmpty
+    } yield s"$p: $r"
+    assert(offenders.isEmpty, s"registry copies beside Query entries: ${offenders.mkString(", ")}")
+    val entry = Files.readString(Paths.get("src/main/scala/graft/SparkEntry.scala"))
+    assert(""""q\d""".r.findFirstIn(entry).isEmpty, "query names hand-listed in SparkEntry.scala")
+  }
+
+  test("bench code is ASCII outside comments (an ASCII-default JVM prints '?' for the rest)") {
+    val files = Seq("graft/Bench.scala", "graft/MoverConfirm.scala").map(Paths.get("src/main/scala", _)) ++
+      sources.filter(_.startsWith(Paths.get("src/main/scala/graft/bench")))
+    assert(files.size >= 4 && files.forall(Files.exists(_)))
+    val offenders = for {
+      p <- files
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      code = line.trim.split("//", 2)(0)
+      if !code.startsWith("*") && !code.startsWith("/*") && code.exists(_ > '\u007f')
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, s"non-ASCII code (println strings included):\n${offenders.mkString("\n")}")
+  }
 }
