@@ -22,6 +22,12 @@ object GraftSession {
       // nanosAsLong keeps NANOS readable as LONG, and Tables.toLongNanos
       // folds every encoding to canonical long nanos at the scan.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // With `graft.checkpoint.dir` set (at runtime), core.Ckpt writes every
+      // fixpoint round and every Pipeline.run fan-out there as a reliable
+      // checkpoint. The ContextCleaner deletes a checkpoint's files once its
+      // RDD is unreachable only with this on, and Spark reads it once, when
+      // the context starts; local checkpoints ignore it, so it is always on.
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
 
   def local(cpus: Int = GraftSession.cpus): SparkSession = {
     val s = builder(cpus).getOrCreate()
@@ -31,9 +37,10 @@ object GraftSession {
 
   /** Drop everything a prior run may have left resident: the SQL cache AND
     * every persisted RDD. Each `localCheckpoint` in an iterative operator
-    * eagerly materializes a MEMORY_AND_DISK RDD that `clearCache()` never
-    * touches; left to the GC-driven ContextCleaner these pile up across a
-    * session (q74 measured 19.3 s in session position vs 5.8 s clean).
+    * (and the frame `Pipeline.run` returns) eagerly materializes a
+    * MEMORY_AND_DISK RDD that `clearCache()` never touches; left to the
+    * GC-driven ContextCleaner these pile up across a session (q74
+    * measured 19.3 s in session position vs 5.8 s clean).
     * Safe only in a program that owns its session: every measured run
     * re-executes its plan from scratch, but a test suite sharing the
     * session would lose other suites' live checkpoints.

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{NumOps, PandasCompat, UrlOps}
+import graft.core.{CacheScope, Ckpt, Columns, NumOps, PandasCompat, UrlOps}
 import graft.ingest.{SchemaResolve, Sources, YamlConfig}
 import graft.ops.{CtrNormalize, Scoring}
 import graft.ops.Scoring.ScoringConfig
@@ -111,9 +111,8 @@ object Pipeline {
     val r = resolveHeaders(raw, FrogColumns,
       trimHeaders = false, ga4Renames = false)
     val out = SchemaResolve.coalesceToCanonical(r.frame, r.mapping, FrogColumns)
-      .withColumn("url", urlNorm(cfg)(col("url")))
-    Seq("status_code", "click_depth", "inlinks", "word_count")
-      .foldLeft(out)((df, c) => df.withColumn(c, NumOps.toLong(col(c))))
+    Columns.put(out, ("url" -> urlNorm(cfg)(col("url"))) +:
+      Seq("status_code", "click_depth", "inlinks", "word_count").map(c => c -> NumOps.toLong(col(c))))
   }
 
   /** GSC loader (`etl_merge.py:547-574`): url-likeness filter, no-comma
@@ -134,11 +133,12 @@ object Pipeline {
       trimHeaders = true, ga4Renames = false)
     val out = SchemaResolve.coalesceToCanonical(r.frame, r.mapping, GscColumns)
       .filter(SchemaResolve.looksUrlLike(col("url")))
-      .withColumn("url", urlNorm(cfg)(col("url")))
-      .withColumn("clicks", NumOps.toDoubleNoComma(col("clicks")))
-      .withColumn("impressions", NumOps.toDoubleNoComma(col("impressions")))
-      .withColumn("position", NumOps.toDoubleNoComma(col("position")))
-    CtrNormalize(out, "ctr", "ctr_norm").drop("ctr").withColumnRenamed("ctr_norm", "ctr")
+    val typed = Columns.put(out, ("url" -> urlNorm(cfg)(col("url"))) +:
+      Seq("clicks", "impressions", "position").map(c => c -> NumOps.toDoubleNoComma(col(c))))
+    // the normalized ctr replaces the raw one, last (url, clicks,
+    // impressions, position, ctr)
+    CtrNormalize(typed, "ctr", "ctr_norm").select(
+      GscColumns.filterNot(_ == "ctr").map(col) :+ col("ctr_norm").as("ctr"): _*)
   }
 
   /** GA4 loader (`etl_merge.py:603-653`): robust re-parse, URL header
@@ -155,9 +155,9 @@ object Pipeline {
     val out = SchemaResolve.coalesceToCanonical(r.frame, r.mapping, Ga4Columns)
       .withColumn("url", trim(col("url")))
       .filter(SchemaResolve.looksUrlLike(col("url")) && !lower(col("url")).isin(junk: _*))
-      .withColumn("url", urlNorm(cfg)(col("url")))
-    Seq("users", "sessions", "engaged_sessions", "avg_engagement_time")
-      .foldLeft(out)((df, c) => df.withColumn(c, NumOps.toDouble(col(c))))
+    Columns.put(out, ("url" -> urlNorm(cfg)(col("url"))) +:
+      Seq("users", "sessions", "engaged_sessions", "avg_engagement_time")
+        .map(c => c -> NumOps.toDouble(col(c))))
   }
 
   /** Per-source schema-resolution report — the governance metadata the
@@ -189,16 +189,17 @@ object Pipeline {
     */
   def aggGsc(gsc: DataFrame): DataFrame = {
     val w = when(coalesce(col("impressions"), lit(0.0)) > 0, col("impressions")).otherwise(1.0)
-    gsc.select(col("url"), col("clicks"), col("impressions"), col("position"), w.as("w"),
+    val rolled = gsc.select(col("url"), col("clicks"), col("impressions"), col("position"), w.as("w"),
       (col("position") * w).as("pxw"))
       .groupBy("url")
       .agg(
         PandasCompat.sumZero(col("clicks")).as("clicks"),
         PandasCompat.sumZero(col("impressions")).as("impressions"),
         sum(col("pxw")).as("pxw"), sum(col("w")).as("wsum"))
-      .withColumn("position", when(col("wsum") > 0, col("pxw") / col("wsum")))
-      .withColumn("ctr", PandasCompat.divNull(col("clicks"), col("impressions")))
-      .drop("pxw", "wsum")
+    Columns.put(rolled, Seq(
+      "position" -> when(col("wsum") > 0, col("pxw") / col("wsum")),
+      "ctr" -> PandasCompat.divNull(col("clicks"), col("impressions"))),
+      drop = Set("pxw", "wsum"))
   }
 
   /** GA4 per-URL aggregation (`_agg_ga4`, E4): sum all numeric metrics. */
@@ -263,7 +264,7 @@ object Pipeline {
     * streaming visibility loop does exactly that with its drop state).
     */
   private def stagedRaw(spark: SparkSession, path: String): DataFrame =
-    Sources.loadTable(spark, path).transform(graft.core.Ckpt.eager)
+    Sources.loadTable(spark, path).transform(Ckpt.eager)
 
   /** [[merged]] over already-loaded source frames — the reuse point for the
     * streaming visibility loop, which substitutes its accumulated GSC drop
@@ -280,69 +281,65 @@ object Pipeline {
     val ga4 = aggGa4(ga4In.filter(col("url").isNotNull && length(col("url")) > 0))
       .observe("ga4_agg", count(lit(1)).as("rows"))
 
-    // persisted: the global-total and median scalar branches below would
-    // otherwise re-execute the whole 3-source load + join per branch.
-    // Scoped: once the consuming action completes (and, in Pipeline.run,
-    // the OUTER merged persist is materialized), this inner cache is dead
-    // weight — auto-released.
+    // persisted: the scalar branch below would otherwise re-execute the
+    // whole 3-source load + join. Scoped: once the consuming action
+    // completes (in Pipeline.run, the checkpoint of the merged frame), this
+    // cache is dead weight, so it is released automatically.
     val joined = frog.join(gsc, Seq("url"), "left").join(ga4, Seq("url"), "left")
       .observe("merged", count(lit(1)).as("rows"))
-      .transform(graft.core.CacheScope.scoped)
+      .transform(CacheScope.scoped)
 
-    // derived metrics (F6/F7/E5): null-guarded division; global total via
-    // 1-row aggregate broadcast (never a partition-less window)
-    val totals = joined.agg(sum(col("clicks")).as("__total_clicks"))
-    val derived = joined.crossJoin(broadcast(totals))
-      .withColumn("ctr_pct", col("ctr") * 100)
-      .withColumn("engagement_rate",
-        PandasCompat.divNull(col("engaged_sessions"), col("sessions")))
-      .withColumn("engagement_rate_pct", col("engagement_rate") * 100)
-      .withColumn("click_share",
-        when(coalesce(col("__total_clicks"), lit(0.0)) === 0.0, lit(0.0))
-          .otherwise(col("clicks") / col("__total_clicks")))
-      .drop("__total_clicks")
+    // the click total (click_share, F6/F7/E5) and the ctr median (the
+    // expected-ctr fallback, stage 9) as ONE 1-row aggregate, broadcast
+    // back (never a partition-less window); the derived columns leave ctr
+    // as it is, so its median over `joined` is the median over the rows
+    // scored below
+    val scalars = joined.agg(sum(col("clicks")).as("__total_clicks"),
+      percentile(col("ctr"), lit(0.5)).as("__ctr_median"))
+    val withScalars = joined.crossJoin(broadcast(scalars))
 
-    // scoring on ALL rows (stage 9): expected ctr with dataset-median
-    // fallback, deficit, intent, missed clicks
-    val medianDf = derived.agg(percentile(col("ctr"), lit(0.5)).as("__ctr_median"))
-    val scored = derived.crossJoin(broadcast(medianDf))
-      .withColumn("expected_ctr",
-        Scoring.expectedCtr(cfg.scoring, col("position"), col("__ctr_median")))
-      .withColumn("expected_ctr_bucket",
-        Scoring.expectedCtrBucket(cfg.scoring, col("position")))
-      .withColumn("expected_ctr_units", lit(cfg.scoring.units))
-      .withColumn("expected_ctr_uplift", lit(cfg.scoring.uplift))
-      .withColumn("ctr_deficit",
-        Scoring.ctrDeficit(cfg.scoring, col("expected_ctr"), col("ctr")))
-      .withColumn("intent_multiplier",
-        Scoring.intentMultiplier(cfg.scoring, col("url"), col("schema_types")))
-      .withColumn("missed_clicks",
-        Scoring.missedClicks(col("ctr_deficit"), col("impressions"), col("intent_multiplier")))
-      .withColumn("missed_clicks_eff", col("missed_clicks"))
-      .drop("__ctr_median")
+    // derived metrics (null-guarded division), scoring on ALL rows
+    // (expected ctr with dataset-median fallback, deficit, intent, missed
+    // clicks) and run metadata (F13): one projection per dependency level
+    val iso = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
+      .withZone(java.time.ZoneOffset.UTC)
+      .format(java.time.Instant.ofEpochSecond(cfg.runTimestamp))
+    val level1 = Columns.put(withScalars, Seq(
+      "ctr_pct" -> col("ctr") * 100,
+      "engagement_rate" -> PandasCompat.divNull(col("engaged_sessions"), col("sessions")),
+      "click_share" -> when(coalesce(col("__total_clicks"), lit(0.0)) === 0.0, lit(0.0))
+        .otherwise(col("clicks") / col("__total_clicks")),
+      "expected_ctr" -> Scoring.expectedCtr(cfg.scoring, col("position"), col("__ctr_median")),
+      "expected_ctr_bucket" -> Scoring.expectedCtrBucket(cfg.scoring, col("position")),
+      "expected_ctr_units" -> lit(cfg.scoring.units),
+      "expected_ctr_uplift" -> lit(cfg.scoring.uplift),
+      "intent_multiplier" -> Scoring.intentMultiplier(cfg.scoring, col("url"), col("schema_types")),
+      "run_id" -> lit(cfg.runId),
+      "run_timestamp" -> lit(cfg.runTimestamp),
+      // rendered on the driver in explicit UTC: date_format would follow
+      // the session timezone while still claiming 'Z'
+      "run_timestamp_iso" -> lit(iso),
+      "source_frog" -> lit(basename(cfg.frogPath)),
+      "source_gsc" -> lit(basename(cfg.gscPath)),
+      "source_ga4" -> lit(basename(cfg.ga4Path))),
+      drop = Set("__total_clicks", "__ctr_median"))
+    val level2 = Columns.put(level1, Seq(
+      "engagement_rate_pct" -> col("engagement_rate") * 100,
+      "ctr_deficit" -> Scoring.ctrDeficit(cfg.scoring, col("expected_ctr"), col("ctr"))))
+    val scored = Columns.put(level2, Seq("missed_clicks" ->
+      Scoring.missedClicks(col("ctr_deficit"), col("impressions"), col("intent_multiplier"))))
 
-    // run metadata (F13) + rounding suite (F12, banker's per pandas)
-    val withMeta = scored
-      .withColumn("run_id", lit(cfg.runId))
-      .withColumn("run_timestamp", lit(cfg.runTimestamp))
-      .withColumn("run_timestamp_iso",
-        // rendered on the driver in explicit UTC: date_format would follow
-        // the session timezone while still claiming 'Z'
-        lit(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss'Z'")
-          .withZone(java.time.ZoneOffset.UTC)
-          .format(java.time.Instant.ofEpochSecond(cfg.runTimestamp))))
-      .withColumn("source_frog", lit(basename(cfg.frogPath)))
-      .withColumn("source_gsc", lit(basename(cfg.gscPath)))
-      .withColumn("source_ga4", lit(basename(cfg.ga4Path)))
-    val rounding = Seq("ctr" -> 4, "ctr_pct" -> 2, "position" -> 1,
+    // rounding suite (F12, banker's per pandas) over the unrounded values,
+    // in the preferred output order; missed_clicks_eff is missed_clicks
+    val rounding = Map("ctr" -> 4, "ctr_pct" -> 2, "position" -> 1,
       "engagement_rate" -> 4, "engagement_rate_pct" -> 1, "click_share" -> 6,
       "expected_ctr" -> 4, "ctr_deficit" -> 4, "intent_multiplier" -> 2,
-      "missed_clicks" -> 3, "missed_clicks_eff" -> 3)
-    val rounded = rounding.foldLeft(withMeta) { case (df, (c, n)) =>
-      df.withColumn(c, PandasCompat.broundN(col(c), n))
-    }.withColumn("avg_engagement_time", bround(col("avg_engagement_time"), 0).cast("long"))
-
-    rounded.select(ColumnOrder.map(col): _*)
+      "missed_clicks" -> 3)
+    scored.select(ColumnOrder.map {
+      case "missed_clicks_eff" => PandasCompat.broundN(col("missed_clicks"), 3).as("missed_clicks_eff")
+      case c @ "avg_engagement_time" => bround(col(c), 0).cast("long").as(c)
+      case c => rounding.get(c).fold(col(c))(n => PandasCompat.broundN(col(c), n).as(c))
+    }: _*)
   }
 
   /** Preferred output column order (`etl_merge.py:888-894`). */
@@ -390,26 +387,31 @@ object Pipeline {
     * underperformers-only continuation (same scored columns, narrow triage
     * projection, keep-filter + rank) — not a second scoring pass.
     *
-    * The RETURNED frame is persisted (it fed four sinks and is handed back
-    * for further composition) — the CALLER owns that cache and should
-    * `unpersist()` it when done; the internal debug persist is released
-    * here and the merged-stage inner cache is scope-released automatically.
+    * The merged frame is materialized once with [[Ckpt.eager]], so the
+    * four sinks and every later action plan over one leaf node instead of
+    * re-planning the whole merge (fewer jobs, and fewer generated classes
+    * for Spark's codegen cache to hold). The RETURNED frame is that
+    * checkpoint: `unpersist()` does not free it; [[GraftSession.release]]
+    * does, and so does the ContextCleaner once the frame is unreachable.
+    * With `graft.checkpoint.dir` set it is a reliable checkpoint in that
+    * dir. The debug frame's cache and the merge's inner cache release
+    * themselves ([[CacheScope]]) after their last consuming action.
     */
   def run(spark: SparkSession, cfg: PipelineConfig, outDir: String): DataFrame = {
-    val m = merged(spark, cfg).persist()
+    val m = merged(spark, cfg).transform(Ckpt.eager)
     // partitioned by run_id (SURVEY §4.4); dynamic overwrite so a re-run
     // replaces only ITS OWN partition and earlier runs' partitions survive
     m.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("run_id").parquet(s"$outDir/merged_visibility")
-    val debug = ctrDebugSlice(m, cfg).persist()
+    // read by the next two sinks, then released
+    val debug = CacheScope.scopedN(ctrDebugSlice(m, cfg), 2)
     debug.write.mode("overwrite").parquet(s"$outDir/ctr_debug")
     val triageCols = Seq("url", "position", "ctr", "impressions", "clicks",
       "schema_types", "expected_ctr", "expected_ctr_bucket", "ctr_deficit",
       "intent_multiplier", "missed_clicks")
     Scoring.rankUnderperformers(debug.select(triageCols.map(col): _*), cfg.scoring)
       .write.mode("overwrite").parquet(s"$outDir/anomaly_ctr_underperf")
-    debug.unpersist()
     schemaGaps(m).write.mode("overwrite").parquet(s"$outDir/schema_gaps")
     m
   }

@@ -53,7 +53,7 @@ object StagedMemo {
     * (relative-path, size, mtime-ms) triples, hashed. Missing path
     * fingerprints to a constant (the memo then keys on path identity
     * alone — same behavior as the old missing-file mtime 0). */
-  private[core] def fingerprint(root: java.io.File): String = {
+  def fingerprint(root: java.io.File): String = {
     def walk(f: java.io.File, rel: String): Seq[String] =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).toSeq

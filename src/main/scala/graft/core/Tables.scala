@@ -24,25 +24,17 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   */
 object Tables {
 
-  /** Per-path inferred-schema cache (round-19 verdict task #3). A bare
+  /** Parquet schemas come from [[SchemaMemo]]. A bare
     * `spark.read.parquet(path)` measured ~98 ms per call at sf0.1
-    * (OPTIMIZATION_r19.md, "Sub-second fleet fixed cost") — almost
-    * entirely parquet footer reads for schema
-    * inference — and the bench re-builds every query's frame per sample,
-    * so each of the ~1,100 executions of a sweep paid it per table. The
-    * schema of an immutable input never changes within a process, so it
-    * is inferred once per path and passed explicitly afterwards
-    * (`.schema(cached)` skips inference; the cached object IS the
-    * inferred schema, so plans are bit-identical). This is metadata
-    * caching in the same class as Spark's session FileStatusCache —
-    * every query still computes from the parquet inputs. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
+    * (OPTIMIZATION_r19.md, "Sub-second fleet fixed cost"), almost all of it
+    * footer reads for schema inference, and the bench re-builds every
+    * query's frame per sample. The key carries the file's identity (a
+    * regenerated table is inferred again) and `nanosAsLong`, which decides
+    * whether a TIMESTAMP(NANOS) column reads as LONG or fails. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val sch = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val nanosAsLong = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
+    val sch = SchemaMemo(path, s"parquet nanosAsLong=$nanosAsLong")(spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
   }
 

@@ -2,6 +2,7 @@ package graft.ingest
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.SchemaMemo
 
 /** Robust tabular sources (SURVEY §2 A1/A2/A3/A4/A9): all-string CSV reads
   * with the reference's fallback ladder — plain parse first; if the result is
@@ -24,8 +25,13 @@ object Sources {
     Seq(",", ";", "\t", "|").maxBy(d => line.count(_.toString == d))
   }
 
-  /** All-string CSV read (no schema inference — progressive coercion is the
-    * engine's type discipline, SURVEY §1.2).
+  /** All-string CSV read (no type inference — progressive coercion is the
+    * engine's type discipline, SURVEY §1.2). The header is read once per
+    * file identity and option set ([[SchemaMemo]]); later reads pass it
+    * back as an explicit all-string schema, which Spark applies with the
+    * header line skipped (`enforceSchema`), so the columns are the same
+    * and the header job is not run again. `caseSensitive` decides how
+    * duplicate header names are made unique, so it is part of the key.
     */
   private def readCsv(spark: SparkSession, path: String, sep: String,
       comment: Option[String]): DataFrame = {
@@ -33,7 +39,10 @@ object Sources {
       .option("header", "true")
       .option("inferSchema", "false")
       .option("sep", sep)
-    comment.fold(base)(c => base.option("comment", c)).csv(path)
+    val reader = comment.fold(base)(c => base.option("comment", c))
+    val variant = s"csv sep=$sep comment=${comment.getOrElse("")} " +
+      s"caseSensitive=${spark.conf.get("spark.sql.caseSensitive")}"
+    reader.schema(SchemaMemo(path, variant)(reader.csv(path).schema)).csv(path)
   }
 
   /** Robust loader: plain parse; a 1-column result (e.g. '# ----' header

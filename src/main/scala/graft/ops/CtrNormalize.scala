@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Columns
 
 /** The reference's data-dependent CTR normalization (`etl_merge.py:295-312`,
   * SURVEY §2 F4): strip '%' and ',', parse to double, and divide the WHOLE
@@ -42,13 +43,11 @@ object CtrNormalize {
         avg(when(parsed > 1.0 && parsed <= 100.0, 1.0).otherwise(0.0)).as(s"frac_mid_$i"))
     }
     val decision = df.agg(flags.head, flags.tail: _*)
-    val out = cols.zipWithIndex.foldLeft(df.crossJoin(broadcast(decision))) {
-      case (acc, ((src, dst), i)) =>
+    Columns.put(df.crossJoin(broadcast(decision)), cols.zipWithIndex.map {
+      case ((src, dst), i) =>
         val parsed = cleaned(col(src))
-        acc.withColumn(dst,
-          when(col(s"saw_pct_$i") || col(s"frac_mid_$i") > 0.5, parsed / 100.0)
-            .otherwise(parsed))
-    }
-    out.drop(cols.indices.flatMap(i => Seq(s"saw_pct_$i", s"frac_mid_$i")): _*)
+        dst -> when(col(s"saw_pct_$i") || col(s"frac_mid_$i") > 0.5, parsed / 100.0)
+          .otherwise(parsed)
+    }, drop = cols.indices.flatMap(i => Seq(s"saw_pct_$i", s"frac_mid_$i")).toSet)
   }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.PandasCompat
+import graft.core.{Columns, PandasCompat}
 
 /** Config-driven scoring, compiled to literal Catalyst expression trees at
   * plan time (SURVEY.md §1.4): the reference's row-wise `apply` lambdas
@@ -158,14 +158,16 @@ object Scoring {
       if (cfg.minClicks > 0) candidates.filter(coalesce(col("clicks"), lit(0.0)) >= cfg.minClicks)
       else candidates
     val schemaCol = if (df.columns.contains("schema_types")) col("schema_types") else lit("")
-    withMin
-      .withColumn("expected_ctr", expectedCtr(cfg, col("position"), col("ctr_median")))
-      .withColumn("expected_ctr_bucket", expectedCtrBucket(cfg, col("position")))
-      .withColumn("ctr_deficit", ctrDeficit(cfg, col("expected_ctr"), col("ctr")))
-      .withColumn("intent_multiplier", intentMultiplier(cfg, col("url"), schemaCol))
-      .withColumn("missed_clicks",
-        coalesce(missedClicks(col("ctr_deficit"), col("impressions"), col("intent_multiplier")),
-          lit(0.0)))
-      .drop("ctr_median")
+    // one projection per dependency level; a score column `df` already
+    // has is replaced in place, a new one is appended in this order
+    val expected = Columns.put(withMin, Seq(
+      "expected_ctr" -> expectedCtr(cfg, col("position"), col("ctr_median")),
+      "expected_ctr_bucket" -> expectedCtrBucket(cfg, col("position"))))
+    val deficit = Columns.put(expected, Seq(
+      "ctr_deficit" -> ctrDeficit(cfg, col("expected_ctr"), col("ctr")),
+      "intent_multiplier" -> intentMultiplier(cfg, col("url"), schemaCol)))
+    Columns.put(deficit, Seq("missed_clicks" ->
+      coalesce(missedClicks(col("ctr_deficit"), col("impressions"), col("intent_multiplier")),
+        lit(0.0))), drop = Set("ctr_median"))
   }
 }

@@ -180,15 +180,17 @@ object ExtensionQueries101 extends QueryGroup {
     * population counts N_h from the customer dim, respondents =
     * customers with ≥ 1 order, ȳ_h in milli, and the segment's
     * contribution N_h·ȳ_h·1000 div N to the adjusted estimate in
-    * micro. Scale shape: one order rollup joined to the broadcast
-    * customer dim, 5-group fold, 1-row population total broadcast.
+    * micro. Scale shape: one order rollup left-joined to the customer dim
+    * (a shuffle join: Spark cannot build the preserved side of a left
+    * join, and the rollup grows with the customers), 5-group fold, 1-row
+    * population total broadcast.
     */
   def q396_post_stratified(s: SparkSession, dir: String): DataFrame = {
     val pop = Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val resp = Tables.orders(s, dir)
       .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-    val seg = broadcast(pop).join(resp, col("c_custkey") === col("o_custkey"), "left")
+    val seg = pop.join(resp, col("c_custkey") === col("o_custkey"), "left")
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_pop"),
         sum(when(col("n_orders").isNotNull, 1L).otherwise(0L)).as("n_resp"),

@@ -64,20 +64,14 @@ class ContractSpec extends SparkSpecBase {
     val qs = SparkEntry.queries.keySet
     val os = SparkEntry.oracleSql.keySet
     assert(os.subsetOf(qs), s"orphan oracles: ${os.diff(qs)}")
-    // the q38/q70 mirrors embed the trained centroids, so their entries
-    // exist only after a query has trained the dir's model (Verify's order
-    // guarantees that in the driver gate). Everything else always carries
-    // its DuckDB oracle — since round 6 that includes the sketch tier
-    // (certified exact-plus-boolean rows, round-5 verdict ask #2).
-    assert(qs.diff(os).subsetOf(
-      Set("q38_ann_ivf", "q70_semdedup", "q93_ann_ivfpq", "q100_pca_project",
-        "q112_bpe_tokens", "q54_token_packing", "q113_ann_filtered",
-        "q285_ivfpq_persisted", "q286_bpe_persisted", "q287_pca_persisted",
-        "q290_ivf_utilization",
-        // round-16 generation-drift tier: mirrors embed BOTH trained
-        // generations' literals, so they too resolve only post-training
-        "q490_bpe_generation_drift", "q491_ivf_rebuild_churn",
-        "q492_pq_rebuild_quality")),
+    // a model-backed mirror (Oracle.Model) embeds the trained model's
+    // literals, so its entry exists only after a query has trained the
+    // dir's model (Verify's order guarantees that in the driver gate).
+    // Everything else always carries its DuckDB oracle, the sketch tier
+    // included (certified exact-plus-boolean rows).
+    val modelBacked = groups.flatMap(_._2.entries).collect { case Query(n, _, _: Oracle.Model) => n }.toSet
+    assert(modelBacked.nonEmpty)
+    assert(qs.diff(os).subsetOf(modelBacked),
       s"unexpected rows-only queries: ${qs.diff(os)}")
     ExtensionQueries2.q38_ann_ivf(spark, "/root/testdata/sf0.001").count()
     ExtensionQueries6.q93_ann_ivfpq(spark, "/root/testdata/sf0.001").count()

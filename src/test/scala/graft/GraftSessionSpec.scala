@@ -26,6 +26,32 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
     assert(conf.get("spark.ui.enabled") == "false")
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.sparkContext.getConf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
+  }
+
+  test("a reliable checkpoint's files are deleted once its frame is unreachable") {
+    val dir = Files.createTempDirectory("graft_ckpt_reap")
+    def rddDirs: Seq[Path] = {
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.filter(_.getFileName.toString.startsWith("rdd-")).toSeq
+      finally walk.close()
+    }
+    spark.conf.set(graft.core.Ckpt.DirKey, dir.toString)
+    try {
+      var out = graft.core.Ckpt.eager(spark.range(50).toDF("id"))
+      assert(out.count() == 50)
+      assert(rddDirs.nonEmpty, s"nothing checkpointed under $dir")
+      out = null
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (rddDirs.nonEmpty && System.nanoTime() < deadline) {
+        System.gc()
+        Thread.sleep(200)
+      }
+      assert(rddDirs.isEmpty, s"checkpoint files left behind: ${rddDirs.mkString(", ")}")
+    } finally {
+      spark.conf.unset(graft.core.Ckpt.DirKey)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
   }
 
   private lazy val sources: Seq[Path] = {

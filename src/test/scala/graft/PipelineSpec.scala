@@ -125,6 +125,30 @@ class PipelineSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterAll {
     assert(rows.head.getAs[Double]("users") == 7.0)
   }
 
+  test("after a run only the returned frame's blocks stay resident") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = java.nio.file.Files.createTempDirectory("graft_pipe").toString
+    val m = Pipeline.run(spark, cfg, out)
+    // the returned frame is a checkpoint: one leaf over its stored RDD
+    val own = m.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    assert(own.size == 1 && own.subsetOf(sc.getPersistentRDDs.keySet))
+    // staged sources, the merge's inner cache and the debug frame go: the
+    // caches release after their last action, the unreachable staging
+    // checkpoints with the ContextCleaner
+    def leftovers = sc.getPersistentRDDs.keySet -- before -- own
+    val deadline = System.nanoTime() + 30e9.toLong
+    while (leftovers.nonEmpty && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(leftovers.isEmpty,
+      s"left resident: ${leftovers.flatMap(sc.getPersistentRDDs.get).map(_.toString)}")
+    assert(m.count() == 5)
+  }
+
   test("full run writes the four parquet sinks; ctr_debug is the pre-filter candidate set") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipe").toString
     Pipeline.run(spark, cfg, out)
