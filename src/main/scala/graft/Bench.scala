@@ -89,7 +89,11 @@ object Bench {
       System.err.println(f"[bench] preflight EXHAUSTED at factor ${pre.factor}%.2f - artifact stamped degraded_host")
     wallMark("preflight")
 
-    val pipeSamples: Seq[PipeSample] = try pipelineBench(spark, stage = sweep.stage)
+    // a subset sweep is a smoke: the 1M-row pipeline would be most of its
+    // wall, so it takes the no-samples path (phases -1, samples [])
+    val pipeSamples: Seq[PipeSample] =
+      if (onlySubset.nonEmpty) Seq.empty
+      else try pipelineBench(spark, stage = sweep.stage)
       catch { case e: Throwable =>
         // never abort the sweep for it, and never swallow it silently
         System.err.println(s"[bench] pipelineBench FAILED: $e")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
+import QueryBlocks.{dotSql, dotSqlDoubles, phSql}
 
 /** LLM-training-data pipeline operators (BASELINE.json north star): text
   * analysis, dedup family, similarity search, multimodal plumbing — over
@@ -14,12 +15,6 @@ import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
   * generated programmatically.
   */
 object ExtensionQueries extends QueryGroup {
-
-  /** DuckDB polyhash mirror over an arbitrary string SQL expression. */
-  private[queries] def phSql(e: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(range(1, length($e)+1), ch_i -> CAST(ascii(substring($e, ch_i, 1)) AS BIGINT))), " +
-      s"(ph_a, ph_b) -> (ph_a*31 + ph_b) % 1000000007)"
 
   /** q22: per-document text statistics + quality score (SURVEY north-star
     * text analysis). All signals integer-derived → deterministic doubles.
@@ -128,7 +123,7 @@ object ExtensionQueries extends QueryGroup {
     * survivors; a global row_number window here would funnel EVERY candidate
     * pair through one task.
     *
-    * REGIME BOUND (round-11 10×-rung kc≈0.90-0.91): every document must
+    * REGIME BOUND (10×-rung kc≈0.90-0.91): every document must
     * be shingled — Ω(total text bytes) map work before the index exists —
     * and the hot-shingle frequency cap (Dedup.jaccardPairs) keeps the
     * candidate join sub-quadratic, so the surviving term is the per-row
@@ -323,15 +318,11 @@ object ExtensionQueries extends QueryGroup {
   }
 
   val q30Sql: String = {
-    def fold(a: String, b: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a)+1), dp_i -> CAST($a[dp_i] AS DOUBLE) * CAST($b[dp_i] AS DOUBLE))), " +
-        s"(dp_x, dp_y) -> dp_x + dp_y)"
     s"""WITH p AS (SELECT vec_id AS probe_id, embedding AS pv FROM embeddings WHERE vec_id < 50),
        |c AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings),
        |s AS (
        |  SELECT probe_id, cand_id,
-       |    ${fold("pv", "cv")} / (sqrt(${fold("pv", "pv")}) * sqrt(${fold("cv", "cv")})) AS cos
+       |    ${dotSql("pv", "cv")} / (sqrt(${dotSql("pv", "pv")}) * sqrt(${dotSql("cv", "cv")})) AS cos
        |  FROM p CROSS JOIN c WHERE probe_id <> cand_id
        |)
        |SELECT probe_id,
@@ -371,15 +362,11 @@ object ExtensionQueries extends QueryGroup {
         s"list_transform(range(1, len(vec)+1), pr_i -> vec[pr_i] * ${hp(jj, "pr_i - 1")})), " +
         s"(pj_a, pj_b) -> pj_a + pj_b)"
     }
-    // bucket(t) = fold(acc*2 + bit) over j = Σ bit_j · 2^(nBits-1-j)
+    // bucket(t) = dotSqlDoubles(acc*2 + bit) over j = Σ bit_j · 2^(nBits-1-j)
     def bucket(t: Int): String =
       (0 until nBits).map { j =>
         s"(CASE WHEN ${proj(t, j)} > 0 THEN ${1L << (nBits - 1 - j)} ELSE 0 END)"
       }.mkString("(", " + ", ")")
-    def fold(a: String, b: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a)+1), dp_i -> $a[dp_i] * $b[dp_i])), " +
-        s"(dp_x, dp_y) -> dp_x + dp_y)"
     val bucketCols = (0 until tables).map(t => s"${bucket(t)} AS bkt$t").mkString(",\n    ")
     val peArms = (0 until tables).map(t =>
       s"SELECT vec_id, vec, $t AS tbl, bkt$t AS bucket FROM bk").mkString("\n  UNION ALL ")
@@ -395,7 +382,7 @@ object ExtensionQueries extends QueryGroup {
        |  $peArms
        |), hits AS (
        |  SELECT DISTINCT p.vec_id AS probe_id, c.vec_id AS cand_id,
-       |    ${fold("p.vec", "c.vec")} / (sqrt(${fold("p.vec", "p.vec")}) * sqrt(${fold("c.vec", "c.vec")})) AS cos
+       |    ${dotSqlDoubles("p.vec", "c.vec")} / (sqrt(${dotSqlDoubles("p.vec", "p.vec")}) * sqrt(${dotSqlDoubles("c.vec", "c.vec")})) AS cos
        |  FROM pe p JOIN pe c ON p.tbl = c.tbl AND p.bucket = c.bucket
        |  WHERE p.vec_id < 20 AND p.vec_id <> c.vec_id
        |)

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.{Bpe, IvfIndex, Similarity, TextAnalysis}
+import QueryBlocks.dotSql
 
-/** Round-7 batch: real BPE tokenization for the budget/packing tier
-  * (the round-6 verdict's ask #3). The merge table is trained once per
+/** Real BPE tokenization for the budget/packing tier. The merge table is trained once per
   * sf dir ([[bpeModel]], the q38/q93 memoization pattern) and the DuckDB
   * mirrors embed the learned merges as literals, replaying the greedy
   * merge loop with a recursive CTE over the corpus's DISTINCT pre-tokens
@@ -135,7 +135,7 @@ object ExtensionQueries10 extends QueryGroup {
     s"""WITH RECURSIVE ${bpeCtes(model)},
        |t AS (
        |  SELECT d.doc_id,
-       |    ${ExtensionQueries.phSql("CAST(d.doc_id AS VARCHAR)")} % 8 AS bucket,
+       |    ${QueryBlocks.phSql("CAST(d.doc_id AS VARCHAR)")} % 8 AS bucket,
        |    coalesce(b.n_bpe, 0) AS tokens
        |  FROM documents d LEFT JOIN bpe_doc b USING (doc_id)
        |), c AS (
@@ -203,15 +203,11 @@ object ExtensionQueries10 extends QueryGroup {
   }
 
   val q114Sql: String = {
-    def fold(a: String, b: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a)+1), dp_i -> CAST($a[dp_i] AS DOUBLE) * CAST($b[dp_i] AS DOUBLE))), " +
-        s"(dp_x, dp_y) -> dp_x + dp_y)"
     s"""WITH p AS (SELECT vec_id AS probe_id, embedding AS pv FROM embeddings WHERE vec_id < 20),
        |c AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings WHERE $annPredSql),
        |s AS (
        |  SELECT probe_id, cand_id,
-       |    ${fold("pv", "cv")} / (sqrt(${fold("pv", "pv")}) * sqrt(${fold("cv", "cv")})) AS cos
+       |    ${dotSql("pv", "cv")} / (sqrt(${dotSql("pv", "pv")}) * sqrt(${dotSql("cv", "cv")})) AS cos
        |  FROM p CROSS JOIN c WHERE probe_id <> cand_id
        |), topk AS (
        |  SELECT probe_id, cand_id,

@@ -1,18 +1,18 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ext.Dedup
 
-/** Round-14 batch 1: the q358 scale remedy, implemented and certified.
+/** The q358 scale remedy, implemented and certified.
   *
   * q358's blocked edit-distance dedup carries the Σ_b c_b² candidate
   * law (measured 200 → 19,706 candidates for 10× docs, kc ≈ 1.0 —
-  * the only at-linear entry of round 13). Its scaladoc named the fix
-  * — "a minhash band in the block key bounds c_b" — but no registered
-  * query demonstrated it (r13 verdict task #3). These two do:
+  * the only at-linear query on its scale rung). The fix is a minhash
+  * band in the block key, which bounds c_b. These two queries apply
+  * and certify it:
   *
   *  - q358b runs the SAME pair predicate (prefix Levenshtein ≤ 20
   *    within (lang, length-band, first-token) blocks) but sharpens the
@@ -101,7 +101,7 @@ object ExtensionQueries106 extends QueryGroup {
   /** Shared DuckDB CTE chain up to the banded candidate set (also the
     * feed of q430's transitivity audit in [[ExtensionQueries114]]). */
   private[queries] val candSql: String = {
-    val ph = ExtensionQueries.phSql("sh_s")
+    val ph = QueryBlocks.phSql("sh_s")
     s"""WITH d AS (
        |  SELECT doc_id, lang, n_chars // 100 AS band,
        |    string_split(text, ' ')[1] AS w1, text[:60] AS p

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.PrefixScan
+import QueryBlocks.spendBySegment
 
-/** Round-14 batch 2: rank-based inference and sequential revenue
+/** Rank-based inference and sequential revenue
   * diagnostics.
   *
   *  - q407 Kruskal–Wallis H across customer segments — the k-group
@@ -30,18 +31,6 @@ import graft.ops.PrefixScan
   */
 object ExtensionQueries107 extends QueryGroup {
 
-  /** Per-customer spend in whole dollars (q387's magnitude convention)
-    * with the customer's market segment.
-    */
-  private def spendBySegment(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"))),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("seg"), col("v"))
-
   // -------------------------------------------------------------- q407
 
   /** q407: Kruskal–Wallis H (milli) over per-customer spend by
@@ -58,6 +47,7 @@ object ExtensionQueries107 extends QueryGroup {
     */
   def q407_kruskal_wallis(s: SparkSession, dir: String): DataFrame = {
     val sp = spendBySegment(s, dir)
+      .select(col("seg"), col("v"))
     val vals = sp.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
     val ranked = PrefixScan.prefixSumsInclusive(vals, 16, Seq(col("v")),
         Seq((col("cnt"), "cumc")))

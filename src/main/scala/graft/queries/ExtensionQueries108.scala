@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.PrefixScan
+import QueryBlocks.spendBySegment
 
-/** Round-14 batch 3: sequential records, exact rank-percentile
+/** Sequential records, exact rank-percentile
   * surface, and robust variance-equality testing.
   *
   *  - q410 revenue record days — the days whose daily revenue beats
@@ -85,12 +86,7 @@ object ExtensionQueries108 extends QueryGroup {
     * integer ppm.
     */
   def q411_percent_rank_ppm(s: SparkSession, dir: String): DataFrame = {
-    val sp = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"))),
-        col("o_custkey") === col("c_custkey"))
+    val sp = spendBySegment(s, dir)
       .select(col("o_custkey").as("custkey"), col("seg"), col("v"))
     import org.apache.spark.sql.expressions.Window
     val bySeg = Window.partitionBy(col("seg")).orderBy(col("v"))
@@ -137,12 +133,7 @@ object ExtensionQueries108 extends QueryGroup {
     * fits a LONG; products stay inside DECIMAL(38,0) through sf1.
     */
   def q412_brown_forsythe(s: SparkSession, dir: String): DataFrame = {
-    val sp = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"))),
-        col("o_custkey") === col("c_custkey"))
+    val sp = spendBySegment(s, dir)
       .select(col("seg"), col("v"))
     // percentile_disc returns DOUBLE; the value is an exact data point
     // (whole dollars, far below 2^53), so the BIGINT cast is lossless

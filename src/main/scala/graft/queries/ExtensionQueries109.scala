@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ext.Dedup
+import QueryBlocks.spendBySegment
 
-/** Round-14 batch 4: intra-document repetition, matched-binary
+/** Intra-document repetition, matched-binary
   * treatment testing, and robust outlier fencing.
   *
   *  - q413 n-gram repetition stats — the Rae et al. (Gopher) style
@@ -59,7 +60,7 @@ object ExtensionQueries109 extends QueryGroup {
   }
 
   val q413Sql: String = {
-    val ph = ExtensionQueries.phSql("sh_s")
+    val ph = QueryBlocks.phSql("sh_s")
     s"""WITH hs AS (
        |  SELECT doc_id, source,
        |    list_transform(list_transform(range(1, len(string_split(text, ' ')) - 1),
@@ -154,12 +155,7 @@ object ExtensionQueries109 extends QueryGroup {
     * broadcast-joined counting pass.
     */
   def q415_tukey_fences(s: SparkSession, dir: String): DataFrame = {
-    val sp = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"))),
-        col("o_custkey") === col("c_custkey"))
+    val sp = spendBySegment(s, dir)
       .select(col("seg"), col("v"))
     val fences = sp.groupBy(col("seg"))
       .agg(expr("CAST(percentile_disc(0.25) WITHIN GROUP (ORDER BY v) AS BIGINT)").as("q1"),

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.{SetSimJoin, SortedNeighborhood}
 import graft.ops.{CoPurchase, LinkPredict}
+import QueryBlocks.{JaccPpm, MinOverlap, shingles3, tokCte}
 
-/** Round-7 second batch: the remaining classical candidate-generation
+/** The remaining classical candidate-generation
   * schemes around the exact set join — absolute-overlap/containment
   * (q116, the T-occurrence member of the prefix family), sorted-
   * neighborhood blocking (q117, the sort-based scheme that needs no
@@ -20,32 +21,7 @@ import graft.ops.{CoPurchase, LinkPredict}
   */
 object ExtensionQueries11 extends QueryGroup {
 
-  /** 3-word shingles of the documents table — q109's element sets
-    * (duplicated here deliberately: each query file stays
-    * self-contained the way the oracle SQL is).
-    */
-  private def shingles3(s: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    Tables.documents(s, dir)
-      .filter(size(toks) >= 3)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), size(toks) - 3),
-          i => array_join(slice(toks, i + 1, lit(3)), " "))).as("sh"))
-  }
-
-  private val tokCte: String = {
-    val toks = "string_split(text, ' ')"
-    s"""tok AS (
-       |  SELECT DISTINCT doc_id AS id,
-       |    unnest(list_transform(range(1, len($toks) - 1),
-       |      sh_i -> array_to_string(list_slice($toks, sh_i, sh_i + 2), ' '))) AS tok
-       |  FROM documents WHERE len($toks) >= 3
-       |)""".stripMargin
-  }
-
   // --------------------------------------------------------------- q116
-
-  private val MinOverlap = 20
 
   /** q116: absolute-overlap join ([[graft.ext.SetSimJoin.overlapJoin]])
     * at |A∩B| ≥ 20 shared 3-shingles — the containment detector (quote /
@@ -109,7 +85,6 @@ object ExtensionQueries11 extends QueryGroup {
 
   private val SnmW = 8
   private val SnmPrefixLen = 24
-  private val JaccPpm = 600000L
 
   /** q117: two-pass sorted-neighborhood dedup
     * ([[graft.ext.SortedNeighborhood]]) — candidates from rank windows
@@ -131,11 +106,9 @@ object ExtensionQueries11 extends QueryGroup {
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
       .distinct()
-    // candidate-scoped verification (round-19, verdict task #4). The old
-    // shape streamed candidates through a token-level equi-join — cand ⋈
-    // tok(id_a) explodes each pair by |set(id_a)|, re-shuffles that w·n ×
-    // |set| probe stream by (id_b, tok), and pair-aggregates it
-    // (attribution numbers in OPTIMIZATION_r19.md).
+    // candidate-scoped verification, never a token-level equi-join
+    // (cand ⋈ tok(id_a) would explode each pair by |set(id_a)| and
+    // re-shuffle that probe stream by (id_b, tok); OPTIMIZATION_r19.md).
     // SNM candidates are LINEAR in the corpus (w·n exactly, vs the
     // data-dependent collision streams of the prefix family), so the
     // per-doc shingle sets fit one array row each and the intersection

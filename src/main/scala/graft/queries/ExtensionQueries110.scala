@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.PrefixScan
+import QueryBlocks.spendBySegment
 
-/** Round-14 batch 5: robust location, ordered-trend testing, and
+/** Robust location, ordered-trend testing, and
   * rank-agreement closers.
   *
   *  - q416 winsorized mean — q272's trimmed mean DROPS the tails;
@@ -35,12 +36,7 @@ object ExtensionQueries110 extends QueryGroup {
     * clamp-and-sum pass.
     */
   def q416_winsorized_mean(s: SparkSession, dir: String): DataFrame = {
-    val sp = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"))),
-        col("o_custkey") === col("c_custkey"))
+    val sp = spendBySegment(s, dir)
       .select(col("seg"), col("v"))
     val bounds = sp.groupBy(col("seg"))
       .agg(expr("CAST(percentile_disc(0.05) WITHIN GROUP (ORDER BY v) AS BIGINT)").as("p05"),

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.Multimodal
 import graft.ops.PrefixScan
+import QueryBlocks.{spend, spendBySegment, spendByTreat}
 
-/** Round-14 batch 6: vision token budgeting and dispersion/effect-size
+/** Vision token budgeting and dispersion/effect-size
   * closers.
   *
   *  - q419 ViT patch-grid budgeting — the multimodal pre-tokenization
@@ -74,7 +75,7 @@ object ExtensionQueries111 extends QueryGroup {
   }
 
   val q419Sql: String = {
-    val ph = ExtensionQueries.phSql("text")
+    val ph = QueryBlocks.phSql("text")
     s"""WITH t AS (
        |  SELECT doc_id AS media_id, $ph AS hsh
        |  FROM documents WHERE doc_id % 3 = 0
@@ -113,9 +114,7 @@ object ExtensionQueries111 extends QueryGroup {
     * exact). gmd_milli = 2·S·1000 div (n(n−1)); rel ppm vs the mean.
     */
   def q420_gini_mean_difference(s: SparkSession, dir: String): DataFrame = {
-    val sp = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
+    val sp = spend(s, dir)
     val ranked = PrefixScan.prefixSumsInclusive(sp, 16,
       Seq(col("v"), col("o_custkey")), Seq((lit(1L), "i")))
     ranked.agg(count(lit(1)).as("n"), sum(col("v")).as("sv"),
@@ -158,12 +157,7 @@ object ExtensionQueries111 extends QueryGroup {
     * broadcast join.
     */
   def q421_robust_shape(s: SparkSession, dir: String): DataFrame = {
-    val sp = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"))),
-        col("o_custkey") === col("c_custkey"))
+    val sp = spendBySegment(s, dir)
       .select(col("seg"), col("v"))
     val quart = sp.groupBy(col("seg"))
       .agg(count(lit(1)).as("n_customers"),
@@ -218,12 +212,7 @@ object ExtensionQueries111 extends QueryGroup {
     * reused on a two-group split.
     */
   def q422_cliffs_delta(s: SparkSession, dir: String): DataFrame = {
-    val sp = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), (col("c_mktsegment") === "BUILDING").as("treat"))),
-        col("o_custkey") === col("c_custkey"))
+    val sp = spendByTreat(s, dir)
       .select(col("treat"), col("v"))
     val vals = sp.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
     val ranked = PrefixScan.prefixSumsInclusive(vals, 16, Seq(col("v")),

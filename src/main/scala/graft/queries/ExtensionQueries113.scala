@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.{CoPurchase, PrefixScan}
+import QueryBlocks.spendByTreat
 
-/** Round-14 batch 8: prefix-duplicate mining, graph core wealth, and
+/** Prefix-duplicate mining, graph core wealth, and
   * the third ECDF distance.
   *
   *  - q426 prefix-duplicate pairs — documents that are a strict
@@ -58,7 +59,7 @@ object ExtensionQueries113 extends QueryGroup {
   }
 
   val q426Sql: String = {
-    val ph = ExtensionQueries.phSql("array_to_string(list_slice(string_split(text, ' '), 1, 6), ' ')")
+    val ph = QueryBlocks.phSql("array_to_string(list_slice(string_split(text, ' '), 1, 6), ' ')")
     s"""WITH d AS (
        |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len, $ph AS k6
        |  FROM documents WHERE len(string_split(text, ' ')) >= 6
@@ -144,12 +145,7 @@ object ExtensionQueries113 extends QueryGroup {
     * not a global lead window). Reported in milli-dollars.
     */
   def q428_wasserstein(s: SparkSession, dir: String): DataFrame = {
-    val sp = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), (col("c_mktsegment") === "BUILDING").as("treat"))),
-        col("o_custkey") === col("c_custkey"))
+    val sp = spendByTreat(s, dir)
       .select(col("treat"), col("v"))
     val vals = sp.groupBy(col("v"))
       .agg(sum(when(col("treat"), 1L).otherwise(0L)).as("ca"),

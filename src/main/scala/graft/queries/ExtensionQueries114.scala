@@ -3,10 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.ops.PrefixScan
+import QueryBlocks.spend
 
-/** Round-14 batch 9: L-moments and the dedup-closure audit.
+/** L-moments and the dedup-closure audit.
   *
   *  - q429 L-moments (Hosking 1990) of customer spend — ℓ₁, ℓ₂ and
   *    the L-skewness/L-kurtosis ratios τ₃, τ₄: the order-statistics
@@ -39,9 +39,7 @@ object ExtensionQueries114 extends QueryGroup {
     * stays inside DECIMAL(38,0) through sf1 (~10²⁶).
     */
   def q429_l_moments(s: SparkSession, dir: String): DataFrame = {
-    val sp = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
+    val sp = spend(s, dir)
     val ranked = PrefixScan.prefixSumsInclusive(sp, 16,
       Seq(col("v"), col("o_custkey")), Seq((lit(1L), "i")))
     val sums = ranked.agg(count(lit(1)).as("n"),
@@ -97,11 +95,9 @@ object ExtensionQueries114 extends QueryGroup {
     * wedges (10⁶ when there are no wedges — an empty obligation is
     * met).
     *
-    * Feed (round-15, the r14 verdict's task #4): the pair set is
-    * q358b's BANDED path — the production dedup — not q358's exact
-    * Σc² block join the audit embedded in round 14 (which made this
-    * query's kc 0.56 by re-running the certificate-tier join it was
-    * auditing). q358c proves banded == exact pairs (recall_ppm =
+    * Feed: the pair set is q358b's BANDED path — the production
+    * dedup — not q358's exact Σc² block join (re-running the
+    * certificate-tier join it audits put this query's kc at 0.56). q358c proves banded == exact pairs (recall_ppm =
     * precision_ppm = 10⁶ at both SFs), and
     * `ExtensionQueries114Spec` asserts the two pair SETS are equal
     * outright, so the audited graph is unchanged — only its

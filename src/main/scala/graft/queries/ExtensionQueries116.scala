@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.PrefixScan
+import QueryBlocks.spendByTreat
 
-/** Round-14 batch 11: stylometry, sequence randomness, and rater
+/** Stylometry, sequence randomness, and rater
   * concordance.
   *
   *  - q432 Burrows' delta (MAD-robust variant) — the stylometric
@@ -106,12 +107,7 @@ object ExtensionQueries116 extends QueryGroup {
     * pins cross-group ties by custkey (documented convention).
     */
   def q433_two_sample_runs(s: SparkSession, dir: String): DataFrame = {
-    val sp = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), (col("c_mktsegment") === "BUILDING").as("treat"))),
-        col("o_custkey") === col("c_custkey"))
+    val sp = spendByTreat(s, dir)
       .select(col("o_custkey"), col("v"), col("treat"))
     val ranked = PrefixScan.prefixSumsInclusive(sp, 16,
       Seq(col("v"), col("o_custkey")), Seq((lit(1L), "i")))

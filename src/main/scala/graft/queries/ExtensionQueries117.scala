@@ -3,10 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.ops.PrefixScan
+import QueryBlocks.spendByTreat
 
-/** Round-14 batch 12: the CART split primitive.
+/** The CART split primitive.
   *
   *  - q435 decision stump — the best single Gini split of customer
   *    spend predicting BUILDING membership: the inner loop of every
@@ -34,12 +34,7 @@ object ExtensionQueries117 extends QueryGroup {
     * per-split rescan.
     */
   def q435_decision_stump(s: SparkSession, dir: String): DataFrame = {
-    val sp = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), (col("c_mktsegment") === "BUILDING").as("treat"))),
-        col("o_custkey") === col("c_custkey"))
+    val sp = spendByTreat(s, dir)
       .select(col("treat"), col("v"))
     val vals = sp.groupBy(col("v"))
       .agg(count(lit(1)).as("cnt"),

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import QueryBlocks.spendBySegment
 
-/** Round-15 batch 1: categorical association and a classical trend
+/** Categorical association and a classical trend
   * closer — the contingency-table tier (independence, location shift on
   * categories, ordinal association) the inference family lacked.
   *
@@ -120,12 +121,7 @@ object ExtensionQueries118 extends QueryGroup {
     * row: k, N, the median, χ²_milli.
     */
   def q437_mood_median_test(s: SparkSession, dir: String): DataFrame = {
-    val sp = Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(expr("sum(CAST(round(o_totalprice * 100) AS BIGINT)) div 100").as("v"))
-      .join(broadcast(Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_mktsegment").as("seg"))),
-        col("o_custkey") === col("c_custkey"))
+    val sp = spendBySegment(s, dir)
       .select(col("seg"), col("v"))
     val med = sp.agg(
       expr("CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY v) AS BIGINT)").as("med"))

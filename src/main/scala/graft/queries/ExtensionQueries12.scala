@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.{Similarity, Winnowing}
 import graft.ops.CoPurchase
+import QueryBlocks.dotSql
 
-/** Round-7 fourth batch: position-aware fingerprinting and hybrid
+/** Position-aware fingerprinting and hybrid
   * retrieval — the two curation primitives that sit directly on top of
   * operators already certified (q24's document hash, q124's BM25,
   * q30's cosine ranking).
@@ -120,10 +121,6 @@ object ExtensionQueries12 extends QueryGroup {
 
   val q127Sql: String = {
     val terms = ExtensionQueries11.Bm25Query.map(t => s"'$t'").mkString(", ")
-    def fold(a: String, b: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a)+1), dp_i -> CAST($a[dp_i] AS DOUBLE) * CAST($b[dp_i] AS DOUBLE))), " +
-        s"(dp_x, dp_y) -> dp_x + dp_y)"
     s"""WITH toks AS (
        |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
        |), dl AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
@@ -152,8 +149,8 @@ object ExtensionQueries12 extends QueryGroup {
        |  SELECT embedding AS pv FROM embeddings WHERE vec_id = 0
        |), cos AS (
        |  SELECT vec_id AS doc_id,
-       |    ${fold("pv", "embedding")} /
-       |      (sqrt(${fold("pv", "pv")}) * sqrt(${fold("embedding", "embedding")})) AS cos
+       |    ${dotSql("pv", "embedding")} /
+       |      (sqrt(${dotSql("pv", "pv")}) * sqrt(${dotSql("embedding", "embedding")})) AS cos
        |  FROM embeddings CROSS JOIN p WHERE vec_id <> 0
        |), vec AS (
        |  SELECT doc_id,
@@ -205,11 +202,9 @@ object ExtensionQueries12 extends QueryGroup {
     */
   private val CcOracleRounds = 6
 
-  /** Bounded-iteration mirror (round-16 verdict task #3). The previous
-    * recursive-CTE closure materialized `reach` = all (node, reachable)
-    * pairs — O(n²) rows on a giant component, which is why the sf0.1
-    * sweep's one ORACLE_TIMEOUT was this query (>35 min in DuckDB while
-    * Spark finished in seconds). This form runs the SAME algorithm the
+  /** Bounded-iteration mirror. A recursive-CTE closure would materialize `reach` = all (node, reachable)
+    * pairs — O(n²) rows on a giant component (>35 min in DuckDB at
+    * sf0.1 while Spark finishes in seconds). This form runs the SAME algorithm the
     * Spark side runs — min-label propagation with path compression —
     * as [[CcOracleRounds]] unrolled CTE pairs, each O(|E|): per round,
     * every node takes the min of its own and its neighbors' labels, then

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.PrefixScan
+import QueryBlocks.FuncWords
 
-/** Round-15 batch 4: classifier-quality readouts — calibration and
+/** Classifier-quality readouts — calibration and
   * targeting economics. q178's AUC answers "does the score rank well";
   * these answer the two questions deployment actually asks next: can
   * the score's VALUE be read as a probability (q446), and how much of
@@ -29,11 +30,6 @@ import graft.ops.PrefixScan
   * All integer-exact; per-bucket truncation conventions stated inline.
   */
 object ExtensionQueries121 extends QueryGroup {
-
-  /** the 10-word English function-word list the score counts — a crude
-    * lang-ID on purpose: calibration is interesting when the classifier
-    * is imperfect */
-  private val FuncWords = Seq("the", "of", "and", "to", "in", "a", "is", "that", "it", "for")
 
   // -------------------------------------------------------------- q446
 

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.PrefixScan
+import QueryBlocks.FuncWords
 
-/** Round-15 batch 5: threshold selection and population estimation —
+/** Threshold selection and population estimation —
   * the operating-point questions downstream of q446's calibration and
   * q447's gains table.
   *
@@ -40,8 +41,6 @@ import graft.ops.PrefixScan
   * final BIGINT div — the magnitude convention from q440.
   */
 object ExtensionQueries122 extends QueryGroup {
-
-  private val FuncWords = Seq("the", "of", "and", "to", "in", "a", "is", "that", "it", "for")
 
   // -------------------------------------------------------------- q448
 

@@ -3,9 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import QueryBlocks.{daily, DailySql}
 
-/** Round-15 batch 6: distribution-free series diagnostics on the daily
+/** Distribution-free series diagnostics on the daily
   * event series, completing the randomness/trend family (q386 Mann–
   * Kendall, q439 Cox–Stuart, q433 runs) with the two classical tests
   * that need NO ranks at all, the correlogram behind q440's scalar, and
@@ -32,15 +32,6 @@ import graft.core.Tables
   * (10⁶ div i; per-lag div) stated inline.
   */
 object ExtensionQueries123 extends QueryGroup {
-
-  /** daily event counts keyed by epoch day (ts is canonical long nanos) */
-  private def daily(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .groupBy(expr("ts div 1000 div 86400000000").as("day"))
-      .agg(count(lit(1)).as("n_ev"))
-
-  private val DailySql =
-    "SELECT epoch_us(ts) // 86400000000 AS day, count(*) AS n_ev FROM events GROUP BY 1"
 
   // -------------------------------------------------------------- q452
 

@@ -7,7 +7,7 @@ import graft.core.Tables
 import graft.ext.Dedup
 import graft.ops.PrefixScan
 
-/** Round-15 batch 7: corpus-composition diagnostics a training-data
+/** Corpus-composition diagnostics a training-data
   * pipeline reads before (de)duplicating or mixing — how fast new data
   * stops being new, what a dedup threshold would actually remove, how
   * non-Poisson the traffic is, and how much of each source exists
@@ -81,7 +81,7 @@ object ExtensionQueries124 extends QueryGroup {
        |  SELECT doc_id, unnest(list_distinct(list_transform(
        |    list_transform(range(1, len(string_split(text,' ')) - 1),
        |      sh_i -> array_to_string(list_slice(string_split(text,' '), sh_i, sh_i + 2), ' ')),
-       |    sh_s -> ${ExtensionQueries.phSql("sh_s")}))) AS sh
+       |    sh_s -> ${QueryBlocks.phSql("sh_s")}))) AS sh
        |  FROM documents WHERE len(string_split(text,' ')) >= 3
        |), ranked AS (
        |  SELECT doc_id, CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS i
@@ -110,17 +110,17 @@ object ExtensionQueries124 extends QueryGroup {
     * implicate, and that doc share of the whole corpus (ppm); j_ppm =
     * inter·10⁶ div (na + nb − inter) keeps the sweep integer-exact.
     *
-    * ROUND-16 REWORK (with q464/q478): every threshold in the grid is
-    * ≥ 0.5, so enumerating the FULL sub-cap pair index (measured
-    * ~quadratic at the sf1x rung) just to filter at 0.5 was the wrong
-    * generator; pairs now come from the PPJoin prefix-filtered exact
+    * Pair generator (shared with q464/q478): every threshold in the
+    * grid is ≥ 0.5, so the FULL sub-cap pair index (measured
+    * ~quadratic at the sf1x rung) would be the wrong generator; pairs
+    * come from the PPJoin prefix-filtered exact
     * join at t = 0.5 ([[graft.ext.SetSimJoin.jaccardJoin]]) — identical
     * pair set over exact string shingles, candidate mass tracking true
     * near-dup mass.
     */
   def q457_dedup_threshold_sweep(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
-    // shared staged frame (round-17): q109/q457/q464/q478 consume the
+    // shared staged frame: q109/q457/q464/q478 consume the
     // IDENTICAL t = 0.5 PPJoin pair frame; first consumer computes, the
     // rest replay the staged parquet (Bench lists all four as memoized)
     val pairs = ExtensionQueries9.ppjoinPairsStaged(s, dir)
@@ -252,7 +252,7 @@ object ExtensionQueries124 extends QueryGroup {
        |  SELECT source, doc_id, unnest(list_distinct(list_transform(
        |    list_transform(range(1, len(string_split(text,' ')) - 1),
        |      sh_i -> array_to_string(list_slice(string_split(text,' '), sh_i, sh_i + 2), ' ')),
-       |    sh_s -> ${ExtensionQueries.phSql("sh_s")}))) AS sh
+       |    sh_s -> ${QueryBlocks.phSql("sh_s")}))) AS sh
        |  FROM documents WHERE len(string_split(text,' ')) >= 3
        |), cells AS (
        |  SELECT sh, source, count(*) AS cnt FROM sh0 GROUP BY 1, 2

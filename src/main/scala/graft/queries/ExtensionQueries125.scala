@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.PrefixScan
+import QueryBlocks.{daily, DailySql, FuncWords}
 
-/** Round-15 batch 8: where (not whether) a series changed, and the
+/** Where (not whether) a series changed, and the
   * ranking/shift readouts next to the round's threshold tier.
   *
   *  - q460 Pettitt change-point test: the rank-based (Mann–Whitney
@@ -33,16 +34,6 @@ import graft.ops.PrefixScan
   * through ONE PrefixScan. All integer-exact.
   */
 object ExtensionQueries125 extends QueryGroup {
-
-  private def daily(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .groupBy(expr("ts div 1000 div 86400000000").as("day"))
-      .agg(count(lit(1)).as("n_ev"))
-
-  private val DailySql =
-    "SELECT epoch_us(ts) // 86400000000 AS day, count(*) AS n_ev FROM events GROUP BY 1"
-
-  private val FuncWords = Seq("the", "of", "and", "to", "in", "a", "is", "that", "it", "for")
 
   // -------------------------------------------------------------- q460
 

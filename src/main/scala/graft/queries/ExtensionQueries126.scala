@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.Dedup
 
-/** Round-15 batch 9: estimator-quality and tail/richness diagnostics —
+/** Estimator-quality and tail/richness diagnostics —
   * auditing the engine's own approximations (q464), the corpus's
   * unseen mass (q467), heavy tails (q465), and rank-based scale
   * difference (q466).
@@ -48,13 +48,11 @@ object ExtensionQueries126 extends QueryGroup {
     * pair count and mean signed error est − exact (ppm, truncated div).
     * est_ppm = matches·10⁶ div 64 over the 64-component signatures.
     *
-    * ROUND-16 REWORK (verdict task #5's audit found the defect): the r15
-    * form calibrated over the FULL sub-cap shingle pair index, and the
-    * sf1x ShuffleAudit rung measured that frame at 85× bytes for 10×
-    * docs (exp ≈ 1.9, 20 GB spill) — the hot-shingle cap does not bind
-    * below c = 1000, so mid-frequency shingles make the index
-    * quadratic. Calibration only matters where a DECISION can go wrong,
-    * so the pair frame is now the union of the two decision surfaces:
+    * Pair frame: calibrating over the FULL sub-cap shingle pair index
+    * is quadratic (the sf1x ShuffleAudit rung measured it at 85× bytes
+    * for 10× docs, exp ≈ 1.9, 20 GB spill — the hot-shingle cap does not
+    * bind below c = 1000). Calibration only matters where a DECISION can
+    * go wrong, so the pair frame is the union of the two decision surfaces:
     *  - exact side: PPJoin pairs at J ≥ [[CalibTPpm]] (prefix-filtered
     *    — the pairs a threshold dedup must keep; the false-NEGATIVE
     *    direction, where the estimator under-reads a true dup);
@@ -69,7 +67,7 @@ object ExtensionQueries126 extends QueryGroup {
   def q464_minhash_calibration(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
     val shingles = ExtensionQueries9.q109Shingles(s, dir)
-    // shared staged frame (round-17, see ExtensionQueries9.ppjoinPairsStaged)
+    // shared staged frame (see ExtensionQueries9.ppjoinPairsStaged)
     val exactPairs = ExtensionQueries9.ppjoinPairsStaged(s, dir, CalibTPpm)
       .select(col("id_a"), col("id_b"))
     // sigs feeds the plan three times (banding + both estimator joins)
@@ -131,7 +129,7 @@ object ExtensionQueries126 extends QueryGroup {
        |  SELECT doc_id, list_transform(
        |    list_transform(range(1, len($toks) - 1),
        |      sh_i -> array_to_string(list_slice($toks, sh_i, sh_i + 2), ' ')),
-       |    sh_s -> ${ExtensionQueries.phSql("sh_s")}) AS hashes
+       |    sh_s -> ${QueryBlocks.phSql("sh_s")}) AS hashes
        |  FROM documents WHERE len($toks) >= 3
        |), sg AS MATERIALIZED (
        |  SELECT doc_id, list_transform(range(0, 64), mh_i ->
@@ -317,7 +315,7 @@ object ExtensionQueries126 extends QueryGroup {
        |  SELECT lang, unnest(list_distinct(list_transform(
        |    list_transform(range(1, len($toks) - 1),
        |      sh_i -> array_to_string(list_slice($toks, sh_i, sh_i + 2), ' ')),
-       |    sh_s -> ${ExtensionQueries.phSql("sh_s")}))) AS sh
+       |    sh_s -> ${QueryBlocks.phSql("sh_s")}))) AS sh
        |  FROM documents WHERE len($toks) >= 3
        |), freq AS (
        |  SELECT lang, sh, count(*) AS f FROM sh0 GROUP BY 1, 2

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.PrefixScan
+import QueryBlocks.FuncWords
 
-/** Round-15 batch 11: nominal prediction strength, the signed MCC,
+/** Nominal prediction strength, the signed MCC,
   * ordered-dose trend, and the L2 change point — closing four named
   * gaps next to their already-registered neighbors.
   *
@@ -34,8 +35,6 @@ import graft.ops.PrefixScan
   * day-window-bounded triangular broadcast join (30×30).
   */
 object ExtensionQueries128 extends QueryGroup {
-
-  private val FuncWords = Seq("the", "of", "and", "to", "in", "a", "is", "that", "it", "for")
 
   // -------------------------------------------------------------- q472
 

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.PrefixScan
+import QueryBlocks.FuncWords
 
-/** Round-15 batch 12: probabilistic-forecast decomposition, THE rank
+/** Probabilistic-forecast decomposition, THE rank
   * correlation, dedup locality, and the experiment guardrail.
   *
   *  - q476 Brier score with Murphy decomposition: the proper-score
@@ -35,8 +36,6 @@ import graft.ops.PrefixScan
   * Products ride DECIMAL(38,0) (HUGEINT mirror).
   */
 object ExtensionQueries129 extends QueryGroup {
-
-  private val FuncWords = Seq("the", "of", "and", "to", "in", "a", "is", "that", "it", "for")
 
   // -------------------------------------------------------------- q476
 
@@ -200,19 +199,18 @@ object ExtensionQueries129 extends QueryGroup {
     * length(bin(|id_a − id_b|)) = floor(log2 d) + 1 (d ≥ 1 — distinct
     * ids). Per bucket: pairs, min/max distance, share_ppm.
     *
-    * ROUND-16 REWORK: pair enumeration moved from q26's capped inverted
-    * index (sub-cap pair mass measured ~quadratic at the sf1x rung —
-    * 85× bytes for 10× docs, see PLANS round-16) to the PPJoin
-    * prefix-filtered exact join ([[graft.ext.SetSimJoin.jaccardJoin]],
-    * q109's certified operator): at t = 0.5 only the rarest ~half of
+    * Pair enumeration is the PPJoin prefix-filtered exact join
+    * ([[graft.ext.SetSimJoin.jaccardJoin]], q109's certified operator),
+    * not q26's capped inverted index, whose sub-cap pair mass measured
+    * ~quadratic at the sf1x rung (85× bytes for 10× docs): at t = 0.5 only the rarest ~half of
     * each shingle set is indexed and the positional filter prunes
     * before verification, so candidate mass tracks the TRUE near-dup
     * mass instead of the corpus's shared-common-shingle mass. Exact
-    * string-shingle Jaccard (no hash, no cap) — the same pair set, now
+    * string-shingle Jaccard (no hash, no cap) — the same pair set,
     * from the generator that survives the next rung.
     */
   def q478_dup_locality(s: SparkSession, dir: String): DataFrame = {
-    // shared staged frame (round-17, see ExtensionQueries9.ppjoinPairsStaged)
+    // shared staged frame (see ExtensionQueries9.ppjoinPairsStaged)
     val pairs = ExtensionQueries9.ppjoinPairsStaged(s, dir)
       .select((col("id_b") - col("id_a")).as("d"))
       .select(expr("length(bin(d))").cast("long").as("bucket"), col("d"))

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import QueryBlocks.{daily, DailySql}
 
-/** Round-15 batch 13: distribution-free intervals and the survival
+/** Distribution-free intervals and the survival
   * curve q389 left to "the consumer".
   *
   *  - q480 exact order-statistic CI for the median of the daily event
@@ -35,14 +36,6 @@ import graft.core.Tables
   * stays in BIGINT for n_risk < 9·10¹² (stated).
   */
 object ExtensionQueries130 extends QueryGroup {
-
-  private def daily(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .groupBy(expr("ts div 1000 div 86400000000").as("day"))
-      .agg(count(lit(1)).as("n_ev"))
-
-  private val DailySql =
-    "SELECT epoch_us(ts) // 86400000000 AS day, count(*) AS n_ev FROM events GROUP BY 1"
 
   /** SQL-fragment C(n, k) as an exact integer fold (q439's idiom). */
   private def binomSpark(m: String, j: String): String =

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import QueryBlocks.{daily, DailySql}
 
-/** Round-15 batch 14: residual diagnostics, the seasonal trend test,
+/** Residual diagnostics, the seasonal trend test,
   * agreement asymmetry, and a fully ENUMERATED exact inference.
   *
   *  - q484 Durbin–Watson on weekday-adjusted residuals: q440's lag-1
@@ -31,14 +32,6 @@ import graft.core.Tables
   * triangles, a 5×5 cell frame, and a 4096×12 mask grid.
   */
 object ExtensionQueries131 extends QueryGroup {
-
-  private def daily(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .groupBy(expr("ts div 1000 div 86400000000").as("day"))
-      .agg(count(lit(1)).as("n_ev"))
-
-  private val DailySql =
-    "SELECT epoch_us(ts) // 86400000000 AS day, count(*) AS n_ev FROM events GROUP BY 1"
 
   // -------------------------------------------------------------- q484
 

@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ext.{Bpe, IvfIndex, ModelStore, Multimodal, Similarity}
+import QueryBlocks.centroidDistSql
 
-/** Round-16 batch: the two thinnest tiers get end-to-end depth (r15
-  * verdict task #8 — multimodal had 3 queries, model-lifecycle 3; the
-  * verdict named both additions below explicitly).
+/** End-to-end depth for the multimodal and model-lifecycle tiers.
   *
   *  - q488 image dedup END-TO-END on the binary column: payload →
   *    perceptual aHash → banded LSH candidate join → exact Hamming
@@ -87,7 +86,7 @@ object ExtensionQueries132 extends QueryGroup {
     * `bands` feeds the plan THREE times (the exploded index plus both
     * verification sides) over a mapPartitions aHash-decode leaf — the
     * scoped cache makes the decode provably run once per action
-    * (round-16 verdict task #7; the q140 pattern). */
+    * (the q140 pattern). */
   private[queries] def dupPairs(s: SparkSession, dir: String): DataFrame = {
     val bands = graft.core.CacheScope.scoped(imageBands(s, dir))
     val e = bandIndex(bands)
@@ -302,14 +301,10 @@ object ExtensionQueries132 extends QueryGroup {
       .map { case (c, i) => s"($i, " +
         c.map(ExtensionQueries6.dLit).mkString("CAST([", ", ", "] AS DOUBLE[]))") }
       .mkString(",\n  ")
-    def dist(v: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($v)+1), dq_i -> ($v[dq_i] - cv[dq_i]) * ($v[dq_i] - cv[dq_i]))), " +
-        s"(dq_x, dq_y) -> dq_x + dq_y)"
     def assign(cent: String, out: String): String =
       s"""SELECT vec_id, ci AS $out FROM (
          |  SELECT vec_id, ci,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY ${dist("cvec")}, ci) AS rn
+         |    row_number() OVER (PARTITION BY vec_id ORDER BY ${centroidDistSql("cvec")}, ci) AS rn
          |  FROM c CROSS JOIN $cent) WHERE rn = 1""".stripMargin
     s"""WITH cent1(ci, cv) AS (VALUES
        |  ${cents(g1)}),

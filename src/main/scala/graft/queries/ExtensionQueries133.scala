@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ext.{ModelStore, Multimodal, PqIndex}
+import QueryBlocks.subDistSql
 
-/** Round-16 batch 2: closing depth in the same two thin tiers as
-  * batch 1 (q488–q491).
+/** More multimodal and model-lifecycle depth, beside q488–q491.
   *
   *  - q492 PQ rebuild quality: generation-1 codebooks (trained on the
   *    even-id half) vs generation-2 (full corpus, q93's model), both
@@ -83,20 +83,15 @@ object ExtensionQueries133 extends QueryGroup {
           .mkString("CAST([", ", ", "] AS DOUBLE[]))"))
         .mkString(",\n  ")
     val sd = g1.subDim
-    def subDist(v: String, miExpr: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, $sd + 1), pq_j -> " +
-        s"($v[$miExpr * $sd + pq_j] - bv[pq_j]) * ($v[$miExpr * $sd + pq_j] - bv[pq_j]))), " +
-        s"(pq_x, pq_y) -> pq_x + pq_y)"
     s"""WITH b1(mi, ki, bv) AS (VALUES
        |  ${books(g1)}),
        |b2(mi, ki, bv) AS (VALUES
        |  ${books(g2)}),
        |c AS (SELECT vec_id, list_transform(range(1, len(embedding)+1),
        |  cv_i -> CAST(embedding[cv_i] AS DOUBLE)) AS cvec FROM embeddings),
-       |d1 AS (SELECT vec_id, b.mi, min(${subDist("cvec", "b.mi")}) AS d1
+       |d1 AS (SELECT vec_id, b.mi, min(${subDistSql("cvec", "b.mi", sd)}) AS d1
        |  FROM c CROSS JOIN b1 b GROUP BY vec_id, b.mi),
-       |d2 AS (SELECT vec_id, b.mi, min(${subDist("cvec", "b.mi")}) AS d2
+       |d2 AS (SELECT vec_id, b.mi, min(${subDistSql("cvec", "b.mi", sd)}) AS d2
        |  FROM c CROSS JOIN b2 b GROUP BY vec_id, b.mi)
        |SELECT mi AS subspace, count(*) AS n_vecs,
        |  CAST(sum(CASE WHEN d2 < d1 THEN 1 ELSE 0 END) AS BIGINT) AS n_better,
@@ -133,7 +128,7 @@ object ExtensionQueries133 extends QueryGroup {
   }
 
   val q493Sql: String = {
-    val ph = ExtensionQueries.phSql("text")
+    val ph = QueryBlocks.phSql("text")
     s"""WITH t AS (
        |  SELECT doc_id AS media_id, doc_id % 3 AS k3, $ph AS hsh
        |  FROM documents

@@ -3,12 +3,12 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
 import graft.ext.SetSimJoin
+import QueryBlocks.{MinOverlap, shingles3, tokCte}
 
-/** Round-18: the certified hot-token hybrid for the exact overlap join
-  * (round-17 verdict task #1 — "at a 100× corpus with any hot-token
-  * mass, q116 as written dies in the candidate stage").
+/** The certified hot-token hybrid for the exact overlap join: at a
+  * 100× corpus with any hot-token mass, q116 as written dies in the
+  * candidate stage.
   *
   * q116's sf1x rung proved the defect this pair answers: 10.8× shuffle
   * bytes (linear) but 28.5 GB spill and 88× task time at 10× data —
@@ -36,36 +36,12 @@ import graft.ext.SetSimJoin
   */
 object ExtensionQueries136 extends QueryGroup {
 
-  /** q116's floor — the hybrid answers the SAME query. */
-  private val MinOverlap = 20
-
   /** Posting-list length cap splitting cold (exact prefix join) from hot
     * (excluded from generation, measured by q498). 64 matches the aHash
     * [[ExtensionQueries132.HotBandCap]] discipline and sits 2.5× above
     * the corpus's sf0.1 maximum, so the cap engages only past the scale
     * where the exact form's candidate stage was proven quadratic. */
   private[graft] val HybridHotCap = 64L
-
-  /** q109/q116's 3-word shingle frame (each query file self-contained,
-    * like its oracle SQL). */
-  private def shingles3(s: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    Tables.documents(s, dir)
-      .filter(size(toks) >= 3)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), size(toks) - 3),
-          i => array_join(slice(toks, i + 1, lit(3)), " "))).as("sh"))
-  }
-
-  private val tokCte: String = {
-    val toks = "string_split(text, ' ')"
-    s"""tok AS (
-       |  SELECT DISTINCT doc_id AS id,
-       |    unnest(list_transform(range(1, len($toks) - 1),
-       |      sh_i -> array_to_string(list_slice($toks, sh_i, sh_i + 2), ' '))) AS tok
-       |  FROM documents WHERE len($toks) >= 3
-       |)""".stripMargin
-  }
 
   /** freq → ranked CTE pair shared by both mirrors: the same global
     * (cnt, tok) order, within-set rank, and full set size the engine's

@@ -7,14 +7,12 @@ import graft.core.Tables
 import graft.ext.TextAnalysis
 import graft.streaming.CurationChain
 
-/** Round-18: the composed-curation ADMISSION frame (round-17 verdict
-  * task #5's "one registered batch-equivalent query if a new frame
-  * shape emerges" — it does: q496 certifies the batch chain as a
+/** The composed-curation ADMISSION frame: q496 certifies the batch chain as a
   * 6-row WATERFALL over a corpus being curated; q499 is the PER-DOC
   * verdict frame of the same chain run as an ingestion gate against a
   * stored corpus, the form [[graft.streaming.CurationChain]] evaluates
   * incrementally and StreamingCurationChainSpec certifies stream ≡
-  * batch on).
+  * batch on.
   *
   * Fixture (the q99 doctored-delta recipe, so every stage provably
   * fires at both SFs): eval = docs 0–9, stored corpus = docs 10–99,
@@ -67,7 +65,7 @@ object ExtensionQueries137 extends QueryGroup {
     val toks = "string_split(text, ' ')"
     val sh3 = s"list_transform(range(1, len($toks) - 1), " +
       s"sh_i -> array_to_string(list_slice($toks, sh_i, sh_i + 2), ' '))"
-    val hashed = s"list_transform($sh3, sh_s -> ${ExtensionQueries.phSql("sh_s")})"
+    val hashed = s"list_transform($sh3, sh_s -> ${QueryBlocks.phSql("sh_s")})"
     s"""WITH d AS (SELECT doc_id, text FROM documents),
        |ev AS (SELECT doc_id, text FROM d WHERE doc_id < 10),
        |corpus AS (SELECT doc_id, text FROM d WHERE doc_id >= 10 AND doc_id < 100),

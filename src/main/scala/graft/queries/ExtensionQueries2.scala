@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.{IvfIndex, Similarity}
+import QueryBlocks.{centroidDistSql, dotSql, dotSqlDoubles}
 
 /** Embedding-dedup and learned-index ANN — the remaining north-star
   * similarity operators.
@@ -29,8 +30,8 @@ object ExtensionQueries2 extends QueryGroup {
       .select((col("vec_id") + 100000L).as("vec_id"), col("vec"))
     // one tiny cached frame with norms precomputed: both sides of the
     // nested-loop pair join read the 100-row cache instead of re-deriving
-    // scan→cast→jitter→norm per side (round-3 bench regression — the norm
-    // recompute rode the non-equi join's build side)
+    // scan→cast→jitter→norm per side (the norm recompute would ride the
+    // non-equi join's build side)
     val all = base.union(jit)
       .withColumn("n", Similarity.norm(col("vec")))
       .transform(graft.core.CacheScope.scoped)
@@ -47,10 +48,6 @@ object ExtensionQueries2 extends QueryGroup {
   }
 
   val q37Sql: String = {
-    def fold(a: String, b: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a)+1), dp_i -> $a[dp_i] * $b[dp_i])), " +
-        s"(dp_x, dp_y) -> dp_x + dp_y)"
     s"""WITH base AS (
        |  SELECT vec_id, list_transform(range(1, len(embedding)+1),
        |    cv_i -> CAST(embedding[cv_i] AS DOUBLE)) AS vec
@@ -65,9 +62,9 @@ object ExtensionQueries2 extends QueryGroup {
        |), a AS (SELECT vec_id, vec FROM base
        |         UNION ALL SELECT new_id AS vec_id, vec FROM jit)
        |SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-       |  ${fold("x.vec", "y.vec")} / (sqrt(${fold("x.vec", "x.vec")}) * sqrt(${fold("y.vec", "y.vec")})) AS cos
+       |  ${dotSqlDoubles("x.vec", "y.vec")} / (sqrt(${dotSqlDoubles("x.vec", "x.vec")}) * sqrt(${dotSqlDoubles("y.vec", "y.vec")})) AS cos
        |FROM a x JOIN a y ON x.vec_id < y.vec_id
-       |WHERE ${fold("x.vec", "y.vec")} / (sqrt(${fold("x.vec", "x.vec")}) * sqrt(${fold("y.vec", "y.vec")})) >= 0.98
+       |WHERE ${dotSqlDoubles("x.vec", "y.vec")} / (sqrt(${dotSqlDoubles("x.vec", "x.vec")}) * sqrt(${dotSqlDoubles("y.vec", "y.vec")})) >= 0.98
        |ORDER BY id_a, id_b""".stripMargin
   }
 
@@ -111,14 +108,6 @@ object ExtensionQueries2 extends QueryGroup {
     val cents = model.centroids.zipWithIndex
       .map { case (c, i) => s"($i, " + c.map(ExtensionQueries6.dLit).mkString("CAST([", ", ", "] AS DOUBLE[]))") }
       .mkString(",\n  ")
-    def fold(a: String, b: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a)+1), dp_i -> $a[dp_i] * $b[dp_i])), " +
-        s"(dp_x, dp_y) -> dp_x + dp_y)"
-    def dist(v: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($v)+1), dq_i -> ($v[dq_i] - cv[dq_i]) * ($v[dq_i] - cv[dq_i]))), " +
-        s"(dq_x, dq_y) -> dq_x + dq_y)"
     s"""WITH cent(ci, cv) AS (VALUES
        |  $cents),
        |c AS (SELECT vec_id AS cand_id, label, list_transform(range(1, len(embedding)+1),
@@ -126,15 +115,15 @@ object ExtensionQueries2 extends QueryGroup {
        |cf AS (SELECT cand_id, cvec FROM c WHERE $candWhere),
        |ca AS (SELECT cand_id, cvec, ci AS list FROM (
        |  SELECT cand_id, cvec, ci,
-       |    row_number() OVER (PARTITION BY cand_id ORDER BY ${dist("cvec")}, ci) AS rn
+       |    row_number() OVER (PARTITION BY cand_id ORDER BY ${centroidDistSql("cvec")}, ci) AS rn
        |  FROM cf CROSS JOIN cent) WHERE rn = 1),
        |p AS (SELECT cand_id AS probe_id, cvec AS pvec FROM c WHERE cand_id < 20),
        |pl AS (SELECT probe_id, pvec, ci AS list FROM (
        |  SELECT probe_id, pvec, ci,
-       |    row_number() OVER (PARTITION BY probe_id ORDER BY ${dist("pvec")}, ci) AS rn
+       |    row_number() OVER (PARTITION BY probe_id ORDER BY ${centroidDistSql("pvec")}, ci) AS rn
        |  FROM p CROSS JOIN cent) WHERE rn <= 4),
        |s AS (SELECT probe_id, cand_id,
-       |  ${fold("pvec", "cvec")} / (sqrt(${fold("pvec", "pvec")}) * sqrt(${fold("cvec", "cvec")})) AS cos
+       |  ${dotSqlDoubles("pvec", "cvec")} / (sqrt(${dotSqlDoubles("pvec", "pvec")}) * sqrt(${dotSqlDoubles("cvec", "cvec")})) AS cos
        |  FROM pl JOIN ca USING (list) WHERE probe_id <> cand_id)
        |SELECT probe_id, CAST(rank AS INT) AS rank, cand_id, cos FROM (
        |  SELECT *, row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, cand_id) AS rank
@@ -190,14 +179,6 @@ object ExtensionQueries2 extends QueryGroup {
     val cents = model.centroids.zipWithIndex
       .map { case (c, i) => s"($i, " + c.map(ExtensionQueries6.dLit).mkString("CAST([", ", ", "] AS DOUBLE[]))") }
       .mkString(",\n  ")
-    def fold(a: String, b: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a)+1), dp_i -> $a[dp_i] * $b[dp_i])), " +
-        s"(dp_x, dp_y) -> dp_x + dp_y)"
-    def dist(v: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($v)+1), dq_i -> ($v[dq_i] - cv[dq_i]) * ($v[dq_i] - cv[dq_i]))), " +
-        s"(dq_x, dq_y) -> dq_x + dq_y)"
     // sub-bucket: bit j (0-based, MSB first) is the sign of the in-order
     // projection fold onto hyperplane LCG(jj = j + table·1000) — literal
     // mirror of functions.LshBucket / Similarity.hyperplaneAt
@@ -227,7 +208,7 @@ object ExtensionQueries2 extends QueryGroup {
        |), allv AS (SELECT vec_id, vec FROM base UNION ALL SELECT vec_id, vec FROM jit),
        |asn0 AS (SELECT vec_id, vec, ci AS list FROM (
        |  SELECT vec_id, vec, ci,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY ${dist("vec")}, ci) AS rn
+       |    row_number() OVER (PARTITION BY vec_id ORDER BY ${centroidDistSql("vec")}, ci) AS rn
        |  FROM allv CROSS JOIN cent) WHERE rn = 1),
        |asn AS (
        |  SELECT vec_id, vec, list,
@@ -237,7 +218,7 @@ object ExtensionQueries2 extends QueryGroup {
        |dropped AS (
        |  SELECT DISTINCT y.vec_id AS id
        |  FROM asn x JOIN asn y ON x.list = y.list AND x.sub = y.sub AND x.vec_id < y.vec_id
-       |  WHERE ${fold("x.vec", "y.vec")} / (sqrt(${fold("x.vec", "x.vec")}) * sqrt(${fold("y.vec", "y.vec")})) >= 0.98)
+       |  WHERE ${dotSqlDoubles("x.vec", "y.vec")} / (sqrt(${dotSqlDoubles("x.vec", "x.vec")}) * sqrt(${dotSqlDoubles("y.vec", "y.vec")})) >= 0.98)
        |SELECT a.vec_id AS id, a.list, (d.id IS NULL) AS keep
        |FROM asn a LEFT JOIN dropped d ON a.vec_id = d.id
        |ORDER BY id""".stripMargin
@@ -269,15 +250,11 @@ object ExtensionQueries2 extends QueryGroup {
   }
 
   val q47Sql: String = {
-    def fold(a: String, b: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a)+1), dp_i -> CAST($a[dp_i] AS DOUBLE) * CAST($b[dp_i] AS DOUBLE))), " +
-        s"(dp_x, dp_y) -> dp_x + dp_y)"
     s"""WITH p AS (SELECT vec_id AS probe_id, embedding AS pv FROM embeddings WHERE vec_id < 20),
        |c AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings),
        |s AS (
        |  SELECT probe_id, cand_id,
-       |    ${fold("pv", "cv")} / (sqrt(${fold("pv", "pv")}) * sqrt(${fold("cv", "cv")})) AS cos
+       |    ${dotSql("pv", "cv")} / (sqrt(${dotSql("pv", "pv")}) * sqrt(${dotSql("cv", "cv")})) AS cos
        |  FROM p CROSS JOIN c WHERE probe_id <> cand_id
        |), topk AS (
        |  SELECT probe_id, cand_id,
@@ -321,11 +298,10 @@ object ExtensionQueries2 extends QueryGroup {
       .orderBy(col("id"))
   }
 
-  /** Session-memoized q42 cluster rows (round-9 verdict task #3): eight
-    * queries ([[memoizedQueries]]) audit the SAME clustering and each
-    * re-derived it from scratch — ~18 s of the sf0.1 bench spent
-    * re-running one computation. The frame is ≤90 rows at ANY corpus
-    * size (the q42 corpus is doc_id < 30, ×3 variants — a plan-constant
+  /** Session-memoized q42 cluster rows: eight queries
+    * ([[memoizedQueries]]) audit the SAME clustering, and re-deriving it
+    * per query cost ~18 s of the sf0.1 bench. The frame is ≤90 rows at
+    * ANY corpus size (the q42 corpus is doc_id < 30, ×3 variants — a plan-constant
     * fixture, not a data volume), so the memo holds the COLLECTED rows +
     * schema and each call rebuilds a fresh LocalRelation from them: a
     * ≤90-row driver collect within the repo's bounded-collect
@@ -337,7 +313,7 @@ object ExtensionQueries2 extends QueryGroup {
     * query's DuckDB mirror still re-derives the full CTE chain, so
     * results remain independently oracle-checked.
     *
-    * Cache-entry lifecycle (round-10 advice): the value holds only Rows
+    * Cache-entry lifecycle: the value holds only Rows
     * and a StructType — neither references the SparkSession key — so the
     * WeakHashMap's weak keys genuinely collect once a test session is
     * stopped and dropped. Entries are keyed on (dir, mtime of
@@ -426,7 +402,7 @@ object ExtensionQueries2 extends QueryGroup {
     s"""$q42ClusterCtes
        |SELECT id, rep FROM lbl ORDER BY id""".stripMargin
 
-  /** The dir's trained IVF model, if any — shared with round-7's
+  /** The dir's trained IVF model, if any — shared with the
     * filtered-ANN tier ([[ExtensionQueries10]]; one index serves every
     * predicate, filtering is probe-time) and q491's rebuild-churn mirror.
     */

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{CacheScope, Tables}
 import graft.ext.{Dedup, TextAnalysis}
 
-/** Round-9 batch 8: sequence islands, a dedup-quality eval harness, and
+/** Sequence islands, a dedup-quality eval harness, and
   * streaming anomaly detection.
   *
   *  - q156: longest same-type event streaks — gaps-and-islands, the
@@ -130,7 +130,7 @@ object ExtensionQueries20 extends QueryGroup {
        |  SELECT doc_id, list_transform(
        |    list_transform(range(1, len($toks) - 1),
        |      sh_i -> array_to_string(list_slice($toks, sh_i, sh_i + 2), ' ')),
-       |    sh_s -> ${ExtensionQueries.phSql("sh_s")}) AS hashes
+       |    sh_s -> ${QueryBlocks.phSql("sh_s")}) AS hashes
        |  FROM allv
        |), shd AS (
        |  SELECT doc_id AS id, unnest(list_distinct(hashes)) AS sh FROM hs

@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{CacheScope, Tables}
 import graft.ext.{Dedup, Similarity, TextAnalysis}
+import QueryBlocks.dotSql
 
-/** Round-9 batch 9: embedding-space evaluation, event-time statistics,
+/** Embedding-space evaluation, event-time statistics,
   * and LSH parameter sweeps.
   *
   *  - q159: kNN classification accuracy over the embedding table — the
@@ -58,17 +59,13 @@ object ExtensionQueries21 extends QueryGroup {
   }
 
   val q159Sql: String = {
-    def fold(a: String, b: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a)+1), dp_i -> CAST($a[dp_i] AS DOUBLE) * CAST($b[dp_i] AS DOUBLE))), " +
-        s"(dp_x, dp_y) -> dp_x + dp_y)"
     s"""WITH p AS (
        |  SELECT vec_id AS probe_id, embedding AS pv FROM embeddings WHERE vec_id < 50
        |), c AS (
        |  SELECT vec_id AS cand_id, embedding AS cv, label AS nl FROM embeddings
        |), sc AS (
        |  SELECT probe_id, cand_id, nl,
-       |    ${fold("pv", "cv")} / (sqrt(${fold("pv", "pv")}) * sqrt(${fold("cv", "cv")})) AS cos
+       |    ${dotSql("pv", "cv")} / (sqrt(${dotSql("pv", "pv")}) * sqrt(${dotSql("cv", "cv")})) AS cos
        |  FROM p CROSS JOIN c WHERE probe_id <> cand_id
        |), top AS (
        |  SELECT probe_id, nl FROM (
@@ -240,7 +237,7 @@ object ExtensionQueries21 extends QueryGroup {
        |  SELECT doc_id, list_transform(
        |    list_transform(range(1, len($toks) - 1),
        |      sh_i -> array_to_string(list_slice($toks, sh_i, sh_i + 2), ' ')),
-       |    sh_s -> ${ExtensionQueries.phSql("sh_s")}) AS hashes
+       |    sh_s -> ${QueryBlocks.phSql("sh_s")}) AS hashes
        |  FROM allv
        |), shd AS (
        |  SELECT doc_id AS id, unnest(list_distinct(hashes)) AS sh FROM hs

@@ -4,18 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.{Contamination, TextAnalysis}
+import QueryBlocks.phSql
 
 /** Training-data governance operators: benchmark decontamination and
   * Gopher-style repetition/quality filtering — the remaining first-class
   * ops a 100 TB pretraining pipeline runs besides dedup/similarity.
   */
 object ExtensionQueries3 extends QueryGroup {
-
-  /** DuckDB polyhash mirror over an arbitrary string SQL expression. */
-  private[queries] def phSql(e: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(range(1, length($e)+1), ch_i -> CAST(ascii(substring($e, ch_i, 1)) AS BIGINT))), " +
-      s"(ph_a, ph_b) -> (ph_a*31 + ph_b) % 1000000007)"
 
   /** q48: benchmark decontamination — corpus docs sharing 3-gram shingles
     * with the eval set (docs 0-9). Doctored leaks (eval docs minus their
@@ -185,7 +180,7 @@ object ExtensionQueries3 extends QueryGroup {
     * PARTITIONED by bucket — state never crosses buckets, so the cumsum
     * parallelizes instead of becoming a global single-partition scan.
     * pack_id = floor(tokens-before / budget): concat-then-chunk semantics.
-    * Budgets count REAL BPE tokens (round 7): the corpus-trained merge
+    * Budgets count REAL BPE tokens: the corpus-trained merge
     * table ([[ExtensionQueries10.bpeModel]]) replaces the ceil(chars/4)
     * heuristic, so packs line up with what a tokenizer-faithful loader
     * would see; the mirror is the generated

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.ops.{DenseIds, PrefixScan}
+import graft.ops.{DenseIds, PrefixScan, Sessions}
 
-/** Round-9 batch 18: tokenizer-design, recsys-training, and
+/** Tokenizer-design, recsys-training, and
   * product-path primitives — exact-integer, DuckDB-oracle-gated.
   *
   *  - q184: vocabulary coverage curve — the "how big must the vocab be"
@@ -152,16 +152,10 @@ object ExtensionQueries30 extends QueryGroup {
     * broadcast.
     */
   def q186_session_paths(s: SparkSession, dir: String): DataFrame = {
-    val gapUs = 30L * 60 * 1000000L
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val flagged = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("ts div 1000").as("us"))
-      .withColumn("new_sess",
-        when(col("us") - lag(col("us"), 1).over(w) > gapUs, 1L)
-          .otherwise(lit(0L)))
-      .withColumn("session_id", sum(col("new_sess"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .transform(Sessions.flag)
     val sessions = flagged.groupBy(col("user_id"), col("session_id"))
       .agg(count(lit(1)).as("n_events"),
         min(struct(col("us"), col("event_id"), col("event_type")))

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.ops.{CoPurchase, PrefixScan}
+import graft.ops.{CoPurchase, PrefixScan, Sessions}
 
-/** Round-9 batch 19: sequential analysis, co-occurrence recommendation,
+/** Sequential analysis, co-occurrence recommendation,
   * and session mining — exact-integer, DuckDB-oracle-gated.
   *
   *  - q187: CUSUM change-point detection (Page 1954) — the sequential
@@ -151,17 +151,11 @@ object ExtensionQueries31 extends QueryGroup {
     * pair-keyed count + TakeOrderedAndProject.
     */
   def q189_session_covisitation(s: SparkSession, dir: String): DataFrame = {
-    val gapUs = 30L * 60 * 1000000L
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val flagged = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"),
         get_json_object(col("props"), "$.k").try_cast("long").as("page"),
         expr("ts div 1000").as("us"))
-      .withColumn("new_sess",
-        when(col("us") - lag(col("us"), 1).over(w) > gapUs, 1L)
-          .otherwise(lit(0L)))
-      .withColumn("session_id", sum(col("new_sess"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .transform(Sessions.flag)
     val pages = flagged.filter(col("page").isNotNull)
       .select(col("user_id"), col("session_id"), col("page")).distinct()
     pages.as("a").join(pages.as("b"),

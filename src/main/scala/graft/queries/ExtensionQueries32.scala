@@ -1,11 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.ops.Sessions
 
-/** Round-9 batch 20: materialized-view algebra, mergeable exact
+/** Materialized-view algebra, mergeable exact
   * distincts, and dwell analytics — exact-integer, DuckDB-oracle-gated.
   *
   *  - q190: incremental JOIN-view maintenance by the delta algebra —
@@ -135,19 +135,13 @@ object ExtensionQueries32 extends QueryGroup {
     * page-keyed aggregate + TakeOrderedAndProject.
     */
   def q192_dwell_time(s: SparkSession, dir: String): DataFrame = {
-    val gapUs = 30L * 60 * 1000000L
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val flagged = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"),
         get_json_object(col("props"), "$.k").try_cast("long").as("page"),
         expr("ts div 1000").as("us"))
-      .withColumn("new_sess",
-        when(col("us") - lag(col("us"), 1).over(w) > gapUs, 1L)
-          .otherwise(lit(0L)))
-      .withColumn("session_id", sum(col("new_sess"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("next_us", lead(col("us"), 1).over(w))
-      .withColumn("next_sess", lead(col("session_id"), 1).over(w))
+      .transform(Sessions.flag)
+      .withColumn("next_us", lead(col("us"), 1).over(Sessions.byUser))
+      .withColumn("next_sess", lead(col("session_id"), 1).over(Sessions.byUser))
       .withColumn("dwell_us",
         when(col("next_sess") === col("session_id"),
           col("next_us") - col("us")))

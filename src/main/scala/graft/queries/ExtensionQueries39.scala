@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.ops.PrefixScan
+import graft.ops.{PrefixScan, Sessions}
 
-/** Round-9 batch 27: concurrency counting, parameter sensitivity, and
+/** Concurrency counting, parameter sensitivity, and
   * schema profiling — exact-integer, DuckDB-oracle-gated.
   *
   *  - q210: peak session concurrency — the interval +1/−1 sweep, scan-
@@ -34,16 +34,10 @@ object ExtensionQueries39 extends QueryGroup {
     * prefix pass over it; the hourly max is a tiny aggregate.
     */
   def q210_peak_concurrency(s: SparkSession, dir: String): DataFrame = {
-    val gapUs = 30L * 60 * 1000000L
     val hourUs = 3600000000L
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val sessions = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), expr("ts div 1000").as("us"))
-      .withColumn("new_sess",
-        when(col("us") - lag(col("us"), 1).over(w) > gapUs, 1L)
-          .otherwise(lit(0L)))
-      .withColumn("session_id", sum(col("new_sess"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .transform(Sessions.flag)
       .groupBy(col("user_id"), col("session_id"))
       .agg(min(col("us")).as("start_us"), max(col("us")).as("end_us"))
     val bounds = sessions.select(col("start_us").as("t"), lit(1L).as("d"))

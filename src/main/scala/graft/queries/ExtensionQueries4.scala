@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 
-/** Round-3 training-data governance batch: PII scrubbing and deterministic
-  * mixture rebalancing — two ops every pretraining pipeline runs between
+/** Training-data governance: PII scrubbing and deterministic mixture rebalancing — two ops every pretraining pipeline runs between
   * dedup (q25-q29) and packing (q54).
   */
 object ExtensionQueries4 extends QueryGroup {
@@ -238,7 +237,7 @@ object ExtensionQueries4 extends QueryGroup {
 
   val q67Sql: String =
     s"""WITH v AS (
-       |  SELECT doc_id AS media_id, ${ExtensionQueries3.phSql("text")} AS h
+       |  SELECT doc_id AS media_id, ${QueryBlocks.phSql("text")} AS h
        |  FROM documents WHERE doc_id % 3 = 2
        |), f AS (
        |  SELECT media_id, CAST(k AS INT) AS frame_idx, k * 30000 AS ts_ms,

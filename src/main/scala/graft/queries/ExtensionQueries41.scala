@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.ops.Sessions
 
-/** Round-9 batch 29: pipeline completeness, behavioral lift, and abuse
+/** Pipeline completeness, behavioral lift, and abuse
   * detection — exact-integer, DuckDB-oracle-gated.
   *
   *  - q216: backfill completeness monitor — expected×present partition
@@ -92,17 +93,11 @@ object ExtensionQueries41 extends QueryGroup {
     * broadcast. Pages with < 5 sessions drop (rate noise floor).
     */
   def q217_page_conversion_lift(s: SparkSession, dir: String): DataFrame = {
-    val gapUs = 30L * 60 * 1000000L
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val flagged = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         get_json_object(col("props"), "$.k").try_cast("long").as("page"),
         expr("ts div 1000").as("us"))
-      .withColumn("new_sess",
-        when(col("us") - lag(col("us"), 1).over(w) > gapUs, 1L)
-          .otherwise(lit(0L)))
-      .withColumn("session_id", sum(col("new_sess"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .transform(Sessions.flag)
     val sess = flagged.groupBy(col("user_id"), col("session_id"))
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
         .as("converted"))

@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import QueryBlocks.Q20
 
-/** Round-9 batch 31: embedding-quality and context-budget audits — the
+/** Embedding-quality and context-budget audits — the
   * data-quality screens an embedding/training pipeline runs before the
   * expensive tiers. Exact-integer, DuckDB-oracle-gated.
   *
@@ -14,9 +15,6 @@ import graft.core.Tables
   *  - q224: truncation loss at context K — docs and tokens lost.
   */
 object ExtensionQueries43 extends QueryGroup {
-
-  /** floor(x·2²⁰) — exact in IEEE arithmetic (q165's quantization). */
-  private val Q20 = 1048576L
 
   // --------------------------------------------------------------- q222
 

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.Similarity
+import QueryBlocks.{dotSql, Q20}
 
-/** Round-9 batch 33: embedding cluster quality, classifier error
+/** Embedding cluster quality, classifier error
   * structure, and inter-rater reliability — exact-integer,
   * DuckDB-oracle-gated.
   *
@@ -15,8 +16,6 @@ import graft.ext.Similarity
   *  - q230: Cohen's kappa between two quality raters.
   */
 object ExtensionQueries45 extends QueryGroup {
-
-  private val Q20 = 1048576L
 
   // --------------------------------------------------------------- q228
 
@@ -126,10 +125,6 @@ object ExtensionQueries45 extends QueryGroup {
   }
 
   val q229Sql: String = {
-    def fold(a: String, b: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a)+1), dp_i -> CAST($a[dp_i] AS DOUBLE) * CAST($b[dp_i] AS DOUBLE))), " +
-        s"(dp_x, dp_y) -> dp_x + dp_y)"
     s"""WITH p AS (
        |  SELECT vec_id AS probe_id, embedding AS pv FROM embeddings
        |  WHERE vec_id < 50
@@ -138,7 +133,7 @@ object ExtensionQueries45 extends QueryGroup {
        |  FROM embeddings
        |), sc AS (
        |  SELECT probe_id, cand_id, nl,
-       |    ${fold("pv", "cv")} / (sqrt(${fold("pv", "pv")}) * sqrt(${fold("cv", "cv")})) AS cos
+       |    ${dotSql("pv", "cv")} / (sqrt(${dotSql("pv", "pv")}) * sqrt(${dotSql("cv", "cv")})) AS cos
        |  FROM p CROSS JOIN c WHERE probe_id <> cand_id
        |), top AS (
        |  SELECT probe_id, nl FROM (

@@ -1,11 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.ops.Sessions
 
-/** Round-9 batch 40: governance, debuggability, and encoding health —
+/** Governance, debuggability, and encoding health —
   * exact-integer, DuckDB-oracle-gated.
   *
   *  - q249: right-to-be-forgotten purge audit — residual rows per
@@ -81,16 +81,10 @@ object ExtensionQueries52 extends QueryGroup {
     * population.
     */
   def q250_path_exemplars(s: SparkSession, dir: String): DataFrame = {
-    val gapUs = 30L * 60 * 1000000L
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val sessions = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("ts div 1000").as("us"))
-      .withColumn("new_sess",
-        when(col("us") - lag(col("us"), 1).over(w) > gapUs, 1L)
-          .otherwise(lit(0L)))
-      .withColumn("session_id", sum(col("new_sess"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .transform(Sessions.flag)
       .groupBy(col("user_id"), col("session_id"))
       .agg(count(lit(1)).as("n_events"),
         min(struct(col("us"), col("event_id"), col("event_type")))

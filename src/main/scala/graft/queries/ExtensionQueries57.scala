@@ -1,11 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.ops.Sessions
 
-/** Round-9 batch 45: ledger reconciliation, onboarding effects, and
+/** Ledger reconciliation, onboarding effects, and
   * vocabulary emergence — exact-integer, DuckDB-oracle-gated.
   *
   *  - q264: order-vs-lines ledger reconciliation.
@@ -80,16 +80,10 @@ object ExtensionQueries57 extends QueryGroup {
     * index bucketing is arithmetic on session_id; ≤3-row report.
     */
   def q265_first_session_effect(s: SparkSession, dir: String): DataFrame = {
-    val gapUs = 30L * 60 * 1000000L
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val sess = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("ts div 1000").as("us"))
-      .withColumn("new_sess",
-        when(col("us") - lag(col("us"), 1).over(w) > gapUs, 1L)
-          .otherwise(lit(0L)))
-      .withColumn("session_id", sum(col("new_sess"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .transform(Sessions.flag)
       .groupBy(col("user_id"), col("session_id"))
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
         .as("converted"))

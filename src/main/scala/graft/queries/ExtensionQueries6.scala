@@ -4,13 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{CacheScope, Tables}
 import graft.ops.RangeJoin
+import QueryBlocks.{centroidDistSql, l2Sql, NsPerMin, subDistSql}
 
-/** Round-5 widening batch. */
+/** Interval joins, weighted sampling, table checksums, quality
+  * constraints, robust outliers, dense ids, incremental rollups, regex
+  * pre-tokenization, and the IVF-PQ / PQ-recall ANN tier (q86–q93, q96,
+  * q97).
+  */
 object ExtensionQueries6 extends QueryGroup {
 
   // ---------------------------------------------------------------- q86
 
-  private val NsPerMin = 60L * 1000000000L
   private val NsPerDay = 86400L * 1000000000L
   private val WindowNs = 30L * NsPerMin // incident window length
   private val BucketNs = 30L * NsPerMin // bucket ≈ window length → ≤2 buckets/interval
@@ -73,7 +77,7 @@ object ExtensionQueries6 extends QueryGroup {
     * production shape is many strata (sources × quality bands), so state
     * per partition stays bounded; no global window exists here.
     *
-    * REGIME BOUND (round-11 10×-rung kc=0.87): weighted systematic
+    * REGIME BOUND (10×-rung kc=0.87): weighted systematic
     * sampling is Ω(n) by contract — every row's weight enters the group
     * cumsum (skip a row and every later boundary shifts), and every
     * row's md5 fixes the shuffle order. The dominating stage is the
@@ -94,7 +98,7 @@ object ExtensionQueries6 extends QueryGroup {
     // oracle's: under Spark's default RANGE frame, order-by PEERS (fully
     // duplicate rows) would share one cum value while DuckDB's ROWS frame
     // assigns them consecutive ones — identical rows are interchangeable
-    // only per-row, not per-peer-group (round-5 ADVICE).
+    // only per-row, not per-peer-group.
     val win = Window.partitionBy(col("l_returnflag"))
       .orderBy(col("shuffle_key"), col("l_orderkey"), col("l_linenumber"), col("w_cents"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -413,15 +417,6 @@ object ExtensionQueries6 extends QueryGroup {
       s"($mi, $ki, " + pq.codebooks(mi)(ki).map(dLit).mkString("CAST([", ", ", "] AS DOUBLE[]))"))
       .mkString(",\n  ")
     val sd = pq.subDim
-    def centDist(v: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($v)+1), dq_i -> ($v[dq_i] - cv[dq_i]) * ($v[dq_i] - cv[dq_i]))), " +
-        s"(dq_x, dq_y) -> dq_x + dq_y)"
-    def subDist(v: String, miExpr: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, $sd + 1), pq_j -> " +
-        s"($v[$miExpr * $sd + pq_j] - bv[pq_j]) * ($v[$miExpr * $sd + pq_j] - bv[pq_j]))), " +
-        s"(pq_x, pq_y) -> pq_x + pq_y)"
     s"""WITH cent(ci, cv) AS (VALUES
        |  $cents),
        |book(mi, ki, bv) AS (VALUES
@@ -430,20 +425,20 @@ object ExtensionQueries6 extends QueryGroup {
        |  cv_i -> CAST(embedding[cv_i] AS DOUBLE)) AS cvec FROM embeddings),
        |ca AS (SELECT cand_id, ci AS list FROM (
        |  SELECT cand_id, ci,
-       |    row_number() OVER (PARTITION BY cand_id ORDER BY ${centDist("cvec")}, ci) AS rn
+       |    row_number() OVER (PARTITION BY cand_id ORDER BY ${centroidDistSql("cvec")}, ci) AS rn
        |  FROM c CROSS JOIN cent) WHERE rn = 1),
        |codes AS (SELECT cand_id, mi, ki AS code FROM (
        |  SELECT cand_id, b.mi, b.ki,
        |    row_number() OVER (PARTITION BY cand_id, b.mi
-       |      ORDER BY ${subDist("cvec", "b.mi")}, b.ki) AS rn
+       |      ORDER BY ${subDistSql("cvec", "b.mi", sd)}, b.ki) AS rn
        |  FROM c CROSS JOIN book b) WHERE rn = 1),
        |p AS (SELECT cand_id AS probe_id, cvec AS pvec FROM c WHERE cand_id < 20),
        |pl AS (SELECT probe_id, pvec, ci AS list FROM (
        |  SELECT probe_id, pvec, ci,
-       |    row_number() OVER (PARTITION BY probe_id ORDER BY ${centDist("pvec")}, ci) AS rn
+       |    row_number() OVER (PARTITION BY probe_id ORDER BY ${centroidDistSql("pvec")}, ci) AS rn
        |  FROM p CROSS JOIN cent) WHERE rn <= 4),
        |dm AS (SELECT probe_id, cand_id, cd.mi,
-       |    ${subDist("pvec", "cd.mi")} AS d
+       |    ${subDistSql("pvec", "cd.mi", sd)} AS d
        |  FROM pl JOIN ca USING (list)
        |  JOIN codes cd USING (cand_id)
        |  JOIN book b ON b.mi = cd.mi AND b.ki = cd.code
@@ -540,16 +535,10 @@ object ExtensionQueries6 extends QueryGroup {
   }
 
   val q97Sql: String = {
-    def l2(a: String, b: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a)+1), rr_i -> " +
-        s"(CAST($a[rr_i] AS DOUBLE) - CAST($b[rr_i] AS DOUBLE)) * " +
-        s"(CAST($a[rr_i] AS DOUBLE) - CAST($b[rr_i] AS DOUBLE)))), " +
-        s"(rr_x, rr_y) -> rr_x + rr_y)"
     s"""WITH p AS (SELECT vec_id AS probe_id, embedding AS pv FROM embeddings WHERE vec_id < 20),
        |c AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings),
        |s AS (
-       |  SELECT probe_id, cand_id, ${l2("pv", "cv")} AS d
+       |  SELECT probe_id, cand_id, ${l2Sql("pv", "cv")} AS d
        |  FROM p CROSS JOIN c WHERE probe_id <> cand_id
        |), topk AS (
        |  SELECT probe_id, cand_id,

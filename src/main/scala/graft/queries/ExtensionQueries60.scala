@@ -1,11 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.ops.Sessions
 
-/** Round-9 batch 48: index numbers, concentration risk, and session
+/** Index numbers, concentration risk, and session
   * affinity — exact-integer, DuckDB-oracle-gated.
   *
   *  - q273: matched-part price index between the two largest nations.
@@ -146,16 +146,10 @@ object ExtensionQueries60 extends QueryGroup {
     * per-session type frame (fan-out ≤ |types|²); marginals broadcast.
     */
   def q275_session_type_lift(s: SparkSession, dir: String): DataFrame = {
-    val gapUs = 30L * 60 * 1000000L
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val st = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("ts div 1000").as("us"))
-      .withColumn("new_sess",
-        when(col("us") - lag(col("us"), 1).over(w) > gapUs, 1L)
-          .otherwise(lit(0L)))
-      .withColumn("session_id", sum(col("new_sess"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .transform(Sessions.flag)
       .select(col("user_id"), col("session_id"), col("event_type"))
       .distinct()
     val nSessions = st.select(col("user_id"), col("session_id")).distinct()

@@ -1,12 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.ops.CoPurchase
+import graft.ops.{CoPurchase, Sessions}
 
-/** Round-9 batch 49: graph mixing, friction economics, and forecast
+/** Graph mixing, friction economics, and forecast
   * honesty — exact-integer, DuckDB-oracle-gated.
   *
   *  - q276: degree-assortativity numerator of the co-purchase graph.
@@ -89,16 +88,10 @@ object ExtensionQueries61 extends QueryGroup {
     * report is a 2-row rollup.
     */
   def q277_friction_impact(s: SparkSession, dir: String): DataFrame = {
-    val gapUs = 30L * 60 * 1000000L
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val sess = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("ts div 1000").as("us"))
-      .withColumn("new_sess",
-        when(col("us") - lag(col("us"), 1).over(w) > gapUs, 1L)
-          .otherwise(lit(0L)))
-      .withColumn("session_id", sum(col("new_sess"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .transform(Sessions.flag)
       .groupBy(col("user_id"), col("session_id"))
       .agg(min(when(col("event_type") === "purchase", col("us")))
         .as("first_purchase"),

@@ -4,10 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.{Dedup, PcaProject, Similarity, TextAnalysis}
+import QueryBlocks.{l2Sql, NsPerMin}
 
-/** Round-6 additions: the incremental-index tier of the dedup family.
-  * File-per-round keeps the query modules reviewable (see
-  * ExtensionQueries..6 for rounds 2-5).
+/** The incremental-index tier of the dedup family (q99's near-dup
+  * admission against a stored signature index), PCA projection and its
+  * ANN recall certificate (q100, q101), and the interval-overlap join
+  * (q102).
   */
 object ExtensionQueries7 extends QueryGroup {
 
@@ -83,7 +85,7 @@ object ExtensionQueries7 extends QueryGroup {
        |  SELECT doc_id, src, list_transform(
        |    list_transform(range(1, len($toks) - 1),
        |      sh_i -> array_to_string(list_slice($toks, sh_i, sh_i + 2), ' ')),
-       |    sh_s -> ${ExtensionQueries.phSql("sh_s")}) AS hashes
+       |    sh_s -> ${QueryBlocks.phSql("sh_s")}) AS hashes
        |  FROM allv
        |), sg AS (
        |  SELECT doc_id, src, list_transform(range(0, 64), mh_i ->
@@ -185,7 +187,7 @@ object ExtensionQueries7 extends QueryGroup {
     Option(pcaCache.get(dir))
 
   /** DuckDB mirror for a trained model: mean + components as DOUBLE[]
-    * literals (dLit exponent form — the round-5 decimal-unification trap),
+    * literals (dLit exponent form, so DuckDB parses them as DOUBLE),
     * projections as the same in-order fold, and the explained-variance
     * boolean recomputed from the data + literals.
     */
@@ -273,16 +275,10 @@ object ExtensionQueries7 extends QueryGroup {
   }
 
   val q101Sql: String = {
-    def l2(a: String, b: String): String =
-      s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-        s"list_transform(range(1, len($a)+1), rr_i -> " +
-        s"(CAST($a[rr_i] AS DOUBLE) - CAST($b[rr_i] AS DOUBLE)) * " +
-        s"(CAST($a[rr_i] AS DOUBLE) - CAST($b[rr_i] AS DOUBLE)))), " +
-        s"(rr_x, rr_y) -> rr_x + rr_y)"
     s"""WITH p AS (SELECT vec_id AS probe_id, embedding AS pv FROM embeddings WHERE vec_id < 20),
        |c AS (SELECT vec_id AS cand_id, embedding AS cv FROM embeddings),
        |s AS (
-       |  SELECT probe_id, cand_id, ${l2("pv", "cv")} AS d
+       |  SELECT probe_id, cand_id, ${l2Sql("pv", "cv")} AS d
        |  FROM p CROSS JOIN c WHERE probe_id <> cand_id
        |), topk AS (
        |  SELECT probe_id, cand_id,
@@ -293,8 +289,6 @@ object ExtensionQueries7 extends QueryGroup {
   }
 
   // --------------------------------------------------------------- q102
-
-  private val NsPerMin = 60L * 1000000000L
 
   /** q102: interval-OVERLAP join ([[graft.ops.RangeJoin.bucketedOverlap]])
     * — the two-sided generalization of q86's point-in-interval join:

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ext.TextAnalysis
+import QueryBlocks.raterLabel
 
-/** Round-12 batch 2: annotation agreement, tokenizer economics, and the
+/** Annotation agreement, tokenizer economics, and the
   * Spark 4 parameterized-SQL surface.
   *
   *  - q320 Fleiss' kappa (Fleiss 1971): the MULTI-rater agreement
@@ -43,19 +44,6 @@ import graft.ext.TextAnalysis
 object ExtensionQueries76 extends QueryGroup {
 
   // --------------------------------------------------------------- q320
-
-  /** The three pseudo-raters: rater r's label for order i starts from
-    * base = i % 3 and flips to a neighboring category when the (i, r)
-    * hash says so (~20% of votes) — enough disagreement that κ is
-    * strictly between 0 and 1, deterministic in both engines.
-    */
-  private def raterLabel(r: Int) = {
-    val h = expr(
-      s"conv(substring(md5(concat(cast(o_orderkey as string), '-', '$r')), 1, 8), 16, 10)"
-    ).cast("long") % 10
-    when(h < 2, (col("o_orderkey") % 3 + 1 + h % 2) % 3)
-      .otherwise(col("o_orderkey") % 3)
-  }
 
   def q320_fleiss_kappa(s: SparkSession, dir: String): DataFrame = {
     val votes = Tables.orders(s, dir).select(col("o_orderkey").as("item"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.{Dedup, TextAnalysis}
 
-/** Round-12 batch 8: dedup tuning and reproducible-release ops.
+/** Dedup tuning and reproducible-release ops.
   *
   *  - q338 dedup threshold sweep: the tuning table for the near-dup
   *    threshold decision — pair counts and affected-doc counts at
@@ -62,7 +62,7 @@ object ExtensionQueries82 extends QueryGroup {
        |  SELECT doc_id AS id, unnest(list_distinct(list_transform(
        |    list_transform(range(1, len(string_split(text,' ')) - 1),
        |      sh_i -> array_to_string(list_slice(string_split(text,' '), sh_i, sh_i + 2), ' ')),
-       |    sh_s -> ${ExtensionQueries.phSql("sh_s")}))) AS sh
+       |    sh_s -> ${QueryBlocks.phSql("sh_s")}))) AS sh
        |  FROM documents WHERE len(string_split(text,' ')) >= 3
        |), sizes AS (
        |  SELECT id, count(*) AS nsh FROM sh GROUP BY id
@@ -116,7 +116,7 @@ object ExtensionQueries82 extends QueryGroup {
   }
 
   val q339Sql: String = {
-    def ph(e: String) = ExtensionQueries3.phSql(e)
+    def ph(e: String) = QueryBlocks.phSql(e)
     s"""WITH t AS (
        |  SELECT
        |    CASE WHEN ${ph("CAST(doc_id AS VARCHAR) || ':split'")} % 100 < 90 THEN 'train'

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{FpSafe, Tables}
 import graft.ext.Similarity
+import QueryBlocks.dotSql
 
-/** Round-13 batch 1: retrieval/ranking evaluation (SURVEY §7.4 —
+/** Retrieval/ranking evaluation (SURVEY §7.4 —
   * similarity search needs its EVAL half: a top-k engine without
   * ranking metrics can't be tuned). On this corpus `label` is
   * independent of the embedding geometry, so the three metrics pin
@@ -33,12 +34,6 @@ import graft.ext.Similarity
   *    — nlist centroids broadcast, one pass over the corpus.
   */
 object ExtensionQueries88 extends QueryGroup {
-
-  /** In-order double dot-product fold (the q30 oracle idiom). */
-  private def fold(a: String, b: String): String =
-    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), " +
-      s"list_transform(range(1, len($a)+1), dp_i -> CAST($a[dp_i] AS DOUBLE) * CAST($b[dp_i] AS DOUBLE))), " +
-      s"(dp_x, dp_y) -> dp_x + dp_y)"
 
   // --------------------------------------------------------------- q355
 
@@ -96,7 +91,7 @@ object ExtensionQueries88 extends QueryGroup {
        |        embedding AS cv FROM embeddings),
        |s AS (
        |  SELECT probe_id, probe_label, cand_id, cand_label,
-       |    ${fold("pv", "cv")} / (sqrt(${fold("pv", "pv")}) * sqrt(${fold("cv", "cv")})) AS cos
+       |    ${dotSql("pv", "cv")} / (sqrt(${dotSql("pv", "pv")}) * sqrt(${dotSql("cv", "cv")})) AS cos
        |  FROM p CROSS JOIN c WHERE probe_id <> cand_id
        |),
        |r AS (

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ext.SetSimJoin
 import graft.ops.{CoPurchase, KCore}
+import QueryBlocks.JaccPpm
 
-/** Round-6 third batch: k-core decomposition (graph family) and the
+/** K-core decomposition (graph family) and the
   * prefix-filtered exact similarity join (dedup/similarity family).
   */
 object ExtensionQueries9 extends QueryGroup {
@@ -98,8 +99,6 @@ object ExtensionQueries9 extends QueryGroup {
 
   // --------------------------------------------------------------- q109
 
-  private val JaccPpm = 600000L
-
   /** q109: prefix-filtered EXACT Jaccard similarity self-join
     * ([[graft.ext.SetSimJoin]]) over 3-shingle sets at t=0.6 — the
     * PPJoin-style scale path for the exact join: only the rarest
@@ -109,7 +108,7 @@ object ExtensionQueries9 extends QueryGroup {
     * against the naive full-index join; the oracle replays prefix
     * construction, candidates, and verification bit-exactly.
     *
-    * REGIME BOUND (round-12 SetSimAudit, sf0.01 → sf0.1): sets ×10.0,
+    * REGIME BOUND (SetSimAudit, sf0.01 → sf0.1): sets ×10.0,
     * prefix rows ×9.96 (linear), but prefix-collision pairs ×340
     * (601 → 204,116) and positional-filter survivors ×2,656
     * (25 → 66,406) while TRUE output pairs grow only ×10.2 (25 → 256).
@@ -150,10 +149,9 @@ object ExtensionQueries9 extends QueryGroup {
     "q109_prefix_jaccard", "q457_dedup_threshold_sweep",
     "q464_minhash_calibration", "q478_dup_locality")
 
-  /** The round-16 rework pointed q457/q464/q478 at the SAME
-    * `jaccardJoin(q109Shingles, t=0.5)` frame q109 filters, and each
-    * recomputed it from scratch — ~25–30 s of every sf0.1 bench run spent
-    * re-running one generator (round-16 verdict task #3). First consumer
+  /** q457/q464/q478 read the SAME `jaccardJoin(q109Shingles, t=0.5)`
+    * frame q109 filters; recomputed per consumer it cost ~25–30 s of
+    * every sf0.1 bench run. First consumer
     * computes and stages via [[graft.core.StagedMemo]] (the pair frame is
     * DATA-PROPORTIONAL, so it is a disk-backed materialized intermediate,
     * never a driver collect — see StagedMemo's header for the two memo
@@ -258,7 +256,7 @@ object ExtensionQueries9 extends QueryGroup {
        |  SELECT doc_id,
        |    unnest(range(0, len(toks) - ${CdcWindow - 1})) AS wpos,
        |    unnest(list_transform(range(1, len(toks) - ${CdcWindow - 2}),
-       |      sh_i -> ${ExtensionQueries.phSql(sh)})) AS h
+       |      sh_i -> ${QueryBlocks.phSql(sh)})) AS h
        |  FROM t
        |), cuts AS (
        |  SELECT doc_id, wpos + $CdcWindow AS pos, 1 AS is_cut,

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.Ranks
+import QueryBlocks.raterLabel
 
-/** Round-13 batch 5: agreement with missing data, symbolic series, and
+/** Agreement with missing data, symbolic series, and
   * market concentration.
   *
   *  - q367 Krippendorff's alpha (nominal) — the agreement coefficient
@@ -29,15 +30,6 @@ import graft.ops.Ranks
 object ExtensionQueries92 extends QueryGroup {
 
   // --------------------------------------------------------------- q367
-
-  /** q320's pseudo-rater label (same md5 flip) for order `item`. */
-  private def raterLabel(r: Int) = {
-    val h = expr(
-      s"conv(substring(md5(concat(cast(o_orderkey as string), '-', '$r')), 1, 8), 16, 10)"
-    ).cast("long") % 10
-    when(h < 2, (col("o_orderkey") % 3 + 1 + h % 2) % 3)
-      .otherwise(col("o_orderkey") % 3)
-  }
 
   /** ~20% of (item, rater) votes are missing — a '+' -salted hash so
     * missingness is independent of the label flip.

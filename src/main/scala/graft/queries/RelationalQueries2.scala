@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{FpSafe, Tables}
+import graft.ops.Sessions
 
 /** Generic relational operators beyond the reference's direct surface
   * (SURVEY §2 rows marked "absent — implement as generic ops"): set
@@ -167,15 +168,10 @@ object RelationalQueries2 extends QueryGroup {
     // ts = long nanos; DuckDB's TIMESTAMP is µs, so compare in exact µs via
     // integer division (never through double — ns exceeds 2^53).
     val e = Tables.events(s, dir)
-    val gapUs = 30L * 60 * 1000000L
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
     val flagged = e
       .select(col("user_id"), col("event_id"), expr("ts div 1000").as("us"),
         cents(col("value")).as("vc"))
-      .withColumn("new_sess",
-        when(col("us") - lag(col("us"), 1).over(w) > gapUs, 1L).otherwise(lit(0L)))
-      .withColumn("session_id",
-        sum(col("new_sess")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .transform(Sessions.flag)
     flagged.groupBy(col("user_id"), col("session_id"))
       .agg(count(lit(1)).as("n_events"),
         min(col("us")).as("session_start_us"),

@@ -5,12 +5,17 @@ import java.nio.file.{Files, Paths}
 
 import org.json4s._
 
-/** Result digests of every query built on [[graft.ops.CoPurchase]] or
-  * [[graft.ops.PageRank]] stay pinned: each query's canonical digest and
-  * row count at sf0.01 must equal `tools/digests_sf0.01.json`, the
-  * sidecar the DuckDB oracle run was adjudicated against. A refactor of
-  * the shared edge builder or the PageRank loop that changes one output
-  * row fails here, not only in a manual Verify run.
+/** Result digests of every query built on a shared building block stay
+  * pinned: each query's canonical digest and row count at sf0.01 must
+  * equal `tools/digests_sf0.01.json`, the sidecar the DuckDB oracle run
+  * was adjudicated against. `queries` are built on [[graft.ops.CoPurchase]]
+  * or [[graft.ops.PageRank]]; `blockQueries` take a block from
+  * [[graft.ops.Sessions]] or `graft.queries.QueryBlocks` in their plan, or
+  * the dot-product fold in their mirror. A refactor of a shared block that
+  * changes one output row fails here, not only in a manual Verify run.
+  * The fold callers q38, q47, q70 and q114 are left out: their plans train
+  * the sf0.01 IVF model, and a second trained dir in the shared suite JVM
+  * drops the IVF mirrors from the dir-less `oracleSql` ContractSpec checks.
   */
 class CoPurchaseDigestSpec extends SparkSpecBase {
 
@@ -21,6 +26,26 @@ class CoPurchaseDigestSpec extends SparkSpecBase {
     "q276_degree_assortativity", "q316_recursive_bfs", "q361_modularity",
     "q405_association_rules", "q427_rich_club", "q441_degree_assortativity",
     "q442_clustering_coefficient")
+
+  private val blockQueries = Seq(
+    "q21_sessionize", "q30_cosine_topk", "q31_ann_lsh", "q37_embed_dedup",
+    "q86_range_join", "q102_interval_overlap", "q109_prefix_jaccard", "q116_overlap_join",
+    "q117_snm_dedup", "q125_overlap_contain", "q127_rrf_fusion", "q159_knn_accuracy",
+    "q186_session_paths", "q189_session_covisitation", "q192_dwell_time",
+    "q210_peak_concurrency", "q217_page_conversion_lift", "q222_embedding_norm_audit",
+    "q223_dead_dimensions", "q228_label_separation", "q229_knn_confusion",
+    "q250_path_exemplars", "q265_first_session_effect", "q275_session_type_lift",
+    "q277_friction_impact", "q320_fleiss_kappa", "q355_ndcg_mrr",
+    "q367_krippendorff_alpha", "q407_kruskal_wallis", "q411_percent_rank_ppm",
+    "q412_brown_forsythe", "q415_tukey_fences", "q416_winsorized_mean",
+    "q420_gini_mean_difference", "q421_robust_shape", "q422_cliffs_delta",
+    "q428_wasserstein", "q429_l_moments", "q433_two_sample_runs", "q435_decision_stump",
+    "q437_mood_median_test", "q446_calibration_ece", "q448_youden_threshold",
+    "q452_records_test", "q453_turning_points", "q454_acf_table", "q455_fisher_exact",
+    "q460_pettitt_changepoint", "q461_average_precision", "q463_weekday_anomalies",
+    "q473_matthews_mcc", "q476_brier_decomposition", "q480_median_exact_ci",
+    "q481_wilks_tolerance", "q484_durbin_watson", "q485_seasonal_mann_kendall",
+    "q487_permutation_test", "q497_overlap_hybrid", "q498_overlap_hybrid_cert")
 
   private val sf = "/root/testdata/sf0.01"
 
@@ -36,7 +61,7 @@ class CoPurchaseDigestSpec extends SparkSpecBase {
     }.toMap
   }
 
-  queries.foreach { q =>
+  (queries ++ blockQueries).foreach { q =>
     test(s"$q matches its pinned sf0.01 digest") {
       val got = Verify.digest(SparkEntry.queries(q)(spark, sf))
       assert(got == pinned(q), s"$q digest/rows drifted from tools/digests_sf0.01.json")

@@ -94,6 +94,25 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(""""q\d""".r.findFirstIn(entry).isEmpty, "query names hand-listed in SparkEntry.scala")
   }
 
+  test("query building blocks have one home: no session flag, spend sum or shared helper copied into graft/queries") {
+    val queriesPkg = Paths.get("src/main/scala/graft/queries")
+    val home = queriesPkg.resolve("QueryBlocks.scala")
+    // sessions come from graft.ops.Sessions; the spend sum, the helpers and
+    // the dot-product mirror fold from QueryBlocks
+    val banned = Seq(
+      """when\(col\("us"\) - lag\(col\("us"\), 1\)""",
+      """\bval gapUs\b""",
+      """\.agg\(expr\("sum\(CAST\(round\(o_totalprice \* 100\) AS BIGINT\)\) div 100"\)\.as\("v"\)\)""",
+      """\b(?:val|def) (?:FuncWords|DailySql|raterLabel|shingles3)\b""",
+      """def fold\(a: String, b: String\): String =\s+s"list_reduce\(list_prepend\(CAST\(0\.0 AS DOUBLE\), " \+\s+""" +
+        """s"list_transform\(range\(1, len\(\$a\)\+1\), dp_i ->""").map(_.r)
+    val offenders = for {
+      p <- sources if p.startsWith(queriesPkg) && p != home
+      r <- banned if r.findFirstIn(Files.readString(p)).nonEmpty
+    } yield s"$p: $r"
+    assert(offenders.isEmpty, s"building blocks copied outside their home: ${offenders.mkString(", ")}")
+  }
+
   test("bench code is ASCII outside comments (an ASCII-default JVM prints '?' for the rest)") {
     val files = Seq("graft/Bench.scala", "graft/MoverConfirm.scala").map(Paths.get("src/main/scala", _)) ++
       sources.filter(_.startsWith(Paths.get("src/main/scala/graft/bench")))
