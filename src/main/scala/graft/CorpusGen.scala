@@ -70,12 +70,12 @@ object CorpusGen {
       col("label"))
   }
 
-  /** Write the sf1-shaped content tables (10× sf0.1 cardinalities). */
-  def writeContent(s: SparkSession, dst: String,
-      srcDir: String = "/root/testdata/sf0.1"): Unit = {
-    documents(s, 50000L, srcDir).repartition(32)
+  /** Write the content tables at 10× the cardinalities of `srcDir`'s. */
+  def writeContent(s: SparkSession, srcDir: String, dst: String): Unit = {
+    def rows(t: String) = 10 * s.read.parquet(s"$srcDir/$t.parquet").count()
+    documents(s, rows("documents"), srcDir).repartition(32)
       .write.mode("overwrite").parquet(s"$dst/documents.parquet")
-    embeddings(s, 20000L).repartition(32)
+    embeddings(s, rows("embeddings")).repartition(32)
       .write.mode("overwrite").parquet(s"$dst/embeddings.parquet")
   }
 }

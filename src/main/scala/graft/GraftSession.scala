@@ -79,4 +79,29 @@ object GraftSession {
     val s = xs.sorted
     (s.head, s(s.size / 2), s.last)
   }
+
+  /** How costs grew from a low rung to a high rung holding `step` times its
+    * data. For timed rungs, `k` fits t ~ n^k to the wall seconds and `kc`
+    * fits it to the seconds above a fixed per-run `floor` (None when either
+    * rung is within 50 ms of the floor: that rung timed overhead, not work).
+    * Each counter grows by its factor hi/lo, None where lo is 0.
+    */
+  final case class Growth(k: Option[Double], kc: Option[Double],
+      factors: Seq[(String, Option[Double])]) {
+    override def toString: String = {
+      def f2(x: Option[Double]) = x.fold("na")(v => f"$v%.2f")
+      (k.toSeq.flatMap(v => Seq(f"k=$v%.2f", s"kc=${f2(kc)}")) ++
+        factors.map { case (n, f) => s"$n=${f2(f)}" }).mkString(" ")
+    }
+  }
+
+  /** [[Growth]] of the (name, lo, hi) `counters` and the (lo, hi) wall `secs`. */
+  def growth(counters: Seq[(String, Double, Double)], step: Double = 10.0,
+      secs: Option[(Double, Double)] = None, floor: Double = 0.0): Growth = {
+    def k(lo: Double, hi: Double) = math.log(hi / lo) / math.log(step)
+    Growth(secs.map { case (lo, hi) => k(lo, hi) },
+      secs.collect { case (lo, hi) if lo - floor > 0.05 && hi - floor > 0.05 =>
+        k(lo - floor, hi - floor) },
+      counters.map { case (n, lo, hi) => n -> Option.when(lo != 0)(hi / lo) })
+  }
 }

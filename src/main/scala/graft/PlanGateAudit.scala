@@ -12,19 +12,10 @@ object PlanGateAudit {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    var bad = 0
-    names.foreach { n =>
-      val vs =
-        try graft.plans.PlanGate.audit(n, SparkEntry.queries(n)(spark, dir))
-        catch {
-          case e: Throwable =>
-            Seq(graft.plans.PlanGate.Violation(n, "build-error",
-              e.toString.takeWhile(_ != '\n')))
-        }
-      vs.foreach { v => bad += 1; println(v) }
-    }
-    println(s"\naudited ${names.size} queries, $bad violations")
+    val vs = graft.plans.PlanGate.auditQueries(spark, dir, names)
+    vs.foreach(println)
+    println(s"\naudited ${names.size} queries, ${vs.size} violations")
     spark.stop()
-    if (bad > 0) sys.exit(1)
+    if (vs.nonEmpty) sys.exit(1)
   }
 }

@@ -1,54 +1,52 @@
 package graft
 
+import java.io.File
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.commons.io.FileUtils
+import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.bench.History
+import graft.core.StagedMemo
 
-/** Per-query scale proof (round-4 verdict ask #8): fit t ~ n^k for named
-  * queries across a 10× data step and print the exponent. Two rungs:
+/** Per-query scale audit: how each named query's cost grows when its data
+  * grows 10×. One walk times three released runs per (query, rung) and
+  * reads the executor counters of those same runs. Two rungs:
   *
-  *  - `sf0.01 → sf0.1`: the driver's own generated data — real content,
-  *    every query eligible.
-  *  - `sf0.1 → sf1x` (flag `--sf1`): no sf1 testdata exists, so the
-  *    relational tables (lineitem/orders/part/supplier/customer) are
-  *    replicated 10× into a temp dir with all join keys shifted per
-  *    replica — row counts AND key cardinalities scale 10× while group
-  *    cardinalities (returnflag etc.) stay fixed, exactly how TPC-H SF
-  *    scaling behaves. Content tables (documents/embeddings) are
-  *    GENERATED at 10× cardinality by [[CorpusGen]], which extends the
-  *    shipped corpus's own measured law (vocabulary, length and dup-rate
-  *    distributions) — byte-identical replication would synthesize a
-  *    pathological 100%-duplicate corpus, and omitting them (rounds 4-5)
-  *    left the content queries without a true sf1 exponent (round-5
-  *    verdict ask #5).
+  *  - `sf0.01 → sf0.1` (default): the generated data dirs.
+  *  - `sf0.1 → sf1x` (`--sf1`): [[stageRung]] writes the 10× rung of sf0.1
+  *    into a temp dir, deleted afterwards.
   *
-  * k ≈ 1.0 means per-row work (scan/hash-agg/hash-join) dominates — the
-  * plan rides to more data by adding partitions; k substantially above 1
-  * flags a super-linear stage (a pair blowup, a sort that stopped
-  * fitting, a broadcast tipping over) to audit in PLANS.md.
+  * Per rung it prints the median wall seconds and each counter's median
+  * per run: shuffle bytes written and read, shuffle records, input bytes,
+  * memory and disk spill, task time. Then one growth line per query
+  * ([[GraftSession.growth]]). k ≈ 1.0 means per-row work (scan, hash agg,
+  * hash join) dominates, so the plan rides to more data by adding
+  * partitions; k well above 1 flags a super-linear stage (a pair blowup, a
+  * sort that stopped fitting, a broadcast tipping over). Wall time measures
+  * this host, the counters measure the plan. Shuffle bytes are compressed,
+  * and the key-shifted replicas carry higher-entropy keys, so the record
+  * count is the compression-invariant evidence of fan-out.
   *
-  * FLOOR CORRECTION (round-10 verdict task #5): every measured run pays
-  * a fixed session cost — job launch, DAG scheduling, noop-sink commit —
-  * of ~0.2 s, independent of data volume. For a query whose lo-rung
-  * median is sub-second the floor is a large FRACTION of t₁ but a small
-  * one of t₂, so the raw exponent UNDERSTATES the asymptote. The floor
-  * is measured in-session (median noop write of a 1-row range) and a
-  * corrected exponent `kc = log((t₂−floor)/(t₁−floor))/log 10` is
-  * reported beside raw `k`; when a rung sits within 50 ms of the floor
-  * the subtraction is noise-dominated and kc prints `na` (the honest
-  * answer — that rung measured overhead, not the operator).
+  * Every measured run pays a fixed session cost (job launch, scheduling,
+  * noop-sink commit) whatever its data. That floor is measured in-session
+  * as a 1-row noop run; `kc` fits the exponent to the seconds above it,
+  * since a sub-second low rung is mostly floor and raw `k` understates the
+  * asymptote there.
   *
-  * Usage: `runMain graft.QueryScaleBench [--sf1] [--out=path] q74_pagerank ...`
-  * or `--all` for the ENTIRE registered surface (round-9 verdict task
-  * #2: exponents existed only for the r9 batches; the fleet table in
-  * PLANS.md is regenerated from `--all --out=...`), or `--top=N` for the
-  * N most expensive queries by the last bench artifact's medians
-  * (bench_out.json) — the round-10 task-#5 ask to widen the sf1x rung
-  * from top-20 to top-50 without hand-listing names. `--out` appends one
-  * tab-separated line per query (name, step, lo, hi, k, kc) so the sweep
-  * survives a partial run.
+  * Usage: `runMain graft.QueryScaleBench [--sf1] [--all | --top=N]
+  * [--out=path] [--no-broadcast] <query ...>`. `--all` audits every
+  * registered query; `--top=N` the N most expensive by the last bench
+  * artifact's medians. `--out` appends one tab-separated line per query
+  * (name, step, lo, hi, k, kc), so a sweep survives a partial run.
+  * `--no-broadcast` turns broadcast joins off on both rungs: a low rung
+  * whose frames sit under the broadcast threshold shuffles nothing where
+  * the high rung sort-merges, and its factors would read super-linear
+  * for a linear plan.
   */
 object QueryScaleBench {
 
@@ -58,40 +56,117 @@ object QueryScaleBench {
     */
   private val KeyOffset = 10000000L
 
+  /** Replicated tables and their join keys. `events` grows its fleet
+    * (event and user ids shift per replica) over the SAME time range, the
+    * "user base grew, period fixed" scale-up that keeps per-window event
+    * density for the windowed queries.
+    */
   private val KeyCols = Map(
     "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
     "orders" -> Seq("o_orderkey", "o_custkey"),
     "part" -> Seq("p_partkey"),
     "supplier" -> Seq("s_suppkey"),
     "customer" -> Seq("c_custkey"),
-    // events: 10× the fleet (event ids and user ids shift per replica)
-    // over the SAME time range — the "user base grew, period fixed"
-    // scale-up, which preserves per-window event-time density semantics
-    // for the windowed/streaming-twin queries (round-11: the top-50 rung
-    // pulled in 6 events-table queries the top-20 never touched)
     "events" -> Seq("event_id", "user_id"))
 
-  /** 10× replicate the relational tables from `src` into `dst`, shifting
-    * every join key by replica·offset so FK relationships hold within
-    * each replica and never collide across replicas.
+  /** Tables [[CorpusGen.writeContent]] generates. */
+  private val ContentTables = Set("documents", "embeddings")
+
+  /** Writes the 10× rung of `src` into `dst`, the way TPC-H SF scaling
+    * behaves: the relational tables are replicated 10× with every join key
+    * shifted by replica·offset, so row counts AND key cardinalities grow
+    * 10× while FK relationships hold within each replica and group
+    * cardinalities (returnflag etc.) stay fixed. The content tables are
+    * generated at 10× by [[CorpusGen]], which extends the source corpus's
+    * own law (a byte-identical replica would be a 100%-duplicate corpus).
+    * Every other table (the nation/region dimensions) is copied as is.
     */
-  def replicateRelational(s: SparkSession, src: String, dst: String,
-      copies: Int = 10): Unit =
-    for ((t, keys) <- KeyCols) {
-      val df = s.read.parquet(s"$src/$t.parquet")
-      val rep = df.withColumn("_r", explode(sequence(lit(0), lit(copies - 1))))
-      val shifted = keys.foldLeft(rep) { (d, k) =>
-        d.withColumn(k,
-          (col(k).cast("long") + col("_r").cast("long") * KeyOffset)
-            .cast(df.schema(k).dataType))
-      }.drop("_r")
-      shifted.write.mode("overwrite").parquet(s"$dst/$t.parquet")
+  def stageRung(s: SparkSession, src: String, dst: String): Unit = {
+    def timed(what: String)(f: => Unit): Unit = {
+      val t0 = System.nanoTime()
+      f
+      println(f"$what in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
+    timed("replicated the relational tables 10x") {
+      for ((t, keys) <- KeyCols) {
+        val df = s.read.parquet(s"$src/$t.parquet")
+        val rep = df.withColumn("_r", explode(sequence(lit(0), lit(9))))
+        val shifted = keys.foldLeft(rep) { (d, k) =>
+          d.withColumn(k,
+            (col(k).cast("long") + col("_r").cast("long") * KeyOffset)
+              .cast(df.schema(k).dataType))
+        }.drop("_r")
+        shifted.write.mode("overwrite").parquet(s"$dst/$t.parquet")
+      }
+    }
+    timed("generated the content tables at 10x")(CorpusGen.writeContent(s, src, dst))
+    val copied = new File(src).list().filter(_.endsWith(".parquet")).sorted
+      .filterNot(f => (KeyCols.keySet ++ ContentTables).contains(f.stripSuffix(".parquet")))
+    timed(s"copied ${copied.mkString(", ")}") {
+      copied.foreach(f => FileUtils.copyToDirectory(new File(src, f), new File(dst)))
+    }
+  }
+
+  /** Executor counters of the stages that complete while it listens. Each
+    * stage counts once, from its first successful attempt: a retried stage
+    * would otherwise double-count its bytes and skew the growth factors.
+    */
+  final class MetricsAcc extends SparkListener {
+    val shuffleWrite = new AtomicLong
+    val shuffleRead = new AtomicLong
+    val shuffleRecords = new AtomicLong
+    val input = new AtomicLong
+    val memSpill = new AtomicLong
+    val diskSpill = new AtomicLong
+    val taskTimeMs = new AtomicLong
+    /** Attempts NOT counted (failed, or a later attempt of an
+      * already-counted stage): nonzero means the run saw retries and is
+      * flagged rather than silently inflated.
+      */
+    val skippedAttempts = new AtomicLong
+    private val counted =
+      java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    /** The counters by their [[MetricsAcc.Names]]. */
+    def values: Map[String, Long] = MetricsAcc.Names.zip(Seq(shuffleWrite, shuffleRead,
+      shuffleRecords, input, memSpill, diskSpill, taskTimeMs).map(_.get)).toMap
+    def reset(): Unit = {
+      Seq(shuffleWrite, shuffleRead, shuffleRecords, input, memSpill,
+        diskSpill, taskTimeMs, skippedAttempts).foreach(_.set(0L))
+      counted.clear()
+    }
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      val info = sc.stageInfo
+      val m = info.taskMetrics
+      if (m != null) {
+        if (info.failureReason.isEmpty && counted.add(info.stageId)) {
+          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+          shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+          input.addAndGet(m.inputMetrics.bytesRead)
+          memSpill.addAndGet(m.memoryBytesSpilled)
+          diskSpill.addAndGet(m.diskBytesSpilled)
+          taskTimeMs.addAndGet(m.executorRunTime)
+        } else skippedAttempts.incrementAndGet()
+      }
+    }
+  }
+
+  object MetricsAcc {
+    val Names = Seq("shufW", "shufR", "shufRec", "input", "spillMem", "spillDisk", "taskTime")
+  }
+
+  /** The counters a growth line reports: spill is 0 at most rungs. */
+  private val Grown = MetricsAcc.Names.filterNot(_.startsWith("spill"))
+
+  /** One (query, rung): median wall seconds, each counter's median per run,
+    * and the stage attempts its runs left uncounted.
+    */
+  private final case class Rung(secs: Double, counters: Map[String, Double], retried: Long)
 
   /** The N most expensive registered queries by the last full bench
-    * artifact's per-query medians (`bench_out.json` — written by every
-    * [[Bench]] run). Lets the sf1x rung target "top-50 by cost" without
-    * hand-maintaining a name list.
+    * artifact's per-query medians (`bench_out.json`, written by every
+    * [[Bench]] run), so the sf1x rung can target "top-50 by cost" without
+    * a hand-kept name list.
     */
   private def topByCost(n: Int): Seq[String] = {
     val medians = History.artifactMedians()
@@ -102,45 +177,70 @@ object QueryScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sf1 = args.contains("--sf1")
-    val out = args.collectFirst { case a if a.startsWith("--out=") => a.drop(6) }
-    val topN = args.collectFirst { case a if a.startsWith("--top=") => a.drop(6).toInt }
+    val (flags, names0) = args.toSeq.partition(_.startsWith("--"))
+    val unknown = flags.filterNot(f => Set("--sf1", "--all", "--no-broadcast")(f) ||
+      f.startsWith("--top=") || f.startsWith("--out="))
+    require(unknown.isEmpty, s"unknown options: ${unknown.mkString(" ")}")
+    val out = flags.collectFirst { case a if a.startsWith("--out=") => a.drop(6) }
+    val topN = flags.collectFirst { case a if a.startsWith("--top=") => a.drop(6).toInt }
     val names =
       if (topN.isDefined) topByCost(topN.get)
-      else if (args.contains("--all")) SparkEntry.queries.keys.toSeq.sorted
-      else args.filterNot(_.startsWith("--")).toSeq
-    require(names.nonEmpty,
-      "usage: QueryScaleBench [--sf1] [--all | --top=N] [--out=p] <queryName>...")
+      else if (flags.contains("--all")) SparkEntry.queries.keys.toSeq.sorted
+      else names0
+    require(names.nonEmpty, "usage: QueryScaleBench [--sf1] [--all | --top=N] " +
+      "[--out=p] [--no-broadcast] <queryName>...")
     val spark = GraftSession.local()
-    val staged =
-      if (sf1) Some(java.nio.file.Files.createTempDirectory("graft_sf1x").toFile)
-      else None
-    try measure(spark, names, out, staged.map(_.toString))
-    finally staged.foreach(FileUtils.deleteDirectory)
+    if (flags.contains("--no-broadcast")) {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    }
+    val sf01 = "/root/testdata/sf0.1"
+    if (flags.contains("--sf1")) {
+      val tmp = Files.createTempDirectory("graft_sf1x").toFile
+      try {
+        println(s"staging the 10x rung of $sf01 into $tmp ...")
+        stageRung(spark, sf01, tmp.toString)
+        measure(spark, names, out, "sf0.1" -> sf01, "sf1x" -> tmp.toString)
+      } finally FileUtils.deleteDirectory(tmp)
+    } else measure(spark, names, out, "sf0.01" -> "/root/testdata/sf0.01", "sf0.1" -> sf01)
     spark.stop()
   }
 
-  /** Times `names` on both rungs; `sf1Dir` receives the 10× rung. */
+  /** Audits `names` on the (label, dir) rungs `lo` and `hi`. */
   private def measure(spark: SparkSession, names: Seq[String], out: Option[String],
-      sf1Dir: Option[String]): Unit = {
-    def timeAt(name: String, dir: String): Double = {
+      lo: (String, String), hi: (String, String)): Unit = {
+    val acc = new MetricsAcc
+    spark.sparkContext.addSparkListener(acc)
+    def rung(name: String, label: String, dir: String): Rung = {
       System.gc()
-      GraftSession.timedMedian(spark, 3)(GraftSession.runQuery(spark, name, dir))
+      val runs = (1 to 3).map { _ =>
+        // every run computes its plan: a staged memo would replay the frame
+        // the first run wrote, and time and count a parquet scan instead
+        StagedMemo.invalidate()
+        acc.reset()
+        val t = GraftSession.timedReleased(spark)(GraftSession.runQuery(spark, name, dir))
+        ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+        (t, acc.values, acc.skippedAttempts.get)
+      }
+      def median(xs: Seq[Double]) = GraftSession.stats(xs)._2
+      val r = Rung(median(runs.map(_._1)),
+        MetricsAcc.Names.map(c => c -> median(runs.map(_._2(c).toDouble))).toMap,
+        runs.map(_._3).sum)
+      val shown = MetricsAcc.Names.map { c =>
+        val v = r.counters(c)
+        if (c == "shufRec") f"$c=$v%.0f"
+        else if (c == "taskTime") f"$c=$v%.0fms"
+        else f"$c=${v / 1048576}%.1fMB"
+      }
+      val retryNote =
+        if (r.retried > 0) s" [${r.retried} retried/failed stage attempts excluded]" else ""
+      println(f"$name%-28s $label%-6s wall=${r.secs}%6.2f s  ${shown.mkString(" ")}$retryNote")
+      r
     }
 
-    val (loDir, hiDir, step) = sf1Dir match {
-      case Some(tmp) =>
-        println(s"replicating relational tables 10x into $tmp ...")
-        replicateRelational(spark, "/root/testdata/sf0.1", tmp)
-        println(s"generating 10x content tables into $tmp ...")
-        CorpusGen.writeContent(spark, tmp)
-        ("/root/testdata/sf0.1", tmp, "sf0.1->sf1x")
-      case None => ("/root/testdata/sf0.01", "/root/testdata/sf0.1", "sf0.01->sf0.1")
-    }
-
-    // warmup both dirs through the first query
-    try timeAt(names.head, loDir) catch { case _: Throwable => }
-    // measured fixed session floor: the cost of a data-free measured run
+    val step = s"${lo._1}->${hi._1}"
+    // warm the session through the first query
+    try GraftSession.runQuery(spark, names.head, lo._2) catch { case _: Throwable => }
     val floor = {
       System.gc()
       GraftSession.timedMedian(spark, 3)(GraftSession.noop(spark.range(1).toDF()))
@@ -148,20 +248,16 @@ object QueryScaleBench {
     println(f"session floor (1-row noop run): $floor%.3f s")
     for (n <- names) {
       try {
-        val t1 = timeAt(n, loDir)
-        val t2 = timeAt(n, hiDir)
-        val k = math.log(t2 / t1) / math.log(10.0)
-        // floor-corrected exponent; na when a rung is floor-dominated
-        val kc =
-          if (t1 - floor > 0.05 && t2 - floor > 0.05)
-            f"${math.log((t2 - floor) / (t1 - floor)) / math.log(10.0)}%.3f"
-          else "na"
-        println(f"$n%-28s $step: lo=$t1%6.2f s  hi=$t2%6.2f s  k=$k%.2f  kc=$kc")
+        val a = rung(n, lo._1, lo._2)
+        val b = rung(n, hi._1, hi._2)
+        val g = GraftSession.growth(Grown.map(c => (c, a.counters(c), b.counters(c))),
+          secs = Some((a.secs, b.secs)), floor = floor)
+        println(s"growth $n $step: $g")
         out.foreach { p =>
-          java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
-            f"$n\t$step\t$t1%.3f\t$t2%.3f\t$k%.3f\t$kc%n",
-            java.nio.file.StandardOpenOption.CREATE,
-            java.nio.file.StandardOpenOption.APPEND)
+          Files.writeString(Paths.get(p),
+            f"$n\t$step\t${a.secs}%.3f\t${b.secs}%.3f\t${g.k.get}%.3f\t" +
+              g.kc.fold("na")(v => f"$v%.3f") + "\n",
+            StandardOpenOption.CREATE, StandardOpenOption.APPEND)
         }
       } catch { case e: Throwable =>
         println(s"$n FAILED: ${e.toString.takeWhile(_ != '\n')}")

@@ -13,7 +13,7 @@ object SparkEntry {
     RelationalQueries.q01_pricing_summary(spark, "/root/testdata/sf0.001")
 
   /** THE single registration point for query groups, in registration
-    * order. `queries`, `oracleSql`, `oracleSqlFor` AND ContractSpec's
+    * order. `queries`, `oracleSqlFor` AND ContractSpec's
     * invariants are all derived from this list and the groups' entries,
     * so a group registered here is automatically under the name-collision
     * / oracle-subset gates — the round-11 defect (a group added to the
@@ -179,19 +179,12 @@ object SparkEntry {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Query.plans(entries)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Model-backed mirrors appear only while
-    * exactly one dir is trained for them (see [[Oracle.Model]]); a `def`,
-    * because those models are trained at run time.
+    * the same parquet tables of sf dir `dir`: a model-backed mirror carries
+    * the literals of the model trained on `dir`, or is absent while none
+    * is (see [[Oracle.Model]]); a `def`, because those models are trained at
+    * run time. Verify uses this so a multi-dir JVM never emits another
+    * dir's model.
     */
-  def oracleSql: Map[String, String] = mirrors(_.sql)
-
-  /** [[oracleSql]] resolved for a specific sf dir: a model-backed mirror
-    * carries the literals of the model trained on `dir`, or is absent
-    * while none is. Verify uses this so a multi-dir JVM never emits
-    * another dir's model.
-    */
-  def oracleSqlFor(dir: String): Map[String, String] = mirrors(_.sqlFor(dir))
-
-  private def mirrors(sql: Oracle => Option[String]): Map[String, String] =
-    entries.iterator.flatMap(q => sql(q.oracle).map(q.name -> _)).toMap
+  def oracleSqlFor(dir: String): Map[String, String] =
+    entries.iterator.flatMap(q => q.oracle.sqlFor(dir).map(q.name -> _)).toMap
 }

@@ -143,10 +143,7 @@ object SetSimJoin {
     * (collect_list per __id), so the largest set must fit comfortably in
     * an executor row — fine for shingle/feature sets (thousands of
     * elements, the corpora this targets), a row-size hazard for
-    * unbounded sets. For corpora where a single set can run to millions
-    * of elements, use [[jaccardJoinViaJoin]]: same candidates, same
-    * output, intersection counted by a candidate-scoped equi-join that
-    * never builds whole-set rows.
+    * unbounded sets.
     */
   def jaccardJoin(elements: DataFrame, idCol: String, elemCol: String,
       tPpm: Long): DataFrame = {
@@ -175,25 +172,6 @@ object SetSimJoin {
     finish(inter, tPpm)
   }
 
-  /** [[jaccardJoin]] with row-size-safe verification: intersection sizes
-    * come from equi-joining the candidate pairs back to the (id, element)
-    * table on both sides and counting matches — ~Σ|A| rows shuffled per
-    * candidate instead of one array row per set, trading shuffle volume
-    * for a hard bound on row size. Use when individual sets can be
-    * arbitrarily large; output is identical (SetSimJoinSpec pins
-    * equality).
-    */
-  def jaccardJoinViaJoin(elements: DataFrame, idCol: String, elemCol: String,
-      tPpm: Long): DataFrame = {
-    val (tok, cand) = candidates(elements, idCol, elemCol, tPpm)
-    val inter = cand
-      .join(tok.select(col("__id").as("id_a"), col("tok")), Seq("id_a"))
-      .join(tok.select(col("__id").as("id_b"), col("tok")), Seq("id_b", "tok"))
-      .groupBy(col("id_a"), col("id_b"), col("sa"), col("sb"))
-      .agg(count(lit(1)).as("inter"))
-    finish(inter, tPpm)
-  }
-
   /** All set pairs with ABSOLUTE overlap |A∩B| ≥ minOverlap — the
     * T-occurrence / overlap-join member of the prefix-filter family
     * (Chaudhuri, Ganti, Kaushik 2006; Xiao et al. 2008 §2), and the
@@ -214,8 +192,7 @@ object SetSimJoin {
     * Output: (id_a, id_b, inter, sa, sb, cont_a_ppm, cont_b_ppm) with
     * id_a < id_b; cont_x_ppm = ⌊|A∩B|·10⁶ / |X|⌋, the exact scaled
     * containment of each side in the other. Same scale shape and SIZE
-    * BOUND as [[jaccardJoin]] (array-row verification; sets with
-    * millions of elements want the equi-join verification instead).
+    * BOUND as [[jaccardJoin]] (array-row verification).
     *
     * REGIME BOUND (measured, PLANS.md round-7 exponent table): prefix
     * pruning power is o/|set|. At floors well below typical set sizes

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo, Expression, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -141,6 +141,17 @@ object PlanGate {
     */
   private def sideOk(p: LogicalPlan, h: Option[HintInfo]): Boolean =
     p.maxRows.exists(_ <= BoundCap) || hinted(h)
+
+  /** Audits the registered queries `names`, each built over `dir`; a
+    * query whose plan fails to build is a `build-error` violation.
+    */
+  def auditQueries(spark: SparkSession, dir: String, names: Seq[String]): Seq[Violation] =
+    names.flatMap { n =>
+      try audit(n, graft.SparkEntry.queries(n)(spark, dir))
+      catch { case e: Throwable =>
+        Seq(Violation(n, "build-error", e.toString.linesIterator.next()))
+      }
+    }
 
   def audit(name: String, df: DataFrame): Seq[Violation] = {
     val plan = df.queryExecution.optimizedPlan

@@ -221,7 +221,7 @@ object ExtensionQueries10 extends QueryGroup {
 
   /** A mirror generated from the dir's trained merge table (q112, q54). */
   private[queries] def bpeOracle(sqlFor: Bpe.Model => String): Oracle =
-    Oracle.Model(() => Oracle.dirsOf(bpeCache), d => trainedBpe(d).map(sqlFor))
+    Oracle.Model(d => trainedBpe(d).map(sqlFor))
 
   val entries: Seq[Query] = Seq(
     Query("q112_bpe_tokens", q112_bpe_tokens _, bpeOracle(q112SqlFor)),

@@ -322,20 +322,16 @@ object ExtensionQueries132 extends QueryGroup {
 
   // --------------------------------------------------------- registry
 
-  /** Mirrors embedding BOTH generations' TRAINED literals (never the
-    * loaded copies the engine ran), for the dirs with a generation-1 model.
-    */
-  private def driftOracle(mirror: String => Option[String]): Oracle =
-    Oracle.Model(() => Oracle.dirsOf(trainedG1Bpe) ++ Oracle.dirsOf(trainedG1Ivf), mirror)
-
+  // q490/q491's mirrors embed BOTH generations' TRAINED literals (never the
+  // loaded copies the engine ran), for the dirs with a generation-1 model
   val entries: Seq[Query] = Seq(
     Query("q488_ahash_band_dedup", q488_ahash_band_dedup _, q488Sql),
     Query("q489_ahash_band_audit", q489_ahash_band_audit _, q489Sql),
-    Query("q490_bpe_generation_drift", q490_bpe_generation_drift _, driftOracle(d => for {
+    Query("q490_bpe_generation_drift", q490_bpe_generation_drift _, Oracle.Model(d => for {
       g1 <- Option(trainedG1Bpe.get(d))
       g2 <- ExtensionQueries10.trainedBpe(d)
     } yield q490SqlFor(g1, g2))),
-    Query("q491_ivf_rebuild_churn", q491_ivf_rebuild_churn _, driftOracle(d => for {
+    Query("q491_ivf_rebuild_churn", q491_ivf_rebuild_churn _, Oracle.Model(d => for {
       g1 <- Option(trainedG1Ivf.get(d))
       g2 <- ExtensionQueries2.trainedIvf(d)
     } yield q491SqlFor(g1, g2)))

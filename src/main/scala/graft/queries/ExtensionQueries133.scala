@@ -166,7 +166,6 @@ object ExtensionQueries133 extends QueryGroup {
 
   val entries: Seq[Query] = Seq(
     Query("q492_pq_rebuild_quality", q492_pq_rebuild_quality _, Oracle.Model(
-      () => Oracle.dirsOf(trainedG1Pq),
       d => for {
         g1 <- Option(trainedG1Pq.get(d))
         g2 <- ExtensionQueries6.trainedPq(d)

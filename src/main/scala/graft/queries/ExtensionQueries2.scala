@@ -415,7 +415,7 @@ object ExtensionQueries2 extends QueryGroup {
     * centroids into the other's oracle.
     */
   private[queries] def ivfOracle(sqlFor: IvfIndex.Model => String): Oracle =
-    Oracle.Model(() => Oracle.dirsOf(modelCache), d => trainedIvf(d).map(sqlFor))
+    Oracle.Model(d => trainedIvf(d).map(sqlFor))
 
   val entries: Seq[Query] = Seq(
     Query("q37_embed_dedup", q37_embed_dedup _, q37Sql),

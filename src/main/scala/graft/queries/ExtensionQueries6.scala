@@ -559,7 +559,6 @@ object ExtensionQueries6 extends QueryGroup {
     Query("q91_dense_ids", q91_dense_ids _, q91Sql),
     Query("q92_incremental_rollup", q92_incremental_rollup _, q92Sql),
     Query("q93_ann_ivfpq", q93_ann_ivfpq _, Oracle.Model(
-      () => Oracle.dirsOf(ivfCache) ++ Oracle.dirsOf(pqCache),
       d => for (ivf <- trainedIvf(d); pq <- trainedPq(d)) yield q93SqlFor(ivf, pq)))
   )
 }

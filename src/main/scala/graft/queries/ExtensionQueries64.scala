@@ -83,21 +83,16 @@ object ExtensionQueries64 extends QueryGroup {
     ExtensionQueries7.q100From(s, dir, pca)
   }
 
-  /** A persisted==trained mirror: the TRAINED caches' literals (never the
-    * loaded models — the whole point of the gate), for the dirs this JVM
-    * has round-tripped (q285-q287, q290).
-    */
-  private[queries] def persistedOracle(mirror: String => Option[String]): Oracle =
-    Oracle.Model(() => Oracle.dirsOf(loadedCache), mirror)
-
+  // persisted==trained mirrors (q285-q287, q290): the TRAINED caches'
+  // literals, never the loaded models (the whole point of the gate)
   val entries: Seq[Query] = Seq(
-    Query("q285_ivfpq_persisted", q285_ivfpq_persisted _, persistedOracle(d => for {
+    Query("q285_ivfpq_persisted", q285_ivfpq_persisted _, Oracle.Model(d => for {
       ivf <- ExtensionQueries6.trainedIvf(d)
       pq <- ExtensionQueries6.trainedPq(d)
     } yield ExtensionQueries6.q93SqlFor(ivf, pq))),
-    Query("q286_bpe_persisted", q286_bpe_persisted _, persistedOracle(d =>
+    Query("q286_bpe_persisted", q286_bpe_persisted _, Oracle.Model(d =>
       ExtensionQueries10.trainedBpe(d).map(ExtensionQueries10.q112SqlFor))),
-    Query("q287_pca_persisted", q287_pca_persisted _, persistedOracle(d =>
+    Query("q287_pca_persisted", q287_pca_persisted _, Oracle.Model(d =>
       ExtensionQueries7.trainedPca(d).map(ExtensionQueries7.q100SqlFor)))
   )
 }

@@ -240,8 +240,8 @@ object ExtensionQueries65 extends QueryGroup {
   val entries: Seq[Query] = Seq(
     Query("q288_linkage_patterns", q288_linkage_patterns _, q288Sql),
     Query("q289_zipf_decades", q289_zipf_decades _, q289Sql),
-    // the q285 single-dir pattern: emitted for the round-tripped dirs
-    Query("q290_ivf_utilization", q290_ivf_utilization _, ExtensionQueries64.persistedOracle(d =>
+    // the q285 pattern: the TRAINED index's literals, never the loaded copy
+    Query("q290_ivf_utilization", q290_ivf_utilization _, Oracle.Model(d =>
       ExtensionQueries6.trainedIvf(d).map(q290SqlFor)))
   )
 }

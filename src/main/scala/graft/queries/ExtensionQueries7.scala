@@ -334,7 +334,7 @@ object ExtensionQueries7 extends QueryGroup {
   val entries: Seq[Query] = Seq(
     Query("q99_incremental_minhash", q99_incremental_minhash _, q99Sql),
     Query("q100_pca_project", q100_pca_project _,
-      Oracle.Model(() => Oracle.dirsOf(pcaCache), d => trainedPca(d).map(q100SqlFor))),
+      Oracle.Model(d => trainedPca(d).map(q100SqlFor))),
     Query("q101_pca_ann_recall", q101_pca_ann_recall _, q101Sql),
     Query("q102_interval_overlap", q102_interval_overlap _, q102Sql)
   )

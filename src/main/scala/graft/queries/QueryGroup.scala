@@ -1,9 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Contract shared by every query-group object under `graft.queries`.
@@ -11,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A group lists its queries once, as [[Query]] entries: name, plan and
   * DuckDB oracle mirror together. Registration happens in exactly ONE
   * place — `SparkEntry.groups` — and both the production maps
-  * (`SparkEntry.queries` / `oracleSql` / `oracleSqlFor`) and the contract
+  * (`SparkEntry.queries` / `oracleSqlFor`) and the contract
   * invariants (`ContractSpec`) are derived from that list. A group object
   * that exists on the classpath but is absent from the registry is caught
   * by ContractSpec's reflective classpath scan.
@@ -50,34 +46,19 @@ object Query {
 sealed trait Oracle {
   /** The mirror for data dir `dir`; None while no model is trained for it. */
   def sqlFor(dir: String): Option[String]
-
-  /** The dir-less mirror (`SparkEntry.oracleSql`). */
-  def sql: Option[String]
 }
 
 object Oracle {
   final case class Sql(text: String) extends Oracle {
     def sqlFor(dir: String): Option[String] = Some(text)
-    def sql: Option[String] = Some(text)
   }
 
   /** A mirror embedding the literals of a model trained per dir, generated
     * AFTER the query has trained (Verify dumps oracle_sql.json last).
-    * `trainedDirs` lists the dirs this JVM has trained the model for;
-    * `mirror(dir)` is None until that dir's model exists. The dir-less view
-    * emits only when exactly one dir is trained — unambiguous; with zero or
-    * several the key is omitted rather than guessing, so a multi-dir JVM
-    * never emits another dir's literals.
+    * `mirror(dir)` is None until that dir's model exists, so a multi-dir
+    * JVM never emits another dir's literals.
     */
-  final case class Model(trainedDirs: () => Iterable[String], mirror: String => Option[String])
-      extends Oracle {
+  final case class Model(mirror: String => Option[String]) extends Oracle {
     def sqlFor(dir: String): Option[String] = mirror(dir)
-    def sql: Option[String] = trainedDirs().toList.distinct match {
-      case d :: Nil => mirror(d)
-      case _ => None
-    }
   }
-
-  /** The dirs a per-dir model cache holds. */
-  def dirsOf(cache: ConcurrentHashMap[String, _]): Iterable[String] = cache.keySet.asScala
 }

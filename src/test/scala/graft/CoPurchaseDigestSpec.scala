@@ -13,9 +13,6 @@ import org.json4s._
   * [[graft.ops.Sessions]] or `graft.queries.QueryBlocks` in their plan, or
   * the dot-product fold in their mirror. A refactor of a shared block that
   * changes one output row fails here, not only in a manual Verify run.
-  * The fold callers q38, q47, q70 and q114 are left out: their plans train
-  * the sf0.01 IVF model, and a second trained dir in the shared suite JVM
-  * drops the IVF mirrors from the dir-less `oracleSql` ContractSpec checks.
   */
 class CoPurchaseDigestSpec extends SparkSpecBase {
 
@@ -28,9 +25,10 @@ class CoPurchaseDigestSpec extends SparkSpecBase {
     "q442_clustering_coefficient")
 
   private val blockQueries = Seq(
-    "q21_sessionize", "q30_cosine_topk", "q31_ann_lsh", "q37_embed_dedup",
-    "q86_range_join", "q102_interval_overlap", "q109_prefix_jaccard", "q116_overlap_join",
-    "q117_snm_dedup", "q125_overlap_contain", "q127_rrf_fusion", "q159_knn_accuracy",
+    "q21_sessionize", "q30_cosine_topk", "q31_ann_lsh", "q37_embed_dedup", "q38_ann_ivf",
+    "q47_ann_recall", "q70_semdedup", "q86_range_join", "q102_interval_overlap",
+    "q109_prefix_jaccard", "q114_filtered_recall", "q116_overlap_join", "q117_snm_dedup",
+    "q125_overlap_contain", "q127_rrf_fusion", "q159_knn_accuracy",
     "q186_session_paths", "q189_session_covisitation", "q192_dwell_time",
     "q210_peak_concurrency", "q217_page_conversion_lift", "q222_embedding_norm_audit",
     "q223_dead_dimensions", "q228_label_separation", "q229_knn_confusion",

@@ -9,7 +9,7 @@ import graft.queries._
   * name a real query.
   *
   * Round-12 hardening: this spec iterates `SparkEntry.groups` — the SAME
-  * list the production `queries`/`oracleSql` maps are built from — so a
+  * list the production `queries`/`oracleSqlFor` maps are built from — so a
   * group registered for the driver is covered here by construction (the
   * round-11 red suite was a hand-maintained copy of that list going
   * stale). A classpath scan additionally proves no `QueryGroup` module
@@ -61,8 +61,9 @@ class ContractSpec extends SparkSpecBase {
   }
 
   test("every oracle key names a registered query; q38's oracle appears once trained") {
+    val sf = "/root/testdata/sf0.001"
     val qs = SparkEntry.queries.keySet
-    val os = SparkEntry.oracleSql.keySet
+    val os = SparkEntry.oracleSqlFor(sf).keySet
     assert(os.subsetOf(qs), s"orphan oracles: ${os.diff(qs)}")
     // a model-backed mirror (Oracle.Model) embeds the trained model's
     // literals, so its entry exists only after a query has trained the
@@ -73,20 +74,19 @@ class ContractSpec extends SparkSpecBase {
     assert(modelBacked.nonEmpty)
     assert(qs.diff(os).subsetOf(modelBacked),
       s"unexpected rows-only queries: ${qs.diff(os)}")
-    ExtensionQueries2.q38_ann_ivf(spark, "/root/testdata/sf0.001").count()
-    ExtensionQueries6.q93_ann_ivfpq(spark, "/root/testdata/sf0.001").count()
-    ExtensionQueries7.q100_pca_project(spark, "/root/testdata/sf0.001").count()
-    ExtensionQueries10.q112_bpe_tokens(spark, "/root/testdata/sf0.001").count()
+    ExtensionQueries2.q38_ann_ivf(spark, sf).count()
+    ExtensionQueries6.q93_ann_ivfpq(spark, sf).count()
+    ExtensionQueries7.q100_pca_project(spark, sf).count()
+    ExtensionQueries10.q112_bpe_tokens(spark, sf).count()
     // round-trips the persisted models, so the q285-q287 mirrors resolve
-    ExtensionQueries64.q285_ivfpq_persisted(spark, "/root/testdata/sf0.001").count()
+    ExtensionQueries64.q285_ivfpq_persisted(spark, sf).count()
     // trains + round-trips the generation-1 models, so the r16 drift
     // mirrors (two-generation literals) resolve
-    ExtensionQueries132.q490_bpe_generation_drift(spark, "/root/testdata/sf0.001").count()
-    ExtensionQueries132.q491_ivf_rebuild_churn(spark, "/root/testdata/sf0.001").count()
-    ExtensionQueries133.q492_pq_rebuild_quality(spark, "/root/testdata/sf0.001").count()
-    assert(SparkEntry.oracleSql.keySet == qs,
+    ExtensionQueries132.q490_bpe_generation_drift(spark, sf).count()
+    ExtensionQueries132.q491_ivf_rebuild_churn(spark, sf).count()
+    ExtensionQueries133.q492_pq_rebuild_quality(spark, sf).count()
+    assert(SparkEntry.oracleSqlFor(sf).keySet == qs,
       "generated oracles missing after training (Verify would dump an incomplete map)")
-    assert(SparkEntry.oracleSqlFor("/root/testdata/sf0.001").keySet == qs)
   }
 
   test("entry (driver smoke) returns rows at sf0.001") {

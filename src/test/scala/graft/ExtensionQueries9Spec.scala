@@ -112,10 +112,6 @@ class ExtensionQueries9Spec extends SparkSpecBase {
         expr("inter * 1000000L div union_sz").as("jacc_ppm"))
       .orderBy("id_a", "id_b").collect().toSeq
     assert(pref == naive, s"prefix filter must lose no qualifying pair: ${pref.size} vs ${naive.size}")
-    // the row-size-safe verification path must produce the identical output
-    val viaJoin = SetSimJoin.jaccardJoinViaJoin(shingles, "doc_id", "sh", 600000L)
-      .orderBy("id_a", "id_b").collect().toSeq
-    assert(viaJoin == naive, s"equi-join verification must match: ${viaJoin.size} vs ${naive.size}")
   }
 
   test("q109: prefix filter indexes strictly fewer elements than the full index") {

@@ -19,15 +19,8 @@ class FleetPlanShapeSpec extends SparkSpecBase {
   private val sf = "/root/testdata/sf0.001"
 
   test("all registered queries pass the PlanGate scale-shape audit") {
-    val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, build) =>
-        try graft.plans.PlanGate.audit(name, build(spark, sf))
-        catch {
-          case e: Throwable =>
-            Seq(graft.plans.PlanGate.Violation(name, "build-error",
-              e.toString.linesIterator.next()))
-        }
-    }
+    val violations = graft.plans.PlanGate.auditQueries(spark, sf,
+      SparkEntry.queries.keys.toSeq.sorted)
     assert(violations.isEmpty,
       s"\n${violations.size} plan-shape violations:\n" +
         violations.mkString("\n") +

@@ -19,6 +19,23 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(GraftSession.stats(Seq(0.5)) == ((0.5, 0.5, 0.5)))
   }
 
+  test("growth: k and kc from lo/hi pairs with a known exponent") {
+    val linear = GraftSession.growth(Nil, secs = Some((1.0, 10.0)))
+    assert(math.abs(linear.k.get - 1.0) < 1e-12 && math.abs(linear.kc.get - 1.0) < 1e-12)
+    // quadratic over a 10x step, and half-linear over a 100x step
+    assert(math.abs(GraftSession.growth(Nil, secs = Some((2.0, 200.0))).k.get - 2.0) < 1e-12)
+    assert(math.abs(GraftSession.growth(Nil, 100.0, Some((1.0, 10.0))).k.get - 0.5) < 1e-12)
+    // 0.3 s -> 2.1 s over a 0.1 s floor: raw k understates, kc is linear
+    val floored = GraftSession.growth(Nil, secs = Some((0.3, 2.1)), floor = 0.1)
+    assert(floored.k.get < 0.9 && math.abs(floored.kc.get - 1.0) < 1e-12)
+    // a rung within 50 ms of the floor timed overhead: kc is na
+    assert(GraftSession.growth(Nil, secs = Some((0.12, 2.0)), floor = 0.1).kc.isEmpty)
+    val counted = GraftSession.growth(Seq(("rec", 100.0, 1000.0), ("spill", 0.0, 5.0)))
+    assert(counted.k.isEmpty && counted.factors == Seq("rec" -> Some(10.0), "spill" -> None))
+    assert(counted.toString == "rec=10.00 spill=na")
+    assert(floored.copy(factors = counted.factors).toString.startsWith("k=0.85 kc=1.00 rec=10.00"))
+  }
+
   test("builder carries the shared settings into the suite session") {
     val conf = spark.conf
     assert(spark.sparkContext.master == "local[4]")
@@ -68,6 +85,18 @@ class GraftSessionSpec extends SparkSpecBase {
           Files.readString(p).contains(pattern))
       assert(offenders.isEmpty, s"$pattern outside GraftSession: ${offenders.mkString(", ")}")
     }
+  }
+
+  test("main code declares exactly the ten entry points") {
+    // a new probe or audit main is added here on purpose, or folded into
+    // one of these
+    val mains = for {
+      p <- sources
+      text = Files.readString(p)
+      at = text.indexOf("def main(") if at >= 0
+    } yield """(?m)^object (\w+)""".r.findAllMatchIn(text.take(at)).toSeq.last.group(1)
+    assert(mains.sorted == Seq("Bench", "ExplainAudit", "LineageAudit", "MoverConfirm",
+      "PipelineDemo", "PlanGateAudit", "QueryScaleBench", "SetSimAudit", "SpotBench", "Verify"))
   }
 
   test("bench artifacts are named and decoded only in graft.bench") {

@@ -49,16 +49,15 @@ class QueryRegistrySpec extends SparkSpecBase {
     assert(e.getMessage.contains("qa") && !e.getMessage.contains("qb"))
   }
 
-  test("a model-backed mirror: per dir from that dir's model; dir-less only when one dir is trained") {
+  test("a model-backed mirror comes from its own dir's model") {
     val cache = new ConcurrentHashMap[String, String]()
-    val oracle = Oracle.Model(() => Oracle.dirsOf(cache), d => Option(cache.get(d)).map(m => s"SELECT $m"))
-    assert(oracle.sql.isEmpty && oracle.sqlFor("a").isEmpty)
+    val oracle = Oracle.Model(d => Option(cache.get(d)).map(m => s"SELECT $m"))
+    assert(oracle.sqlFor("a").isEmpty)
     cache.put("a", "1")
-    assert(oracle.sql.contains("SELECT 1") && oracle.sqlFor("a").contains("SELECT 1"))
+    assert(oracle.sqlFor("a").contains("SELECT 1"))
     assert(oracle.sqlFor("b").isEmpty)
     cache.put("b", "2")
-    assert(oracle.sql.isEmpty, "two trained dirs: the dir-less view must not guess")
-    assert(oracle.sqlFor("b").contains("SELECT 2"))
+    assert(oracle.sqlFor("a").contains("SELECT 1") && oracle.sqlFor("b").contains("SELECT 2"))
     assert(Oracle.Sql("SELECT 0").sqlFor("b").contains("SELECT 0"))
   }
 }
