@@ -375,7 +375,7 @@ object Bench {
     */
   final case class PipeSample(csv: Double, merge: Double, full: Double, canary: Double,
       gcSec: Double = -1.0, cachedBytes: Long = -1L, heapMb: Long = -1L,
-      ioc: Double = -1.0) {
+      ioc: Double = -1.0, fullRan: Option[GraftSession.Ran] = None) {
     def phaseSum: Double = csv + merge
     def fullOverSum: Double = if (phaseSum > 0) full / phaseSum else -1.0
     /** The sample's JSON fields, without braces. */
@@ -527,11 +527,11 @@ object Bench {
           (rt.totalMemory - rt.freeMemory) / (1024 * 1024)
         }
         val gc0 = gcMillis()
-        val full = timedReleased(spark)(runFull())
+        val (full, fullRan) = GraftSession.ran(spark)(timedReleased(spark)(runFull()))
         val gcSec = (gcMillis() - gc0) / 1000.0
         val canary = timedReleased(spark)(canaries.runCpu())
         val ioc = timedReleased(spark)(canaries.runIo())
-        PipeSample(csv, merge, full, canary, gcSec, cachedBytes, heapMb, ioc)
+        PipeSample(csv, merge, full, canary, gcSec, cachedBytes, heapMb, ioc, Some(fullRan))
       }
     } finally { // ~3×1M-row temp CSVs + parquet stages; don't leak them past the measurement
       FileUtils.deleteDirectory(new java.io.File(dir))

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The local session every `main` runs in, and the release-and-time
@@ -65,6 +67,51 @@ object GraftSession {
   /** Median seconds of `n` released runs of `f`. */
   def timedMedian(spark: SparkSession, n: Int)(f: => Unit): Double =
     stats(timedSamples(spark, n)(f))._2
+
+  /** What a body ran: its Spark jobs, the stages among them that scan
+    * files (a `FileScanRDD` in the stage: a CSV parse or a header read; a
+    * stage over checkpointed blocks has none), and the classes Spark's
+    * code generator compiled in this JVM meanwhile. */
+  final case class Ran(jobs: Int, fileScans: Int, compiles: Long)
+
+  /** `f`'s result and what it [[Ran]], its jobs and scans counted by a
+    * listener from the jobs this thread submits. A sentinel job submitted
+    * after `f` is seen last by the (ordered) listener bus, so every job
+    * and stage of `f` has been counted once the sentinel arrives. */
+  def ran[A](spark: SparkSession)(f: => A): (A, Ran) = {
+    val tag = "graft.ran"
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    def tagOf(p: java.util.Properties) = Option(p).flatMap(q => Option(q.getProperty(tag)))
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = tagOf(e.properties) match {
+        case Some(`id`) => jobs.incrementAndGet()
+        case Some(t) if t == s"$id-end" => sentinel.countDown()
+        case _ =>
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (tagOf(e.properties).contains(id) && e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scans.incrementAndGet()
+    }
+    val outer = sc.getLocalProperty(tag)
+    sc.addSparkListener(listener)
+    try {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      sc.setLocalProperty(tag, id)
+      val out = f
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      sc.setLocalProperty(tag, s"$id-end")
+      sc.parallelize(Seq(1), 1).count()
+      require(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+      (out, Ran(jobs.get, scans.get, compiles))
+    } finally {
+      sc.setLocalProperty(tag, outer)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   /** Materializes `df` fully: a bare count() can shortcut to metadata for
     * scan-only plans, the `noop` sink cannot. */

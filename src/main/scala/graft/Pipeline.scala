@@ -1,9 +1,14 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{CacheScope, Ckpt, Columns, NumOps, PandasCompat, UrlOps}
+import org.apache.spark.sql.graft.CacheBridge
+import graft.core.{CacheScope, Ckpt, Columns, NumOps, PandasCompat, StagedMemo, UrlOps}
 import graft.ingest.{SchemaResolve, Sources, YamlConfig}
 import graft.ops.{CtrNormalize, Scoring}
 import graft.ops.Scoring.ScoringConfig
@@ -80,17 +85,23 @@ object Pipeline {
   private final case class Resolved(frame: DataFrame,
       mapping: Map[String, Option[String]], autodetectedUrl: Option[String])
 
-  private def resolveHeaders(raw0: DataFrame, wanted: Seq[String],
-      trimHeaders: Boolean, ga4Renames: Boolean): Resolved = {
-    val trimmed = if (trimHeaders) raw0.toDF(raw0.columns.map(_.trim): _*) else raw0
+  /** How one source's headers resolve: the canonical columns it wants,
+    * whether its headers are trimmed, and whether the GA4 url renames apply. */
+  private final case class Role(wanted: Seq[String], trimHeaders: Boolean, ga4Renames: Boolean)
+  private val FrogRole = Role(FrogColumns, trimHeaders = false, ga4Renames = false)
+  private val GscRole = Role(GscColumns, trimHeaders = true, ga4Renames = false)
+  private val Ga4Role = Role(Ga4Columns, trimHeaders = true, ga4Renames = true)
+
+  private def resolveHeaders(raw0: DataFrame, role: Role): Resolved = {
+    val trimmed = if (role.trimHeaders) raw0.toDF(raw0.columns.map(_.trim): _*) else raw0
     // GA4 hard-coded URL header renames (first hit, only if url absent)
     val renamed =
-      if (!ga4Renames || trimmed.columns.contains("url")) trimmed
+      if (!role.ga4Renames || trimmed.columns.contains("url")) trimmed
       else SchemaResolve.Ga4UrlRenames.find(trimmed.columns.contains) match {
         case Some(k) => trimmed.withColumnRenamed(k, "url")
         case None => trimmed
       }
-    val base = SchemaResolve.resolveColumns(renamed.columns, wanted)
+    val base = SchemaResolve.resolveColumns(renamed.columns, role.wanted)
     val auto =
       if (base.get("url").flatten.isDefined) None
       else SchemaResolve.autodetectUrlColumn(renamed)
@@ -107,9 +118,10 @@ object Pipeline {
     * bench's phase breakdown, tests) substitute a parquet-staged raw read
     * for the robust CSV scan while keeping the plan identical.
     */
-  def loadFrogFrom(raw: DataFrame, cfg: PipelineConfig): DataFrame = {
-    val r = resolveHeaders(raw, FrogColumns,
-      trimHeaders = false, ga4Renames = false)
+  def loadFrogFrom(raw: DataFrame, cfg: PipelineConfig): DataFrame =
+    frogFrom(resolveHeaders(raw, FrogRole), cfg)
+
+  private def frogFrom(r: Resolved, cfg: PipelineConfig): DataFrame = {
     val out = SchemaResolve.coalesceToCanonical(r.frame, r.mapping, FrogColumns)
     Columns.put(out, ("url" -> urlNorm(cfg)(col("url"))) +:
       Seq("status_code", "click_depth", "inlinks", "word_count").map(c => c -> NumOps.toLong(col(c))))
@@ -129,16 +141,20 @@ object Pipeline {
     * holds — exactly the batch semantics.
     */
   def loadGscFrom(raw: DataFrame, cfg: PipelineConfig): DataFrame = {
-    val r = resolveHeaders(raw, GscColumns,
-      trimHeaders = true, ga4Renames = false)
-    val out = SchemaResolve.coalesceToCanonical(r.frame, r.mapping, GscColumns)
-      .filter(SchemaResolve.looksUrlLike(col("url")))
-    val typed = Columns.put(out, ("url" -> urlNorm(cfg)(col("url"))) +:
-      Seq("clicks", "impressions", "position").map(c => c -> NumOps.toDoubleNoComma(col(c))))
     // the normalized ctr replaces the raw one, last (url, clicks,
     // impressions, position, ctr)
-    CtrNormalize(typed, "ctr", "ctr_norm").select(
+    CtrNormalize(gscTyped(resolveHeaders(raw, GscRole), cfg), "ctr", "ctr_norm").select(
       GscColumns.filterNot(_ == "ctr").map(col) :+ col("ctr_norm").as("ctr"): _*)
+  }
+
+  /** GSC rows with typed metrics and the raw `ctr` text. The merge reads
+    * these: [[aggGsc]] recomputes ctr from the clicks and impressions
+    * sums, so the normalized ctr (and its decision job) would go unused. */
+  private def gscTyped(r: Resolved, cfg: PipelineConfig): DataFrame = {
+    val out = SchemaResolve.coalesceToCanonical(r.frame, r.mapping, GscColumns)
+      .filter(SchemaResolve.looksUrlLike(col("url")))
+    Columns.put(out, ("url" -> urlNorm(cfg)(col("url"))) +:
+      Seq("clicks", "impressions", "position").map(c => c -> NumOps.toDoubleNoComma(col(c))))
   }
 
   /** GA4 loader (`etl_merge.py:603-653`): robust re-parse, URL header
@@ -148,9 +164,10 @@ object Pipeline {
     loadGa4From(Sources.loadTable(spark, cfg.ga4Path), cfg)
 
   /** GA4 transforms over an already-loaded raw frame (see [[loadFrogFrom]]). */
-  def loadGa4From(raw: DataFrame, cfg: PipelineConfig): DataFrame = {
-    val r = resolveHeaders(raw, Ga4Columns,
-      trimHeaders = true, ga4Renames = true)
+  def loadGa4From(raw: DataFrame, cfg: PipelineConfig): DataFrame =
+    ga4From(resolveHeaders(raw, Ga4Role), cfg)
+
+  private def ga4From(r: Resolved, cfg: PipelineConfig): DataFrame = {
     val junk = Seq("(not set)", "(other)", "other", "not set")
     val out = SchemaResolve.coalesceToCanonical(r.frame, r.mapping, Ga4Columns)
       .withColumn("url", trim(col("url")))
@@ -163,24 +180,67 @@ object Pipeline {
   /** Per-source schema-resolution report — the governance metadata the
     * reference emits via `log_field_summary` (`etl_merge.py:314-317`) and
     * `write_autodetect_log` (`etl_merge.py:222-247`). Runs the SAME
-    * [[resolveHeaders]] step as the loaders; `rows` is counted only when
-    * asked (one cheap job per source) and is -1 otherwise.
+    * [[resolveHeaders]] step as the loaders, over the same staged read:
+    * each source is parsed once ([[staged]]), that parse's count is `rows`
+    * (-1 unless asked), and the staged frame stays in the memo for the
+    * next [[run]] or [[merged]] over the same files, which parses nothing
+    * again and does not repeat the url sniff. A report that no run
+    * follows keeps its staged blocks until a run over the same files takes
+    * them, the files change, or [[GraftSession.release]].
     */
   final case class SourceResolution(source: String,
       mapping: Map[String, Option[String]], autodetectedUrl: Option[String], rows: Long)
 
   def sourceResolutions(spark: SparkSession, cfg: PipelineConfig,
       countRows: Boolean = false): Seq[SourceResolution] = {
-    def one(name: String, path: String, wanted: Seq[String],
-        trimHeaders: Boolean, ga4Renames: Boolean): SourceResolution = {
-      val r = resolveHeaders(Sources.loadTable(spark, path), wanted, trimHeaders, ga4Renames)
-      SourceResolution(name, r.mapping, r.autodetectedUrl,
-        if (countRows) r.frame.count() else -1L)
+    def one(name: String, path: String, role: Role): SourceResolution = {
+      val s = staged(spark, path, take = false)
+      val r = s.resolve(role)
+      SourceResolution(name, r.mapping, r.autodetectedUrl, if (countRows) s.rows else -1L)
     }
-    Seq(
-      one("frog", cfg.frogPath, FrogColumns, trimHeaders = false, ga4Renames = false),
-      one("gsc", cfg.gscPath, GscColumns, trimHeaders = true, ga4Renames = false),
-      one("ga4", cfg.ga4Path, Ga4Columns, trimHeaders = true, ga4Renames = true))
+    Seq(one("frog", cfg.frogPath, FrogRole), one("gsc", cfg.gscPath, GscRole),
+      one("ga4", cfg.ga4Path, Ga4Role))
+  }
+
+  /** One source's robust read, parsed once and held in block storage
+    * ([[Ckpt.counted]]), with the row count of that parse and each role's
+    * header resolution (the url sniff is a job, so it runs once per
+    * staged frame). Valid while its blocks are resident.
+    */
+  private final class Staged(val frame: DataFrame, val rows: Long, val fingerprint: String) {
+    private val stored = Ckpt.stored(frame)
+    private val resolutions = TrieMap.empty[Role, Resolved]
+    def resolve(role: Role): Resolved = resolutions.getOrElseUpdate(role, resolveHeaders(frame, role))
+    def live: Boolean =
+      !stored.context.isStopped && stored.context.getPersistentRDDs.contains(stored.id)
+    def release(): Unit = stored.unpersist(blocking = false)
+  }
+
+  /** (context, absolute path) → the staged read of that file. */
+  private val stagedMemo = TrieMap.empty[(SparkContext, String), Staged]
+
+  /** The staged read of `path`, keyed like [[graft.core.SchemaMemo]]: the
+    * memo's entry while the file keeps its [[StagedMemo.fingerprint]] and
+    * the entry's blocks are resident, else a fresh parse. `take` removes
+    * the entry, so the caller owns the frame and no later caller can have
+    * its blocks released under it; a fresh parse is then not memoized.
+    * Otherwise a fresh parse replaces the entry for the next caller (a
+    * replaced entry's blocks go with the ContextCleaner once unreachable).
+    * Entries whose blocks are gone are dropped on every call.
+    */
+  private def staged(spark: SparkSession, path: String, take: Boolean): Staged = {
+    val f = new java.io.File(path).getAbsoluteFile
+    val fp = StagedMemo.fingerprint(f)
+    val key = (spark.sparkContext, f.getPath)
+    stagedMemo.foreach { case (k, s) => if (!s.live) stagedMemo.remove(k, s) }
+    val hit = (if (take) stagedMemo.remove(key) else stagedMemo.get(key))
+      .filter(s => s.fingerprint == fp && s.live)
+    hit.getOrElse {
+      val (frame, rows) = Ckpt.counted(Sources.loadTable(spark, path))
+      val s = new Staged(frame, rows, fp)
+      if (!take) stagedMemo.put(key, s)
+      s
+    }
   }
 
   /** GSC per-URL aggregation (`_agg_gsc`, SURVEY §2 E1-E3): sums,
@@ -214,13 +274,24 @@ object Pipeline {
     * surrogate (monotonically_increasing_id captured at load — partition-
     * ordered, hence file-ordered for a single CSV read; SURVEY §4.3 D1).
     */
-  def dedupSpine(frog: DataFrame): DataFrame = {
-    val byOrder = Window.partitionBy(col("url")).orderBy(col("__file_order"))
-    frog.withColumn("__file_order", monotonically_increasing_id())
+  def dedupSpine(frog: DataFrame): DataFrame = firstPerUrl(frog).drop(SpineOrd)
+
+  /** [[dedupSpine]] keeping the kept row's read-order surrogate as
+    * [[SpineOrd]]: the first-occurrence ordinal of its url. */
+  private def firstPerUrl(frog: DataFrame): DataFrame = {
+    val byOrder = Window.partitionBy(col("url")).orderBy(col(SpineOrd))
+    frog.withColumn(SpineOrd, monotonically_increasing_id())
       .withColumn("__rn", row_number().over(byOrder))
       .filter(col("__rn") === 1)
-      .drop("__file_order", "__rn")
+      .drop("__rn")
   }
+
+  /** The output row-order column of [[spineOrder]]. */
+  private val SpineOrd = "__spine_ord"
+
+  /** The median of the merged frame's (rounded) `ctr`, which the debug
+    * slice's scoring falls back on. */
+  private val DebugMedian = "__debug_ctr_median"
 
   /** Columns the reference holds as int64 unless a merge introduced NaN
     * (`to_int` coercions and integer sums, etl_merge.py load/agg steps) —
@@ -236,35 +307,54 @@ object Pipeline {
     * The formatted CSV sink re-imposes it for byte parity with
     * `merged_visibility.csv`. Same read-order surrogate as
     * [[dedupSpine]].
+    *
+    * After a [[run]] with the same frog file and url settings, while the
+    * caller still holds the frame `run` returned, this plans over that
+    * frame's checkpoint, which carries the ordinal: no read of Frog at all.
+    * The lookup holds the checkpoint weakly, so it never keeps it alive
+    * after the caller drops it. Otherwise Frog is loaded and normalized
+    * again, and each url's first read-order ordinal is aggregated.
     */
   def spineOrder(spark: SparkSession, cfg: PipelineConfig): DataFrame =
-    loadFrog(spark, cfg)
-      .filter(col("url").isNotNull && length(col("url")) > 0)
-      .withColumn("__spine_ord", monotonically_increasing_id())
-      .groupBy(col("url")).agg(min(col("__spine_ord")).as("__spine_ord"))
+    Option(lastRuns.get(spineKey(spark, cfg))).flatMap(r => Option(r.get)) match {
+      case Some(ck) => CacheBridge.frameOf(spark, ck).select(col("url"), col(SpineOrd))
+      case None => loadFrog(spark, cfg)
+        .filter(col("url").isNotNull && length(col("url")) > 0)
+        .withColumn(SpineOrd, monotonically_increasing_id())
+        .groupBy(col("url")).agg(min(col(SpineOrd)).as(SpineOrd))
+    }
+
+  /** What the spine order of a run depends on: the context, the frog
+    * file's identity, and the url settings. */
+  private def spineKey(spark: SparkSession, cfg: PipelineConfig) = {
+    val f = new java.io.File(cfg.frogPath).getAbsoluteFile
+    (spark.sparkContext, f.getPath, StagedMemo.fingerprint(f), cfg.siteBase, cfg.stripAllParams)
+  }
+
+  /** [[spineKey]] → the stored plan of the last [[run]]'s checkpoint,
+    * weakly: it is reachable only through the frame `run` returned. */
+  private val lastRuns = new java.util.concurrent.ConcurrentHashMap[
+    (SparkContext, String, String, String, Boolean), java.lang.ref.WeakReference[LogicalPlan]]()
 
   /** Full merged frame (stages 5-11 of SURVEY §3.1). Stage row counts
     * (SURVEY §2 E8 — the reference logs len(df) per stage) ride along as
     * `observe` metrics: zero extra jobs, readable from the returned frame's
-    * listener/observation API after any action.
+    * listener/observation API after any action. Reads each source's staged
+    * parse: the one a [[sourceResolutions]] report left in the memo (taken
+    * out of it), else a fresh one; the returned frame holds those blocks
+    * until it is dropped.
     */
   def merged(spark: SparkSession, cfg: PipelineConfig): DataFrame =
-    mergedFrom(spark, cfg, loadFrogFrom(stagedRaw(spark, cfg.frogPath), cfg),
-      loadGscFrom(stagedRaw(spark, cfg.gscPath), cfg),
-      loadGa4From(stagedRaw(spark, cfg.ga4Path), cfg))
+    mergedStaged(spark, cfg, forRun = false)._1
 
-  /** One robust-CSV parse per source, materialized eagerly into block
-    * storage (SURVEY §3.1 staging): the downstream plan has MULTIPLE
-    * independent consumers of each raw frame — the CTR-normalize decision
-    * aggregate (a broadcast subtree, its own job), the spine dedup, and
-    * each per-source rollup — and without staging every one of them
-    * re-parses the CSV from disk. `localCheckpoint` also truncates
-    * lineage, so a re-parse is impossible by construction afterwards. On a
-    * real cluster the same role is played by a parquet staging write (the
-    * streaming visibility loop does exactly that with its drop state).
-    */
-  private def stagedRaw(spark: SparkSession, path: String): DataFrame =
-    Sources.loadTable(spark, path).transform(Ckpt.eager)
+  /** The merge over the three staged sources, and those stagings. */
+  private def mergedStaged(spark: SparkSession, cfg: PipelineConfig,
+      forRun: Boolean): (DataFrame, Seq[Staged]) = {
+    val sources = Seq(cfg.frogPath, cfg.gscPath, cfg.ga4Path).map(staged(spark, _, take = true))
+    val Seq(frog, gsc, ga4) = sources
+    (mergedCore(cfg, frogFrom(frog.resolve(FrogRole), cfg), gscTyped(gsc.resolve(GscRole), cfg),
+      ga4From(ga4.resolve(Ga4Role), cfg), forRun), sources)
+  }
 
   /** [[merged]] over already-loaded source frames — the reuse point for the
     * streaming visibility loop, which substitutes its accumulated GSC drop
@@ -272,9 +362,17 @@ object Pipeline {
     * byte-identical.
     */
   def mergedFrom(spark: SparkSession, cfg: PipelineConfig, frogIn: DataFrame,
-      gscIn: DataFrame, ga4In: DataFrame): DataFrame = {
-    val frog = dedupSpine(
-      frogIn.filter(col("url").isNotNull && length(col("url")) > 0))
+      gscIn: DataFrame, ga4In: DataFrame): DataFrame =
+    mergedCore(cfg, frogIn, gscIn, ga4In, forRun = false)
+
+  /** The merge; `forRun` appends what [[run]] reads beside the output
+    * columns: [[SpineOrd]], and [[DebugMedian]] from the merge's one
+    * scalar aggregate (the debug slice would otherwise aggregate the
+    * rounded ctr in a job of its own). */
+  private def mergedCore(cfg: PipelineConfig, frogIn: DataFrame, gscIn: DataFrame,
+      ga4In: DataFrame, forRun: Boolean): DataFrame = {
+    val spine = firstPerUrl(frogIn.filter(col("url").isNotNull && length(col("url")) > 0))
+    val frog = (if (forRun) spine else spine.drop(SpineOrd))
       .observe("frog_spine", count(lit(1)).as("rows"))
     val gsc = aggGsc(gscIn.filter(col("url").isNotNull && length(col("url")) > 0))
       .observe("gsc_agg", count(lit(1)).as("rows"))
@@ -293,9 +391,12 @@ object Pipeline {
     // expected-ctr fallback, stage 9) as ONE 1-row aggregate, broadcast
     // back (never a partition-less window); the derived columns leave ctr
     // as it is, so its median over `joined` is the median over the rows
-    // scored below
+    // scored below, and the median of its 4-place rounding is the median
+    // of the output's ctr
     val scalars = joined.agg(sum(col("clicks")).as("__total_clicks"),
-      percentile(col("ctr"), lit(0.5)).as("__ctr_median"))
+      percentile(col("ctr"), lit(0.5)).as("__ctr_median") +:
+      (if (forRun) Seq(percentile(PandasCompat.broundN(col("ctr"), 4), lit(0.5)).as(DebugMedian))
+       else Nil): _*)
     val withScalars = joined.crossJoin(broadcast(scalars))
 
     // derived metrics (null-guarded division), scoring on ALL rows
@@ -339,7 +440,7 @@ object Pipeline {
       case "missed_clicks_eff" => PandasCompat.broundN(col("missed_clicks"), 3).as("missed_clicks_eff")
       case c @ "avg_engagement_time" => bround(col(c), 0).cast("long").as(c)
       case c => rounding.get(c).fold(col(c))(n => PandasCompat.broundN(col(c), n).as(c))
-    }: _*)
+    } ++ (if (forRun) Seq(col(SpineOrd), col(DebugMedian)) else Nil): _*)
   }
 
   /** Preferred output column order (`etl_merge.py:888-894`). */
@@ -364,8 +465,10 @@ object Pipeline {
     * frame, keeps every merged column, and surfaces the debug columns first
     * (`debug_cols_first`, `etl_merge.py:947-949`).
     */
-  def ctrDebugSlice(mergedDf: DataFrame, cfg: PipelineConfig): DataFrame = {
-    val scored = Scoring.scoredCandidates(mergedDf, cfg.scoring)
+  def ctrDebugSlice(mergedDf: DataFrame, cfg: PipelineConfig): DataFrame =
+    debugFirst(Scoring.scoredCandidates(mergedDf, cfg.scoring))
+
+  private def debugFirst(scored: DataFrame): DataFrame = {
     val first = Seq("url", "position", "ctr", "impressions", "expected_ctr",
       "expected_ctr_bucket", "expected_ctr_units", "expected_ctr_uplift",
       "ctr_deficit", "intent_multiplier", "missed_clicks").filter(scored.columns.contains)
@@ -387,25 +490,40 @@ object Pipeline {
     * underperformers-only continuation (same scored columns, narrow triage
     * projection, keep-filter + rank) — not a second scoring pass.
     *
-    * The merged frame is materialized once with [[Ckpt.eager]], so the
-    * four sinks and every later action plan over one leaf node instead of
-    * re-planning the whole merge (fewer jobs, and fewer generated classes
-    * for Spark's codegen cache to hold). The RETURNED frame is that
-    * checkpoint: `unpersist()` does not free it; [[GraftSession.release]]
-    * does, and so does the ContextCleaner once the frame is unreachable.
-    * With `graft.checkpoint.dir` set it is a reliable checkpoint in that
-    * dir. The debug frame's cache and the merge's inner cache release
-    * themselves ([[CacheScope]]) after their last consuming action.
+    * Each source is parsed once per run: the merge reads the staged parse
+    * a [[sourceResolutions]] report left (see [[staged]]), else stages its
+    * own. The merged frame, with the spine's read-order ordinal beside its
+    * [[ColumnOrder]] columns, is materialized once with [[Ckpt.eager]], and
+    * the staged sources are then released: nothing reads them again. The
+    * four sinks and every later action plan over that one leaf node
+    * instead of re-planning the whole merge (fewer jobs, and fewer
+    * generated classes for Spark's codegen cache to hold), the debug
+    * slice's scoring reads its ctr median from the merge's scalar
+    * aggregate, and [[spineOrder]] reads the ordinal from the checkpoint
+    * while the returned frame is held. The RETURNED frame is the
+    * [[ColumnOrder]] projection of that checkpoint: `unpersist()` does not
+    * free it; [[GraftSession.release]] does, and so does the ContextCleaner
+    * once the frame is unreachable. With `graft.checkpoint.dir` set it is a
+    * reliable checkpoint in that dir. The debug frame's cache and the
+    * merge's inner cache release themselves ([[CacheScope]]) after their
+    * last consuming action.
     */
   def run(spark: SparkSession, cfg: PipelineConfig, outDir: String): DataFrame = {
-    val m = merged(spark, cfg).transform(Ckpt.eager)
+    val (extended, sources) = mergedStaged(spark, cfg, forRun = true)
+    val ck = extended.transform(Ckpt.eager)
+    sources.foreach(_.release())
+    val m = ck.select(ColumnOrder.map(col): _*)
+    lastRuns.values.removeIf(_.get == null)
+    lastRuns.put(spineKey(spark, cfg),
+      new java.lang.ref.WeakReference(m.queryExecution.logical.collectLeaves().head))
     // partitioned by run_id (SURVEY §4.4); dynamic overwrite so a re-run
     // replaces only ITS OWN partition and earlier runs' partitions survive
     m.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("run_id").parquet(s"$outDir/merged_visibility")
     // read by the next two sinks, then released
-    val debug = CacheScope.scopedN(ctrDebugSlice(m, cfg), 2)
+    val debug = CacheScope.scopedN(debugFirst(Scoring.scoredWithMedian(
+      ck.select(ColumnOrder.map(col) :+ col(DebugMedian).as("ctr_median"): _*), cfg.scoring)), 2)
     debug.write.mode("overwrite").parquet(s"$outDir/ctr_debug")
     val triageCols = Seq("url", "position", "ctr", "impressions", "clicks",
       "schema_types", "expected_ctr", "expected_ctr_bucket", "ctr_deficit",

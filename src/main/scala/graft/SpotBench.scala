@@ -6,7 +6,8 @@ package graft
   * `skew` runs [[Bench.skewBench]] alone. `pipeline [rows ...]` (default
   * 1000000) runs [[Bench.pipelineBench]] alone at each size, in this fresh
   * JVM (`run / fork := true`): it prints every instrumented sample as one
-  * JSON line, each size's medians, and the exponent of t ~ n^k between
+  * JSON line followed by a line with the Spark jobs, file scans and
+  * codegen compiles of that sample's `full` phase, each size's medians, and the exponent of t ~ n^k between
   * consecutive sizes. Each size generates its CSVs into a temp dir through
   * the unchanged Pipeline.merged; k near 1.0 means per-row work dominates.
   */
@@ -26,7 +27,11 @@ object SpotBench {
         System.gc()
         // one JSON line per measured round, then the medians
         val samples = Bench.pipelineBench(spark, n)
-        samples.zipWithIndex.foreach { case (s, i) => println(s"""{"rows":$n,"i":$i,${s.fields}}""") }
+        samples.zipWithIndex.foreach { case (s, i) =>
+          println(s"""{"rows":$n,"i":$i,${s.fields}}""")
+          s.fullRan.foreach(r => println(s"pipeline rows=$n i=$i full: jobs=${r.jobs} " +
+            s"file_scans=${r.fileScans} codegen_compiles=${r.compiles}"))
+        }
         def med(f: Bench.PipeSample => Double) = GraftSession.stats(samples.map(f))._2
         println(f"pipeline rows=$n%d median=${med(_.full)}%.2f sec  csv_scan=${med(_.csv)}%.2f  " +
           f"merge_from_parquet=${med(_.merge)}%.2f  canary=${med(_.canary)}%.2f")

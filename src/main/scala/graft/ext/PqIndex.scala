@@ -62,15 +62,6 @@ object PqIndex {
       element_at(array_sort(pairs), 1).getField("i")
     }: _*)
 
-  /** Per-subspace minimal quantization distance — the (x−c)² of the
-    * code [[encode]] assigns (min over the codebook; the value is
-    * tie-order-free even where encode's index tiebreak matters). The
-    * q492 rebuild-quality audit compares this across model generations.
-    */
-  def minSubDist(model: Model, vec: Column, mi: Int): Column =
-    array_min(array((0 until model.ksub).map(ki =>
-      subDist(vec, model, mi, ki)): _*))
-
   /** The probe's ADC lookup tables: array(m) of array(ksub) of the
     * probe-subvector-to-centroid distances — computed ONCE per probe
     * row; every candidate pair then costs m `element_at`s.

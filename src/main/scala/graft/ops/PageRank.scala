@@ -16,16 +16,23 @@ import org.apache.spark.sql.functions._
   * [[graft.ext.Dedup.connectedComponents]]:
   *
   *  - the out-degree-annotated edge list materializes ONCE, hash-partitioned
-  *    by `src`, via an eager `localCheckpoint` (lineage truncated; blocks
-  *    reused by all iterations with their partitioning intact);
+  *    by `src`, via an eager checkpoint (lineage truncated; blocks reused
+  *    by all iterations);
   *  - the node set materializes once, hash-partitioned by `id`;
-  *  - each iteration's mass frame is ≤ |V| rows partitioned by `id`, so the
-  *    edges⋈mass join is co-partitioned (src ≡ id hash) — ZERO exchange on
-  *    the |E|-row side, and the `shuffle_hash` hint keeps it a hash join
-  *    (a sort-merge plan would re-sort the edge partitions every
-  *    iteration). The only per-iteration exchange is the contribution
-  *    partial-aggregate keyed by `dst` — map-side combine shrinks it to
-  *    ~|V| rows before the wire;
+  *  - each iteration's mass frame is ≤ |V| rows keyed by `id`, joined to
+  *    the edges with the `shuffle_hash` hint, so it stays a hash join (a
+  *    sort-merge plan would re-sort the edge partitions every iteration),
+  *    and the contribution partial-aggregate keyed by `dst` shrinks to ~|V|
+  *    rows by map-side combine before the wire;
+  *  - the checkpoints do NOT keep their hash partitioning for the planner
+  *    when adaptive execution is on, as it is in every session here:
+  *    `Dataset.localCheckpoint` then records `UnknownPartitioning(0)`, so
+  *    the |E|-row edge list is shuffled again at every iteration's join.
+  *    q74 at sf0.01 shuffles 1,616,384 records per run, 6 × 231,458 (the
+  *    directed edges) of them the edge list. Only with adaptive execution
+  *    off does the checkpoint carry its partitioning and the join
+  *    co-partition with zero exchange on the edge side (the static shape
+  *    PlanShapeSpec pins);
   *  - each new mass frame `localCheckpoint`s eagerly: plan depth stays O(1)
   *    across iterations instead of O(iters), and nothing is ever collected
   *    to or broadcast from the driver. (On a real cluster a reliable

@@ -148,10 +148,15 @@ object Scoring {
     * sink used to triage scoring behavior; [[anomalyTriage]] is its
     * underperformers-only continuation.
     */
-  def scoredCandidates(df: DataFrame, cfg: ScoringConfig): DataFrame = {
-    val medianDf = df.agg(percentile(col("ctr"), lit(0.5)).as("ctr_median"))
+  def scoredCandidates(df: DataFrame, cfg: ScoringConfig): DataFrame =
+    scoredWithMedian(df.crossJoin(broadcast(
+      df.agg(percentile(col("ctr"), lit(0.5)).as("ctr_median")))), cfg)
+
+  /** [[scoredCandidates]] over a frame that already carries the median of
+    * its own `ctr` as its last column, `ctr_median` (dropped from the
+    * output). */
+  def scoredWithMedian(df: DataFrame, cfg: ScoringConfig): DataFrame = {
     val candidates = df
-      .crossJoin(broadcast(medianDf))
       .filter(col("position").isNotNull && col("ctr").isNotNull && col("impressions").isNotNull)
       .filter(col("position") <= cfg.maxPosition)
     val withMin =

@@ -24,8 +24,9 @@ import QueryBlocks.subDistSql
   *    q67's sampler geometry (30 s stride, 8-frame cap). One decode
   *    pass, category-constant explosions, a 3-row rollup.
   *
-  * Scale shapes: q492 is one scan × (m·ksub) codegen'd subspace folds
-  * per row + a ≤ m-row aggregate; q493 is the q419/q67 shapes feeding
+  * Scale shapes: q492 is one scan crossed with the 2·m·ksub-row codebook
+  * frame (broadcast), a min per (vector, subspace) and a ≤ m-row
+  * aggregate; q493 is the q419/q67 shapes feeding
   * a 3-group rollup.
   */
 object ExtensionQueries133 extends QueryGroup {
@@ -55,14 +56,18 @@ object ExtensionQueries133 extends QueryGroup {
   def q492_pq_rebuild_quality(s: SparkSession, dir: String): DataFrame = {
     val (v1, v2) = pqGens(s, dir)
     val e = Tables.embeddings(s, dir)
-      .select(graft.ext.Similarity.toDouble(col("embedding")).as("v"))
-    val perSub = array((0 until v1.m).map { mi =>
-      struct(lit(mi).as("subspace"),
-        PqIndex.minSubDist(v1, col("v"), mi).as("d1"),
-        PqIndex.minSubDist(v2, col("v"), mi).as("d2"))
-    }: _*)
-    e.select(explode(perSub).as("s"))
-      .select(col("s.subspace").as("subspace"), col("s.d1").as("d1"), col("s.d2").as("d2"))
+      .select(col("vec_id"), graft.ext.Similarity.toDouble(col("embedding")).as("v"))
+    // one row per (generation, subspace, codeword), with the subspace's
+    // slice of the vector; per (vector, subspace) the min of the same
+    // in-order (x−c)² folds, as the mirror computes it
+    val books = s.createDataFrame(for {
+      (g, m) <- Seq(1 -> v1, 2 -> v2); mi <- 0 until m.m; ki <- 0 until m.ksub
+    } yield (g, mi, mi * m.subDim + 1, m.subDim, m.codebooks(mi)(ki)))
+      .toDF("gen", "subspace", "start", "len", "c")
+    val d = graft.functions.VectorOps.l2sq(slice(col("v"), col("start"), col("len")), col("c"))
+    e.crossJoin(broadcast(books))
+      .groupBy(col("vec_id"), col("subspace"))
+      .agg(min(when(col("gen") === 1, d)).as("d1"), min(when(col("gen") === 2, d)).as("d2"))
       .groupBy(col("subspace"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(when(col("d2") < col("d1"), 1L).otherwise(0L)).as("n_better"),

@@ -32,10 +32,11 @@ object ExtensionQueries19 extends QueryGroup {
     * an explicit `-1` bucket for parts out of range.
     *
     * Scale shape: synchronous frontier expansion ([[graft.ops.Bfs]]) —
-    * the loop-invariant edge list is shuffled ONCE (src-partitioned,
-    * checkpointed) and every round exchanges only the frontier; the
-    * visited set is id-keyed so the anti-join co-partitions; rounds are
-    * bounded (≤4 jobs). No structure ever exceeds |V| rows — the Pregel
+    * the loop-invariant edge list is checkpointed src-partitioned, but
+    * with adaptive execution on the checkpoint does not carry that
+    * partitioning, so each hop that runs shuffles the edge list again
+    * (at sf0.01, 3 × 231,458 of the run's 886,626 shuffle records);
+    * rounds are bounded at 4 hops. No structure ever exceeds |V| rows — the Pregel
     * BFS shape that survives a 10¹⁰-edge graph, vs the recursive-CTE
     * spelling which is inherently single-node.
     */

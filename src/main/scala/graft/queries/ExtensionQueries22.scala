@@ -156,9 +156,10 @@ object ExtensionQueries22 extends QueryGroup {
     * iterations, fully unrolled in the oracle.
     *
     * Scale shape: [[graft.ops.PageRank.run]] with the `Weighted` split — the edge
-    * list materializes once src-partitioned, each round exchanges only
-    * the dst-keyed partial aggregate, eager checkpoint per round, no
-    * |V|-row broadcast anywhere.
+    * list materializes once src-partitioned (shuffled again each round
+    * with adaptive execution on, see PageRank), each round exchanges the
+    * dst-keyed partial aggregate, eager checkpoint per round, no |V|-row
+    * broadcast anywhere.
     */
   def q164_weighted_pagerank(s: SparkSession, dir: String): DataFrame = {
     val weighted = CoPurchase.symmetric(

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Dataset => ApiDataset}
 import org.apache.spark.sql.classic.Dataset
 
 /** Bridge into the `private[sql]` cache machinery, for
-  * `graft.core.CacheScope`'s orphan sweep.
+  * `graft.core.CacheScope`'s orphan sweep, and for re-reading a stored
+  * checkpoint leaf (`graft.Pipeline.spineOrder`).
   *
   * Why it exists: `Dataset.unpersist()` drops the CacheManager entry and
   * the buffer RDD — but an action PLANNED while the cache was live holds
@@ -78,4 +79,11 @@ object CacheBridge {
         cd.cachedRepresentation.cacheBuilder))
     }
   }
+
+  /** A frame over an analyzed plan another frame already reads, such as
+    * the stored leaf of a checkpoint: its columns keep their ids, and a
+    * join with that other frame deduplicates them as a self-join does. */
+  def frameOf(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -67,6 +67,22 @@ class CkptSpec extends SparkSpecBase {
     }
   }
 
+  test("Ckpt.counted: one count materializes the checkpoint, local and reliable") {
+    def check(): Unit = {
+      val (out, n) = Ckpt.counted(spark.range(7).select(col("id"), (col("id") * 2).as("x")))
+      val stored = Ckpt.stored(out)
+      assert(n == 7)
+      assert(stored.isCheckpointed, "the count did not materialize the checkpoint")
+      assert(spark.sparkContext.getPersistentRDDs.contains(stored.id), "blocks not resident")
+      val (xs, r) = ran(out.collect().map(_.getLong(1)).sorted.toSeq)
+      assert(xs == (0L until 7L).map(_ * 2))
+      assert(r.jobs == 1, s"reading the checkpoint ran $r")
+      stored.unpersist(blocking = true)
+    }
+    check()
+    withReliableDir(check())
+  }
+
   test("StarContract output identical under local and reliable checkpointing") {
     val local = StarContract.run(edges, nodes, rounds = 4)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))

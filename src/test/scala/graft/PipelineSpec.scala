@@ -177,4 +177,79 @@ class PipelineSpec extends SparkSpecBase with org.scalatest.BeforeAndAfterAll {
     assert(fromRun.collect().map(_.toString).sorted
       .sameElements(standalone.collect().map(_.toString).sorted))
   }
+
+  /** `cfg` over fresh copies of the fixture CSVs (a file identity no other
+    * test has staged), with their headers already read once. */
+  private def freshInputs(): PipelineConfig = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stage")
+    def copy(name: String) = {
+      val to = dir.resolve(name)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(fx(name)), to)
+      graft.ingest.Sources.loadTable(spark, to.toString) // header memo
+      to.toString
+    }
+    cfg.copy(frogPath = copy("frog.csv"), gscPath = copy("gsc.csv"), ga4Path = copy("ga4.csv"))
+  }
+
+  private def paths(c: PipelineConfig) = Seq(c.frogPath, c.gscPath, c.ga4Path)
+
+  /** (url, ordinal) rows of a spine order, by ordinal. */
+  private def inOrder(order: org.apache.spark.sql.DataFrame) =
+    order.orderBy("__spine_ord").collect().map(_.getAs[String]("url")).toSeq
+
+  test("a report, a run and the spine order parse each input CSV once") {
+    val c = freshInputs()
+    val plain = paths(c).map(p => graft.ingest.Sources.loadTable(spark, p).count())
+    val out = java.nio.file.Files.createTempDirectory("graft_pipe").toString
+    val ((rows, csvOrder, m), r) = ran {
+      val rs = Pipeline.sourceResolutions(spark, c, countRows = true)
+      val m = Pipeline.run(spark, c, out)
+      val ordered = m.join(Pipeline.spineOrder(spark, c), Seq("url"), "left")
+      (rs.map(_.rows), inOrder(ordered), m)
+    }
+    assert(r.fileScans == 3, s"file scans: $r")
+    assert(rows == plain)
+    assert(m.columns.toSeq == Pipeline.ColumnOrder)
+    // the run-backed order is the order the Frog derivation gives
+    assert(csvOrder == inOrder(Pipeline.spineOrder(spark, freshInputs())))
+  }
+
+  test("spineOrder without a prior run derives the order from Frog") {
+    val c = freshInputs()
+    val (order, r) = ran(Pipeline.spineOrder(spark, c).collect())
+    assert(r.fileScans == 1, s"file scans: $r")
+    import org.apache.spark.sql.functions.{col, length, min, monotonically_increasing_id}
+    val derived = Pipeline.loadFrog(spark, c)
+      .filter(col("url").isNotNull && length(col("url")) > 0)
+      .withColumn("__spine_ord", monotonically_increasing_id())
+      .groupBy(col("url")).agg(min(col("__spine_ord")).as("__spine_ord"))
+    assert(order.map(_.toString).sorted.sameElements(derived.collect().map(_.toString).sorted))
+    assert(order.length == 5)
+  }
+
+  test("a staged input is parsed again once its blocks are released or the file changes") {
+    val c = freshInputs()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val first = Pipeline.sourceResolutions(spark, c, countRows = true).map(_.rows)
+    // what GraftSession.release does to the staged blocks (the suite's
+    // shared session cannot be released as a whole)
+    (sc.getPersistentRDDs.keySet -- before).flatMap(sc.getPersistentRDDs.get)
+      .filter(_.toString.contains("localCheckpoint")).foreach(_.unpersist(blocking = true))
+    val (again, released) = ran(Pipeline.sourceResolutions(spark, c, countRows = true).map(_.rows))
+    assert(released.fileScans == 3, s"after release: $released")
+    assert(again == first)
+    // a row appended to GSC at the same path: only GSC is parsed again
+    // (and its header read again, the file's identity having changed)
+    java.nio.file.Files.write(java.nio.file.Paths.get(c.gscPath),
+      "https://www.acme-store.com/products/new-1,1,10,10%,3\n".getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND)
+    val (rewritten, r) = ran(Pipeline.sourceResolutions(spark, c, countRows = true).map(_.rows))
+    assert(rewritten == Seq(first(0), first(1) + 1, first(2)))
+    assert(r.fileScans == 2, s"after rewrite: $r")
+    val out = java.nio.file.Files.createTempDirectory("graft_pipe").toString
+    val (merged, runRan) = ran(Pipeline.run(spark, c, out).count())
+    assert(runRan.fileScans == 0, s"run after the report: $runRan")
+    assert(merged == 5)
+  }
 }

@@ -90,9 +90,11 @@ class PlanShapeSpec extends SparkSpecBase {
     // with NO BroadcastExchange at all (mass and contrib are |V|-row frames
     // that scale with the graph), shuffled-hash joins (a sort-merge plan
     // would re-sort the edge partitions every iteration), and exactly one
-    // exchange (the contribution partial-agg on dst; the checkpointed edge
-    // and node inputs carry their hash partitioning, so both joins are
-    // co-partitioned)
+    // exchange (the contribution partial-agg on dst). That last shape needs
+    // adaptive execution off, as here: the checkpointed edge and node
+    // inputs then carry their hash partitioning and both joins
+    // co-partition. With it on, as in every session, a local checkpoint
+    // records UnknownPartitioning(0) and each iteration shuffles the edges.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       import spark.implicits._

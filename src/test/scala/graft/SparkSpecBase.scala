@@ -6,6 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session per suite (lazy, UTC, small shuffle). */
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
+
+  /** `body`'s result and what it ran from this thread ([[GraftSession.ran]]). */
+  def ran[A](body: => A): (A, GraftSession.Ran) = GraftSession.ran(spark)(body)
 }
 
 object SparkSpecBase {
